@@ -12,13 +12,71 @@ factors.
 tag — re-invoking the same query first unpersists the previous
 invocation's frame — and `release_all()` (wired into test teardown
 and bench.py's per-query loop) drops everything between queries.
+
+Session metadata (inferred schemas, resolved file indexes, scratch
+layout paths, persisted index frames) goes through `session_memo` /
+`session_persist`: one dict held on the SparkSession object, so its
+entries live and die with their session and a `newSession()` starts
+empty.  `dataset_tag` is the one rule for naming a dataset in a key.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import hashlib
+import os
+import re
+from typing import Callable, Hashable, TypeVar
+
+from pyspark.sql import DataFrame, SparkSession
 
 _LIVE: dict[str, DataFrame] = {}
+
+V = TypeVar("V")
+
+
+def dataset_tag(sf_dir: str) -> str:
+    """Memo/layout tag for a dataset directory: basename + abspath
+    hash, so two datasets sharing a directory basename in one session
+    never reuse each other's layout, index or cell filing."""
+    base = re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    h = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
+    return f"{base}_{h}"
+
+
+def _memo(spark: SparkSession) -> dict:
+    return vars(spark).setdefault("_session_memo", {})
+
+
+def session_memo(
+    spark: SparkSession,
+    key: Hashable,
+    build: Callable[[], V],
+    valid: Callable[[V], bool] | None = None,
+) -> V:
+    """The value memoized under `key` for this session, running
+    `build()` on a miss — or when `valid` rejects the stored value,
+    which is then replaced."""
+    memo = _memo(spark)
+    if key not in memo or (valid is not None and not valid(memo[key])):
+        memo[key] = build()
+    return memo[key]
+
+
+def session_persist(
+    spark: SparkSession, key: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """Session-memoized persisted frame: build once per (session, key)
+    and persist it via tracked_persist under `key` as the tag.  A
+    memoized frame that comes back unpersisted (release_all() clears
+    the cache, not the memo) is RE-persisted, not rebuilt — otherwise
+    every later consumer in the session would recompute it per action."""
+    memo = _memo(spark)
+    df = memo.get(key)
+    if df is None:
+        df = memo[key] = tracked_persist(build(), key)
+    elif not (df.storageLevel.useMemory or df.storageLevel.useDisk):
+        df = memo[key] = tracked_persist(df, key)
+    return df
 
 
 def tracked_persist(df: DataFrame, tag: str) -> DataFrame:

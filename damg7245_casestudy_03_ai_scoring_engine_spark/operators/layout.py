@@ -31,14 +31,12 @@ amortized over every downstream query.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.cache import tracked_persist
+from ..functions.cache import dataset_tag, session_memo, tracked_persist
 from ..sources.catalog import load, read_parquet_memo
 from ..sources.scratch import scratch_dir
 from .registry import register
@@ -64,17 +62,6 @@ def _rev_exact() -> F.Column:
     return F.floor(total * F.lit(100.0) + F.lit(0.5)) / F.lit(100.0)
 
 
-def _sf_tag(sf_dir: str) -> str:
-    """Layout-build memo tag: basename + abspath hash, so two
-    datasets with the same directory basename in one session never
-    collide on a bucketed table / index / Z-order layout name (same
-    rule as similarity._sf_tag_sim, where the memo is
-    correctness-bearing)."""
-    base = re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    h = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    return f"{base}_{h}"
-
-
 # --- bucketed co-located join ----------------------------------------------
 
 
@@ -88,7 +75,7 @@ def _bucketed_table(
     bucket spec) with an explicit external LOCATION under the scratch
     root — independent of whatever warehouse dir the driver's session
     was built with."""
-    tbl = f"bkt_{name}_{_sf_tag(sf_dir)}"
+    tbl = f"bkt_{name}_{dataset_tag(sf_dir)}"
     if not spark.catalog.tableExists(tbl):
         path = scratch_dir(f"bucketed_{name}_")
         (
@@ -150,9 +137,9 @@ def _month_partitioned_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write (once) lineitem hive-partitioned by ship month; read back
     via directory discovery so `ship_month` is a PARTITION column and
     month predicates become directory pruning, not data filters."""
-    tag = _sf_tag(sf_dir)
-    key = f"_layout_lineitem_month_{tag}"
-    if not hasattr(spark, key):
+    tag = dataset_tag(sf_dir)
+
+    def build() -> str:
         path = scratch_dir(f"lineitem_bymonth_{tag}_")
         (
             load(spark, sf_dir, "lineitem")
@@ -161,8 +148,11 @@ def _month_partitioned_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("ship_month")
             .parquet(path)
         )
-        setattr(spark, key, path)
-    return read_parquet_memo(spark, getattr(spark, key))
+        return path
+
+    return read_parquet_memo(
+        spark, session_memo(spark, f"layout.lineitem_month.{tag}", build)
+    )
 
 
 @register(
@@ -224,6 +214,12 @@ def _interleave_sql(xcol: str, ycol: str) -> str:
 
 
 def _zorder_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Z-ordered events layout (`_zorder_events_path`), read back
+    through the memoized reader."""
+    return read_parquet_memo(spark, _zorder_events_path(spark, sf_dir))
+
+
+def _zorder_events_path(spark: SparkSession, sf_dir: str) -> str:
     """Write (once) events Z-ORDERED on (user_id, ts): both dims are
     scaled to 16-bit grid cells, bit-interleaved into a Morton code,
     then range-repartitioned + sorted on the code.  Nearby Z values
@@ -237,9 +233,9 @@ def _zorder_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     at BUILD time only (layout construction, amortized like the
     bucketed tables above — query-time reads never touch the driver).
     """
-    tag = _sf_tag(sf_dir)
-    key = f"_layout_events_zorder_{tag}"
-    if not hasattr(spark, key):
+    tag = dataset_tag(sf_dir)
+
+    def build() -> str:
         # events.ts is int64 NANOSECONDS by repo contract
         # (sources/catalog.py normalize_events_ts); scale to seconds
         # BEFORE multiplying by the grid so (span_s · 65535) stays far
@@ -269,8 +265,9 @@ def _zorder_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(path)
         )
-        setattr(spark, key, path)
-    return read_parquet_memo(spark, getattr(spark, key))
+        return path
+
+    return session_memo(spark, f"layout.events_zorder.{tag}", build)
 
 
 @register(
@@ -586,11 +583,10 @@ def _file_bloom_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]
     Self-sufficient: builds the Z-order layout if this session hasn't
     yet; the filter width is sized from the layout's row/file counts
     (parquet metadata — no data scan) at ~10 bits/key."""
-    tag = _sf_tag(sf_dir)
-    key = f"_layout_events_bloomidx_{tag}"
-    if not hasattr(spark, key):
-        _zorder_events(spark, sf_dir)  # ensure layout exists
-        ev = spark.read.parquet(getattr(spark, f"_layout_events_zorder_{tag}"))
+    tag = dataset_tag(sf_dir)
+
+    def build() -> tuple[DataFrame, int]:
+        ev = _zorder_events(spark, sf_dir)
         bits = _bloom_bits_for(ev.count(), len(ev.inputFiles()))
 
         base = ev.select(
@@ -598,10 +594,9 @@ def _file_bloom_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]
             F.col("event_id").cast("long").alias("key"),
         )
         idx = build_file_bloom_index(base, bits)
-        setattr(
-            spark, key, (tracked_persist(idx, f"layout.bloomidx.{tag}"), bits)
-        )
-    return getattr(spark, key)
+        return tracked_persist(idx, f"layout.bloomidx.{tag}"), bits
+
+    return session_memo(spark, f"layout.bloomidx.{tag}", build)
 
 
 @register(

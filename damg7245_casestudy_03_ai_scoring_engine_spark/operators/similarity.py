@@ -20,8 +20,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.cache import (
+    dataset_tag,
+    session_memo,
+    session_persist,
+    tracked_persist,
+)
 from ..functions.vectors import cosine_similarity, dot, l2_norm
 from ..sources.catalog import load, read_parquet_memo
+from ..sources.scratch import scratch_dir
 from .registry import register
 
 _N_QUERIES = 10
@@ -263,25 +270,6 @@ def _topk_ranked(df: DataFrame, part: str, order_sql: str, k: int) -> DataFrame:
     ).filter(f"rk <= {k}")
 
 
-def _session_memo_persist(spark: SparkSession, key: str, tag: str, build) -> DataFrame:
-    """Session-memoized persisted frame: build once per (session, key),
-    persist via tracked_persist, and — the r10 advisor wrinkle —
-    RE-persist when the memoized frame comes back unpersisted (bench.py's
-    per-query release_all() clears the cache but not the memo attr, so
-    without this every later consumer in the same session silently
-    recomputed the frame per action; values were never affected)."""
-    from ..functions.cache import tracked_persist
-
-    df = getattr(spark, key, None)
-    if df is None:
-        df = tracked_persist(build(), tag)
-        setattr(spark, key, df)
-    elif not (df.storageLevel.useMemory or df.storageLevel.useDisk):
-        df = tracked_persist(df, tag)
-        setattr(spark, key, df)
-    return df
-
-
 def _ivf_quantizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The coarse quantizer (label, i, cx) — per-label dim means —
     memoized + persisted per (session, sf) like the filing itself: at
@@ -290,10 +278,9 @@ def _ivf_quantizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance pass.  Before r10 each IVF query re-aggregated it from
     the full corpus; caching it removes one corpus-wide explode+agg
     per consumer at identical values (same plan, same partials)."""
-    tag = _sf_tag_sim(sf_dir)
-    return _session_memo_persist(
+    tag = dataset_tag(sf_dir)
+    return session_persist(
         spark,
-        f"_ivf_quantizer_{tag}",
         f"ivf.quantizer.{tag}",
         lambda: _ivf_cent_flat(load(spark, sf_dir, "embeddings", fan_out=True)),
     )
@@ -307,7 +294,7 @@ def _ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is one linear pass (explode → broadcast-join the
     tiny quantizer → map-side-combinable aggregate → per-vector
     argmax window, partitioned by vec_id)."""
-    tag = _sf_tag_sim(sf_dir)
+    tag = dataset_tag(sf_dir)
 
     def build() -> DataFrame:
         emb = load(spark, sf_dir, "embeddings", fan_out=True)
@@ -321,22 +308,7 @@ def _ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", F.col("label").alias("cell"))
         )
 
-    return _session_memo_persist(spark, f"_ivf_cells_{tag}", f"ivf.cells.{tag}", build)
-
-
-def _sf_tag_sim(sf_dir: str) -> str:
-    """Session-memo key for a dataset directory.  Keyed on the FULL
-    normalized path (basename + abspath hash), not the basename alone:
-    `_ivf_cells` memoizes the correctness-bearing (vec_id, cell)
-    filing, and two datasets sharing a directory basename in one
-    session must never reuse each other's cell assignment."""
-    import hashlib as _hashlib
-    import os as _os
-    import re as _re
-
-    base = _re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    h = _hashlib.md5(_os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    return f"{base}_{h}"
+    return session_persist(spark, f"ivf.cells.{tag}", build)
 
 
 def _ivf_probe_assign(
@@ -355,7 +327,7 @@ def _ivf_probe_assign(
     run (once inside the broadcast LUT subplan, once on the probe
     side).  At 100 TB the probe set is serving-path metadata computed
     once per query batch, not once per plan branch."""
-    tag = _sf_tag_sim(sf_dir)
+    tag = dataset_tag(sf_dir)
 
     def build() -> DataFrame:
         emb = load(spark, sf_dir, "embeddings", fan_out=True)
@@ -381,12 +353,7 @@ def _ivf_probe_assign(
             )
         )
 
-    return _session_memo_persist(
-        spark,
-        f"_ivf_probe_assign_{tag}_{min_probes}_{cap}",
-        f"ivf.probes.{tag}.{min_probes}.{cap}",
-        build,
-    )
+    return session_persist(spark, f"ivf.probes.{tag}.{min_probes}.{cap}", build)
 
 
 def _ivf_search(
@@ -595,20 +562,17 @@ def _lsh_planes_frame(spark: SparkSession, n_planes: int) -> DataFrame:
     so every consumer plan sees one tiny leaf instead of a literal
     forest; the weights are pure md5 math (no data dependency), so the
     memo is a constant table, not a cached result."""
-    key = f"_lsh_planes_{n_planes}"
-    if not hasattr(spark, key):
+
+    def build() -> DataFrame:
         pl = [
             [_plane_weight(p, i) for i in range(1, _DIM + 1)]
             for p in range(n_planes)
         ]
-        setattr(
-            spark,
-            key,
-            spark.createDataFrame(
-                [(pl,)], "pl array<array<bigint>>"
-            ).localCheckpoint(),
-        )
-    return getattr(spark, key)
+        return spark.createDataFrame(
+            [(pl,)], "pl array<array<bigint>>"
+        ).localCheckpoint()
+
+    return session_memo(spark, f"lsh_planes.{n_planes}", build)
 
 
 def _lsh_band_codes(
@@ -764,8 +728,6 @@ def lsh_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exhaustive pair LISTING (and the oracle anchor), while
     `lsh_pairs_topk` — k-bounded output, wider bands — is the bench
     headliner and the shape that survives 100×."""
-    from ..functions.cache import tracked_persist
-
     emb = load(spark, sf_dir, "embeddings", fan_out=True)
     # Persisted for the same both-sides-of-the-self-join reason as
     # lsh_pairs_topk (r13): without it the signature projection runs
@@ -861,8 +823,8 @@ def _emb_count(spark: SparkSession, sf_dir: str) -> int:
     no Spark job — the `_bloom_bits_for` sizing pattern, layout.py),
     memoized per (session, dataset).  Falls back to a Spark count if
     pyarrow can't read the layout."""
-    key = f"_emb_n_{_sf_tag_sim(sf_dir)}"
-    if not hasattr(spark, key):
+
+    def build() -> int:
         import glob as _glob
         import os as _os
 
@@ -880,8 +842,9 @@ def _emb_count(spark: SparkSession, sf_dir: str) -> int:
             n = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
         except Exception:  # pragma: no cover - non-parquet layouts
             n = load(spark, sf_dir, "embeddings").count()
-        setattr(spark, key, int(n))
-    return getattr(spark, key)
+        return int(n)
+
+    return session_memo(spark, f"emb_n.{dataset_tag(sf_dir)}", build)
 
 
 @register(
@@ -985,8 +948,6 @@ def lsh_pairs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a per-item ranking window (partitioned — no global sort).
     The oracle replays the identical band structure + verify + rank
     in DuckDB."""
-    from ..functions.cache import tracked_persist
-
     emb = load(spark, sf_dir, "embeddings", fan_out=True)
     r = _topk_band_bits(_emb_count(spark, sf_dir))
     # Persisted: BOTH sides of the (band, code) self-join consume this
@@ -1763,11 +1724,9 @@ def _cell_partitioned_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory, so a probe that knows its cells reads only those
     directories.  Memoized per (session, sf_dir) like the other
     layout builds."""
-    from ..sources.scratch import scratch_dir
+    tag = dataset_tag(sf_dir)
 
-    tag = _sf_tag_sim(sf_dir)
-    key = f"_layout_embeddings_ivfcell_{tag}"
-    if not hasattr(spark, key):
+    def build() -> str:
         path = scratch_dir(f"ivf_embeddings_{tag}_")
         (
             load(spark, sf_dir, "embeddings")
@@ -1776,8 +1735,11 @@ def _cell_partitioned_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("cell")
             .parquet(path)
         )
-        setattr(spark, key, path)
-    return read_parquet_memo(spark, getattr(spark, key))
+        return path
+
+    return read_parquet_memo(
+        spark, session_memo(spark, f"layout.embeddings_ivfcell.{tag}", build)
+    )
 
 
 @register(
@@ -1959,8 +1921,6 @@ def kmeans_lloyd_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    from ..functions.cache import tracked_persist
-
     pts = tracked_persist(pts, "kmeans_lloyd.pts")
 
     dist = F.aggregate(
@@ -2092,8 +2052,6 @@ def mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine_similarity("av", "bv"), 6).alias("cosine"),
         )
     )
-    from ..functions.cache import tracked_persist
-
     w = Window.partitionBy("k").orderBy(F.desc("cosine"), F.asc("nb"))
     # Persisted (r13, guide §2.4): the mutuality check self-joins this
     # frame, and without materialization BOTH join branches re-run the
@@ -2290,7 +2248,6 @@ def embedding_drift_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("q").cast("decimal(38,0)") * F.col("q").cast("decimal(38,0)")
         ).alias("ssq"),
     )
-    from ..functions.cache import tracked_persist
     from ..functions.core import round_stable
 
     dim = tracked_persist(dim, "embedding_drift_by_label.dim")
@@ -2824,8 +2781,6 @@ def _refile_oversized_impl(
     decision's refile cells so the executor splits EXACTLY what the
     decision said (same parameterization as the SQL twin,
     `_ivf_refile_body_sql`)."""
-    from ..functions.cache import tracked_persist
-
     # Admission totals from ONE pass over the filing: total = Σ n_c and
     # ncells = row count of the per-cell sizes, via a single-partition
     # window over the O(cells) frame — r13 (guide §2.4): the old shape
@@ -2970,7 +2925,7 @@ def _ivf_frozen_quantizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer, not a retrained one).  Memoized + persisted per
     (session, sf): at 100 TB this is THE codebook artifact the append
     path probes — nlist×dim rows, broadcastable."""
-    tag = _sf_tag_sim(sf_dir)
+    tag = dataset_tag(sf_dir)
 
     def build() -> DataFrame:
         emb = load(spark, sf_dir, "embeddings", fan_out=True)
@@ -2978,9 +2933,7 @@ def _ivf_frozen_quantizer(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb.filter(~_ivf_delta_flag()).select("label", "embedding")
         )
 
-    return _session_memo_persist(
-        spark, f"_ivf_frozen_quant_{tag}", f"ivf.frozen_quant.{tag}", build
-    )
+    return session_persist(spark, f"ivf.frozen_quant.{tag}", build)
 
 
 def _ivf_file_by_frozen(
@@ -3017,15 +2970,13 @@ def _ivf_standing_filing(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup.py): the registered append plans now read this persisted
     frame (InMemoryTableScan — pinned in tests/test_plans.py) and the
     only embeddings scan left in the append path is the batch's own."""
-    tag = _sf_tag_sim(sf_dir)
+    tag = dataset_tag(sf_dir)
 
     def build() -> DataFrame:
         emb = load(spark, sf_dir, "embeddings", fan_out=True)
         return _ivf_file_by_frozen(spark, sf_dir, emb.filter(~_ivf_delta_flag()))
 
-    return _session_memo_persist(
-        spark, f"_ivf_frozen_cells_{tag}", f"ivf.frozen_cells.{tag}", build
-    )
+    return session_persist(spark, f"ivf.frozen_cells.{tag}", build)
 
 
 def _ivf_standing_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3039,7 +2990,7 @@ def _ivf_standing_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingested delta moments with the standing corpus WITHOUT rescanning
     it — the retrain trigger off live state, batch == streamed pinned
     in tests/test_streaming.py."""
-    tag = _sf_tag_sim(sf_dir)
+    tag = dataset_tag(sf_dir)
 
     def build() -> DataFrame:
         emb = load(spark, sf_dir, "embeddings", fan_out=True)
@@ -3058,9 +3009,7 @@ def _ivf_standing_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return _session_memo_persist(
-        spark, f"_ivf_standing_moments_{tag}", f"ivf.standing_moments.{tag}", build
-    )
+    return session_persist(spark, f"ivf.standing_moments.{tag}", build)
 
 
 def _ivf_delta_filing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3083,7 +3032,7 @@ def _ivf_post_append_filing(spark: SparkSession, sf_dir: str) -> DataFrame:
     one membership.  (`ivf_file_delta` deliberately does NOT read
     this: its registered plan must show the batch scoring as the
     per-append cost — the live-scan honesty pin.)"""
-    tag = _sf_tag_sim(sf_dir)
+    tag = dataset_tag(sf_dir)
 
     def build() -> DataFrame:
         return (
@@ -3096,9 +3045,7 @@ def _ivf_post_append_filing(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return _session_memo_persist(
-        spark, f"_ivf_postappend_{tag}", f"ivf.postappend.{tag}", build
-    )
+    return session_persist(spark, f"ivf.postappend.{tag}", build)
 
 
 def _cosine_agg(a: str, b: str) -> "F.Column":
@@ -3134,8 +3081,6 @@ def _ivf_drift_core(
     drift that links them.  The means frame is tracked-persisted under
     one shared tag (it is both the drift input and the retrain's refit
     target)."""
-    from ..functions.cache import tracked_persist
-
     emb = load(spark, sf_dir, "embeddings", fan_out=True)
     allc = _ivf_post_append_filing(spark, sf_dir)
     v_flat = emb.select(
@@ -3145,7 +3090,7 @@ def _ivf_drift_core(
         allc.join(v_flat, "vec_id").groupBy("cell", "i").agg(
             F.avg("x").alias("mx")
         ),
-        f"ivf.postappend_means.{_sf_tag_sim(sf_dir)}",
+        f"ivf.postappend_means.{dataset_tag(sf_dir)}",
     )
     cent = _ivf_frozen_quantizer(spark, sf_dir).select(
         F.col("label").alias("cell"), "i", "cx"
@@ -3571,8 +3516,6 @@ def ivf_codebook_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     the refile touches ONLY flagged-cell members against the
     O(flagged × dim) broadcast retrained codebook.  Nothing rescans
     the unflagged corpus."""
-    from ..functions.cache import tracked_persist
-
     emb = load(spark, sf_dir, "embeddings", fan_out=True)
     # the session-shared post-append membership + drift core — the
     # SAME frames the signal reads (r11 self-review: the engine side
@@ -4137,7 +4080,7 @@ def _ivf_ncent(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, but previously re-aggregated from the quantizer by every
     consumer action (subvec build + the per-run query-residual side of
     `ann_ivfpq_adc_topk`)."""
-    tag = _sf_tag_sim(sf_dir)
+    tag = dataset_tag(sf_dir)
 
     def build() -> DataFrame:
         return (
@@ -4151,9 +4094,7 @@ def _ivf_ncent(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return _session_memo_persist(
-        spark, f"_ivf_ncent_{tag}", f"ivf.ncent.{tag}", build
-    )
+    return session_persist(spark, f"ivf.ncent.{tag}", build)
 
 
 def _ivfpq_slice(df: DataFrame, *keys: str) -> DataFrame:
@@ -4212,11 +4153,9 @@ def _ivfpq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast centroid frame is M×K rows).  Memoized + persisted per
     (session, sf): at 100 TB this is a trained model artifact
     (M·K·sub_d doubles), built once at ingest."""
-    tag = _sf_tag_sim(sf_dir)
+    tag = dataset_tag(sf_dir)
 
     def build() -> DataFrame:
-        from ..functions.cache import tracked_persist
-
         pts = tracked_persist(
             _ivfpq_subvecs(spark, sf_dir), f"ivfpq.subvecs.{tag}"
         )
@@ -4255,9 +4194,7 @@ def _ivfpq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
         pts.unpersist()
         return cent
 
-    return _session_memo_persist(
-        spark, f"_ivfpq_codebook_{tag}", f"ivfpq.codebook.{tag}", build
-    )
+    return session_persist(spark, f"ivfpq.codebook.{tag}", build)
 
 
 def _ivfpq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4268,7 +4205,7 @@ def _ivfpq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes per vector, stored BY CELL — the 100 TB scan artifact is
     cell-partitioned code storage, so the cell key lives in the build,
     not in a per-run join; r13, guide §2.4)."""
-    tag = _sf_tag_sim(sf_dir)
+    tag = dataset_tag(sf_dir)
 
     def build() -> DataFrame:
         return (
@@ -4282,9 +4219,7 @@ def _ivfpq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", "cell", "m", "c")
         )
 
-    return _session_memo_persist(
-        spark, f"_ivfpq_codes_{tag}", f"ivfpq.codes.{tag}", build
-    )
+    return session_persist(spark, f"ivfpq.codes.{tag}", build)
 
 
 @register(

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.cache import tracked_persist
+from ..functions.cache import dataset_tag, session_persist, tracked_persist
 from ..functions.core import clamp, flit, round_stable, round_stable_sql
 from ..functions.text import STOPWORDS_EN, stopword_ratio, token_count, word_tokens
 from ..sources.catalog import load
@@ -3548,15 +3548,10 @@ def _bpe_encoded_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     The 20-row merge table is collected once to parameterize the fold
     literals (the training loop's own 1-row-per-round collect class —
     k-means-centroid scalars, not data)."""
-    from .similarity import _session_memo_persist, _sf_tag_sim
-
-    tag = _sf_tag_sim(sf_dir)
-
-    def build() -> DataFrame:
-        return _bpe_encoded_vocab_build(spark, sf_dir)
-
-    return _session_memo_persist(
-        spark, f"_bpe_encoded_vocab_{tag}", f"bpe.vocab.{tag}", build
+    return session_persist(
+        spark,
+        f"bpe.vocab.{dataset_tag(sf_dir)}",
+        lambda: _bpe_encoded_vocab_build(spark, sf_dir),
     )
 
 

@@ -18,7 +18,9 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.cache import dataset_tag, session_memo, tracked_persist
 from ..sources.catalog import load
+from ..sources.scratch import scratch_dir
 from .registry import register
 
 
@@ -384,8 +386,6 @@ def sized_output_sharding(spark: SparkSession, sf_dir: str) -> DataFrame:
     `input_file_name()` per partition value — works against any
     Hadoop filesystem (the executors may not share the driver's local
     disk), unlike a driver-side directory listing."""
-    from ..sources.scratch import scratch_dir
-
     out = scratch_dir("shard_sink_")
     d = load(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     (
@@ -453,7 +453,6 @@ def versioned_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: version reads are plain parquet scans behind the
     manifest; the diff is one full-outer hash join on the key."""
-    from ..sources.scratch import scratch_dir
     from ..sources.versioned import VersionedTable, transactional_merge
 
     c = load(spark, sf_dir, "customer")
@@ -522,15 +521,12 @@ def schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     logic (NULL-tolerant) ships.  Writes are hash-clustered per
     generation so the layout is deterministic.
     """
-    import os
-    import tempfile
+    tag = dataset_tag(sf_dir)
 
-    d = load(spark, sf_dir, "documents")
-    gen2_flag = (F.col("doc_id") % 3) == 0
-    key = f"_schema_evo_{os.path.basename(str(sf_dir)).replace('.', '_')}"
-    cached = getattr(spark, key, None)
-    if cached is None:
-        out = tempfile.mkdtemp(prefix="schema_evo_")
+    def build() -> str:
+        out = scratch_dir(f"schema_evo_{tag}_")
+        d = load(spark, sf_dir, "documents")
+        gen2_flag = (F.col("doc_id") % 3) == 0
         g1 = d.filter(~gen2_flag).select("doc_id", "source", "n_chars")
         g2 = (
             d.filter(gen2_flag)
@@ -543,9 +539,11 @@ def schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         g1.coalesce(1).write.mode("append").parquet(out)
         g2.coalesce(1).write.mode("append").parquet(out)
-        setattr(spark, key, out)
-        cached = out
-    merged = spark.read.option("mergeSchema", "true").parquet(cached)
+        return out
+
+    merged = spark.read.option("mergeSchema", "true").parquet(
+        session_memo(spark, f"layout.schema_evo.{tag}", build)
+    )
     return (
         merged.withColumn(
             "gen", F.coalesce(F.col("quality_gen"), F.lit(1)).cast("long")
@@ -672,7 +670,6 @@ def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotence guard a real CDC consumer would use.  Reference
     analog: run_scoring_engine.py re-scores ALL companies per run —
     this is the maintenance path that avoids exactly that."""
-    from ..functions.cache import tracked_persist
     from ..sources.catalog import ns
 
     ev = load(spark, sf_dir, "events", fan_out=True).filter(

@@ -12,9 +12,15 @@ is path-based so the same code works on a directory of many files.
 
 from __future__ import annotations
 
+import os
+import re
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions.cache import session_memo
 
 TABLES = (
     "region",
@@ -34,69 +40,72 @@ TABLES = (
 # supplier/part grow slowly relative to the fact tables).
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part"})
 
-# Schema memo per (SparkSession id, parquet path): `spark.read.parquet`
-# runs a 1-task schema-inference job against the footer on EVERY call,
-# so a bench pass over N queries × M tables × R reps paid N·M·R footer
-# jobs (stage-probe r13: TPC-H Q5 ran SIX 1-task `parquet at` stages
-# per run, one per table).  Inferring once per session and passing the
-# explicit schema afterwards removes those jobs; pure metadata, not a
-# result cache — at 100 TB the catalog (Delta/Iceberg/metastore) serves
-# the schema the same way (guide §6: listing/planning is driver-side
-# overhead to amortize).  Keyed by session id so a new session (new
-# confs, e.g. nanosAsLong) re-infers.
-_SCHEMA_MEMO: dict[tuple[str, str], "T.StructType"] = {}
+# Per-session catalog metadata lives in the session memo
+# (functions/cache.py `session_memo`):
+# - ("schema", path): `spark.read.parquet` runs a 1-task
+#   schema-inference job against the footer on EVERY call (stage-probe
+#   r13: TPC-H Q5 ran SIX 1-task `parquet at` stages per run, one per
+#   table); inferring once per session and passing the explicit schema
+#   afterwards removes those jobs.  A new session (new confs, e.g.
+#   nanosAsLong) re-infers.
+# - ("fan_out", path): whether the scan already fans out
+#   (`_scan_fans_out`), read from driver-side footers once per session.
+# - ("parquet", path): the resolved frame behind `read_parquet_memo`.
+# Pure metadata, not result caches — at 100 TB the catalog
+# (Delta/Iceberg/metastore) serves these the same way (guide §6:
+# listing/planning is driver-side overhead to amortize).
 
-# Scan-parallelism memo per (SparkSession id, parquet path): whether the
-# scan itself already fans out (see _scan_fans_out).  Driver-side footer
-# metadata, read once per session per table.
-_FAN_OUT_MEMO: dict[tuple[str, str], bool] = {}
+_BYTE_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
 
 
-def _prune_dead_sessions(app_id: str) -> None:
-    """Drop memo entries owned by other (stopped) sessions so the
-    memos cannot pin DataFrame/py4j object graphs of dead sessions in
-    long-lived multi-session processes (r13 advisor note).  One pass
-    over small dicts; runs only when a foreign key is present."""
-    for memo in (_SCHEMA_MEMO, _DF_MEMO, _FAN_OUT_MEMO):
-        stale = [k for k in memo if k[0] != app_id]
-        for k in stale:
-            memo.pop(k, None)
+def _conf_bytes(spark: SparkSession, key: str) -> int:
+    """A byte-size SQL conf ("128MB", "4194304", "4m") as bytes."""
+    m = re.fullmatch(r"(\d+)\s*([kmgt]?)b?", spark.conf.get(key).strip().lower())
+    return int(m.group(1)) * _BYTE_UNITS[m.group(2)]
 
 
 def _scan_fans_out(spark: SparkSession, path: str) -> bool:
     """True when the parquet scan ALREADY yields at least
-    defaultParallelism effective input splits, so a fan-out
+    defaultParallelism non-empty input splits, so a fan-out
     repartition would be a gratuitous full shuffle of the base table
     (guide §2.1/§2.5 — the r13 verdict's top scale risk).
 
-    Parquet effective split granularity is the ROW GROUP: Spark cuts
-    files into byte ranges at `spark.sql.files.maxPartitionBytes`, but
-    only the range containing a row-group start produces rows, so a
-    single-row-group file pins the scan to one task no matter how it
-    is split.  The check is a bounded driver-side footer read (the
-    `_long_ts_ns_multiplier` discipline): ≥ parallelism FILES fans out
-    trivially; otherwise row groups are summed file-by-file with an
-    early stop at the threshold.  At 100 TB a manifest-backed format
-    answers this from table metadata the same way.  On any read error
-    the answer is False (keep the repartition — the safe local
-    posture)."""
+    Spark cuts each file into byte ranges of `maxSplitBytes =
+    min(maxPartitionBytes, max(openCostInBytes, (Σlen + n·openCost) /
+    defaultParallelism))`, and only a range holding a row-group start
+    produces rows — so a file contributes min(row groups,
+    ceil(len / maxSplitBytes)) splits.  A single-row-group file pins
+    the scan to one task however it is cut, and a small file with many
+    row groups is still ONE byte range.  The check is a bounded
+    driver-side footer read (the `_long_ts_ns_multiplier` discipline):
+    ≥ parallelism FILES fans out trivially; otherwise splits are summed
+    file-by-file with an early stop at the threshold.  At 100 TB a
+    manifest-backed format answers this from table metadata the same
+    way.  On any read error the answer is False (keep the repartition —
+    the safe local posture)."""
     import glob as _glob
-    import os as _os
 
     par = spark.sparkContext.defaultParallelism
     try:
-        if _os.path.isdir(path):
-            files = _glob.glob(_os.path.join(path, "**", "*.parquet"), recursive=True)
+        if os.path.isdir(path):
+            files = _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
         else:
             files = [path]
         if len(files) >= par:
             return True
         import pyarrow.parquet as pq
 
-        rg = 0
-        for f in files:
-            rg += pq.ParquetFile(f).metadata.num_row_groups
-            if rg >= par:
+        sizes = [os.path.getsize(f) for f in files]
+        open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes")
+        max_split = min(
+            _conf_bytes(spark, "spark.sql.files.maxPartitionBytes"),
+            max(open_cost, (sum(sizes) + len(files) * open_cost) // par),
+        )
+        splits = 0
+        for f, size in zip(files, sizes):
+            row_groups = pq.ParquetFile(f).metadata.num_row_groups
+            splits += min(row_groups, -(-size // max_split))
+            if splits >= par:
                 return True
         return False
     except Exception:  # pragma: no cover - footer read is best-effort
@@ -110,9 +119,10 @@ def load(spark: SparkSession, sf_dir: str, name: str, fan_out: bool = False) -> 
     expression-heavy narrow stages (shingling, hashing, vector math).
     The test parquet files have a SINGLE row group, so their scan
     cannot split and would pin the whole pipeline to one task — for
-    those a round-robin repartition is inserted.  On multi-file /
-    multi-row-group production tables the scan fans out by itself and
-    the repartition is SKIPPED (`_scan_fans_out`) — r14: the previous
+    those a round-robin repartition is inserted.  When the scan already
+    yields ≥ defaultParallelism non-empty splits (`_scan_fans_out`:
+    enough files, or enough row groups in byte ranges big enough to
+    be split apart) the repartition is SKIPPED — r14: the previous
     unconditional `repartition(defaultParallelism)` baked a full
     base-table shuffle into every consumer plan at scale.
     """
@@ -126,42 +136,34 @@ def load(spark: SparkSession, sf_dir: str, name: str, fan_out: bool = False) -> 
         # normalized to the same int64-ns contract below.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
-    app_id = spark.sparkContext.applicationId
-    memo_key = (app_id, path)
-    if any(k[0] != app_id for k in _SCHEMA_MEMO):
-        _prune_dead_sessions(app_id)
-    schema = _SCHEMA_MEMO.get(memo_key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_MEMO[memo_key] = df.schema
-    else:
-        df = spark.read.schema(schema).parquet(path)
+    schema = session_memo(
+        spark, ("schema", path), lambda: spark.read.parquet(path).schema
+    )
+    df = spark.read.schema(schema).parquet(path)
     if name == "events":
         df = normalize_events_ts(df, source_path=path)
-    if fan_out:
-        fans = _FAN_OUT_MEMO.get(memo_key)
-        if fans is None:
-            fans = _scan_fans_out(spark, path)
-            _FAN_OUT_MEMO[memo_key] = fans
-        if not fans:
-            df = df.repartition(spark.sparkContext.defaultParallelism)
+    if fan_out and not session_memo(
+        spark, ("fan_out", path), lambda: _scan_fans_out(spark, path)
+    ):
+        df = df.repartition(spark.sparkContext.defaultParallelism)
     return df
 
 
-_DF_MEMO: dict[tuple[str, str], tuple[DataFrame, tuple | None]] = {}
-
-
 def _layout_sig(path: str) -> tuple | None:
-    """Cheap change signature of a layout root: (mtime_ns, size) of the
-    directory entry itself.  Any rewrite of the layout (overwrite
-    recreates the root; a partitioned write adds/removes entries in
-    it) bumps the root mtime, so a changed signature means the memoized
-    file index would be stale."""
-    import os as _os
-
+    """Cheap change signature of a layout: the root's (mtime_ns, size)
+    plus the names and mtimes of its IMMEDIATE children (one
+    os.scandir).  An overwrite recreates the root and a partitioned
+    write adds/removes root entries; a file added to or removed from an
+    existing `k=v/` partition directory bumps that child's mtime.
+    Changes deeper than one level, or within one mtime tick, are not
+    seen."""
     try:
-        st = _os.stat(path)
-        return (st.st_mtime_ns, st.st_size)
+        st = os.stat(path)
+        kids = ()
+        if stat.S_ISDIR(st.st_mode):
+            with os.scandir(path) as it:
+                kids = tuple(sorted((e.name, e.stat().st_mtime_ns) for e in it))
+        return (st.st_mtime_ns, st.st_size, kids)
     except OSError:
         return None
 
@@ -182,20 +184,18 @@ def read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
     the file list the same way (guide §6: listing is driver overhead
     to amortize; table formats avoid directory listing altogether).
 
-    The write-once caller contract (all call sites create a fresh
-    `scratch_dir` and write before the first read) is now ENFORCED,
-    not just documented (r13 advisor note): the memo records the
-    layout root's change signature (`_layout_sig`, one os.stat per
-    access) and a rewritten path invalidates the entry — the next
-    access re-resolves the file index instead of serving a stale
-    listing."""
-    memo_key = (spark.sparkContext.applicationId, path)
+    Callers pass write-once paths (a fresh `scratch_dir`, written
+    before the first read).  As a guard on top of that contract the
+    entry carries the layout's change signature (`_layout_sig`: the
+    root and its immediate children); when the signature changed, the
+    entry is replaced by a fresh read that re-resolves the file index."""
     sig = _layout_sig(path)
-    hit = _DF_MEMO.get(memo_key)
-    if hit is not None and hit[1] == sig:
-        return hit[0]
-    df = spark.read.parquet(path)
-    _DF_MEMO[memo_key] = (df, sig)
+    df, _ = session_memo(
+        spark,
+        ("parquet", path),
+        lambda: (spark.read.parquet(path), sig),
+        valid=lambda hit: hit[1] == sig,
+    )
     return df
 
 

@@ -61,3 +61,45 @@ def test_scratch_dirs_share_one_process_root():
     # both under the same per-process root (removed atexit)
     assert os.path.dirname(d1) == os.path.dirname(d2)
     assert "spark_graft_scratch_" in os.path.dirname(d1)
+
+
+def test_session_memo_builds_once_per_key(spark):
+    calls = []
+
+    def build():
+        calls.append(1)
+        return len(calls)
+
+    assert C.session_memo(spark, ("unit", "once"), build) == 1
+    assert C.session_memo(spark, ("unit", "once"), build) == 1
+    assert C.session_memo(spark, ("unit", "other"), build) == 2
+    assert len(calls) == 2
+    # a rejected entry is rebuilt and replaced
+    assert C.session_memo(spark, ("unit", "once"), build, valid=lambda v: v > 1) == 3
+    assert C.session_memo(spark, ("unit", "once"), build) == 3
+
+
+def test_session_memo_is_scoped_to_its_session(spark):
+    key = ("unit", "scoped")
+    C.session_memo(spark, key, lambda: "first session")
+    other = spark.newSession()
+    assert C.session_memo(other, key, lambda: "new session") == "new session"
+    assert C.session_memo(spark, key, lambda: "rebuilt") == "first session"
+
+
+def test_session_persist_repersists_after_release_all(spark):
+    built = []
+
+    def build():
+        built.append(1)
+        return spark.range(11)
+
+    df = C.session_persist(spark, "unit.session_persist", build)
+    assert df.storageLevel.useMemory
+    C.release_all()
+    assert not df.storageLevel.useMemory
+    again = C.session_persist(spark, "unit.session_persist", build)
+    assert again.storageLevel.useMemory
+    assert len(built) == 1, "re-persisted, not rebuilt"
+    C.release_all()
+

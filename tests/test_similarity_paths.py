@@ -243,25 +243,23 @@ def test_lsh_pairs_topk_growth_path_matches_oracle(spark, duck):
     different query than the driver checks."""
     import re
 
+    from damg7245_casestudy_03_ai_scoring_engine_spark.functions.cache import (
+        dataset_tag,
+        session_memo,
+    )
     from damg7245_casestudy_03_ai_scoring_engine_spark.operators.similarity import (
-        _sf_tag_sim,
         _topk_band_bits,
     )
 
     assert _topk_band_bits(1 << 17) == 9
-    key = f"_emb_n_{_sf_tag_sim(SF_SMOKE)}"
-    old = getattr(spark, key, None)
-    setattr(spark, key, 1 << 17)
-    try:
-        srows = {
-            (r.item, r.partner, round(r.cosine, 6), r.rk)
-            for r in REGISTRY["lsh_pairs_topk"].fn(spark, SF_SMOKE).collect()
-        }
-    finally:
-        if old is None:
-            delattr(spark, key)
-        else:
-            setattr(spark, key, old)
+    # a fresh session whose memoized corpus count is seeded to 2^17;
+    # the shared test session's memo is left alone
+    forced_session = spark.newSession()
+    session_memo(forced_session, f"emb_n.{dataset_tag(SF_SMOKE)}", lambda: 1 << 17)
+    srows = {
+        (r.item, r.partner, round(r.cosine, 6), r.rk)
+        for r in REGISTRY["lsh_pairs_topk"].fn(forced_session, SF_SMOKE).collect()
+    }
     forced = re.sub(
         r"WITH sizing AS \(.*?\n\),",
         "WITH sizing AS (SELECT 9 AS r),",

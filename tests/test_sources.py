@@ -210,6 +210,34 @@ def test_parquet_schema_evolution_merges_additive_columns(spark, tmp_path):
     assert rows[1] is None and abs(rows[2] - 0.7) < 1e-12
 
 
+def test_schema_evolution_scan_keys_on_full_dataset_path(spark, tmp_path):
+    """`schema_evolution_scan` memoizes its written generations per
+    dataset: two directories sharing a basename must each get their
+    own result, not the first one's."""
+    from collections import Counter
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from conftest import SF_SMOKE
+
+    from damg7245_casestudy_03_ai_scoring_engine_spark.operators import REGISTRY
+
+    docs = pq.read_table(f"{SF_SMOKE}/documents.parquet")
+    want = {}
+    for side, keep in (("a", 0), ("b", 1)):
+        sf_dir = tmp_path / side / "sf"
+        sf_dir.mkdir(parents=True)
+        part = docs.filter(pc.equal(pc.bit_wise_and(docs["doc_id"], 1), keep))
+        pq.write_table(part, sf_dir / "documents.parquet")
+        want[str(sf_dir)] = Counter(part.column("source").to_pylist())
+    a_counts, b_counts = want.values()
+    assert a_counts != b_counts, "the two datasets must differ"
+    for sf_dir, counts in want.items():
+        rows = REGISTRY["schema_evolution_scan"].fn(spark, sf_dir).collect()
+        assert {r.source: r.n_docs for r in rows} == dict(counts), sf_dir
+
+
 def test_orc_roundtrip_preserves_rows(spark, tmp_path):
     """ORC is the second built-in columnar format; a bronze table
     must round-trip bit-identically (events' ns-longs included)."""
@@ -319,14 +347,12 @@ def test_zorder_layout_files_skippable_on_both_dims(spark):
     import pyarrow.parquet as pq
 
     from damg7245_casestudy_03_ai_scoring_engine_spark.operators.layout import (
-        _sf_tag,
-        _zorder_events,
+        _zorder_events_path,
     )
     from damg7245_casestudy_03_ai_scoring_engine_spark.sources.catalog import ns
     from conftest import SF_CORRECTNESS
 
-    _zorder_events(spark, SF_CORRECTNESS)
-    path = getattr(spark, f"_layout_events_zorder_{_sf_tag(SF_CORRECTNESS)}")
+    path = _zorder_events_path(spark, SF_CORRECTNESS)
 
     lo_u, hi_u = 3, 60
     lo_t, hi_t = ns("2024-01-08"), ns("2024-01-15")
@@ -454,10 +480,7 @@ def test_bloom_index_incremental_append_equals_rebuild(spark):
         build_file_bloom_index,
     )
 
-    _zorder_events(spark, SF_CORRECTNESS)
-    tag_attr = [a for a in vars(spark).keys() if a.startswith("_layout_events_zorder_")]
-    ev = spark.read.parquet(getattr(spark, tag_attr[0]))
-    files = sorted(ev.inputFiles())
+    files = sorted(_zorder_events(spark, SF_CORRECTNESS).inputFiles())
     assert len(files) >= 4, "need a multi-file layout for the split"
     old_files, new_files = files[: len(files) // 2], files[len(files) // 2 :]
     bits = 1024
@@ -678,23 +701,84 @@ def test_read_parquet_memo_invalidates_on_rewrite(spark, tmp_path):
     assert read_parquet_memo(spark, path) is df2
 
 
-def test_fan_out_gate_on_scan_parallelism(spark, tmp_path, monkeypatch):
+def test_read_parquet_memo_sees_nested_rewrite(spark, tmp_path):
+    """A file dropped into an EXISTING `part=k/` directory leaves the
+    layout root's mtime alone; the change signature also covers the
+    root's immediate children, so the next read serves the new rows."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from damg7245_casestudy_03_ai_scoring_engine_spark.sources.catalog import (
+        read_parquet_memo,
+    )
+
+    path = tmp_path / "memo_nested"
+    spark.range(100).selectExpr("id", "id % 4 AS part").write.partitionBy(
+        "part"
+    ).parquet(str(path))
+    df1 = read_parquet_memo(spark, str(path))
+    assert df1.count() == 100
+    root_mtime = path.stat().st_mtime_ns
+    time.sleep(0.05)  # ensure a distinct mtime_ns on coarse filesystems
+    pq.write_table(
+        pa.table({"id": pa.array(range(1000, 1007), pa.int64())}),
+        path / "part=1" / "part-extra.parquet",
+    )
+    assert path.stat().st_mtime_ns == root_mtime, "root must be untouched"
+    df2 = read_parquet_memo(spark, str(path))
+    assert df2 is not df1
+    assert df2.count() == 107
+    assert df2.filter("part = 1").count() == 32
+
+
+def _multi_row_group_lineitem(tmp_path, par):
+    """One small lineitem file cut into > par row groups: every row
+    group sits in the same byte range, so the scan is ONE split."""
+    import pyarrow.parquet as pq
+
+    from conftest import SF_SMOKE
+
+    t = pq.read_table(f"{SF_SMOKE}/lineitem.parquet")
+    pq.write_table(
+        t,
+        tmp_path / "lineitem.parquet",
+        row_group_size=max(1, t.num_rows // (par + 1)),
+    )
+    assert pq.ParquetFile(tmp_path / "lineitem.parquet").metadata.num_row_groups > par
+    return str(tmp_path)
+
+
+def _many_file_lineitem(spark, tmp_path, par):
+    spark.range(par * 10).repartition(par).write.parquet(
+        str(tmp_path / "lineitem.parquet")
+    )
+    return str(tmp_path)
+
+
+@pytest.mark.parametrize(
+    "layout, repartitions",
+    [("fixture", True), ("many_files", False), ("multi_row_group", True)],
+    ids=["fixture", "many_files", "multi_row_group"],
+)
+def test_fan_out_gate_on_scan_parallelism(spark, tmp_path, layout, repartitions):
     """r14 (the r13 verdict's top scale risk): `load(..., fan_out=True)`
     repartitions ONLY when the parquet scan cannot already split to
-    defaultParallelism — single-row-group fixtures keep the fan-out;
-    a multi-file table skips the gratuitous base-table shuffle."""
+    defaultParallelism non-empty splits.  The single-row-group fixture
+    keeps the fan-out; a >= parallelism multi-file layout skips the
+    gratuitous base-table shuffle; a small file with many row groups is
+    still one byte range, so it keeps the fan-out too."""
+    from conftest import SF_SMOKE
+
     from damg7245_casestudy_03_ai_scoring_engine_spark.sources import catalog
 
-    # the real fixture: one file, one row group → the repartition stays
-    fixture = "/root/testdata/sf0.001"
-    df = catalog.load(spark, fixture, "lineitem", fan_out=True)
-    assert "Exchange RoundRobinPartitioning" in df._jdf.queryExecution().toString() or \
-        df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-
-    # a multi-file layout with >= defaultParallelism splits → no repartition
     par = spark.sparkContext.defaultParallelism
-    many = str(tmp_path / "many_files")
-    spark.range(par * 10).repartition(par).write.parquet(many)
-    assert catalog._scan_fans_out(spark, many) is True
-    # and the single-row-group fixture file does not fan out by itself
-    assert catalog._scan_fans_out(spark, f"{fixture}/lineitem.parquet") is False
+    sf_dir = {
+        "fixture": lambda: SF_SMOKE,
+        "many_files": lambda: _many_file_lineitem(spark, tmp_path, par),
+        "multi_row_group": lambda: _multi_row_group_lineitem(tmp_path, par),
+    }[layout]()
+    df = catalog.load(spark, sf_dir, "lineitem", fan_out=True)
+    plan = df._jdf.queryExecution().toString()
+    assert ("RoundRobinPartitioning" in plan) is repartitions
