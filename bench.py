@@ -42,12 +42,16 @@ def main() -> None:
     # warm run sees the same data; the timed pass then reports
     # steady-state engine throughput — what a long-lived cluster
     # delivers — rather than one-time JIT/plan-compilation cost.
+    # A warm-up failure must never sink the bench run, but it is
+    # reported: on stderr now, and under "warmup_failures" in the JSON.
+    warmup_failures: dict[str, str] = {}
     for name, spec in bench_specs.items():
         try:
             spark.sparkContext.setJobDescription(f"warmup:{name}")
             spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass  # a warm-up failure must never sink the bench run
+        except Exception as exc:  # noqa: BLE001 - harness must survive
+            warmup_failures[name] = f"{type(exc).__name__}: {exc}"[:300]
+            print(f"bench: {name} FAILED (warm-up): {warmup_failures[name]}", file=sys.stderr)
         release_all()  # no cross-query cache accumulation during warm-up
 
     # Three timed runs per query, MEDIAN per pass: single-shot wall
@@ -143,6 +147,7 @@ def main() -> None:
                 "pass_totals": pass_totals,
                 "n_both_passes": len(both_ok),
                 "failures": failures,
+                "warmup_failures": warmup_failures,
                 "sf": sf,
                 "cpus": cpus,
                 "n_queries": len(timings),

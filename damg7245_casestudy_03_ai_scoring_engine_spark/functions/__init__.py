@@ -1,8 +1,8 @@
-from .core import blend, clamp, conf_floor, safe_div, score_band  # noqa: F401
+from .core import blend, clamp, conf_floor_sql, safe_div, score_band_sql  # noqa: F401
 from .text import (  # noqa: F401
     char_shingles,
     stopword_ratio,
     token_count,
     word_tokens,
 )
-from .vectors import cosine_similarity, dot, l2_norm  # noqa: F401
+from .vectors import cosine_similarity_sql, dot_sql, l2_norm_sql  # noqa: F401

@@ -27,15 +27,22 @@ def clamp(col: Column | str, lo: float, hi: float) -> Column:
     return F.least(F.greatest(_col(col), F.lit(float(lo))), F.lit(float(hi)))
 
 
-# --- single-parse SQL fragment twins (r13, guide §5 driver / §7.3) ---------
-# Each classic-API Column op is a py4j round trip at CONSTRUCTION time,
-# and the scoring DAG builds hundreds of them per invocation; these
-# string builders compose the IDENTICAL arithmetic python-side for ONE
-# F.expr/selectExpr parse.  `!r` on floats emits the shortest
-# round-tripping decimal (bit-exact reparse); the D suffix keeps SQL
-# literals DOUBLE (bare decimals parse as DECIMAL and would change the
-# expression types).  Fragments, not Columns: callers splice them into
-# one top-level parse per output column.
+# --- SQL fragments: the one spelling of each formula ----------------------
+# Every scoring formula (here, in vectors.py and in scoring/) is written
+# once, as a function that composes SQL text python-side; a caller
+# that needs a Column wraps the fragment in ONE F.expr/selectExpr
+# parse.  Classic-API Column arithmetic costs a py4j round trip per
+# operator at construction time, and a formula spelled both ways can
+# drift between its two spellings.  Fragment arguments are SQL
+# operands: a column name, a literal, or a parenthesised expression.
+# `!r` on floats emits the shortest round-tripping decimal
+# (bit-exact reparse); the D suffix keeps literals DOUBLE (bare
+# decimals parse as DECIMAL and would change the expression types).
+#
+# `clamp` and `round_stable` alone keep a Column form next to their
+# fragment: about eighty operator call sites pass them Column
+# expressions built from other Column helpers, so a fragment-only
+# form would mean rewriting each of those expressions as text.
 
 
 def flit(v: float) -> str:
@@ -58,6 +65,8 @@ def clamp_sql(x: str, lo: float, hi: float) -> str:
 
 
 def conf_floor_sql(x: str, floor: float = 0.20) -> str:
+    """Effective confidence max(conf, floor), NULL as 0 — reference
+    app/scoring_engine/vr_model.py:58-61."""
     return f"greatest(coalesce({x}, 0.0D), {flit(floor)})"
 
 
@@ -67,6 +76,9 @@ def round_stable_sql(x: str, scale: int) -> str:
 
 
 def score_band_sql(x: str) -> str:
+    """Maturity band ladder at <=20/40/60/80 →
+    Nascent/Developing/Progressing/Advanced/Leading — reference
+    app/scoring_engine/composite.py:17-34."""
     return (
         f"CASE WHEN {x} <= 20 THEN 'Nascent' "
         f"WHEN {x} <= 40 THEN 'Developing' "
@@ -91,26 +103,6 @@ def blend(col: Column | str, target: Column | str | float, weight: Column | floa
     t = F.lit(float(target)) if isinstance(target, (int, float)) else _col(target)
     w = F.lit(float(weight)) if isinstance(weight, (int, float)) else weight
     return (F.lit(1.0) - w) * _col(col) + w * t
-
-
-def conf_floor(col: Column | str, floor: float = 0.20) -> Column:
-    """Effective confidence max(conf, floor) — reference
-    app/scoring_engine/vr_model.py:58-61."""
-    return F.greatest(F.coalesce(_col(col), F.lit(0.0)), F.lit(float(floor)))
-
-
-def score_band(col: Column | str) -> Column:
-    """Maturity band ladder at <=20/40/60/80 →
-    Nascent/Developing/Progressing/Advanced/Leading — reference
-    app/scoring_engine/composite.py:17-34."""
-    c = _col(col)
-    return (
-        F.when(c <= 20, F.lit("Nascent"))
-        .when(c <= 40, F.lit("Developing"))
-        .when(c <= 60, F.lit("Progressing"))
-        .when(c <= 80, F.lit("Advanced"))
-        .otherwise(F.lit("Leading"))
-    )
 
 
 def round_stable(col: Column | str, scale: int) -> Column:

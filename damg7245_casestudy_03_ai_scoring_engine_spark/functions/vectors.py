@@ -6,31 +6,18 @@ similarity-search primitive set for the LLM-data-pipeline operators.
 Accumulate in double regardless of the storage type (float32
 embeddings) — at 64–4096 dims float accumulation error is visible in
 top-k ordering.
+
+Each helper is a SQL fragment, the only spelling of its formula (see
+functions/core.py): callers pass column names and wrap the result in
+one F.expr parse.  A Python-lambda `F.zip_with`/`F.aggregate` build
+costs ~30 ms of py4j traffic per call, and the similarity family
+constructs a dozen of these per DataFrame build.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-
-def _col(x: Column | str) -> Column:
-    return F.col(x) if isinstance(x, str) else x
-
-
-# r13 (guide §5 driver / §7.3 planning): when callers pass plain column
-# NAMES — every operator call site does — build the expression with ONE
-# F.expr parse instead of the python-side higher-order-function
-# machinery, whose per-call lambda setup costs ~30 ms of py4j traffic;
-# the similarity family constructs a dozen of these per DataFrame
-# build.  The SQL spells the IDENTICAL arithmetic (double casts, 0D
-# init, same fold), so results and canonical plans are unchanged in
-# substance; the Column path stays for expression-valued inputs.
-def _is_name(x: Column | str) -> bool:
-    return isinstance(x, str) and x.isidentifier()
-
-
-def _dot_sql(a: str, b: str) -> str:
+def dot_sql(a: str, b: str) -> str:
     return (
         f"aggregate(zip_with({a}, {b}, "
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
@@ -38,36 +25,17 @@ def _dot_sql(a: str, b: str) -> str:
     )
 
 
-def _l2_sql(a: str) -> str:
+def l2_norm_sql(a: str) -> str:
     return (
         f"sqrt(aggregate({a}, 0D, "
         "(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
     )
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    if _is_name(a) and _is_name(b):
-        return F.expr(_dot_sql(a, b))
-    prod = F.zip_with(_col(a), _col(b), lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prod, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def l2_norm(a: Column | str) -> Column:
-    if _is_name(a):
-        return F.expr(_l2_sql(a))
-    sq = F.aggregate(
-        _col(a), F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
-    )
-    return F.sqrt(sq)
-
-
-def cosine_similarity(a: Column | str, b: Column | str) -> Column:
+def cosine_similarity_sql(a: str, b: str) -> str:
     """cos(a,b) with a zero-norm guard (ANSI-safe)."""
-    if _is_name(a) and _is_name(b):
-        na, nb = _l2_sql(a), _l2_sql(b)
-        return F.expr(
-            f"CASE WHEN {na} > 0 AND {nb} > 0 "
-            f"THEN {_dot_sql(a, b)} / ({na} * {nb}) ELSE 0D END"
-        )
-    na, nb = l2_norm(a), l2_norm(b)
-    return F.when((na > 0) & (nb > 0), dot(a, b) / (na * nb)).otherwise(F.lit(0.0))
+    na, nb = l2_norm_sql(a), l2_norm_sql(b)
+    return (
+        f"CASE WHEN {na} > 0 AND {nb} > 0 "
+        f"THEN {dot_sql(a, b)} / ({na} * {nb}) ELSE 0D END"
+    )

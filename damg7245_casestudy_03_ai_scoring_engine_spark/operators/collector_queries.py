@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.core import clamp
+from ..scoring.talent import talent_concentration_sql, talent_risk_adjustment_sql
 from ..sources.catalog import load, ns
 from .registry import register
 
@@ -151,21 +152,11 @@ def talent_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     M9 risk adjustment 1 − 0.15·max(0, TC−0.25)
     (talent_concentration.py:93-100).  Pure column math over A11."""
     jobs = job_posting_aggregate(spark, sf_dir)
-    leadership_ratio = F.col("n_senior").cast("double") / F.greatest(
-        F.col("n_posts"), F.lit(1)
+    tc = talent_concentration_sql(
+        "(CAST(n_senior AS DOUBLE) / greatest(n_posts, 1))", "n_posts", "n_skills", "0.5D"
     )
-    team_factor = F.least(
-        F.lit(1.0), F.lit(1.0) / (F.sqrt(F.col("n_posts").cast("double")) + 0.1)
-    )
-    skill_factor = F.greatest(F.lit(0.0), 1.0 - F.col("n_skills").cast("double") / 15.0)
-    tc = F.round(
-        clamp(0.4 * leadership_ratio + 0.3 * team_factor + 0.2 * skill_factor + 0.1 * 0.5, 0.0, 1.0),
-        4,
-    )
-    out = jobs.select("company", "n_posts", "n_senior", "n_skills", tc.alias("tc"))
-    risk = F.round(
-        clamp(1.0 - 0.15 * F.greatest(F.lit(0.0), F.col("tc") - 0.25), 0.0, 1.0), 4
-    )
+    out = jobs.selectExpr("company", "n_posts", "n_senior", "n_skills", f"round({tc}, 4) AS tc")
+    risk = F.expr(f"round({talent_risk_adjustment_sql('tc')}, 4)")
     return out.withColumn("talent_risk_adj", risk)
 
 

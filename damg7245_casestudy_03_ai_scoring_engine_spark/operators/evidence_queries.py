@@ -14,14 +14,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..scoring.config import SOURCE_PROFILES
+from ..scoring.config import SOURCE_PROFILES, dimension_case_sql
 from ..scoring.evidence import (
     RUBRIC_LEVELS,
     dimension_hits,
     keyword_matches,
-    quant_metric,
-    rubric_confidence,
-    rubric_score,
+    quant_metric_sql,
+    rubric_confidence_sql,
+    rubric_score_sql,
 )
 from ..sources.catalog import load
 from .registry import register
@@ -39,6 +39,7 @@ DEMO_KEYWORDS: dict[str, tuple[str, ...]] = {
 }
 
 _SOURCES = list(SOURCE_PROFILES.keys())  # 9 canonical sources, stable order
+_RELIABILITY = {src: rel for src, (rel, _w) in SOURCE_PROFILES.items()}
 
 
 def _source_name_sql(src_name: str) -> str:
@@ -47,16 +48,6 @@ def _source_name_sql(src_name: str) -> str:
     idx = f"CAST(substring({src_name}, 4, 10) AS INT) % {len(_SOURCES)}"
     arms = " ".join(f"WHEN {i} THEN '{s}'" for i, s in enumerate(_SOURCES))
     return f"CASE {idx} {arms} ELSE '{_SOURCES[0]}' END"
-
-
-def _reliability_sql(name_sql: str) -> str:
-    from ..functions.core import flit
-
-    arms = " ".join(
-        f"WHEN {name_sql} = '{src}' THEN {flit(rel)}"
-        for src, (rel, _w) in SOURCE_PROFILES.items()
-    )
-    return f"CASE {arms} ELSE 0.5D END"
 
 
 def demo_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -76,7 +67,7 @@ def demo_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
         "evidence_id",
         "company_id",
         "source",
-        f"{_reliability_sql('source')} AS reliability",
+        f"{dimension_case_sql('source', _RELIABILITY, 0.5)} AS reliability",
         "confidence",
         "text",
     )
@@ -290,7 +281,7 @@ def rubric_dimension_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.avg("reliability").alias("avg_rel"),
     )
     withm = agg.withColumn(
-        "metric", quant_metric("n_hits", "n_evidence", "avg_rel")
+        "metric", F.expr(quant_metric_sql("n_hits", "n_evidence", "avg_rel"))
     )
     return withm.select(
         "company_id",
@@ -298,8 +289,8 @@ def rubric_dimension_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_hits",
         "n_evidence",
         F.expr("round(metric, 6)").alias("metric"),
-        F.round(rubric_score("n_hits", "metric"), 6).alias("rubric_score"),
-        F.round(rubric_confidence("n_hits", "metric"), 6).alias(
+        F.round(F.expr(rubric_score_sql("n_hits", "metric")), 6).alias("rubric_score"),
+        F.round(F.expr(rubric_confidence_sql("n_hits", "metric")), 6).alias(
             "rubric_confidence"
         ),
     )

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.core import clamp, conf_floor, safe_div
+from ..functions.core import clamp, conf_floor_sql, safe_div
 from ..sources.catalog import load, ns
 from .registry import register
 
@@ -520,7 +520,7 @@ def weighted_mean_vr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag",
         ((F.col("l_partkey") * 7 + F.col("l_suppkey")) % 101).cast("double").alias("score"),
         (F.col("l_quantity") / 50.0).alias("w"),
-        conf_floor((F.col("l_orderkey") % 10).cast("double") / 10.0).alias("conf_eff"),
+        F.expr(conf_floor_sql("CAST(l_orderkey % 10 AS DOUBLE) / 10.0D")).alias("conf_eff"),
     )
     wc = F.sum(F.col("w") * F.col("conf_eff"))
     num = F.sum(F.col("score") * F.col("w") * F.col("conf_eff"))

@@ -414,10 +414,10 @@ def hr_position_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     sector-average VR, and M11 prior blending
     (run_scoring_engine.py:47-49) toward the sector mean."""
     from ..functions.core import blend, clamp as _clamp
+    from ..scoring.config import DEFAULT_HR_BASE, SECTOR_HR_BASE, dimension_case_sql
     from ..scoring.demo_domain import companies as companies_df
     from ..scoring.demo_domain import dimension_scores as ds_df
-    from ..scoring.hr import position_factor as pf_model_col
-    from ..scoring.pipeline import _hr_base_expr
+    from ..scoring.hr import position_factor_sql
     from ..scoring.vr import vr_scores
     from ..sources.catalog import load as _load
 
@@ -438,7 +438,9 @@ def hr_position_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(ord_cnt, "company_id")
         .crossJoin(F.broadcast(port))
         .join(F.broadcast(savg), "sector")
-        .withColumn("hr_base", _hr_base_expr(F.col("sector")))
+        .withColumn(
+            "hr_base", F.expr(dimension_case_sql("sector", SECTOR_HR_BASE, DEFAULT_HR_BASE))
+        )
         .withColumn("mcap_pct", (F.col("position_factor") + 1.0) / 2.0)
     )
     baseline_norm = _clamp(F.col("hr_base") / 75.0, 0.7, 1.3)
@@ -446,7 +448,7 @@ def hr_position_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     hr_factor = F.when(
         (F.col("n_orders") < 3) | (F.col("avg_orders") == 0), F.lit(1.0)
     ).otherwise(_clamp(F.lit(1.0) + 0.5 * (intensity - 1.0) / baseline_norm, 0.0, 2.0))
-    pf = pf_model_col("vr_score", "sector_avg_vr", "mcap_pct")
+    pf = F.expr(position_factor_sql("vr_score", "sector_avg_vr", "mcap_pct"))
     return m.select(
         "company_id",
         "sector",

@@ -26,7 +26,7 @@ from ..functions.cache import (
     session_persist,
     tracked_persist,
 )
-from ..functions.vectors import cosine_similarity, dot, l2_norm
+from ..functions.vectors import cosine_similarity_sql, dot_sql, l2_norm_sql
 from ..sources.catalog import load, read_parquet_memo
 from ..sources.scratch import scratch_dir
 from .registry import register
@@ -119,7 +119,7 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "cand_id",
             "cand_label",
-            F.round(cosine_similarity("qv", "cv"), 6).alias("cosine"),
+            F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
         )
     )
     return _topk_ranked(scored, "query_id", "cosine DESC, cand_id ASC", _TOP_K)
@@ -389,7 +389,7 @@ def _ivf_search(
         .select(
             "query_id",
             "cand_id",
-            F.round(cosine_similarity("qv", "cv"), 6).alias("cosine"),
+            F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
         )
     )
     return _topk_ranked(scored, "query_id", "cosine DESC, cand_id ASC", _TOP_K)
@@ -459,7 +459,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("vec_b"), F.col("label").alias("label_b"),
         F.col("embedding").alias("vb"),
     )
-    cos = F.round(cosine_similarity("va", "vb"), 6)
+    cos = F.round(F.expr(cosine_similarity_sql("va", "vb")), 6)
     return (
         a.crossJoin(b)
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -523,7 +523,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup_of_earlier = (
         a.join(b, "label")
         .filter(F.col("vec_a") < F.col("vec_b"))
-        .filter(F.round(cosine_similarity("va", "vb"), 6) >= _SEMDEDUP_TAU)
+        .filter(F.round(F.expr(cosine_similarity_sql("va", "vb")), 6) >= _SEMDEDUP_TAU)
         .groupBy("vec_b")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -756,7 +756,7 @@ def lsh_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
 
-    e = emb.select("vec_id", "embedding", l2_norm("embedding").alias("nrm"))
+    e = emb.select("vec_id", "embedding", F.expr(l2_norm_sql("embedding")).alias("nrm"))
     va = e.select(
         F.col("vec_id").alias("vec_a"), F.col("embedding").alias("va"),
         F.col("nrm").alias("na"),
@@ -768,7 +768,7 @@ def lsh_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos = F.round(
         F.when(
             (F.col("na") > 0) & (F.col("nb") > 0),
-            dot("va", "vb") / (F.col("na") * F.col("nb")),
+            F.expr(dot_sql("va", "vb")) / (F.col("na") * F.col("nb")),
         ).otherwise(F.lit(0.0)),
         6,
     )
@@ -980,7 +980,7 @@ def lsh_pairs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
 
-    e = emb.select("vec_id", "embedding", l2_norm("embedding").alias("nrm"))
+    e = emb.select("vec_id", "embedding", F.expr(l2_norm_sql("embedding")).alias("nrm"))
     va = e.select(
         F.col("vec_id").alias("vec_a"), F.col("embedding").alias("va"),
         F.col("nrm").alias("na"),
@@ -992,7 +992,7 @@ def lsh_pairs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos = F.round(
         F.when(
             (F.col("na") > 0) & (F.col("nb") > 0),
-            dot("va", "vb") / (F.col("na") * F.col("nb")),
+            F.expr(dot_sql("va", "vb")) / (F.col("na") * F.col("nb")),
         ).otherwise(F.lit(0.0)),
         6,
     )
@@ -1237,7 +1237,9 @@ def semantic_doc_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.crossJoin(c)
         .filter(F.col("query_id") != F.col("cand_id"))
         .select(
-            "query_id", "cand_id", F.round(cosine_similarity("qv", "cv"), 6).alias("cosine")
+            "query_id",
+            "cand_id",
+            F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
@@ -1298,7 +1300,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cand_id") != F.col("query_id"))
         .select(
             "query_id", "cand_id",
-            F.round(cosine_similarity("qv", "cv"), 6).alias("cosine"),
+            F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
@@ -1620,7 +1622,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "cand_id",
-            F.round(cosine_similarity("qv", "cv"), 6).alias("cosine"),
+            F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
         )
         .withColumn("rk", F.row_number().over(w2))
         .filter(F.col("rk") <= _TOP_K)
@@ -1789,7 +1791,7 @@ def ann_ivf_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "cand_id",
-            F.round(cosine_similarity("qv", "cv"), 6).alias("cosine"),
+            F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
@@ -2049,7 +2051,7 @@ def mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "k",
             "nb",
-            F.round(cosine_similarity("av", "bv"), 6).alias("cosine"),
+            F.round(F.expr(cosine_similarity_sql("av", "bv")), 6).alias("cosine"),
         )
     )
     w = Window.partitionBy("k").orderBy(F.desc("cosine"), F.asc("nb"))
@@ -2137,7 +2139,6 @@ def rag_context_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     which in production is the IVF/LSH-blocked path
     (`ann_ivf_topk`); brute-force scoring here keeps the oracle exact.
     """
-    from ..functions.vectors import cosine_similarity
 
     emb = load(spark, sf_dir, "embeddings", fan_out=True)
     q = emb.filter(F.col("vec_id") < 3).select(
@@ -2147,7 +2148,9 @@ def rag_context_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         q.crossJoin(c)
         .filter(F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id", cosine_similarity("qv", "cv").alias("cosine"))
+        .select(
+            "query_id", "cand_id", F.expr(cosine_similarity_sql("qv", "cv")).alias("cosine")
+        )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
     topk = (
@@ -2513,7 +2516,7 @@ def hard_negative_mining_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "neg_id",
-            F.round(cosine_similarity("qv", "cv"), 6).alias("cosine"),
+            F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
         )
         .filter(F.col("cosine") < F.lit(_HARD_NEG_MAX_COS))
     )
@@ -4340,7 +4343,7 @@ def ann_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "cand_id",
-            F.round(cosine_similarity("qv", "cv"), 6).alias("cosine"),
+            F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
         )
     )
     return _topk_ranked(rer, "query_id", "cosine DESC, cand_id ASC", _TOP_K)

@@ -1,6 +1,11 @@
 from . import config  # noqa: F401
-from .composite import composite_score, with_score_band  # noqa: F401
-from .hr import hr_score, position_factor  # noqa: F401
-from .synergy import formula_synergy, rule_synergy  # noqa: F401
-from .talent import hhi, hhi_penalty_factor, talent_risk_adjustment  # noqa: F401
+from .composite import composite_sql  # noqa: F401
+from .hr import hr_score_sql, position_factor_sql  # noqa: F401
+from .synergy import formula_synergy_sql, rule_synergy  # noqa: F401
+from .talent import (  # noqa: F401
+    hhi,
+    hhi_penalty_factor_sql,
+    talent_concentration_sql,
+    talent_risk_adjustment_sql,
+)
 from .vr import vr_scores  # noqa: F401

@@ -1,4 +1,4 @@
-"""Composite Org-AI-R score and maturity banding.
+"""Composite Org-AI-R score.
 
 Production formula (reference app/scoring_engine/composite.py:49-62,
 scripts/run_scoring_engine.py:444-450):
@@ -6,52 +6,22 @@ scripts/run_scoring_engine.py:444-450):
     Org-AI-R = (1−β)·(α·VR + (1−α)·HR) + β·Synergy,  α=0.60, β=0.12
 
 clamped [0,100]; maturity bands at ≤20/40/60/80
-(composite.py:17-34).  Pure column math.
+(composite.py:17-34) are `functions.core.score_band_sql`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-from ..functions.core import clamp, score_band
+from ..functions.core import clamp_sql, flit
 from .config import COMPOSITE_ALPHA, COMPOSITE_BETA
 
 
-def composite_sql(
-    vr: str,
-    hr: str,
-    synergy: str,
-    alpha: float = COMPOSITE_ALPHA,
-    beta: float = COMPOSITE_BETA,
-) -> str:
-    """Single-parse SQL twin of `composite_score` (r13, guide §5):
-    identical weights and grouping; (1-alpha)/(1-beta) are computed
-    python-side exactly as the Column path computes them, then emitted
-    via shortest round-tripping repr (bit-identical literals)."""
-    from ..functions.core import clamp_sql, flit
-
-    core = f"{flit(alpha)} * {vr} + {flit(1.0 - alpha)} * {hr}"
+def composite_sql(vr: str, hr: str, synergy: str) -> str:
+    """SQL fragment of the composite; (1-α)/(1-β) are computed
+    python-side and emitted via shortest round-tripping repr
+    (bit-identical literals)."""
+    core = f"{flit(COMPOSITE_ALPHA)} * {vr} + {flit(1.0 - COMPOSITE_ALPHA)} * {hr}"
     return clamp_sql(
-        f"{flit(1.0 - beta)} * ({core}) + {flit(beta)} * {synergy}", 0.0, 100.0
+        f"{flit(1.0 - COMPOSITE_BETA)} * ({core}) + {flit(COMPOSITE_BETA)} * {synergy}",
+        0.0,
+        100.0,
     )
-
-
-def composite_score(
-    vr: Column | str,
-    hr: Column | str,
-    synergy: Column | str,
-    alpha: float = COMPOSITE_ALPHA,
-    beta: float = COMPOSITE_BETA,
-) -> Column:
-    if isinstance(vr, str) and isinstance(hr, str) and isinstance(synergy, str):
-        return F.expr(composite_sql(vr, hr, synergy, alpha, beta))
-    vr = F.col(vr) if isinstance(vr, str) else vr
-    hr = F.col(hr) if isinstance(hr, str) else hr
-    syn = F.col(synergy) if isinstance(synergy, str) else synergy
-    core = alpha * vr + (1.0 - alpha) * hr
-    return clamp((1.0 - beta) * core + beta * syn, 0.0, 100.0)
-
-
-def with_score_band(df: DataFrame, score_col: str = "composite_score") -> DataFrame:
-    return df.withColumn("score_band", score_band(score_col))

@@ -20,7 +20,8 @@ real deployment they'd live in Delta tables versioned by `version`.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..functions.core import flit
 
 DIMENSIONS: tuple[str, ...] = (
     "data_infrastructure",
@@ -178,23 +179,10 @@ def source_profiles_df(spark: SparkSession) -> DataFrame:
     )
 
 
-def dimension_case(col_expr, mapping: dict[str, float], default: float = 0.0):
-    """Build a when-ladder Column mapping dimension name -> constant."""
-    it = iter(mapping.items())
-    d0, v0 = next(it)
-    expr = F.when(col_expr == d0, F.lit(v0))
-    for d, v in it:
-        expr = expr.when(col_expr == d, F.lit(v))
-    return expr.otherwise(F.lit(default))
-
-
 def dimension_case_sql(col_name: str, mapping: dict[str, float], default: float = 0.0) -> str:
-    """SQL-fragment twin of `dimension_case` — the identical CASE
-    ladder composed python-side for a single F.expr parse (r13, guide
-    §5/§7.3: each `when` link is a py4j round trip and the scoring
-    builders stack 7-branch ladders per column)."""
-    from ..functions.core import flit
-
+    """CASE fragment mapping a name column to constants (dimension →
+    weight, sector → hr_base), else `default` — one parse, where a
+    `when` chain costs a py4j round trip per link."""
     arms = " ".join(
         f"WHEN {col_name} = '{d}' THEN {flit(v)}" for d, v in mapping.items()
     )

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load
-from .config import DEFAULT_DIM_WEIGHTS, DIMENSIONS, dimension_case
+from .config import DIMENSIONS
 
 SEGMENT_SECTOR: dict[str, str] = {
     "AUTOMOBILE": "Industrials",
@@ -34,15 +34,8 @@ SEGMENT_SECTOR: dict[str, str] = {
 }
 
 
-def _sector_expr(seg_col):
-    expr = F.when(seg_col == "AUTOMOBILE", F.lit("Industrials"))
-    for seg, sec in list(SEGMENT_SECTOR.items())[1:]:
-        expr = expr.when(seg_col == seg, F.lit(sec))
-    return expr.otherwise(F.lit("Services"))
-
-
 def _sector_sql(seg_name: str) -> str:
-    """SQL twin of `_sector_expr` — same CASE ladder, one parse."""
+    """Customer segment → sector CASE fragment."""
     arms = " ".join(
         f"WHEN {seg_name} = '{seg}' THEN '{sec}'"
         for seg, sec in SEGMENT_SECTOR.items()
@@ -50,23 +43,24 @@ def _sector_sql(seg_name: str) -> str:
     return f"CASE {arms} ELSE 'Services' END"
 
 
-def _dimension_expr(linenumber_col):
-    m = linenumber_col % 7
-    expr = F.when(m == 0, F.lit(DIMENSIONS[0]))
-    for i in range(1, 7):
-        expr = expr.when(m == i, F.lit(DIMENSIONS[i]))
-    return expr.otherwise(F.lit(DIMENSIONS[0]))
-
-
 def _dimension_sql(linenumber_name: str) -> str:
-    """SQL twin of `_dimension_expr` — same CASE ladder (the `% 7`
-    subtree repeats per arm exactly as the Column version repeats the
-    shared `m` expression), one parse."""
+    """Line number → dimension CASE fragment (DIMENSIONS[n % 7])."""
     arms = " ".join(
         f"WHEN {linenumber_name} % 7 = {i} THEN '{DIMENSIONS[i]}'"
         for i in range(7)
     )
     return f"CASE {arms} ELSE '{DIMENSIONS[0]}' END"
+
+
+# lineitem ⋈ orders → evidence row; shared with the streaming
+# derivation (incremental.stream_evidence).
+EVIDENCE_COLUMNS: tuple[str, ...] = (
+    "o_custkey AS company_id",
+    f"{_dimension_sql('l_linenumber')} AS dimension",
+    "CAST((l_partkey * 7 + l_suppkey) % 101 AS DOUBLE) AS score_raw",
+    "CAST(l_orderkey % 10 AS DOUBLE) / 10.0D AS conf_raw",
+    "l_suppkey AS supp_key",
+)
 
 
 def companies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -88,13 +82,7 @@ def evidence_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber"
     )
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    return li.join(o, li.l_orderkey == o.o_orderkey).selectExpr(
-        "o_custkey AS company_id",
-        f"{_dimension_sql('l_linenumber')} AS dimension",
-        "CAST((l_partkey * 7 + l_suppkey) % 101 AS DOUBLE) AS score_raw",
-        "CAST(l_orderkey % 10 AS DOUBLE) / 10.0D AS conf_raw",
-        "l_suppkey AS supp_key",
-    )
+    return li.join(o, li.l_orderkey == o.o_orderkey).selectExpr(*EVIDENCE_COLUMNS)
 
 
 def dimension_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -112,11 +100,4 @@ def dimension_scores_from(ev: DataFrame) -> DataFrame:
         F.lit(None).cast("double").alias("weight"),  # default per-dim weight applies
         F.avg("conf_raw").alias("confidence"),
         F.count(F.lit(1)).alias("evidence_count"),
-    )
-
-
-def dimension_scores_with_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ds = dimension_scores(spark, sf_dir)
-    return ds.withColumn(
-        "weight", dimension_case(F.col("dimension"), DEFAULT_DIM_WEIGHTS)
     )

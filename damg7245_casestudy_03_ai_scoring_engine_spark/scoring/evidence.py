@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.core import clamp
+from ..functions.core import clamp_sql, flit
 
 # Rubric level bands (reference rubric_scorer.py:83-133 shape): level,
 # min keyword hits, min metric, score band [lo, hi].
@@ -179,64 +179,31 @@ def weighted_dimension_features(
     )
 
 
-def quant_metric(
-    weighted_signals: Column | str,
-    evidence_count: Column | str,
-    reliability: Column | str,
-) -> Column:
+def quant_metric_sql(weighted_signals: str, evidence_count: str, reliability: str) -> str:
     """M18: metric = clamp(0.45·ws/30 + 0.35·ev/40 + 0.20·rel, 0, 1)
-    (rubric_scorer.py:245-256).  Name inputs take the single-parse
-    twin (r13, guide §5) — identical arithmetic, commutative-multiply
-    literal placement aside."""
-    if all(isinstance(c, str) for c in (weighted_signals, evidence_count, reliability)):
-        from ..functions.core import clamp_sql
-
-        return F.expr(
-            clamp_sql(
-                f"0.45D * {weighted_signals} / 30.0D"
-                f" + 0.35D * {evidence_count} / 40.0D"
-                f" + 0.2D * {reliability}",
-                0.0,
-                1.0,
-            )
-        )
-    return clamp(
-        0.45 * weighted_signals / 30.0 + 0.35 * evidence_count / 40.0 + 0.20 * reliability,
+    (rubric_scorer.py:245-256)."""
+    return clamp_sql(
+        f"0.45D * {weighted_signals} / 30.0D"
+        f" + 0.35D * {evidence_count} / 40.0D"
+        f" + 0.2D * {reliability}",
         0.0,
         1.0,
     )
 
 
-def rubric_score(hits: Column | str, metric: Column | str) -> Column:
-    """M17 ordered level descent as a when-chain (first satisfied level
-    wins, L5→L1) with in-band interpolation.  Name inputs take the
-    single-parse CASE twin (r13, guide §5)."""
-    if isinstance(hits, str) and isinstance(metric, str):
-        from ..functions.core import flit
-
-        arms = " ".join(
-            f"WHEN {hits} >= {min_hits} AND {metric} >= {flit(min_metric)} "
-            f"THEN {flit(lo)} + {flit(hi - lo)} * least(1.0D, "
-            f"CAST({hits} AS DOUBLE) / {flit(float(max(min_hits, 1)))})"
-            for _level, min_hits, min_metric, lo, hi in RUBRIC_LEVELS[:-1]
-        )
-        return F.expr(f"CASE {arms} ELSE 10.0D END")
-    expr = None
-    for level, min_hits, min_metric, lo, hi in RUBRIC_LEVELS[:-1]:
-        interp = F.lit(lo) + (hi - lo) * F.least(
-            F.lit(1.0), hits.cast("double") / F.lit(float(max(min_hits, 1)))
-        )
-        cond = (hits >= min_hits) & (metric >= min_metric)
-        expr = F.when(cond, interp) if expr is None else expr.when(cond, interp)
-    # L1 default: score 10 (rubric_scorer.py:221-224)
-    return expr.otherwise(F.lit(10.0))
+def rubric_score_sql(hits: str, metric: str) -> str:
+    """M17 ordered level descent as one CASE (first satisfied level
+    wins, L5→L1) with in-band interpolation; L1 default score 10
+    (rubric_scorer.py:221-224)."""
+    arms = " ".join(
+        f"WHEN {hits} >= {min_hits} AND {metric} >= {flit(min_metric)} "
+        f"THEN {flit(lo)} + {flit(hi - lo)} * least(1.0D, "
+        f"CAST({hits} AS DOUBLE) / {flit(float(max(min_hits, 1)))})"
+        for _level, min_hits, min_metric, lo, hi in RUBRIC_LEVELS[:-1]
+    )
+    return f"CASE {arms} ELSE 10.0D END"
 
 
-def rubric_confidence(hits: Column | str, metric: Column | str) -> Column:
+def rubric_confidence_sql(hits: str, metric: str) -> str:
     """min(0.95, 0.50 + 0.08·hits + 0.30·metric) (rubric_scorer.py:212-218)."""
-    if isinstance(hits, str) and isinstance(metric, str):
-        return F.expr(
-            f"least(0.95D, 0.5D + 0.08D * CAST({hits} AS DOUBLE)"
-            f" + 0.3D * {metric})"
-        )
-    return F.least(F.lit(0.95), F.lit(0.50) + 0.08 * hits.cast("double") + 0.30 * metric)
+    return f"least(0.95D, 0.5D + 0.08D * CAST({hits} AS DOUBLE) + 0.3D * {metric})"

@@ -7,36 +7,19 @@
   `0.6·clamp((VR−sector_avg)/50, −1, 1) + 0.4·clamp((mcap_pct−0.5)·2,
   −1, 1)`, clamped [−1,1].
 
-Both are pure column math over broadcast config joins.
+Both are SQL fragments over columns of broadcast config joins.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from ..functions.core import clamp
+from ..functions.core import clamp_sql
 
 
-def hr_score(hr_base: Column | str, pf: Column | str) -> Column:
-    if isinstance(hr_base, str) and isinstance(pf, str):
-        # single-parse twin (r13, guide §5): identical arithmetic
-        from ..functions.core import clamp_sql
-
-        return F.expr(clamp_sql(f"{hr_base} * (1.0D + 0.15D * {pf})", 0.0, 100.0))
-    hr_base = F.col(hr_base) if isinstance(hr_base, str) else hr_base
-    pf = F.col(pf) if isinstance(pf, str) else pf
-    return clamp(hr_base * (F.lit(1.0) + 0.15 * pf), 0.0, 100.0)
+def hr_score_sql(hr_base: str, pf: str) -> str:
+    return clamp_sql(f"{hr_base} * (1.0D + 0.15D * {pf})", 0.0, 100.0)
 
 
-def position_factor(
-    vr: Column | str, sector_avg_vr: Column | str, mcap_pct: Column | str
-) -> Column:
-    vr = F.col(vr) if isinstance(vr, str) else vr
-    sa = F.col(sector_avg_vr) if isinstance(sector_avg_vr, str) else sector_avg_vr
-    mp = F.col(mcap_pct) if isinstance(mcap_pct, str) else mcap_pct
-    return clamp(
-        0.6 * clamp((vr - sa) / 50.0, -1.0, 1.0) + 0.4 * clamp((mp - 0.5) * 2.0, -1.0, 1.0),
-        -1.0,
-        1.0,
-    )
+def position_factor_sql(vr: str, sector_avg_vr: str, mcap_pct: str) -> str:
+    vr_term = clamp_sql(f"({vr} - {sector_avg_vr}) / 50.0D", -1.0, 1.0)
+    mcap_term = clamp_sql(f"({mcap_pct} - 0.5D) * 2.0D", -1.0, 1.0)
+    return clamp_sql(f"0.6D * {vr_term} + 0.4D * {mcap_term}", -1.0, 1.0)

@@ -29,7 +29,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .demo_domain import companies
+from .demo_domain import EVIDENCE_COLUMNS, companies
 from .pipeline import assemble_composite
 from .talent import hhi_from_counts
 from .vr import vr_scores
@@ -140,8 +140,6 @@ def stream_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Evidence rows as a STREAM: lineitem arrives as files
     (readStream), orders is the static side of a stream-static join —
     the same derivation as demo_domain.evidence_rows, incremental."""
-    from .demo_domain import _dimension_expr
-
     li = (
         spark.readStream.schema(LINEITEM_SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -152,15 +150,7 @@ def stream_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.catalog import load
 
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    return li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.col("o_custkey").alias("company_id"),
-        _dimension_expr(F.col("l_linenumber")).alias("dimension"),
-        ((F.col("l_partkey") * 7 + F.col("l_suppkey")) % 101)
-        .cast("double")
-        .alias("score_raw"),
-        ((F.col("l_orderkey") % 10).cast("double") / 10.0).alias("conf_raw"),
-        F.col("l_suppkey").alias("supp_key"),
-    )
+    return li.join(o, li.l_orderkey == o.o_orderkey).selectExpr(*EVIDENCE_COLUMNS)
 
 
 def run_incremental_scoring(

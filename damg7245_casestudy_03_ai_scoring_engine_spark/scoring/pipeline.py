@@ -15,32 +15,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.cache import tracked_persist
-from ..functions.core import clamp_sql, flit, round_stable_sql, score_band_sql
+from ..functions.core import clamp_sql, round_stable_sql, score_band_sql
 from .composite import composite_sql
-from .config import DEFAULT_HR_BASE, SECTOR_HR_BASE
+from .config import DEFAULT_HR_BASE, SECTOR_HR_BASE, dimension_case_sql
 from .demo_domain import companies, dimension_scores_from, evidence_rows
-from .hr import hr_score
-from .synergy import formula_synergy
-from .talent import hhi, hhi_penalty_factor
+from .hr import hr_score_sql
+from .synergy import formula_synergy_sql
+from .talent import hhi, hhi_penalty_factor_sql
 from .vr import vr_scores
-
-
-def _hr_base_expr(sector_col):
-    it = iter(SECTOR_HR_BASE.items())
-    s0, v0 = next(it)
-    expr = F.when(sector_col == s0, F.lit(v0))
-    for s, v in it:
-        expr = expr.when(sector_col == s, F.lit(v))
-    return expr.otherwise(F.lit(DEFAULT_HR_BASE))
-
-
-def _hr_base_sql(sector_name: str) -> str:
-    """SQL twin of `_hr_base_expr` — same CASE ladder, one parse."""
-    arms = " ".join(
-        f"WHEN {sector_name} = '{s}' THEN {flit(v)}"
-        for s, v in SECTOR_HR_BASE.items()
-    )
-    return f"CASE {arms} ELSE {flit(DEFAULT_HR_BASE)} END"
 
 
 def score_portfolio(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -93,16 +75,18 @@ def assemble_composite(
     # is a py4j round trip, so the former 7-op withColumn chain of
     # Column ladders paid 7 analyzer walks plus ~100 round trips;
     # grouped into dependency levels with each column ONE F.expr parse
-    # (the helpers' single-parse twins), same named columns, same
-    # arithmetic.  Joins unchanged (inner, company_id) — comp's
-    # columns don't collide with the vr⋈hhi set.
+    # (the formula fragments), same named columns, same arithmetic.
+    # Joins unchanged (inner, company_id) — comp's columns don't
+    # collide with the vr⋈hhi set.
     scored = (
         vr.join(supplier_hhi, "company_id")
         .join(comp, "company_id")
         .withColumns(
             {
-                "hhi_factor": hhi_penalty_factor("hhi", "n_items"),
-                "hr_base": F.expr(_hr_base_sql("sector")),
+                "hhi_factor": F.expr(hhi_penalty_factor_sql("hhi", "n_items")),
+                "hr_base": F.expr(
+                    dimension_case_sql("sector", SECTOR_HR_BASE, DEFAULT_HR_BASE)
+                ),
             }
         )
         .withColumns(
@@ -110,10 +94,10 @@ def assemble_composite(
                 "vr_final": F.expr(
                     clamp_sql("vr_score * hhi_factor", 0.0, 100.0)
                 ),
-                "hr_final": hr_score("hr_base", "position_factor"),
+                "hr_final": F.expr(hr_score_sql("hr_base", "position_factor")),
             }
         )
-        .withColumn("syn_final", formula_synergy("vr_final", "hr_final"))
+        .withColumn("syn_final", F.expr(formula_synergy_sql("vr_final", "hr_final")))
         .withColumn(
             "composite_score",
             F.expr(

@@ -6,7 +6,7 @@ Reference semantics:
   threshold (+magnitude); a negative rule fires iff dim_a ≥ threshold
   AND dim_b < threshold (+negative magnitude).  Total clamped ±15.
 - Formula synergy (synergy.py:132-156):
-  Synergy = (VR·HR/100) · Alignment · Timing, Alignment default
+  Synergy = (VR·HR/100) · Alignment · Timing, Alignment
   1−|VR−HR|/100 clamped [0,1], Timing clamped [0.8,1.2], result
   clamped [0,100].
 
@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.core import clamp
+from ..functions.core import clamp, clamp_sql, flit
 from .config import RULE_SYNERGY_CAP
 
 
@@ -76,33 +76,10 @@ def rule_synergy(dimension_scores: DataFrame, rules: DataFrame) -> DataFrame:
     )
 
 
-def formula_synergy(
-    vr: Column | str,
-    hr: Column | str,
-    alignment: Column | None = None,
-    timing: Column | float = 1.0,
-) -> Column:
-    """Formula synergy column: (VR·HR/100)·Alignment·Timing with the
-    reference clamps (synergy.py:132-156)."""
-    if (
-        isinstance(vr, str)
-        and isinstance(hr, str)
-        and alignment is None
-        and isinstance(timing, (int, float))
-    ):
-        # single-parse twin (r13, guide §5): same default alignment,
-        # same constant-timing clamp, same grouping as the Column path
-        from ..functions.core import clamp_sql, flit
-
-        align = clamp_sql(f"1.0D - abs({vr} - {hr}) / 100.0D", 0.0, 1.0)
-        t = clamp_sql(flit(float(timing)), 0.8, 1.2)
-        return F.expr(
-            clamp_sql(f"(({vr} * {hr} / 100.0D) * {align}) * {t}", 0.0, 100.0)
-        )
-    vr = F.col(vr) if isinstance(vr, str) else vr
-    hr = F.col(hr) if isinstance(hr, str) else hr
-    if alignment is None:
-        alignment = clamp(F.lit(1.0) - F.abs(vr - hr) / 100.0, 0.0, 1.0)
-    t = F.lit(float(timing)) if isinstance(timing, (int, float)) else timing
-    t = clamp(t, 0.8, 1.2)
-    return clamp((vr * hr / 100.0) * alignment * t, 0.0, 100.0)
+def formula_synergy_sql(vr: str, hr: str, timing: float = 1.0) -> str:
+    """Formula synergy fragment: (VR·HR/100)·Alignment·Timing with
+    Alignment = clamp(1−|VR−HR|/100, 0, 1) and the reference clamps
+    (synergy.py:132-156)."""
+    align = clamp_sql(f"1.0D - abs({vr} - {hr}) / 100.0D", 0.0, 1.0)
+    t = clamp_sql(flit(float(timing)), 0.8, 1.2)
+    return clamp_sql(f"(({vr} * {hr} / 100.0D) * {align}) * {t}", 0.0, 100.0)

@@ -12,16 +12,17 @@ Reference semantics:
 - Talent risk adjustment (talent_concentration.py:93-100):
   1 − 0.15·max(0, TC−0.25), clamped [0,1].
 
-All pure column math; HHI uses a window share so the whole stack is
-two shuffles (group count + company rollup) regardless of row count.
+HHI uses a window share so the whole stack is two shuffles (group
+count + company rollup) regardless of row count; the per-row formulas
+are SQL fragments.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.core import clamp
+from ..functions.core import clamp_sql, flit
 from .config import TALENT_PENALTY_CONFIG
 
 
@@ -31,23 +32,7 @@ def hhi(items: DataFrame, key: str = "company_id", category: str = "job_function
     Returns: <key>, hhi double, n_items long.
     """
     counts = items.groupBy(key, category).agg(F.count(F.lit(1)).alias("cnt"))
-    # share via one selectExpr parse (r13, guide §5/§7.3) — the same
-    # window the Column chain built.  The interpolated identifier is
-    # backtick-quoted (the asof.py discipline) so a non-identifier
-    # column name (spaces, reserved words) that Window.partitionBy(key)
-    # accepted cannot misparse (r13 advisor note).
-    return (
-        counts.selectExpr(
-            "*",
-            "CAST(cnt AS DOUBLE) / sum(cnt) OVER "
-            f"(PARTITION BY `{key}`) AS share",
-        )
-        .groupBy(key)
-        .agg(
-            F.expr("sum(pow(share, 2))").alias("hhi"),
-            F.expr("sum(cnt)").alias("n_items"),
-        )
-    )
+    return hhi_from_counts(counts, key)
 
 
 def hhi_from_counts(
@@ -56,64 +41,56 @@ def hhi_from_counts(
     """HHI from PRE-AGGREGATED (key, category) counts — the mergeable
     form the incremental pipeline maintains (category identity is
     already folded into the count rows).  Same output contract as
-    `hhi`: <key>, hhi double, n_items long."""
-    w = Window.partitionBy(key)
-    share = F.col(count_col).cast("double") / F.sum(count_col).over(w)
+    `hhi`: <key>, hhi double, n_items long.
+
+    Share and Σshare² are one selectExpr parse and one aggregate.  The
+    key is backtick-quoted (the asof.py discipline) so a
+    non-identifier column name (spaces, reserved words) cannot
+    misparse."""
     return (
-        counts.withColumn("share", share)
+        counts.selectExpr(
+            "*",
+            f"CAST({count_col} AS DOUBLE) / sum({count_col}) OVER "
+            f"(PARTITION BY `{key}`) AS share",
+        )
         .groupBy(key)
         .agg(
-            F.sum(F.pow("share", 2)).alias("hhi"),
-            F.sum(count_col).cast("long").alias("n_items"),
+            F.expr("sum(pow(share, 2))").alias("hhi"),
+            F.expr(f"sum({count_col})").alias("n_items"),
         )
     )
 
 
-def hhi_penalty_factor(
-    hhi_col: Column | str, n_col: Column | str, cfg: dict | None = None
-) -> Column:
-    cfg = cfg or TALENT_PENALTY_CONFIG
-    if isinstance(hhi_col, str) and isinstance(n_col, str):
-        # single-parse twin of the when-ladder below (r13, guide §5)
-        from ..functions.core import flit
-
-        return F.expr(
-            f"CASE WHEN {n_col} < {cfg['min_sample_size']} THEN 1.0D "
-            f"WHEN {hhi_col} >= {flit(cfg['hhi_threshold_severe'])} "
-            f"THEN {flit(cfg['penalty_factor_severe'])} "
-            f"WHEN {hhi_col} >= {flit(cfg['hhi_threshold_mild'])} "
-            f"THEN {flit(cfg['penalty_factor_mild'])} "
-            "ELSE 1.0D END"
-        )
-    h = F.col(hhi_col) if isinstance(hhi_col, str) else hhi_col
-    n = F.col(n_col) if isinstance(n_col, str) else n_col
+def hhi_penalty_factor_sql(hhi_col: str, n_col: str) -> str:
+    cfg = TALENT_PENALTY_CONFIG
     return (
-        F.when(n < cfg["min_sample_size"], F.lit(1.0))
-        .when(h >= cfg["hhi_threshold_severe"], F.lit(cfg["penalty_factor_severe"]))
-        .when(h >= cfg["hhi_threshold_mild"], F.lit(cfg["penalty_factor_mild"]))
-        .otherwise(F.lit(1.0))
+        f"CASE WHEN {n_col} < {cfg['min_sample_size']} THEN 1.0D "
+        f"WHEN {hhi_col} >= {flit(cfg['hhi_threshold_severe'])} "
+        f"THEN {flit(cfg['penalty_factor_severe'])} "
+        f"WHEN {hhi_col} >= {flit(cfg['hhi_threshold_mild'])} "
+        f"THEN {flit(cfg['penalty_factor_mild'])} "
+        "ELSE 1.0D END"
     )
 
 
-def talent_concentration(
-    leadership_ratio: Column,
-    n_postings: Column,
-    n_skills: Column,
-    individual_factor: Column | float = 0.0,
-) -> Column:
+def talent_concentration_sql(
+    leadership_ratio: str,
+    n_postings: str,
+    n_skills: str,
+    individual_factor: str,
+) -> str:
     """TC formula (app/scoring/talent_concentration.py:18-45)."""
-    ind = (
-        F.lit(float(individual_factor))
-        if isinstance(individual_factor, (int, float))
-        else individual_factor
+    team = f"least(1.0D, 1.0D / (sqrt(CAST({n_postings} AS DOUBLE)) + 0.1D))"
+    skills = f"greatest(0.0D, 1.0D - CAST({n_skills} AS DOUBLE) / 15.0D)"
+    return clamp_sql(
+        f"0.4D * {leadership_ratio} + 0.3D * {team}"
+        f" + 0.2D * {skills} + 0.1D * {individual_factor}",
+        0.0,
+        1.0,
     )
-    team = F.least(F.lit(1.0), F.lit(1.0) / (F.sqrt(n_postings.cast("double")) + 0.1))
-    skills = F.greatest(F.lit(0.0), F.lit(1.0) - n_skills.cast("double") / 15.0)
-    return clamp(0.4 * leadership_ratio + 0.3 * team + 0.2 * skills + 0.1 * ind, 0.0, 1.0)
 
 
-def talent_risk_adjustment(tc: Column | str) -> Column:
+def talent_risk_adjustment_sql(tc: str) -> str:
     """1 − 0.15·max(0, TC−0.25) clamped [0,1]
     (talent_concentration.py:93-100)."""
-    t = F.col(tc) if isinstance(tc, str) else tc
-    return clamp(F.lit(1.0) - 0.15 * F.greatest(F.lit(0.0), t - 0.25), 0.0, 1.0)
+    return clamp_sql(f"1.0D - 0.15D * greatest(0.0D, {tc} - 0.25D)", 0.0, 1.0)

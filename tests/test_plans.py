@@ -389,7 +389,7 @@ def test_observation_metrics_ride_the_action(spark):
     assert m["min_v"] == direct.mn and m["max_v"] == direct.mx
 
 
-def test_dynamic_partition_pruning_fires(spark, tmp_path):
+def test_dynamic_partition_pruning_fires_on_written_layout(spark, tmp_path):
     """Joining a date-partitioned fact to a filtered dim must inject a
     dynamicpruning subquery into the fact scan — the runtime analog of
     static partition pruning, and THE mechanism that keeps a

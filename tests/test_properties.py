@@ -17,10 +17,10 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from damg7245_casestudy_03_ai_scoring_engine_spark.scoring import config as C
-from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.composite import composite_score
-from damg7245_casestudy_03_ai_scoring_engine_spark.functions.core import score_band
+from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.composite import composite_sql
+from damg7245_casestudy_03_ai_scoring_engine_spark.functions.core import score_band_sql
 from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.talent import (
-    talent_risk_adjustment,
+    talent_risk_adjustment_sql,
 )
 from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.vr import vr_scores
 
@@ -70,7 +70,7 @@ def test_vr_monotone_under_uplift(spark, scores, confs, uplift):
 @given(tcs=st.lists(st.floats(min_value=0, max_value=1, allow_nan=False), min_size=1, max_size=20))
 def test_talent_adjustment_bounds(spark, tcs):
     df = spark.createDataFrame([(float(t),) for t in tcs], "tc double")
-    vals = [r.adj for r in df.select(talent_risk_adjustment("tc").alias("adj")).collect()]
+    vals = [r.adj for r in df.selectExpr(f"{talent_risk_adjustment_sql('tc')} AS adj").collect()]
     for v in vals:
         assert 1 - 0.15 * 0.75 - 1e-9 <= v <= 1.0 + 1e-9
 
@@ -83,11 +83,9 @@ def test_talent_adjustment_bounds(spark, tcs):
 )
 def test_composite_bounded_and_banded(spark, vr, hr, syn):
     row = (
-        spark.range(1)
-        .select(
-            composite_score(F.lit(vr), F.lit(hr), F.lit(syn)).alias("c"),
-        )
-        .withColumn("band", score_band("c"))
+        spark.createDataFrame([(float(vr), float(hr), float(syn))], "vr double, hr double, syn double")
+        .selectExpr(f"{composite_sql('vr', 'hr', 'syn')} AS c")
+        .selectExpr("c", f"{score_band_sql('c')} AS band")
         .collect()[0]
     )
     assert 0.0 <= row.c <= 100.0

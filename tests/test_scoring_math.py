@@ -3,11 +3,15 @@ reference's test suite (SURVEY.md §5):
 
 - VR bounds / zero-weight behavior (reference tests/test_vr_model.py:4-22)
 - synergy cap ±15 and positive/negative activation (test_synergy.py:4-40)
-- composite closed form + timing clamp (test_scoring_engine_components.py:82-97)
+- composite closed form + timing clamp both ways (test_scoring_engine_components.py:82-97)
 - HHI range & concentration (test_talent_penalty.py:4-13)
 - band edges (composite.py:17-34)
 - talent risk adjustment monotone-inverse (test_property_hypothesis.py:53-60)
 - golden portfolio ranges from priors (test_portfolio_validation.py:13-35)
+
+Each formula is a SQL fragment (its only spelling in the package);
+the closed-form tests evaluate fragments over one-row DataFrames whose
+columns carry the named inputs.
 """
 
 from __future__ import annotations
@@ -18,22 +22,42 @@ from pyspark.sql import functions as F
 from damg7245_casestudy_03_ai_scoring_engine_spark.functions.core import (
     blend,
     clamp,
+    clamp_sql,
     safe_div,
-    score_band,
+    score_band_sql,
 )
 from damg7245_casestudy_03_ai_scoring_engine_spark.scoring import config as C
-from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.composite import composite_score
-from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.hr import hr_score, position_factor
+from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.composite import composite_sql
+from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.evidence import (
+    quant_metric_sql,
+    rubric_confidence_sql,
+    rubric_score_sql,
+)
+from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.hr import (
+    hr_score_sql,
+    position_factor_sql,
+)
 from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.synergy import (
-    formula_synergy,
+    formula_synergy_sql,
     rule_synergy,
 )
 from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.talent import (
     hhi,
-    hhi_penalty_factor,
-    talent_risk_adjustment,
+    hhi_penalty_factor_sql,
+    talent_concentration_sql,
+    talent_risk_adjustment_sql,
 )
 from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.vr import vr_scores
+
+
+def _eval(spark, inputs: dict, **fragments):
+    """Evaluate SQL fragments over ONE row whose double columns are
+    `inputs`; returns the row with one field per fragment."""
+    row = spark.createDataFrame(
+        [tuple(float(v) for v in inputs.values())],
+        ", ".join(f"{name} double" for name in inputs),
+    )
+    return row.selectExpr(*(f"{sql} AS {alias}" for alias, sql in fragments.items())).collect()[0]
 
 
 def _dim_rows(scores, confs=None, weights=None):
@@ -100,22 +124,23 @@ def test_rule_synergy_activation_and_cap(spark):
 def test_formula_synergy_closed_form(spark):
     # Reference closed form (synergy.py:132-156): VR=80, HR=60 →
     # (80·60/100)·(1−0.2)·1.0 = 48·0.8 = 38.4
-    df = spark.range(1).select(
-        formula_synergy(F.lit(80.0), F.lit(60.0)).alias("syn"),
-        formula_synergy(F.lit(80.0), F.lit(60.0), timing=1.5).alias("syn_clamped"),
+    row = _eval(
+        spark,
+        {"vr": 80.0, "hr": 60.0},
+        syn=formula_synergy_sql("vr", "hr"),
+        syn_clamped=formula_synergy_sql("vr", "hr", timing=1.5),
+        syn_floored=formula_synergy_sql("vr", "hr", timing=0.5),
     )
-    row = df.collect()[0]
     assert row.syn == pytest.approx(38.4)
     assert row.syn_clamped == pytest.approx(38.4 * 1.2 / 1.0)  # timing clamped to 1.2
+    assert row.syn_floored == pytest.approx(38.4 * 0.8)  # timing clamped up to 0.8
 
 
 def test_composite_closed_form(spark):
     # (1−β)(α·VR+(1−α)·HR)+β·Syn with α=.6 β=.12:
     # VR=80, HR=70, Syn=40 → 0.88·(48+28)+0.12·40 = 66.88+4.8 = 71.68
-    row = (
-        spark.range(1)
-        .select(composite_score(F.lit(80.0), F.lit(70.0), F.lit(40.0)).alias("c"))
-        .collect()[0]
+    row = _eval(
+        spark, {"vr": 80.0, "hr": 70.0, "syn": 40.0}, c=composite_sql("vr", "hr", "syn")
     )
     assert row.c == pytest.approx(71.68)
 
@@ -126,8 +151,7 @@ def test_composite_closed_form(spark):
      (55, "Progressing"), (61, "Advanced"), (80.5, "Leading"), (100, "Leading")],
 )
 def test_band_edges(spark, score, band):
-    row = spark.range(1).select(score_band(F.lit(float(score))).alias("b")).collect()[0]
-    assert row.b == band
+    assert _eval(spark, {"score": score}, b=score_band_sql("score")).b == band
 
 
 def test_hhi_concentrated_vs_uniform(spark):
@@ -142,30 +166,65 @@ def test_hhi_penalty_tiers(spark):
     df = spark.createDataFrame(
         [(0.75, 20), (0.5, 20), (0.2, 20), (0.9, 5)], "h double, n int"
     )
-    rows = df.select(hhi_penalty_factor("h", "n").alias("f")).collect()
+    rows = df.selectExpr(f"{hhi_penalty_factor_sql('h', 'n')} AS f").collect()
     assert [r.f for r in rows] == [0.85, 0.95, 1.0, 1.0]  # below min sample → 1.0
 
 
 def test_talent_risk_adjustment_monotone(spark):
     # monotone-inverse in TC (test_property_hypothesis.py:53-60)
     df = spark.createDataFrame([(t / 10.0,) for t in range(11)], "tc double")
-    vals = [r.adj for r in df.select(talent_risk_adjustment("tc").alias("adj")).orderBy("tc").collect()]
+    adj = df.selectExpr("tc", f"{talent_risk_adjustment_sql('tc')} AS adj")
+    vals = [r.adj for r in adj.orderBy("tc").collect()]
     assert all(a >= b for a, b in zip(vals, vals[1:]))
     assert vals[0] == 1.0 and vals[-1] == pytest.approx(1 - 0.15 * 0.75)
 
 
 def test_hr_score_and_position_factor(spark):
-    row = (
-        spark.range(1)
-        .select(
-            hr_score(F.lit(80.0), F.lit(0.5)).alias("hr"),
-            position_factor(F.lit(90.0), F.lit(70.0), F.lit(0.95)).alias("pf"),
-        )
-        .collect()[0]
+    row = _eval(
+        spark,
+        {"hr_base": 80.0, "pf": 0.5, "vr": 90.0, "sector_avg": 70.0, "mcap": 0.95},
+        hr=hr_score_sql("hr_base", "pf"),
+        pf=position_factor_sql("vr", "sector_avg", "mcap"),
     )
     assert row.hr == pytest.approx(80 * 1.075)
     # 0.6·clamp(20/50)+0.4·clamp(0.9) = 0.6·0.4+0.4·0.9 = 0.6
     assert row.pf == pytest.approx(0.6)
+
+
+def test_position_factor_saturates_far_below_sector(spark):
+    # VR 80 points under the sector average: (−80/50) clamps to −1, so
+    # a neutral market cap gives 0.6·(−1) = −0.6 and the bottom market
+    # cap saturates the whole factor at −1.
+    row = _eval(
+        spark,
+        {"vr": 10.0, "sector_avg": 90.0, "neutral": 0.5, "bottom": 0.0},
+        pf_neutral=position_factor_sql("vr", "sector_avg", "neutral"),
+        pf_bottom=position_factor_sql("vr", "sector_avg", "bottom"),
+    )
+    assert row.pf_neutral == pytest.approx(-0.6)
+    assert row.pf_bottom == -1.0
+
+
+def test_talent_and_rubric_closed_forms(spark):
+    # TC: 0.4·0.5 + 0.3·min(1, 1/(√4+0.1)) + 0.2·(1−3/15) + 0.1·0.5
+    # metric: 0.45·15/30 + 0.35·20/40 + 0.2·0.9 = 0.225+0.175+0.18
+    # 6 hits at metric 0.58 miss L4 (metric 0.60) → L3: 55+15·min(1, 6/4)
+    row = _eval(
+        spark,
+        {"lr": 0.5, "n": 4.0, "skills": 3.0, "ws": 15.0, "ev": 20.0, "rel": 0.9, "hits": 6.0},
+        tc=talent_concentration_sql("lr", "n", "skills", "0.5D"),
+        metric=quant_metric_sql("ws", "ev", "rel"),
+    )
+    assert row.tc == pytest.approx(0.2 + 0.3 / 2.1 + 0.2 * 0.8 + 0.05)
+    assert row.metric == pytest.approx(0.58)
+    rub = _eval(
+        spark,
+        {"hits": 6.0, "metric": row.metric},
+        score=rubric_score_sql("hits", "metric"),
+        conf=rubric_confidence_sql("hits", "metric"),
+    )
+    assert rub.score == pytest.approx(70.0)
+    assert rub.conf == pytest.approx(min(0.95, 0.5 + 0.08 * 6 + 0.3 * 0.58))
 
 
 def test_scalar_helpers(spark):
@@ -196,11 +255,15 @@ def test_golden_portfolio_ranges(spark):
         rows, "ticker string, vr_target double, pf_target double, tc_target double, mcap_pct double"
     )
     scored = (
-        pri.withColumn("hr", hr_score(F.lit(75.0), F.col("pf_target")))
-        .withColumn("adj", talent_risk_adjustment("tc_target"))
-        .withColumn("vr", clamp(F.col("vr_target") * F.col("adj"), 0.0, 100.0))
-        .withColumn("syn", formula_synergy("vr", "hr"))
-        .withColumn("composite", composite_score("vr", "hr", "syn"))
+        pri.selectExpr(
+            "ticker",
+            "vr_target",
+            f"{hr_score_sql('75.0D', 'pf_target')} AS hr",
+            f"{talent_risk_adjustment_sql('tc_target')} AS adj",
+        )
+        .selectExpr("ticker", "hr", f"{clamp_sql('vr_target * adj', 0.0, 100.0)} AS vr")
+        .selectExpr("*", f"{formula_synergy_sql('vr', 'hr')} AS syn")
+        .selectExpr("ticker", f"{composite_sql('vr', 'hr', 'syn')} AS composite")
     )
     got = {r.ticker: r.composite for r in scored.collect()}
     for ticker, (lo, hi) in C.GOLDEN_RANGES.items():
