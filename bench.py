@@ -10,6 +10,9 @@ scoring pipeline, the shuffling joins/aggs/windows, minhash-LSH
 dedup, ANN top-k, text quality).  Each query is fully materialized
 via a count-style action so the measured time includes the whole
 plan, not just planning.
+
+`time_queries` is the timing loop; `tools/query_profile.py` runs the
+same loop and adds per-query engine counters.
 """
 
 from __future__ import annotations
@@ -18,6 +21,7 @@ import json
 import os
 import sys
 import time
+from dataclasses import dataclass
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -26,16 +30,57 @@ from damg7245_casestudy_03_ai_scoring_engine_spark.operators import REGISTRY  # 
 from damg7245_casestudy_03_ai_scoring_engine_spark.session import get_spark  # noqa: E402
 
 
-def main() -> None:
+def settings() -> tuple[str, int]:
+    """(data dir, local cores) from SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+    return sf_dir, cpus
 
+
+def bench_session(cpus: int):
     spark = get_spark("bench", cpus=cpus, shuffle_partitions=min(32, cpus))
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
-    bench_specs = {n: s for n, s in sorted(REGISTRY.items()) if s.bench}
 
+def bench_specs() -> dict:
+    return {n: s for n, s in sorted(REGISTRY.items()) if s.bench}
+
+
+@dataclass
+class Timings:
+    """What `time_queries` measured.  `passes[i][name]` is the median
+    rep of pass i as {"wall_s", "build_s", "exec_s"} (None if the
+    query failed in that pass); `pass_failures[i][name]` its error."""
+
+    warmup_failures: dict[str, str]
+    passes: list[dict[str, dict[str, float] | None]]
+    pass_failures: list[dict[str, str]]
+
+    def best(self, name: str) -> dict[str, float] | None:
+        """The lowest-wall pass median (min of medians), or None."""
+        got = [p[name] for p in self.passes if p.get(name) is not None]
+        return min(got, key=lambda r: r["wall_s"]) if got else None
+
+    def failures(self, name: str) -> dict[str, str]:
+        return {
+            f"pass{i + 1}": msg
+            for i, fails in enumerate(self.pass_failures)
+            if (msg := fails.get(name))
+        }
+
+
+def _run(spark, spec, sf_dir: str) -> dict[str, float]:
+    """One rep: build the DataFrame, then materialize it to the noop sink."""
+    t0 = time.perf_counter()
+    df = spec.fn(spark, sf_dir)
+    t1 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    wall, build = round(time.perf_counter() - t0, 3), round(t1 - t0, 3)
+    return {"wall_s": wall, "build_s": build, "exec_s": round(wall - build, 3)}
+
+
+def time_queries(spark, specs: dict, sf_dir: str) -> Timings:
     # Warm-up pass: run every headline query once at the target scale
     # factor before timing.  AQE re-plans stages per data size, so the
     # generated whole-stage-codegen classes are only reusable when the
@@ -45,7 +90,7 @@ def main() -> None:
     # A warm-up failure must never sink the bench run, but it is
     # reported: on stderr now, and under "warmup_failures" in the JSON.
     warmup_failures: dict[str, str] = {}
-    for name, spec in bench_specs.items():
+    for name, spec in specs.items():
         try:
             spark.sparkContext.setJobDescription(f"warmup:{name}")
             spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -79,13 +124,15 @@ def main() -> None:
     # runs measure the warm steady state, same regime as every prior
     # round) but are released BETWEEN queries so a 25-query bench never
     # accumulates 25 queries' worth of cached blocks.
-    pass_medians: list[dict[str, float | None]] = []
-    pass_failures: list[dict[str, str]] = []
+    # Each rep's wall splits into build (driver: py4j, analyzer) and
+    # exec (planning + the noop-sink job); the pass keeps the median
+    # rep by wall, so its build_s + exec_s is its wall_s.
+    timings = Timings(warmup_failures, [], [])
     for _pass in range(2):
-        medians: dict[str, float | None] = {}
+        medians: dict[str, dict[str, float] | None] = {}
         fails: dict[str, str] = {}
-        for name, spec in bench_specs.items():
-            runs: list[float] = []
+        for name, spec in specs.items():
+            runs: list[dict[str, float]] = []
             try:
                 for _rep in range(3):
                     # guide §1.5: label jobs so a UI/event-log trace of a
@@ -93,11 +140,8 @@ def main() -> None:
                     spark.sparkContext.setJobDescription(
                         f"bench:{name}:p{_pass + 1}r{_rep + 1}"
                     )
-                    t0 = time.perf_counter()
-                    df = spec.fn(spark, sf_dir)
-                    df.write.format("noop").mode("overwrite").save()
-                    runs.append(time.perf_counter() - t0)
-                medians[name] = round(sorted(runs)[1], 3)
+                    runs.append(_run(spark, spec, sf_dir))
+                medians[name] = sorted(runs, key=lambda r: r["wall_s"])[1]
             except Exception as exc:  # noqa: BLE001 - harness must survive
                 medians[name] = None
                 fails[name] = f"{type(exc).__name__}: {exc}"[:300]
@@ -106,37 +150,34 @@ def main() -> None:
                     file=sys.stderr,
                 )
             release_all()
-        pass_medians.append(medians)
-        pass_failures.append(fails)
+        timings.passes.append(medians)
+        timings.pass_failures.append(fails)
+    return timings
+
+
+def main() -> None:
+    sf_dir, cpus = settings()
+    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+    spark = bench_session(cpus)
+    specs = bench_specs()
+    t = time_queries(spark, specs, sf_dir)
 
     timings: dict[str, float | None] = {}
-    for name in bench_specs:
-        vals = [m[name] for m in pass_medians if m.get(name) is not None]
-        timings[name] = min(vals) if vals else None
+    for name in specs:
+        best = t.best(name)
+        timings[name] = best["wall_s"] if best else None
 
     # A query is "failed" only if NO pass produced a timing; its
     # per-pass error messages all land in the JSON artifact so a
     # partial run is diagnosable from the record alone (not stderr).
-    failures = {
-        name: {
-            f"pass{i + 1}": msg
-            for i, fails in enumerate(pass_failures)
-            if (msg := fails.get(name))
-        }
-        for name in bench_specs
-        if timings[name] is None
-    }
+    failures = {name: t.failures(name) for name in specs if timings[name] is None}
 
-    total = round(sum(t for t in timings.values() if t is not None), 3)
+    total = round(sum(v for v in timings.values() if v is not None), 3)
     # Pass totals compare contention between passes, so they must sum
     # the SAME query set: only queries that succeeded in BOTH passes
     # (a one-pass failure would otherwise skew coverage, not load).
-    both_ok = [
-        n for n in bench_specs if all(m.get(n) is not None for m in pass_medians)
-    ]
-    pass_totals = [
-        round(sum(m[n] for n in both_ok), 3) for m in pass_medians
-    ]
+    both_ok = [n for n in specs if all(p.get(n) is not None for p in t.passes)]
+    pass_totals = [round(sum(p[n]["wall_s"] for n in both_ok), 3) for p in t.passes]
     print(
         json.dumps(
             {
@@ -147,7 +188,7 @@ def main() -> None:
                 "pass_totals": pass_totals,
                 "n_both_passes": len(both_ok),
                 "failures": failures,
-                "warmup_failures": warmup_failures,
+                "warmup_failures": t.warmup_failures,
                 "sf": sf,
                 "cpus": cpus,
                 "n_queries": len(timings),

@@ -1115,12 +1115,7 @@ def ann_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     local = emb.select("vec_id", "label", "embedding").mapInPandas(
         kernel, schema=schema
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        local.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _TOP_K)
-        .withColumn("rk", F.col("rk").cast("int"))
-    )
+    return _topk_ranked(local, "query_id", "cosine DESC, cand_id ASC", _TOP_K)
 
 
 @register(

@@ -23,12 +23,10 @@ partials; scoring is a read-only view over them.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..streaming.jobs import _merge_parquet_gold
 from .demo_domain import EVIDENCE_COLUMNS, companies
 from .pipeline import assemble_composite
 from .talent import hhi_from_counts
@@ -49,59 +47,30 @@ def evidence_partials(ev: DataFrame) -> tuple[DataFrame, DataFrame]:
     return dims, supp
 
 
-_BATCH_MARKER = "_last_batch_id"
-
-
-def _last_applied(path: str) -> int:
-    marker = os.path.join(path, _BATCH_MARKER)
-    if os.path.isfile(marker):
-        with open(marker) as fh:
-            return int(fh.read().strip())
-    return -1
-
-
 def merge_partials(gold_dir: str):
     """foreachBatch body: merge one micro-batch's evidence partials
-    into the gold partial tables (same union+groupBy+atomic-swap
-    pattern as the incremental window rollup; MERGE on Delta).
+    into the two gold partial tables (same union+groupBy pattern as
+    the incremental window rollup; MERGE on Delta).
 
-    Idempotent under replay: Structured Streaming re-runs the last
-    uncommitted batch after a crash, so each table carries the max
-    applied batch id INSIDE the swapped directory (`_last_batch_id`,
-    underscore-prefixed ⇒ invisible to parquet readers).  The marker
-    is written into the temp dir BEFORE the atomic `os.replace`, so
-    data and marker commit together — there is no window where the
-    merge landed but the marker didn't.  A replayed batch id ≤ the
-    marker is skipped per table (the two tables can diverge by one
-    batch after a mid-upsert crash; the replay then tops up only the
-    table that missed it)."""
+    Each table commits through the shared gold-merge protocol,
+    `streaming.jobs._merge_parquet_gold`: replay-idempotent (a batch
+    id at or below the table's committed `_last_batch_id` marker is
+    skipped, so after a mid-upsert crash the replay tops up only the
+    table that missed the batch) and crash-atomic (detach-promote-reap,
+    with a detached generation restored on the next upsert)."""
+    merge_dims = _merge_parquet_gold(
+        f"{gold_dir}/{DIM_PARTIALS}",
+        ["company_id", "dimension"],
+        ["sum_score", "sum_conf", "n"],
+    )
+    merge_supp = _merge_parquet_gold(
+        f"{gold_dir}/{SUPP_COUNTS}", ["company_id", "supp_key"], ["n"]
+    )
 
     def upsert(ev_batch: DataFrame, batch_id: int) -> None:
-        spark = ev_batch.sparkSession
         dims, supp = evidence_partials(ev_batch)
-        for name, part, keys, sums in (
-            (DIM_PARTIALS, dims, ["company_id", "dimension"], ["sum_score", "sum_conf", "n"]),
-            (SUPP_COUNTS, supp, ["company_id", "supp_key"], ["n"]),
-        ):
-            path = f"{gold_dir}/{name}"
-            if os.path.isdir(path):
-                if batch_id <= _last_applied(path):
-                    continue  # replayed batch already merged here
-                merged = (
-                    spark.read.parquet(path)
-                    .unionByName(part)
-                    .groupBy(*keys)
-                    .agg(*[F.sum(c).alias(c) for c in sums])
-                )
-            else:
-                merged = part
-            tmp = f"{path}._tmp_{batch_id}"
-            merged.write.mode("overwrite").parquet(tmp)
-            with open(os.path.join(tmp, _BATCH_MARKER), "w") as fh:
-                fh.write(str(batch_id))
-            if os.path.isdir(path):
-                shutil.rmtree(path)
-            os.replace(tmp, path)
+        merge_dims(dims, batch_id)
+        merge_supp(supp, batch_id)
 
     return upsert
 

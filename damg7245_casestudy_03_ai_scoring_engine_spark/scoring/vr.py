@@ -23,9 +23,9 @@ from .config import CONFIDENCE_FLOOR, DEFAULT_DIM_WEIGHTS
 from .config import dimension_case_sql
 
 
-def vr_scores(dimension_scores: DataFrame, *, with_cv_penalty: bool = True) -> DataFrame:
+def vr_scores(dimension_scores: DataFrame) -> DataFrame:
     """Per-company VR: Σ(score·w·conf_eff)/Σ(w·conf_eff), conf_eff =
-    max(conf, 0.20), clamped [0,100]; optional CV penalty
+    max(conf, 0.20), clamped [0,100]; CV penalty
     clamp(1−0.25·cv, 0, 1) where cv = stddev_pop/|mean| of the raw
     dimension scores.
 
@@ -57,8 +57,6 @@ def vr_scores(dimension_scores: DataFrame, *, with_cv_penalty: bool = True) -> D
     agg = ds.groupBy("company_id").agg(
         F.expr(vr_raw_sql).alias("vr_raw"), F.expr(cv_sql).alias("cv")
     )
-    if not with_cv_penalty:
-        return agg.withColumn("vr_score", F.col("vr_raw"))
     return agg.withColumns(
         {"cv_penalty": F.expr(clamp_sql("1.0D - 0.25D * cv", 0.0, 1.0))}
     ).withColumn(

@@ -534,15 +534,15 @@ def window_counts_raw(events: DataFrame) -> DataFrame:
 def _merge_parquet_gold(gold_dir: str, keys: list[str], sums: list[str]):
     """The shared replay-idempotent, crash-atomic gold-merge protocol
     — ONE implementation behind every foreachBatch gold table
-    (`merge_gold_window_counts`, `merge_inverted_file`), so a protocol
-    fix can never apply to one table and not the other.
+    (`merge_gold_window_counts`, `merge_inverted_file`, and the two
+    scoring partials of `scoring/incremental.py:merge_partials`), so a
+    protocol fix can never apply to one table and not the other.
 
     Replay idempotence: the max applied batch id rides INSIDE the
     committed directory as `_last_batch_id` (underscore-prefixed ⇒
     ignored by parquet readers), so it commits atomically with the
     data; a re-delivered batch id ≤ the marker is skipped instead of
-    double-counted (same protocol as
-    scoring/incremental.py:merge_partials).
+    double-counted.
 
     Crash atomicity (r11 self-review fix — the original
     rmtree-then-replace had a window where a crash between the two

@@ -123,6 +123,37 @@ def test_partial_crash_tops_up_only_missing_table(spark, tmp_path):
     assert _by_company(score_from_partials(spark, SF_SMOKE, gold).collect()) == clean
 
 
+def test_merge_partials_recovers_mid_commit_crash(spark, tmp_path):
+    """Crash inside a table's commit: batch 2 detached dim_partials
+    (renamed to `._old`) but died before promoting its merge.  The
+    replay of batch 2 must restore the detached generation and merge
+    into it, not rebuild dim_partials from batch 2 alone."""
+    import os
+
+    from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.incremental import (
+        DIM_PARTIALS,
+    )
+
+    ev = evidence_rows(spark, SF_SMOKE).persist()
+    half_a = ev.filter("company_id % 2 = 0")
+    half_b = ev.filter("company_id % 2 = 1")
+
+    clean_gold = str(tmp_path / "gold_clean")
+    clean_upsert = merge_partials(clean_gold)
+    clean_upsert(half_a, 0)
+    clean_upsert(half_b, 1)
+    clean = _by_company(score_from_partials(spark, SF_SMOKE, clean_gold).collect())
+
+    gold = str(tmp_path / "gold_mid_commit")
+    upsert = merge_partials(gold)
+    upsert(half_a, 0)
+    dims = os.path.join(gold, DIM_PARTIALS)
+    os.replace(dims, dims + "._old")  # detached, never promoted
+
+    upsert(half_b, 1)  # replay
+    assert _by_company(score_from_partials(spark, SF_SMOKE, gold).collect()) == clean
+
+
 def test_streaming_incremental_equals_batch(spark, tmp_path):
     """The REAL streaming path — readStream lineitem files,
     stream-static orders join, foreachBatch partial merge — must

@@ -58,10 +58,9 @@ def test_vr_always_bounded(spark, scores, weights, confs):
 @given(scores=scores7, confs=confs7, uplift=st.floats(min_value=0, max_value=20))
 def test_vr_monotone_under_uplift(spark, scores, confs, uplift):
     w = [1.0 / 7] * 7
-    base = vr_scores(_df(spark, scores, w, confs), with_cv_penalty=False).collect()[0]
+    base = vr_scores(_df(spark, scores, w, confs)).collect()[0]
     up = vr_scores(
-        _df(spark, [min(100.0, s + uplift) for s in scores], w, confs),
-        with_cv_penalty=False,
+        _df(spark, [min(100.0, s + uplift) for s in scores], w, confs)
     ).collect()[0]
     assert up.vr_raw >= base.vr_raw - 1e-9
 

@@ -79,7 +79,7 @@ def test_vr_bounded_and_weighted(spark):
         _dim_rows([70, 90, 90, 100, 90, 90, 90], confs=[0.8, 0.9, 0.8, 0.9, 0.8, 0.9, 0.8]),
         DIM_SCHEMA,
     )
-    row = vr_scores(df, with_cv_penalty=False).collect()[0]
+    row = vr_scores(df).collect()[0]
     assert 0.0 <= row.vr_raw <= 100.0
     # hand-computed weighted mean with conf floor (all conf > 0.2)
     num = sum(s * (1 / 7) * c for s, c in zip([70, 90, 90, 100, 90, 90, 90], [0.8, 0.9, 0.8, 0.9, 0.8, 0.9, 0.8]))
@@ -91,14 +91,14 @@ def test_vr_zero_weight_is_zero(spark):
     df = spark.createDataFrame(
         _dim_rows([50] * 7, weights=[0.0] * 7), DIM_SCHEMA
     )
-    row = vr_scores(df, with_cv_penalty=False).collect()[0]
+    row = vr_scores(df).collect()[0]
     assert row.vr_raw == 0.0  # zero total weight → 0 (vr_model.py:50-96)
 
 
 def test_vr_confidence_floor(spark):
     # conf 0.0 must be floored to 0.20, not drop the row.
     df = spark.createDataFrame(_dim_rows([80] * 7, confs=[0.0] * 7), DIM_SCHEMA)
-    row = vr_scores(df, with_cv_penalty=False).collect()[0]
+    row = vr_scores(df).collect()[0]
     assert row.vr_raw == pytest.approx(80.0, abs=1e-9)
 
 
