@@ -1,6 +1,5 @@
 from .core import blend, clamp, conf_floor_sql, safe_div, score_band_sql  # noqa: F401
 from .text import (  # noqa: F401
-    char_shingles,
     stopword_ratio,
     token_count,
     word_tokens,

@@ -14,7 +14,7 @@ that can raise under `spark.sql.ansi.enabled=true`.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -129,3 +129,39 @@ def round_stable(col: Column | str, scale: int) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     p = float(10**scale)
     return F.floor(c * F.lit(p) + F.lit(0.5)) / F.lit(p)
+
+
+def exact_pearson(
+    pairs: DataFrame, key: str, x: str, y: str, n_out: str, r_out: str
+) -> DataFrame:
+    """Per `key`: pair count `n_out`, the exact int64 numerator `r_num`
+    and Pearson's r of INTEGER columns `x`, `y` as `r_out`.
+
+    The five moments (Σx, Σy, Σx², Σy², Σxy) are exact int64 sums, so
+    n·Σxy − Σx·Σy and both variance terms are exact too; r is ONE
+    fixed-order double expression over them (sqrt is IEEE-correctly
+    rounded, hence engine-identical) through round_stable(6), and 0.0
+    when either variance is zero.  The oracle SQL spells the same
+    formula."""
+    s = pairs.groupBy(key).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(x).alias("sx"),
+        F.sum(y).alias("sy"),
+        F.sum(F.col(x) * F.col(x)).alias("sxx"),
+        F.sum(F.col(y) * F.col(y)).alias("syy"),
+        F.sum(F.col(x) * F.col(y)).alias("sxy"),
+    )
+    n, sx, sy, sxx, syy, sxy = (
+        F.col(k) for k in ("n", "sx", "sy", "sxx", "syy", "sxy")
+    )
+    num = (n * sxy - sx * sy).cast("long")
+    d1 = (n * sxx - sx * sx).cast("long")
+    d2 = (n * syy - sy * sy).cast("long")
+    r = F.when(
+        (d1 > 0) & (d2 > 0),
+        round_stable(
+            num.cast("double") / F.sqrt(d1.cast("double") * d2.cast("double")),
+            6,
+        ),
+    ).otherwise(F.lit(0.0))
+    return s.select(key, n.alias(n_out), num.alias("r_num"), r.alias(r_out))

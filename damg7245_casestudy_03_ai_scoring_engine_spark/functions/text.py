@@ -1,6 +1,6 @@
-"""Text-analysis column helpers — tokenization, shingles, quality
-ratios.  All native `pyspark.sql.functions` (JVM-side, codegen) — no
-Python in the hot path; these run per-row over 100 TB document tables
+"""Text-analysis column helpers — tokenization and quality ratios.
+All native `pyspark.sql.functions` (JVM-side, codegen) — no Python
+in the hot path; these run per-row over 100 TB document tables
 without serialization overhead.
 
 The reference's text handling is Python loops over fetched rows
@@ -45,26 +45,3 @@ def stopword_ratio(col: Column | str, stopwords: tuple[str, ...] = STOPWORDS_EN)
     hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
     n = F.size(toks)
     return F.when(n > 0, hits.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
-def char_shingles(col: Column | str, k: int = 8, stride: int = 4) -> Column:
-    """Character k-gram shingles with a stride, as array<string>.
-
-    Built with `sequence` + `transform` (higher-order functions —
-    stays in the JVM).  Used by minhash fingerprinting; stride trims
-    the shingle count ~stride× with negligible recall loss for dedup.
-    """
-    c = _col(col)
-    n = F.length(c)
-    starts = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)), F.lit(stride))
-    return F.transform(starts, lambda i: F.substring(c, i, k))
-
-
-def word_shingles(col: Column | str, k: int = 3) -> Column:
-    """Word k-gram shingles joined by single spaces, as array<string>."""
-    toks = word_tokens(col)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    return F.when(n >= k, F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)))).otherwise(
-        F.array(F.concat_ws(" ", toks))
-    )

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.catalog import load
+from ..sources.catalog import HOUR_NS, load
 from .registry import register
 
 
@@ -165,9 +165,6 @@ def asof_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HOUR_NS_TOL = 3_600 * 1_000_000_000
-
-
 def _err_clk(spark: SparkSession, sf_dir: str):
     ev = load(spark, sf_dir, "events")
     us = F.col("ts") - F.col("ts") % F.lit(1_000)
@@ -254,7 +251,7 @@ FROM (
     FROM clk c
     ASOF JOIN err e ON c.user_id = e.user_id AND c.click_t_ns >= e.err_t_ns
 )
-WHERE click_t_ns - matched_err_t_ns <= {_HOUR_NS_TOL}
+WHERE click_t_ns - matched_err_t_ns <= {HOUR_NS}
 """,
 )
 def asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -265,5 +262,5 @@ def asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     clk, err = _err_clk(spark, sf_dir)
     return asof_join(
         clk, err, on=["user_id"], left_time="click_t_ns", right_time="err_t_ns",
-        tolerance=_HOUR_NS_TOL,
+        tolerance=HOUR_NS,
     )

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.core import clamp, conf_floor_sql, safe_div
-from ..sources.catalog import load, ns
+from ..sources.catalog import DAY_NS, load, ns
 from .registry import register
 
 
@@ -1196,9 +1196,6 @@ def regional_revenue_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DAY_NS = 86_400_000_000_000
-
-
 @register(
     "rolling_window_metrics",
     bench=True,
@@ -1219,7 +1216,7 @@ SELECT user_id, event_id, ts_ns,
 FROM e
 WINDOW trailing_day AS (
     PARTITION BY user_id ORDER BY ts_ns
-    RANGE BETWEEN {_DAY_NS} PRECEDING AND CURRENT ROW
+    RANGE BETWEEN {DAY_NS} PRECEDING AND CURRENT ROW
 ),
 cum AS (
     PARTITION BY user_id ORDER BY ts_ns, event_id
@@ -1249,7 +1246,7 @@ def rolling_window_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("ts") - F.col("ts") % 1000).alias("ts_ns"),
         F.round(F.col("value") * 100).cast("bigint").alias("cents"),
     )
-    day = Window.partitionBy("user_id").orderBy("ts_ns").rangeBetween(-_DAY_NS, 0)
+    day = Window.partitionBy("user_id").orderBy("ts_ns").rangeBetween(-DAY_NS, 0)
     cum = (
         Window.partitionBy("user_id")
         .orderBy("ts_ns", "event_id")
@@ -3432,7 +3429,7 @@ def discount_quantity_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-order double (the autocorr/xcorr numeric pattern applied to
     a fact⋈dim grain).  Broadcast part join, one map-side moments
     groupBy."""
-    from ..functions.core import round_stable
+    from ..functions.core import exact_pearson
 
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part")
@@ -3441,28 +3438,7 @@ def discount_quantity_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_discount") * 100).cast("long").alias("d100"),
         F.round(F.col("l_quantity")).cast("long").alias("qty"),
     )
-    s = q.groupBy("p_brand").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("d100").alias("sx"),
-        F.sum("qty").alias("sy"),
-        F.sum(F.col("d100") * F.col("d100")).alias("sxx"),
-        F.sum(F.col("qty") * F.col("qty")).alias("syy"),
-        F.sum(F.col("d100") * F.col("qty")).alias("sxy"),
-    )
-    n, sx, sy, sxx, syy, sxy = (
-        F.col(k) for k in ("n", "sx", "sy", "sxx", "syy", "sxy")
-    )
-    num = (n * sxy - sx * sy).cast("long")
-    d1 = (n * sxx - sx * sx).cast("long")
-    d2 = (n * syy - sy * sy).cast("long")
-    r = F.when(
-        (d1 > 0) & (d2 > 0),
-        round_stable(
-            num.cast("double") / F.sqrt(d1.cast("double") * d2.cast("double")),
-            6,
-        ),
-    ).otherwise(F.lit(0.0))
-    return s.select("p_brand", "n", num.alias("r_num"), r.alias("corr_discount_qty"))
+    return exact_pearson(q, "p_brand", "d100", "qty", "n", "corr_discount_qty")
 
 
 @register(

@@ -639,6 +639,60 @@ def _lsh_band_codes(
     )
 
 
+def _lsh_verified_pairs(emb: DataFrame, codes: DataFrame) -> DataFrame:
+    """(vec_a < vec_b, cosine) for every pair colliding in some
+    (band, code) bucket of `codes` whose exact 6-dp cosine is ≥ 0.4:
+    the (band, code) self-join, the output-invisible integer
+    quantized-cosine prefilter, distinct, and the exact verify over
+    two broadcast joins (see `lsh_cosine_pairs` for why each step is
+    exact and what it costs)."""
+    a = codes.select(
+        "band", "code", F.col("vec_id").alias("vec_a"),
+        F.col("vq").alias("qa"), F.col("qn").alias("qna"),
+    )
+    b = codes.select(
+        "band", "code", F.col("vec_id").alias("vec_b"),
+        F.col("vq").alias("qb"), F.col("qn").alias("qnb"),
+    )
+    cand = (
+        a.join(b, ["band", "code"])
+        .filter(F.col("vec_a") < F.col("vec_b"))
+        .filter(
+            "CAST(aggregate(zip_with(qa, qb, (x, y) -> x * y), "
+            "CAST(0 AS BIGINT), (acc, v) -> acc + v) AS DOUBLE)"
+            " >= 0.39D * qna * qnb"
+        )
+        .select("vec_a", "vec_b")
+        .distinct()
+    )
+
+    e = emb.select("vec_id", "embedding", F.expr(l2_norm_sql("embedding")).alias("nrm"))
+    va = e.select(
+        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("va"),
+        F.col("nrm").alias("na"),
+    )
+    vb = e.select(
+        F.col("vec_id").alias("vec_b"), F.col("embedding").alias("vb"),
+        F.col("nrm").alias("nb"),
+    )
+    cos = F.round(
+        F.when(
+            (F.col("na") > 0) & (F.col("nb") > 0),
+            F.expr(dot_sql("va", "vb")) / (F.col("na") * F.col("nb")),
+        ).otherwise(F.lit(0.0)),
+        6,
+    )
+    # Broadcast the vector side explicitly: the candidate list is the
+    # big side after prefiltering, and letting AQE discover that costs
+    # two extra shuffle stages of pure overhead.
+    return (
+        cand.join(F.broadcast(va), "vec_a")
+        .join(F.broadcast(vb), "vec_b")
+        .select("vec_a", "vec_b", cos.alias("cosine"))
+        .filter(F.col("cosine") >= 0.4)
+    )
+
+
 @register(
     "lsh_cosine_pairs",
     survey="S18,similarity (extension: random-hyperplane LSH)",
@@ -736,51 +790,7 @@ def lsh_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         _lsh_band_codes(emb, _BAND_BITS), "lsh_cosine_pairs.codes"
     )
 
-    a = codes.select(
-        "band", "code", F.col("vec_id").alias("vec_a"),
-        F.col("vq").alias("qa"), F.col("qn").alias("qna"),
-    )
-    b = codes.select(
-        "band", "code", F.col("vec_id").alias("vec_b"),
-        F.col("vq").alias("qb"), F.col("qn").alias("qnb"),
-    )
-    cand = (
-        a.join(b, ["band", "code"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .filter(
-            "CAST(aggregate(zip_with(qa, qb, (x, y) -> x * y), "
-            "CAST(0 AS BIGINT), (acc, v) -> acc + v) AS DOUBLE)"
-            " >= 0.39D * qna * qnb"
-        )
-        .select("vec_a", "vec_b")
-        .distinct()
-    )
-
-    e = emb.select("vec_id", "embedding", F.expr(l2_norm_sql("embedding")).alias("nrm"))
-    va = e.select(
-        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    vb = e.select(
-        F.col("vec_id").alias("vec_b"), F.col("embedding").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    cos = F.round(
-        F.when(
-            (F.col("na") > 0) & (F.col("nb") > 0),
-            F.expr(dot_sql("va", "vb")) / (F.col("na") * F.col("nb")),
-        ).otherwise(F.lit(0.0)),
-        6,
-    )
-    # Broadcast the vector side explicitly: the candidate list is the
-    # big side after prefiltering, and letting AQE discover that costs
-    # two extra shuffle stages of pure overhead.
-    return (
-        cand.join(F.broadcast(va), "vec_a")
-        .join(F.broadcast(vb), "vec_b")
-        .select("vec_a", "vec_b", cos.alias("cosine"))
-        .filter(F.col("cosine") >= 0.4)
-    )
+    return _lsh_verified_pairs(emb, codes)
 
 
 _TOPK_BAND_BITS_FLOOR = 8   # fixture-scale behavior (n ≤ 65 536 → 8 bits)
@@ -960,48 +970,7 @@ def lsh_pairs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lsh_pairs_topk.codes",
     )
 
-    a = codes.select(
-        "band", "code", F.col("vec_id").alias("vec_a"),
-        F.col("vq").alias("qa"), F.col("qn").alias("qna"),
-    )
-    b = codes.select(
-        "band", "code", F.col("vec_id").alias("vec_b"),
-        F.col("vq").alias("qb"), F.col("qn").alias("qnb"),
-    )
-    cand = (
-        a.join(b, ["band", "code"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .filter(
-            "CAST(aggregate(zip_with(qa, qb, (x, y) -> x * y), "
-            "CAST(0 AS BIGINT), (acc, v) -> acc + v) AS DOUBLE)"
-            " >= 0.39D * qna * qnb"
-        )
-        .select("vec_a", "vec_b")
-        .distinct()
-    )
-
-    e = emb.select("vec_id", "embedding", F.expr(l2_norm_sql("embedding")).alias("nrm"))
-    va = e.select(
-        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    vb = e.select(
-        F.col("vec_id").alias("vec_b"), F.col("embedding").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    cos = F.round(
-        F.when(
-            (F.col("na") > 0) & (F.col("nb") > 0),
-            F.expr(dot_sql("va", "vb")) / (F.col("na") * F.col("nb")),
-        ).otherwise(F.lit(0.0)),
-        6,
-    )
-    kept = (
-        cand.join(F.broadcast(va), "vec_a")
-        .join(F.broadcast(vb), "vec_b")
-        .select("vec_a", "vec_b", cos.alias("cosine"))
-        .filter(F.col("cosine") >= 0.4)
-    )
+    kept = _lsh_verified_pairs(emb, codes)
     directed = kept.select(
         F.col("vec_a").alias("item"), F.col("vec_b").alias("partner"), "cosine"
     ).unionByName(
@@ -1298,12 +1267,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _TOP_K)
-        .withColumn("rk", F.col("rk").cast("int"))
-    )
+    return _topk_ranked(scored, "query_id", "cosine DESC, cand_id ASC", _TOP_K)
 
 
 @register(

@@ -1,12 +1,17 @@
-"""Registry entries for the streaming extensions' batch twins
-(SURVEY.md §2.10).
+"""Registry entries for the streaming extensions' batch side
+(SURVEY.md §2.10), plus the event-time window and series analytics
+built on the same events table.
 
-The streaming jobs in streaming/jobs.py share their transformation
-functions with these batch queries; the DuckDB oracle checks the
-batch form here, and tests/test_streaming.py checks stream == batch
-on the same inputs.  All window boundaries are int64-nanosecond
-epoch arithmetic — identical in both engines and independent of
-session timezone.
+`stream_window_counts`, `session_window_rollup`,
+`max_concurrent_sessions`, `click_error_followups` and
+`click_error_outer_rate` call the very function a streaming job in
+streaming/jobs.py drains (`window_counts`, `session_window_rollup`,
+`click_error_pairs`); `bounded_running_balance_stateful` shares its
+delta projection and clamp-walk kernel with `running_balance_stream`.
+The DuckDB oracle checks the batch result here, and
+tests/test_streaming.py checks the drained stream against it.  All
+window boundaries are int64-nanosecond epoch arithmetic — identical
+in both engines and independent of session timezone.
 """
 
 from __future__ import annotations
@@ -14,18 +19,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.catalog import load
+from ..sources.catalog import DAY_NS, HOUR_NS, WEEK_NS, load
 from ..streaming.jobs import SESSION_GAP_NS, sessionize_batch, window_counts
 from .registry import register
-
-_HOUR_NS = 3_600 * 1_000_000_000
 
 
 @register(
     "stream_window_counts",
-    survey="§2.10 tumbling window (batch twin of window_counts_stream)",
+    survey="§2.10 tumbling window (window_counts, batch+stream shared)",
     oracle=f"""
-SELECT epoch_ns(ts) - epoch_ns(ts) % {_HOUR_NS} AS window_start_ns,
+SELECT epoch_ns(ts) - epoch_ns(ts) % {HOUR_NS} AS window_start_ns,
        event_type,
        count(*) AS n_events,
        round(sum(value), 4) AS value_sum
@@ -34,10 +37,10 @@ GROUP BY 1, 2
 """,
 )
 def stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour event rollup — the batch twin of the
-    watermarked streaming aggregation (streaming/jobs.py
-    window_counts_stream), replacing the reference's DATEADD summary
-    windows (signal_summaries.py:82-93)."""
+    """Tumbling 1-hour event rollup — `streaming/jobs.py::window_counts`
+    on the batch table; the same function drains the watermarked
+    stream.  Replaces the reference's DATEADD summary windows
+    (signal_summaries.py:82-93)."""
     return window_counts(load(spark, sf_dir, "events"))
 
 
@@ -145,17 +148,17 @@ JOIN e er ON c.user_id = er.user_id
 )
 def click_error_followups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval join: errors within 10 minutes after a same-user click
-    (funnel attribution).  Batch twin of the watermarked stream-stream
-    join in streaming/jobs.py::click_error_pairs_stream — tested
-    equivalent in tests/test_streaming.py, so the incremental and
-    full-scan paths provably agree."""
+    (funnel attribution).  `streaming/jobs.py::click_error_pairs` on
+    the batch table; drained over a stream the same function runs as
+    the watermarked stream-stream join, tested equal in
+    tests/test_streaming.py, so the incremental and full-scan paths
+    provably agree."""
     from ..streaming.jobs import click_error_pairs
 
     return click_error_pairs(load(spark, sf_dir, "events"))
 
 
 _15MIN_NS = 900 * 1_000_000_000
-_HOUR_NS_SW = 3_600 * 1_000_000_000
 
 
 @register(
@@ -294,9 +297,6 @@ def session_conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WEEK_NS = 7 * 86_400 * 1_000_000_000
-
-
 @register(
     "cohort_retention",
     survey="W5,A2 (extension: weekly cohort retention matrix)",
@@ -305,12 +305,12 @@ WITH e AS (
     SELECT user_id, epoch_ns(ts) AS t FROM events
 ),
 firsts AS (
-    SELECT user_id, min(t) - min(t) % {_WEEK_NS} AS cohort_week
+    SELECT user_id, min(t) - min(t) % {WEEK_NS} AS cohort_week
     FROM e GROUP BY user_id
 ),
 activity AS (
     SELECT DISTINCT e.user_id, f.cohort_week,
-           CAST((t - t % {_WEEK_NS} - f.cohort_week) / {_WEEK_NS} AS BIGINT) AS week_offset
+           CAST((t - t % {WEEK_NS} - f.cohort_week) / {WEEK_NS} AS BIGINT) AS week_offset
     FROM e JOIN firsts f ON e.user_id = f.user_id
 )
 SELECT cohort_week, week_offset,
@@ -335,7 +335,7 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", (F.col("ts") - F.col("ts") % F.lit(1_000)).alias("t")
     )
     firsts = ev.groupBy("user_id").agg(
-        (F.min("t") - F.min("t") % F.lit(_WEEK_NS)).alias("cohort_week")
+        (F.min("t") - F.min("t") % F.lit(WEEK_NS)).alias("cohort_week")
     )
     activity = (
         ev.join(firsts, "user_id")
@@ -343,8 +343,8 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             "cohort_week",
             (
-                (F.col("t") - F.col("t") % F.lit(_WEEK_NS) - F.col("cohort_week"))
-                / F.lit(_WEEK_NS)
+                (F.col("t") - F.col("t") % F.lit(WEEK_NS) - F.col("cohort_week"))
+                / F.lit(WEEK_NS)
             ).cast("bigint").alias("week_offset"),
         )
         .distinct()
@@ -360,16 +360,13 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DAY_NS_GI = 86_400 * 1_000_000_000
-
-
 @register(
     "activity_streaks",
     survey="W5 (extension: gaps-and-islands consecutive-day streaks)",
     oracle=f"""
 WITH days AS (
     SELECT DISTINCT user_id,
-           epoch_ns(ts) // {_DAY_NS_GI} AS day_idx
+           epoch_ns(ts) // {DAY_NS} AS day_idx
     FROM events
 ),
 grouped AS (
@@ -401,7 +398,7 @@ def activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines bucket identically with no calendar/timezone code."""
     ev = load(spark, sf_dir, "events")
     days = ev.select(
-        "user_id", F.expr(f"ts div {_DAY_NS_GI}").alias("day_idx")
+        "user_id", F.expr(f"ts div {DAY_NS}").alias("day_idx")
     ).distinct()
     from pyspark.sql import Window
 
@@ -419,19 +416,16 @@ def activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HOUR_NS = 3_600_000_000_000
-
-
 @register(
     "stream_dedup_twin",
     survey="§2.10 stream dedup (batch twin of dropDuplicatesWithinWatermark), W1",
     oracle=f"""
 WITH keyed AS (
     SELECT user_id, event_type, event_id, value,
-           epoch_ns(ts) // {_HOUR_NS} AS hour_idx,
+           epoch_ns(ts) // {HOUR_NS} AS hour_idx,
            epoch_ns(ts) AS ts_ns,
            row_number() OVER (
-               PARTITION BY user_id, event_type, epoch_ns(ts) // {_HOUR_NS}
+               PARTITION BY user_id, event_type, epoch_ns(ts) // {HOUR_NS}
                ORDER BY ts, event_id
            ) AS rk
     FROM events
@@ -447,7 +441,7 @@ WHERE rk = 1
 )
 def stream_dedup_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of the watermarked stream dedup
-    (streaming/jobs.py:258 `dedup_stream` /
+    (`streaming/jobs.py::dedup_stream` /
     `dropDuplicatesWithinWatermark`): keep the EARLIEST event per
     (user, event_type, hour) — exactly what the streaming operator
     converges to once the watermark passes each hour bucket, which is
@@ -464,7 +458,7 @@ def stream_dedup_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "event_id",
         "value",
-        F.expr(f"ts div {_HOUR_NS}").alias("hour_idx"),
+        F.expr(f"ts div {HOUR_NS}").alias("hour_idx"),
         F.col("ts").alias("ts_ns"),
     )
     w = Window.partitionBy("user_id", "event_type", "hour_idx").orderBy(
@@ -802,14 +796,14 @@ def click_error_outer_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER interval join rolled up per user: clicks with NO
     error inside the 10-minute follow-up window are the outer
     (NULL-padded) rows — the 'no incident' branch an attribution
-    pipeline needs, and the batch twin of the outer stream-stream
-    join (`streaming/jobs.py::click_error_pairs_outer_stream`), whose
-    null rows Spark can only emit once the error-side watermark
-    passes click_time + 10 min.  Drain-tested equivalent in
+    pipeline needs.  The join is `streaming/jobs.py::click_error_pairs`
+    with how="left"; over a stream the same call is the outer
+    stream-stream join, whose null rows Spark can only emit once the
+    error-side watermark passes click_time + 10 min.  Drain-tested in
     tests/test_streaming.py."""
-    from ..streaming.jobs import click_error_pairs_outer
+    from ..streaming.jobs import click_error_pairs
 
-    j = click_error_pairs_outer(load(spark, sf_dir, "events"))
+    j = click_error_pairs(load(spark, sf_dir, "events"), how="left")
     return j.groupBy("user_id").agg(
         F.countDistinct("click_id").alias("n_clicks"),
         F.countDistinct(
@@ -817,9 +811,6 @@ def click_error_outer_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("n_clean_clicks"),
         F.count("error_id").alias("n_followup_errors"),
     )
-
-
-_DAY_NS = 86_400 * 1_000_000_000
 
 
 def daily_peak_concurrency(sess: DataFrame) -> DataFrame:
@@ -845,7 +836,7 @@ def daily_peak_concurrency(sess: DataFrame) -> DataFrame:
     net = (
         deltas.groupBy("t")
         .agg(F.sum("d").cast("long").alias("net"))
-        .withColumn("day_ns", F.col("t") - F.col("t") % F.lit(_DAY_NS))
+        .withColumn("day_ns", F.col("t") - F.col("t") % F.lit(DAY_NS))
     )
     intra_w = (
         Window.partitionBy("day_ns")
@@ -877,7 +868,7 @@ def daily_peak_concurrency(sess: DataFrame) -> DataFrame:
     )
     starts = sess.groupBy(
         (
-            F.col("session_start_ns") - F.col("session_start_ns") % F.lit(_DAY_NS)
+            F.col("session_start_ns") - F.col("session_start_ns") % F.lit(DAY_NS)
         ).alias("day_ns")
     ).agg(F.count(F.lit(1)).cast("long").alias("sessions_started"))
     return peaks.join(starts, "day_ns", "left").select(
@@ -922,7 +913,7 @@ net AS (
     SELECT t, CAST(sum(d) AS BIGINT) AS net FROM deltas GROUP BY t
 ),
 run AS (
-    SELECT t - t % {_DAY_NS} AS day_ns, net,
+    SELECT t - t % {DAY_NS} AS day_ns, net,
            CAST(sum(net) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS BIGINT) AS conc
     FROM net
 ),
@@ -934,7 +925,7 @@ peaks AS (
     FROM run GROUP BY day_ns
 ),
 starts AS (
-    SELECT start_ns - start_ns % {_DAY_NS} AS day_ns,
+    SELECT start_ns - start_ns % {DAY_NS} AS day_ns,
            CAST(count(*) AS BIGINT) AS sessions_started
     FROM sess GROUP BY 1
 )
@@ -1080,7 +1071,7 @@ def interval_islands_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="W5,F14 (extension: calendar-spine resample + LOCF forward fill)",
     oracle=f"""
 WITH daily AS (
-    SELECT user_id, epoch_ns(ts) // {_DAY_NS} AS day_idx,
+    SELECT user_id, epoch_ns(ts) // {DAY_NS} AS day_idx,
            CAST(sum(CAST(floor(value * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS day_q4
     FROM events GROUP BY 1, 2
 ),
@@ -1129,7 +1120,7 @@ def timeseries_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load(spark, sf_dir, "events").select(
         "user_id",
-        F.expr(f"ts div {_DAY_NS}").alias("day_idx"),
+        F.expr(f"ts div {DAY_NS}").alias("day_idx"),
         F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("long").alias("vq"),
     )
     daily = (
@@ -1165,7 +1156,7 @@ def timeseries_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH q AS (
     SELECT event_type,
-           (epoch_ns(ts) // {_DAY_NS} + 3) % 7 AS dow,
+           (epoch_ns(ts) // {DAY_NS} + 3) % 7 AS dow,
            CAST(floor(value * 10000 + 0.5) AS BIGINT) AS vq
     FROM events
 ),
@@ -1207,7 +1198,7 @@ def dow_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = load(spark, sf_dir, "events", fan_out=True).select(
         "event_type",
-        ((F.expr(f"ts div {_DAY_NS}") + 3) % 7).alias("dow"),
+        ((F.expr(f"ts div {DAY_NS}") + 3) % 7).alias("dow"),
         F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("long").alias("vq"),
     )
     agg = q.groupBy("event_type", "dow").agg(
@@ -1233,7 +1224,37 @@ def dow_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DRAIN_CENTS = 3_400  # constant per-event drain for the balance walk
+_DRAIN_CENTS = 3_400  # constant per-event drain for the balance walks
+_BALANCE_CAP_CENTS = 20_000  # two-sided walk: ceiling
+_BALANCE_OUT_SCHEMA = "user_id long, event_id long, balance_cents long"
+
+
+def _balance_deltas(events: DataFrame) -> DataFrame:
+    """(user_id, event_id, ts_ns, delta): each event's deposit in
+    whole cents less the constant drain — the input of every balance
+    walk, batch or streaming."""
+    return events.select(
+        "user_id",
+        "event_id",
+        F.col("ts").alias("ts_ns"),
+        (
+            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+            - F.lit(_DRAIN_CENTS)
+        ).alias("delta"),
+    )
+
+
+def _clamp_walk(pdf, bal: int = 0, cap: int = _BALANCE_CAP_CENTS):
+    """Walk one user's deltas in (ts_ns, event_id) order from balance
+    `bal`, clamping to [0, cap] after each event.  Returns the
+    (user_id, event_id, balance_cents) rows and the last balance, so a
+    stream can carry it into the user's next micro-batch."""
+    pdf = pdf.sort_values(["ts_ns", "event_id"], kind="mergesort")
+    out = []
+    for d in pdf["delta"].to_numpy():
+        bal = min(cap, max(0, bal + int(d)))
+        out.append(bal)
+    return pdf[["user_id", "event_id"]].assign(balance_cents=out), int(bal)
 
 
 @register(
@@ -1283,17 +1304,7 @@ def capped_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     has no such closed form — that variant is the stateful
     `bounded_running_balance_stateful` twin.
     """
-    from pyspark.sql import Window
-
-    d = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.col("ts").alias("ts_ns"),
-        (
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            - F.lit(_DRAIN_CENTS)
-        ).alias("delta"),
-    )
+    d = _balance_deltas(load(spark, sf_dir, "events"))
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts_ns", "event_id")
@@ -1316,7 +1327,7 @@ def capped_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="A18,W5 (extension: lag-1 autocorrelation of daily series)",
     oracle=f"""
 WITH daily AS (
-    SELECT event_type, epoch_ns(ts) // {_DAY_NS} AS day_idx,
+    SELECT event_type, epoch_ns(ts) // {DAY_NS} AS day_idx,
            CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS dq
     FROM events GROUP BY 1, 2
 ),
@@ -1361,12 +1372,12 @@ def autocorr_daily_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: map-side-combinable daily aggregate, a self
     equi-join on the tiny (type, day) grain, one moments groupBy.
     """
-    from ..functions.core import round_stable
+    from ..functions.core import exact_pearson
 
     daily = (
         load(spark, sf_dir, "events", fan_out=True)
         .groupBy(
-            "event_type", F.expr(f"ts div {_DAY_NS}").alias("day_idx")
+            "event_type", F.expr(f"ts div {DAY_NS}").alias("day_idx")
         )
         .agg(
             F.sum(
@@ -1384,50 +1395,7 @@ def autocorr_daily_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_type") == F.col("bt"))
         & (F.col("day_idx") == F.col("b_prev_day")),
     ).select("event_type", F.col("dq").alias("x"), "y")
-    s = pairs.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-    )
-    n, sx, sy, sxx, syy, sxy = (
-        F.col(k) for k in ("n", "sx", "sy", "sxx", "syy", "sxy")
-    )
-    num = (n * sxy - sx * sy).cast("long")
-    d1 = (n * sxx - sx * sx).cast("long")
-    d2 = (n * syy - sy * sy).cast("long")
-    r = F.when(
-        (d1 > 0) & (d2 > 0),
-        round_stable(
-            num.cast("double")
-            / F.sqrt(d1.cast("double") * d2.cast("double")),
-            6,
-        ),
-    ).otherwise(F.lit(0.0))
-    return s.select(
-        "event_type",
-        n.alias("n_pairs"),
-        num.alias("r_num"),
-        r.alias("autocorr_lag1"),
-    )
-
-
-_BALANCE_CAP_CENTS = 20_000  # two-sided variant: ceiling
-
-
-def _bounded_walk_builder(cap: int):
-    def walk(pdf):
-        pdf = pdf.sort_values(["ts_ns", "event_id"], kind="mergesort")
-        bal, out = 0, []
-        for d in pdf["delta"].to_numpy():
-            bal = min(cap, max(0, bal + int(d)))
-            out.append(bal)
-        pdf = pdf.assign(balance_cents=out)
-        return pdf[["user_id", "event_id", "balance_cents"]]
-
-    return walk
+    return exact_pearson(pairs, "event_type", "x", "y", "n_pairs", "autocorr_lag1")
 
 
 @register(
@@ -1480,23 +1448,18 @@ def bounded_running_balance_stateful(spark: SparkSession, sf_dir: str) -> DataFr
     (a pathological hot user is a repartition/AQE concern, not a
     correctness one).  The INCREMENTAL form of this same walk runs as
     a stateful stream (streaming/jobs.py::running_balance_stream —
-    the carried int state fully summarizes the clamp recursion;
+    the same delta projection and `_clamp_walk` kernel, with the
+    carried int state fully summarizing the clamp recursion;
     stream == batch pinned by a 3-micro-batch drain test).
     """
-    import pandas as pd  # noqa: F401  (applyInPandas contract)
 
-    d = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.col("ts").alias("ts_ns"),
-        (
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            - F.lit(_DRAIN_CENTS)
-        ).alias("delta"),
-    )
-    return d.groupBy("user_id").applyInPandas(
-        _bounded_walk_builder(_BALANCE_CAP_CENTS),
-        schema="user_id long, event_id long, balance_cents long",
+    def walk(pdf):
+        return _clamp_walk(pdf)[0]
+
+    return (
+        _balance_deltas(load(spark, sf_dir, "events"))
+        .groupBy("user_id")
+        .applyInPandas(walk, schema=_BALANCE_OUT_SCHEMA)
     )
 
 
@@ -1506,7 +1469,7 @@ def bounded_running_balance_stateful(spark: SparkSession, sf_dir: str) -> DataFr
     survey="A15,W5 (extension: rolling 7-day distinct actives)",
     oracle=f"""
 WITH du AS (
-    SELECT DISTINCT epoch_ns(ts) // {_DAY_NS} AS day_idx, user_id FROM events
+    SELECT DISTINCT epoch_ns(ts) // {DAY_NS} AS day_idx, user_id FROM events
 ),
 contrib AS (
     SELECT day_idx + o.o AS window_day, user_id
@@ -1553,7 +1516,7 @@ def rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     du = tracked_persist(
         load(spark, sf_dir, "events", fan_out=True)
-        .selectExpr(f"ts div {_DAY_NS} AS day_idx", "user_id")
+        .selectExpr(f"ts div {DAY_NS} AS day_idx", "user_id")
         .repartition("user_id")
         .distinct(),
         "rolling_active_users.day_user",
@@ -1610,7 +1573,7 @@ def rolling_active_users_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarter windows alike.  This is the re-aggregation property
     countDistinct lacks (distincts don't add; sketches do)."""
     ev = load(spark, sf_dir, "events", fan_out=True)
-    daily = ev.groupBy(F.expr(f"ts div {_DAY_NS}").alias("day_idx")).agg(
+    daily = ev.groupBy(F.expr(f"ts div {DAY_NS}").alias("day_idx")).agg(
         F.expr("hll_sketch_agg(user_id, 14)").alias("sk")
     )
     days = daily.select("day_idx").withColumnRenamed("day_idx", "window_day")
@@ -1635,7 +1598,7 @@ def rolling_active_users_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="A18,W5 (extension: lead/lag cross-correlation scan)",
     oracle=f"""
 WITH daily AS (
-    SELECT event_type, epoch_ns(ts) // {_DAY_NS} AS day_idx,
+    SELECT event_type, epoch_ns(ts) // {DAY_NS} AS day_idx,
            CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS dq
     FROM events WHERE event_type IN ('click', 'purchase') GROUP BY 1, 2
 ),
@@ -1681,13 +1644,13 @@ def xcorr_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the fact aggregate is the work; the 7-lag explode
     and joins ride the tiny (type, day) grain.
     """
-    from ..functions.core import round_stable
+    from ..functions.core import exact_pearson
 
     daily = (
         load(spark, sf_dir, "events", fan_out=True)
         .filter(F.col("event_type").isin("click", "purchase"))
         .groupBy(
-            "event_type", F.expr(f"ts div {_DAY_NS}").alias("day_idx")
+            "event_type", F.expr(f"ts div {DAY_NS}").alias("day_idx")
         )
         .agg(
             F.sum(
@@ -1709,28 +1672,7 @@ def xcorr_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = al.join(
         b, F.col("b_day") == F.col("day_idx") + F.col("lag")
     ).select("lag", "x", "y")
-    s = pairs.groupBy("lag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-    )
-    n, sx, sy, sxx, syy, sxy = (
-        F.col(k) for k in ("n", "sx", "sy", "sxx", "syy", "sxy")
-    )
-    num = (n * sxy - sx * sy).cast("long")
-    d1 = (n * sxx - sx * sx).cast("long")
-    d2 = (n * syy - sy * sy).cast("long")
-    r = F.when(
-        (d1 > 0) & (d2 > 0),
-        round_stable(
-            num.cast("double") / F.sqrt(d1.cast("double") * d2.cast("double")),
-            6,
-        ),
-    ).otherwise(F.lit(0.0))
-    return s.select("lag", n.alias("n_pairs"), num.alias("r_num"), r.alias("xcorr"))
+    return exact_pearson(pairs, "lag", "x", "y", "n_pairs", "xcorr")
 
 
 _HOLT_A = 0.3  # level smoothing
@@ -1834,7 +1776,7 @@ def holt_trend_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="W5,A10 (extension: trailing-window burst z-scores)",
     oracle=f"""
 WITH daily AS (
-    SELECT event_type, epoch_ns(ts) // {_DAY_NS} AS day_idx,
+    SELECT event_type, epoch_ns(ts) // {DAY_NS} AS day_idx,
            CAST(count(*) AS BIGINT) AS n
     FROM events GROUP BY 1, 2
 ),
@@ -1883,7 +1825,7 @@ def daily_burst_zscores(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         load(spark, sf_dir, "events", fan_out=True)
         .groupBy(
-            "event_type", F.expr(f"ts div {_DAY_NS}").alias("day_idx")
+            "event_type", F.expr(f"ts div {DAY_NS}").alias("day_idx")
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -2023,8 +1965,8 @@ _KM_CENSOR_DAYS = 7  # active within the last N days => censored (not churned)
     oracle=f"""
 WITH span AS (
     SELECT user_id,
-           min(epoch_ns(ts) // {_DAY_NS}) AS d0,
-           max(epoch_ns(ts) // {_DAY_NS}) AS d1
+           min(epoch_ns(ts) // {DAY_NS}) AS d0,
+           max(epoch_ns(ts) // {DAY_NS}) AS d1
     FROM events GROUP BY user_id
 ),
 mx AS (SELECT max(d1) AS dmax FROM span),
@@ -2090,8 +2032,8 @@ def kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "events", fan_out=True)
         .groupBy("user_id")
         .agg(
-            F.min(F.expr(f"ts div {_DAY_NS}")).alias("d0"),
-            F.max(F.expr(f"ts div {_DAY_NS}")).alias("d1"),
+            F.min(F.expr(f"ts div {DAY_NS}")).alias("d0"),
+            F.max(F.expr(f"ts div {DAY_NS}")).alias("d1"),
         )
     )
     mx = span.agg(F.max("d1").alias("dmax"))
@@ -2141,7 +2083,7 @@ def kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="A1,W5 (extension: daily new-vs-returning user split)",
     oracle=f"""
 WITH du AS (
-    SELECT DISTINCT epoch_ns(ts) // {_DAY_NS} AS day_idx, user_id FROM events
+    SELECT DISTINCT epoch_ns(ts) // {DAY_NS} AS day_idx, user_id FROM events
 ),
 fs AS (
     SELECT user_id, min(day_idx) AS first_day FROM du GROUP BY 1
@@ -2167,7 +2109,7 @@ def new_vs_returning_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     du = tracked_persist(
         load(spark, sf_dir, "events", fan_out=True)
-        .select(F.expr(f"ts div {_DAY_NS}").alias("day_idx"), "user_id")
+        .select(F.expr(f"ts div {DAY_NS}").alias("day_idx"), "user_id")
         .distinct(),
         "new_vs_returning.day_user",
     )
@@ -2186,15 +2128,12 @@ def new_vs_returning_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WEEK_NS = 7 * _DAY_NS
-
-
 @register(
     "cohort_ltv_curve",
     survey="A2,W5 (extension: cohort cumulative-value (LTV) curve)",
     oracle=f"""
 WITH e AS (
-    SELECT user_id, epoch_ns(ts) // {_WEEK_NS} AS week_idx,
+    SELECT user_id, epoch_ns(ts) // {WEEK_NS} AS week_idx,
            CAST(floor(value * 10000 + 0.5) AS BIGINT) AS vq
     FROM events
 ),
@@ -2238,7 +2177,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load(spark, sf_dir, "events", fan_out=True).select(
         "user_id",
-        F.expr(f"ts div {_WEEK_NS}").alias("week_idx"),
+        F.expr(f"ts div {WEEK_NS}").alias("week_idx"),
         F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("long").alias("vq"),
     )
     fw = e.groupBy("user_id").agg(F.min("week_idx").alias("cohort_week"))
@@ -2269,7 +2208,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="A15,W5 (extension: DAU/MAU stickiness ratio)",
     oracle=f"""
 WITH du AS (
-    SELECT DISTINCT epoch_ns(ts) // {_DAY_NS} AS day_idx, user_id FROM events
+    SELECT DISTINCT epoch_ns(ts) // {DAY_NS} AS day_idx, user_id FROM events
 ),
 days AS (SELECT DISTINCT day_idx FROM du),
 dau AS (
@@ -2301,7 +2240,7 @@ def stickiness_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     du = tracked_persist(
         load(spark, sf_dir, "events", fan_out=True)
-        .select(F.expr(f"ts div {_DAY_NS}").alias("day_idx"), "user_id")
+        .select(F.expr(f"ts div {DAY_NS}").alias("day_idx"), "user_id")
         .distinct(),
         "stickiness.day_user",
     )
@@ -2336,7 +2275,7 @@ def stickiness_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ATTR_WINDOW_NS = 7 * _DAY_NS  # attribution lookback
+_ATTR_WINDOW_NS = 7 * DAY_NS  # attribution lookback
 
 
 @register(
@@ -2442,7 +2381,7 @@ def position_attribution_credits(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="W5,A3 (extension: seasonal-naive vs naive backtest)",
     oracle=f"""
 WITH daily AS (
-    SELECT event_type, epoch_ns(ts) // {_DAY_NS} AS day_idx,
+    SELECT event_type, epoch_ns(ts) // {DAY_NS} AS day_idx,
            CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS dq
     FROM events GROUP BY 1, 2
 ),
@@ -2486,7 +2425,7 @@ def forecast_backtest_mae(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         load(spark, sf_dir, "events", fan_out=True)
         .groupBy(
-            "event_type", F.expr(f"ts div {_DAY_NS}").alias("day_idx")
+            "event_type", F.expr(f"ts div {DAY_NS}").alias("day_idx")
         )
         .agg(
             F.sum(
@@ -2686,7 +2625,7 @@ def markov_absorption_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="W5,A18 (extension: trailing-window regression slope)",
     oracle=f"""
 WITH daily AS (
-    SELECT event_type, epoch_ns(ts) // {_DAY_NS} AS day_idx,
+    SELECT event_type, epoch_ns(ts) // {DAY_NS} AS day_idx,
            CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS dq
     FROM events GROUP BY 1, 2
 ),
@@ -2729,7 +2668,7 @@ def rolling_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         load(spark, sf_dir, "events", fan_out=True)
         .groupBy(
-            "event_type", F.expr(f"ts div {_DAY_NS}").alias("day_idx")
+            "event_type", F.expr(f"ts div {DAY_NS}").alias("day_idx")
         )
         .agg(
             F.sum(
@@ -2774,11 +2713,11 @@ _DECAY_MAX_WEEKS = 30  # ages beyond this carry zero weight
     survey="W4,W5 (extension: exponential time-decay trending score)",
     oracle=f"""
 WITH mx AS (
-    SELECT max(epoch_ns(ts) // {_DAY_NS}) AS dmax FROM events
+    SELECT max(epoch_ns(ts) // {DAY_NS}) AS dmax FROM events
 ),
 w AS (
     SELECT user_id,
-           ((SELECT dmax FROM mx) - epoch_ns(ts) // {_DAY_NS}) // 7 AS age_w
+           ((SELECT dmax FROM mx) - epoch_ns(ts) // {DAY_NS}) // 7 AS age_w
     FROM events
 ),
 sc AS (
@@ -2814,10 +2753,10 @@ def trending_users_decayed(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast max-day scalar, then the usual global top-k sort.
     """
     ev = load(spark, sf_dir, "events", fan_out=True)
-    mx = ev.agg(F.max(F.expr(f"ts div {_DAY_NS}")).alias("dmax"))
+    mx = ev.agg(F.max(F.expr(f"ts div {DAY_NS}")).alias("dmax"))
     w = ev.crossJoin(F.broadcast(mx)).select(
         "user_id",
-        F.expr(f"(dmax - (ts div {_DAY_NS})) div 7").alias("age_w"),
+        F.expr(f"(dmax - (ts div {DAY_NS})) div 7").alias("age_w"),
     )
     sc = w.groupBy("user_id").agg(
         F.sum(
@@ -2865,7 +2804,7 @@ FROM (
            CAST(count(*) AS BIGINT) AS cnt
     FROM e a JOIN e b
       ON a.user_id = b.user_id
-     AND b.t >= a.t AND b.t < a.t + {_HOUR_NS}
+     AND b.t >= a.t AND b.t < a.t + {HOUR_NS}
     GROUP BY a.user_id, a.event_id
 ) a
 GROUP BY a.user_id
@@ -2896,7 +2835,7 @@ def peak_event_rate_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
             b,
             (F.col("user_id") == F.col("b_user"))
             & (F.col("bt") >= F.col("t"))
-            & (F.col("bt") < F.col("t") + F.lit(_HOUR_NS)),
+            & (F.col("bt") < F.col("t") + F.lit(HOUR_NS)),
         )
         .groupBy("user_id", "event_id")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -2911,7 +2850,7 @@ def peak_event_rate_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="U1,A15 (extension: day-over-day audience Jaccard)",
     oracle=f"""
 WITH du AS (
-    SELECT DISTINCT epoch_ns(ts) // {_DAY_NS} AS day_idx, user_id FROM events
+    SELECT DISTINCT epoch_ns(ts) // {DAY_NS} AS day_idx, user_id FROM events
 ),
 dau AS (
     SELECT day_idx, CAST(count(*) AS BIGINT) AS n FROM du GROUP BY 1
@@ -2950,7 +2889,7 @@ def audience_overlap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     du = tracked_persist(
         load(spark, sf_dir, "events", fan_out=True)
-        .select(F.expr(f"ts div {_DAY_NS}").alias("day_idx"), "user_id")
+        .select(F.expr(f"ts div {DAY_NS}").alias("day_idx"), "user_id")
         .distinct(),
         "audience_overlap.day_user",
     )
@@ -3020,7 +2959,7 @@ def audience_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load(spark, sf_dir, "events", fan_out=True)
     daily = (
-        ev.groupBy(F.expr(f"ts div {_DAY_NS}").alias("day_idx"))
+        ev.groupBy(F.expr(f"ts div {DAY_NS}").alias("day_idx"))
         .agg(
             F.expr("hll_sketch_agg(user_id, 14)").alias("sk"),
             F.countDistinct("user_id").alias("n_exact"),
@@ -3286,10 +3225,10 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH fp AS (
     SELECT user_id,
-           min(epoch_ns(ts) // {_DAY_NS}) AS first_day,
-           max(epoch_ns(ts) // {_DAY_NS}) AS last_day,
+           min(epoch_ns(ts) // {DAY_NS}) AS first_day,
+           max(epoch_ns(ts) // {DAY_NS}) AS last_day,
            min(CASE WHEN event_type = 'purchase'
-                    THEN epoch_ns(ts) // {_DAY_NS} END) AS conv_day
+                    THEN epoch_ns(ts) // {DAY_NS} END) AS conv_day
     FROM events GROUP BY user_id
 ),
 u AS (
@@ -3375,12 +3314,12 @@ def logrank_conversion_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "events", fan_out=True)
         .groupBy("user_id")
         .agg(
-            F.min(F.expr(f"ts div {_DAY_NS}")).alias("first_day"),
-            F.max(F.expr(f"ts div {_DAY_NS}")).alias("last_day"),
+            F.min(F.expr(f"ts div {DAY_NS}")).alias("first_day"),
+            F.max(F.expr(f"ts div {DAY_NS}")).alias("last_day"),
             F.min(
                 F.when(
                     F.col("event_type") == "purchase",
-                    F.expr(f"ts div {_DAY_NS}"),
+                    F.expr(f"ts div {DAY_NS}"),
                 )
             ).alias("conv_day"),
         )
@@ -3470,10 +3409,10 @@ def logrank_conversion_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH fp AS (
     SELECT user_id,
-           min(epoch_ns(ts) // {_DAY_NS}) AS first_day,
-           max(epoch_ns(ts) // {_DAY_NS}) AS last_day,
+           min(epoch_ns(ts) // {DAY_NS}) AS first_day,
+           max(epoch_ns(ts) // {DAY_NS}) AS last_day,
            min(CASE WHEN event_type = 'purchase'
-                    THEN epoch_ns(ts) // {_DAY_NS} END) AS conv_day
+                    THEN epoch_ns(ts) // {DAY_NS} END) AS conv_day
     FROM events GROUP BY user_id
 ),
 u AS (
@@ -3531,12 +3470,12 @@ def kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "events", fan_out=True)
         .groupBy("user_id")
         .agg(
-            F.min(F.expr(f"ts div {_DAY_NS}")).alias("first_day"),
-            F.max(F.expr(f"ts div {_DAY_NS}")).alias("last_day"),
+            F.min(F.expr(f"ts div {DAY_NS}")).alias("first_day"),
+            F.max(F.expr(f"ts div {DAY_NS}")).alias("last_day"),
             F.min(
                 F.when(
                     F.col("event_type") == "purchase",
-                    F.expr(f"ts div {_DAY_NS}"),
+                    F.expr(f"ts div {DAY_NS}"),
                 )
             ).alias("conv_day"),
         )
@@ -3589,7 +3528,7 @@ def kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="W5,M19 (extension: two-sided CUSUM change detection via the Lindley closed form)",
     oracle=f"""
 WITH daily AS (
-    SELECT event_type, epoch_ns(ts) // {_DAY_NS} AS day_idx,
+    SELECT event_type, epoch_ns(ts) // {DAY_NS} AS day_idx,
            CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS dq
     FROM events GROUP BY 1, 2
 ),
@@ -3657,7 +3596,7 @@ def cusum_drift_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "events").select(
         "event_type",
-        F.expr(f"ts div {_DAY_NS}").alias("day_idx"),
+        F.expr(f"ts div {DAY_NS}").alias("day_idx"),
         (F.floor(F.col("value") * 100 + F.lit(0.5))).cast("long").alias("cents"),
     )
     daily = d.groupBy("event_type", "day_idx").agg(

@@ -270,6 +270,14 @@ def normalize_events_ts(df: DataFrame, source_path: str | None = None) -> DataFr
     return df.withColumn("ts", ns_col.cast("long"))
 
 
+# Durations in the events.ts unit (int64 nanoseconds since the naive
+# epoch) — the one definition each; window, bucket and oracle
+# arithmetic import them from here.
+HOUR_NS = 3_600 * 1_000_000_000
+DAY_NS = 24 * HOUR_NS
+WEEK_NS = 7 * DAY_NS
+
+
 def ns(iso_date: str) -> int:
     """Nanoseconds since epoch for a naive ISO date/datetime literal —
     the boundary form for filters on events.ts (matches DuckDB's naive

@@ -4,5 +4,4 @@ from .jobs import (  # noqa: F401
     sessionize_batch,
     sessionize_stream,
     window_counts,
-    window_counts_stream,
 )

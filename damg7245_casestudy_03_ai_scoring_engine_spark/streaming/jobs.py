@@ -11,13 +11,22 @@ These are the natural streaming re-expressions the survey calls out:
 - stateful sessionization via `applyInPandasWithState` as the custom
   stateful-operator pattern.
 
-Every streaming job here shares its transformation with a batch twin
-(same function applied to a batch DataFrame) so correctness is
-checked two ways: the batch form against a DuckDB oracle (registry),
-and the streaming form against the batch form (pytest).  That
-batch/stream symmetry is exactly how you'd validate the 100 TB
-deployment, where the stream is the incremental path over the same
-bronze tables the batch job full-scans.
+Each transformation with a registry batch query is ONE function that
+runs on batch and streaming input alike (`window_counts`,
+`session_window_rollup`, `click_error_pairs`): it reads
+`events.isStreaming`, and only the stream branch adds what a stream
+needs — the event-time column, its watermark and, for the hourly
+rollup, the `window()` key append mode requires.  Correctness is
+checked two ways: the batch result against a DuckDB oracle
+(registry), and the drained stream against the batch result of the
+SAME function (pytest).  The stateful jobs pair up the same way where
+they can: `running_balance_stream` carries state between calls of
+the batch query's clamp-walk kernel; `sessionize_stream` (per-user
+GroupState) and `sessionize_batch` (lag/cumsum frames) are two
+algorithms pinned equal by test.  That batch/stream symmetry is
+exactly how you'd validate the 100 TB deployment, where the stream
+is the incremental path over the same bronze tables the batch job
+full-scans.
 
 Event time: `events.ts` is parquet TIMESTAMP(NANOS), read as long
 nanoseconds (see sources/catalog.py).  `event_time_col` converts to a
@@ -35,6 +44,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..sources.catalog import HOUR_NS, normalize_events_ts
+
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -46,7 +57,6 @@ EVENTS_SCHEMA = T.StructType(
     ]
 )
 
-_HOUR_NS = 3_600 * 1_000_000_000
 SESSION_GAP_NS = 1_800 * 1_000_000_000  # 30-minute inactivity gap
 
 
@@ -73,8 +83,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     shipped ts as both TIMESTAMP(NANOS)→long and TIMESTAMP_NTZ(µs); a
     cheap static footer read picks the actual dtype, then
     `normalize_events_ts` restores the int64-ns contract downstream."""
-    from ..sources.catalog import normalize_events_ts
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     static_ts = (
         spark.read.option("pathGlobFilter", "events*.parquet")
@@ -102,42 +110,49 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- tumbling-window rollup (batch/stream shared) ---------------------------
 
 
-def window_counts(events: DataFrame) -> DataFrame:
-    """Per (hour window, event_type): count + value sum.  Window start
-    is epoch-floor arithmetic on the int64 nanos (timezone-proof and
-    identical in DuckDB); works unchanged on batch and streaming
-    inputs."""
-    hour_start = (F.col("ts") - F.col("ts") % F.lit(_HOUR_NS)).alias("window_start_ns")
-    return (
-        events.select(hour_start, "event_type", "value")
-        .groupBy("window_start_ns", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("value_sum"),
-        )
-    )
+def _hourly_partials(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+    """Per (hour window, event_type): event count and UNROUNDED value
+    sum — the mergeable form an incremental gold table stores (summing
+    already-rounded partials would drift from a full recompute).
+    Window start is epoch-floor arithmetic on the int64 nanos
+    (timezone-proof and identical in DuckDB).
 
-
-def window_counts_stream(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming twin: watermarked event-time tumbling windows.  The
-    watermark bounds aggregation state (late rows beyond it are
-    dropped — tested in tests/test_streaming.py) so state size is
-    O(open windows), not O(history): the property that lets this run
-    forever on a 1000-executor cluster."""
-    with_time = events.withColumn("event_time", event_time_col())
-    hour_start = (F.col("ts") - F.col("ts") % F.lit(_HOUR_NS)).alias("window_start_ns")
-    return (
-        with_time.withWatermark("event_time", watermark)
-        .select(hour_start, F.window("event_time", "1 hour").alias("w"), "event_type", "value")
-        .groupBy("window_start_ns", "w", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("value_sum"),
+    On a stream the rows also carry event time under a watermark and
+    group on the matching `window()`: append mode emits only groups
+    keyed on an event-time window the watermark can close, and the
+    watermark bounds state to the open windows (late rows beyond it
+    are dropped — tested in tests/test_streaming.py) — state is
+    O(open windows), not O(history)."""
+    hour_start = (F.col("ts") - F.col("ts") % F.lit(HOUR_NS)).alias("window_start_ns")
+    cols, keys = [hour_start, "event_type", "value"], ["window_start_ns", "event_type"]
+    if events.isStreaming:
+        events = events.withColumn("event_time", event_time_col()).withWatermark(
+            "event_time", watermark
         )
+        cols.insert(1, F.window("event_time", "1 hour").alias("w"))
+        keys.insert(1, "w")
+    return (
+        events.select(*cols)
+        .groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("value_sum"))
         .select("window_start_ns", "event_type", "n_events", "value_sum")
     )
+
+
+def _rounded_window_counts(partials: DataFrame) -> DataFrame:
+    """The read-time rounding of hourly partials (4 dp value sum)."""
+    return partials.select(
+        "window_start_ns",
+        "event_type",
+        "n_events",
+        F.round("value_sum", 4).alias("value_sum"),
+    )
+
+
+def window_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+    """Per (hour window, event_type): count + 4-dp value sum, on batch
+    or streaming input.  `watermark` applies to a stream only."""
+    return _rounded_window_counts(_hourly_partials(events, watermark))
 
 
 # --- sessionization (batch lag/cumsum; streaming applyInPandasWithState) ----
@@ -265,45 +280,23 @@ def session_window_rollup(events: DataFrame) -> DataFrame:
     EXACTLY start+gap still merges, i.e. a new session opens only when
     the gap is strictly exceeded; window.end = last event + gap).
 
-    Unlike the lag/cumsum twin this shape runs UNCHANGED on a
-    watermarked stream (see session_window_rollup_stream) — at 100 TB
-    the batch backfill and the live stream share this exact plan, and
-    the shuffle is one hash partitioning on user_id with the gap-merge
-    done inside the aggregation operator (no analytic-window second
-    pass)."""
+    Unlike the lag/cumsum form this shape runs unchanged on a stream:
+    the stream branch only adds a 2-hour event-time watermark, under
+    which Spark merges a user's open session state across micro-batches
+    and finalizes a session once the watermark passes its end —
+    bounded state, append-mode emission (each session exactly once
+    when it can no longer grow).  At 100 TB the batch backfill and the
+    live stream share this exact plan, and the shuffle is one hash
+    partitioning on user_id with the gap-merge done inside the
+    aggregation operator (no analytic-window second pass)."""
     ev = events.withColumn("ts", F.col("ts") - F.col("ts") % F.lit(1_000))
     with_time = ev.withColumn("event_time", event_time_col())
+    if events.isStreaming:
+        with_time = with_time.withWatermark("event_time", "2 hours")
     return (
         with_time.groupBy(
             "user_id", F.session_window("event_time", "30 minutes").alias("w")
         )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("value_sum"),
-        )
-        .select(
-            "user_id",
-            (F.unix_micros("w.start") * F.lit(1_000)).alias("session_start_ns"),
-            (F.unix_micros("w.end") * F.lit(1_000)).alias("session_end_ns"),
-            "n_events",
-            "value_sum",
-        )
-    )
-
-
-def session_window_rollup_stream(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming twin: the SAME session_window aggregation under an
-    event-time watermark.  Spark merges a user's open session state
-    across micro-batches and finalizes a session once the watermark
-    passes its end — bounded state, append-mode emission (each session
-    exactly once when it can no longer grow)."""
-    ev = events.withColumn("ts", F.col("ts") - F.col("ts") % F.lit(1_000))
-    with_time = ev.withColumn("event_time", event_time_col())
-    return (
-        with_time.withWatermark("event_time", watermark)
-        .groupBy("user_id", F.session_window("event_time", "30 minutes").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 4).alias("value_sum"),
@@ -336,102 +329,42 @@ def dedup_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
-# --- Spark 4 transformWithState (next-gen arbitrary state API) --------------
+# --- unbounded-keyspace stateful fold ---------------------------------------
 
 
 _LIFETIME_OUT_SCHEMA = "user_id long, n_events bigint, value_total double"
 
 
-def tws_available() -> bool:
-    """True when Spark 4's transformWithStateInPandas can actually run:
-    its Python-side state-server protocol speaks protobuf
-    (pyspark/sql/streaming/proto/StateMessage_pb2), so google.protobuf
-    must be importable on the workers."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def user_lifetime_stats_stream(events: DataFrame, backend: str = "auto") -> DataFrame:
+def user_lifetime_stats_stream(events: DataFrame) -> DataFrame:
     """Per-user lifetime (count, value-total) accumulator — the
     unbounded-keyspace stateful fold.  Emits the updated lifetime row
     for every user touched by a micro-batch (update mode); the final
     emission per user equals the batch groupBy aggregate (pinned in
-    tests/test_streaming.py with a multi-micro-batch drain).
+    tests/test_streaming.py with a multi-micro-batch drain).  State is
+    one (n, total) pair per user in `applyInPandasWithState`'s
+    GroupState, which the state-store provider (RocksDB in the test)
+    keeps off the executor heap."""
 
-    Two interchangeable state backends with identical emission
-    semantics, selected by `backend`:
+    def accumulate(key, pdfs, state):
+        n, total = state.get if state.exists else (0, 0.0)
+        for pdf in pdfs:
+            n += len(pdf)
+            total += float(pdf["value"].sum())
+        state.update((n, total))
+        yield pd.DataFrame(
+            {"user_id": [key[0]], "n_events": [n], "value_total": [total]}
+        )
 
-    - ``"tws"``: Spark 4's `transformWithStateInPandas` — the
-      next-generation arbitrary-state API superseding
-      applyInPandasWithState: named state variables on a
-      StatefulProcessor handle, RocksDB-backed (state no longer
-      bounded by executor heap — the property that matters at 100 TB
-      key cardinality), with timers/TTL available on the same handle.
-      Requires google.protobuf (the state-server wire protocol).
-    - ``"apiws"``: `applyInPandasWithState` — the stable GroupState
-      API, no extra dependency.
-    - ``"auto"`` (default): tws when protobuf is importable, else
-      apiws — so the drain test exercises the operator end-to-end in
-      every environment and upgrades itself to the tws protocol on a
-      protobuf-equipped cluster."""
-    if backend == "auto":
-        backend = "tws" if tws_available() else "apiws"
-    src = events.select("user_id", "value").groupBy("user_id")
-
-    if backend == "apiws":
-
-        def accumulate(key, pdfs, state):
-            n, total = state.get if state.exists else (0, 0.0)
-            for pdf in pdfs:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            state.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "value_total": [total]}
-            )
-
-        return src.applyInPandasWithState(
+    return (
+        events.select("user_id", "value")
+        .groupBy("user_id")
+        .applyInPandasWithState(
             accumulate,
             outputStructType=_LIFETIME_OUT_SCHEMA,
             stateStructType="n bigint, total double",
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-
-    if backend != "tws":
-        raise ValueError(f"unknown backend {backend!r} (want tws/apiws/auto)")
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _LifetimeStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", "n bigint, total double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = (self._agg.get() or (0, 0.0)) if self._agg.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._agg.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "value_total": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return src.transformWithStateInPandas(
-        _LifetimeStats(),
-        outputStructType=_LIFETIME_OUT_SCHEMA,
-        outputMode="update",
-        timeMode="none",
     )
 
 
@@ -440,14 +373,28 @@ def user_lifetime_stats_stream(events: DataFrame, backend: str = "auto") -> Data
 TEN_MIN_NS = 600 * 1_000_000_000
 
 
-def click_error_pairs(events: DataFrame) -> DataFrame:
-    """Batch twin of the stream-stream join: every (click, error)
-    pair for the same user where the error lands within 10 minutes
-    AFTER the click — the funnel/attribution interval join.  Executes
-    as ONE equi-join on user_id with the time range as a join filter
-    (no time-bucket explosion needed at this selectivity).  Built as
-    single-parse stages (r14, guide §5/§7.3) — identical join and
-    arithmetic as the former Column chain (447 round trips/build)."""
+def click_error_pairs(events: DataFrame, how: str = "inner") -> DataFrame:
+    """Every (click, error) pair for the same user where the error
+    lands within 10 minutes AFTER the click — the funnel/attribution
+    interval join — on batch or streaming input.  `how="left"` keeps
+    every click, NULL-padded when no error followed: the 'no incident'
+    rows an attribution pipeline feeds its clean branch.
+
+    Batch: ONE equi-join on user_id with the nanosecond range as a
+    join filter (no time-bucket explosion needed at this selectivity),
+    built as single-parse stages (r14, guide §5/§7.3).
+
+    Stream: both sides carry 30-minute event-time watermarks and the
+    condition bounds error_time to (click_time, click_time + 10 min],
+    so Spark can evict click state once the error-side watermark
+    passes click_time + 10 min — bounded state, append-mode emission of
+    each pair exactly once.  The outer form shows what the batch join
+    hides: an unmatched click CANNOT be emitted when it arrives (a
+    matching error may still come), so its NULL row is emitted only
+    once the watermark passes the join's upper time bound — which is
+    why an outer stream-stream join needs BOTH a watermark and a range
+    condition; without them 'no match' never becomes final and state
+    is never evicted."""
     ev = events.selectExpr(
         "user_id", "event_id", "ts - ts % 1000 AS ts", "event_type"
     )
@@ -457,78 +404,28 @@ def click_error_pairs(events: DataFrame) -> DataFrame:
     errors = ev.filter("event_type = 'error'").selectExpr(
         "user_id AS e_user_id", "event_id AS error_id", "ts AS error_ts_ns"
     )
-    return (
-        clicks.join(
-            errors,
-            F.expr(
-                "user_id = e_user_id AND error_ts_ns > click_ts_ns "
-                f"AND error_ts_ns <= click_ts_ns + {TEN_MIN_NS}"
-            ),
+    if events.isStreaming:
+        clicks = clicks.withColumn(
+            "click_time", event_time_col(F.col("click_ts_ns"))
+        ).withWatermark("click_time", "30 minutes")
+        errors = errors.withColumn(
+            "error_time", event_time_col(F.col("error_ts_ns"))
+        ).withWatermark("error_time", "30 minutes")
+        cond = (
+            "user_id = e_user_id AND error_time > click_time "
+            "AND error_time <= click_time + INTERVAL 10 MINUTES"
         )
-        .select("user_id", "click_id", "error_id", "click_ts_ns", "error_ts_ns")
-    )
-
-
-def click_error_pairs_stream(
-    events: DataFrame, watermark: str = "30 minutes"
-) -> DataFrame:
-    """Streaming twin: watermarked stream-stream inner join.  Both
-    sides carry event-time watermarks and the join condition bounds
-    error_time to (click_time, click_time + 10 min], so Spark can
-    evict click state once the error-side watermark passes
-    click_time + 10 min — bounded state, the property that lets the
-    join run indefinitely.  Output mode append: a pair is emitted
-    exactly once, when it becomes final."""
-    ev = events.withColumn("ts", F.col("ts") - F.col("ts") % F.lit(1_000))
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            "user_id",
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts_ns"),
+    else:
+        cond = (
+            "user_id = e_user_id AND error_ts_ns > click_ts_ns "
+            f"AND error_ts_ns <= click_ts_ns + {TEN_MIN_NS}"
         )
-        .withColumn("click_time", event_time_col(F.col("click_ts_ns")))
-        .withWatermark("click_time", watermark)
+    return clicks.join(errors, F.expr(cond), how).select(
+        "user_id", "click_id", "error_id", "click_ts_ns", "error_ts_ns"
     )
-    errors = (
-        ev.filter(F.col("event_type") == "error")
-        .select(
-            F.col("user_id").alias("e_user_id"),
-            F.col("event_id").alias("error_id"),
-            F.col("ts").alias("error_ts_ns"),
-        )
-        .withColumn("error_time", event_time_col(F.col("error_ts_ns")))
-        .withWatermark("error_time", watermark)
-    )
-    return clicks.join(
-        errors,
-        F.expr(
-            """
-            user_id = e_user_id
-            AND error_time > click_time
-            AND error_time <= click_time + INTERVAL 10 MINUTES
-            """
-        ),
-    ).select("user_id", "click_id", "error_id", "click_ts_ns", "error_ts_ns")
 
 
 # --- incremental materialized view (foreachBatch upsert) --------------------
-
-
-def window_counts_raw(events: DataFrame) -> DataFrame:
-    """Un-rounded partials of `window_counts` — the mergeable form an
-    incremental gold table stores (rounding happens at READ time; you
-    cannot sum already-rounded partials and stay equal to a full
-    recompute)."""
-    hour_start = (F.col("ts") - F.col("ts") % F.lit(_HOUR_NS)).alias("window_start_ns")
-    return (
-        events.select(hour_start, "event_type", "value")
-        .groupBy("window_start_ns", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("value_sum"),
-        )
-    )
 
 
 def _merge_parquet_gold(gold_dir: str, keys: list[str], sums: list[str]):
@@ -619,20 +516,15 @@ def merge_gold_window_counts(gold_dir: str):
     )
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        merge(window_counts_raw(batch_df), batch_id)
+        merge(_hourly_partials(batch_df), batch_id)
 
     return upsert
 
 
 def read_gold_window_counts(spark: SparkSession, gold_dir: str) -> DataFrame:
-    """Serving view over the gold table — applies the same rounding as
-    the batch `window_counts`, so incremental == full recompute."""
-    return spark.read.parquet(gold_dir).select(
-        "window_start_ns",
-        "event_type",
-        "n_events",
-        F.round("value_sum", 4).alias("value_sum"),
-    )
+    """Serving view over the gold table — the same read-time rounding
+    as `window_counts`, so incremental == full recompute."""
+    return _rounded_window_counts(spark.read.parquet(gold_dir))
 
 
 # --- stream-static enrichment join ------------------------------------------
@@ -663,142 +555,51 @@ def enrich_with_type_weights(events: DataFrame) -> DataFrame:
     )
 
 
-def click_error_pairs_outer(events: DataFrame) -> DataFrame:
-    """Batch twin of the stream-stream LEFT OUTER interval join:
-    every click, paired with each error that follows it within 10
-    minutes — or a NULL error row if none did.  The outer rows are
-    what an attribution pipeline feeds its 'no incident' branch."""
-    ev = events.withColumn("ts", F.col("ts") - F.col("ts") % F.lit(1_000))
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts_ns"),
-    )
-    errors = ev.filter(F.col("event_type") == "error").select(
-        F.col("user_id").alias("e_user_id"),
-        F.col("event_id").alias("error_id"),
-        F.col("ts").alias("error_ts_ns"),
-    )
-    return (
-        clicks.join(
-            errors,
-            (F.col("user_id") == F.col("e_user_id"))
-            & (F.col("error_ts_ns") > F.col("click_ts_ns"))
-            & (F.col("error_ts_ns") <= F.col("click_ts_ns") + F.lit(TEN_MIN_NS)),
-            "left",
-        )
-        .select("user_id", "click_id", "error_id", "click_ts_ns", "error_ts_ns")
-    )
-
-
-def click_error_pairs_outer_stream(
-    events: DataFrame, watermark: str = "30 minutes"
-) -> DataFrame:
-    """Streaming LEFT OUTER stream-stream join.  The subtle semantics
-    the batch twin hides: an unmatched click CANNOT be emitted when it
-    arrives — a matching error may still come — so Spark holds it in
-    state and emits the NULL-padded row only once the error-side
-    watermark passes click_time + 10 min (the join's upper time
-    bound).  That late, once-only emission is exactly what makes outer
-    stream-stream joins need BOTH a watermark and a range condition:
-    without them there is no point at which 'no match' becomes final
-    and state could never be evicted (unbounded at 100 TB/day)."""
-    ev = events.withColumn("ts", F.col("ts") - F.col("ts") % F.lit(1_000))
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            "user_id",
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts_ns"),
-        )
-        .withColumn("click_time", event_time_col(F.col("click_ts_ns")))
-        .withWatermark("click_time", watermark)
-    )
-    errors = (
-        ev.filter(F.col("event_type") == "error")
-        .select(
-            F.col("user_id").alias("e_user_id"),
-            F.col("event_id").alias("error_id"),
-            F.col("ts").alias("error_ts_ns"),
-        )
-        .withColumn("error_time", event_time_col(F.col("error_ts_ns")))
-        .withWatermark("error_time", watermark)
-    )
-    return clicks.join(
-        errors,
-        F.expr(
-            """
-            user_id = e_user_id
-            AND error_time > click_time
-            AND error_time <= click_time + INTERVAL 10 MINUTES
-            """
-        ),
-        "leftOuter",
-    ).select("user_id", "click_id", "error_id", "click_ts_ns", "error_ts_ns")
-
-
 # --- two-sided clamped running balance (stateful stream) ---------------------
 
-BALANCE_DRAIN_CENTS = 3_400  # matches operators/streaming_queries._DRAIN_CENTS
-BALANCE_CAP_CENTS = 20_000  # matches _BALANCE_CAP_CENTS
-_BALANCE_OUT_SCHEMA = "user_id long, event_id long, balance_cents long"
-
-
-def running_balance_stream(
-    events: DataFrame,
-    cap: int = BALANCE_CAP_CENTS,
-    drain: int = BALANCE_DRAIN_CENTS,
-) -> DataFrame:
-    """Streaming twin of the two-sided clamped balance walk
-    (`bounded_running_balance_stateful`): per-user balance state is a
-    single int carried across micro-batches in `applyInPandasWithState`;
-    each batch's events are walked in (ts, event_id) order from the
-    carried balance and every event's post-clamp balance is emitted
-    (update mode).  With chronological per-user batch arrival — the
-    property event-time-partitioned ingestion provides — the
-    concatenated emissions equal the batch walk exactly (pinned by
-    the drain test), because the clamp recursion's state is fully
-    summarized by the last balance.
+def running_balance_stream(events: DataFrame) -> DataFrame:
+    """Streaming form of the two-sided clamped balance walk
+    (`bounded_running_balance_stateful`): the same delta projection
+    and the same clamp-walk kernel, with the per-user balance carried
+    across micro-batches as one int in `applyInPandasWithState`; each
+    batch's events are walked in (ts, event_id) order from the carried
+    balance and every event's post-clamp balance is emitted (update
+    mode).  With chronological per-user batch arrival — the property
+    event-time-partitioned ingestion provides — the concatenated
+    emissions equal the batch walk exactly (pinned by the drain test),
+    because the clamp recursion's state is fully summarized by the
+    last balance.
 
     This is the operator that JUSTIFIES the stateful API here: the
     floor-only walk has a prefix closed form (`capped_running_balance`
     runs as a plain window), the two-sided clamp provably does not —
     so its incremental form NEEDS carried state.
     """
-    src = events.select(
-        "user_id",
-        "event_id",
-        F.col("ts").alias("ts_ns"),
-        (
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            - F.lit(drain)
-        ).alias("delta"),
-    ).groupBy("user_id")
+    from ..operators.streaming_queries import (
+        _BALANCE_OUT_SCHEMA,
+        _balance_deltas,
+        _clamp_walk,
+    )
 
     def walk(key, pdfs, state):
-        bal = state.get[0] if state.exists else 0
-        frames = [pdf for pdf in pdfs]
-        pdf = pd.concat(frames) if len(frames) > 1 else frames[0]
-        pdf = pdf.sort_values(["ts_ns", "event_id"], kind="mergesort")
-        out = []
-        for d in pdf["delta"].to_numpy():
-            bal = min(cap, max(0, bal + int(d)))
-            out.append(bal)
-        state.update((int(bal),))
-        yield pd.DataFrame(
-            {
-                "user_id": pdf["user_id"].to_numpy(),
-                "event_id": pdf["event_id"].to_numpy(),
-                "balance_cents": out,
-            }
+        frames = list(pdfs)
+        out, bal = _clamp_walk(
+            pd.concat(frames) if len(frames) > 1 else frames[0],
+            state.get[0] if state.exists else 0,
         )
+        state.update((bal,))
+        yield out
 
-    return src.applyInPandasWithState(
-        walk,
-        outputStructType=_BALANCE_OUT_SCHEMA,
-        stateStructType="bal bigint",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return (
+        _balance_deltas(events)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            walk,
+            outputStructType=_BALANCE_OUT_SCHEMA,
+            stateStructType="bal bigint",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
     )
 
 

@@ -135,12 +135,12 @@ def test_daily_peak_concurrency_semantics(spark):
     interval carries concurrency into days where it has no boundary
     events (via the day-carry decomposition)."""
     from damg7245_casestudy_03_ai_scoring_engine_spark.operators.streaming_queries import (
-        _DAY_NS,
         daily_peak_concurrency,
     )
+    from damg7245_casestudy_03_ai_scoring_engine_spark.sources.catalog import DAY_NS
 
     H = 3_600 * 1_000_000_000
-    d0, d1, d2 = 100 * _DAY_NS, 101 * _DAY_NS, 102 * _DAY_NS
+    d0, d1, d2 = 100 * DAY_NS, 101 * DAY_NS, 102 * DAY_NS
     sess = spark.createDataFrame(
         [
             # day 0: three overlapping at 02:00-03:00
@@ -531,7 +531,7 @@ def test_lindley_closed_form_equals_sequential_walk(spark):
     from damg7245_casestudy_03_ai_scoring_engine_spark.operators.streaming_queries import (
         _BALANCE_CAP_CENTS,
         _DRAIN_CENTS,
-        _bounded_walk_builder,
+        _clamp_walk,
     )
 
     d = (
@@ -576,7 +576,7 @@ def test_lindley_closed_form_equals_sequential_walk(spark):
         )
         .groupBy("user_id")
         .applyInPandas(
-            _bounded_walk_builder(1 << 60),
+            lambda pdf: _clamp_walk(pdf, cap=1 << 60)[0],
             schema="user_id long, event_id long, balance_cents long",
         )
         .collect()

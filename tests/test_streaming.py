@@ -9,15 +9,17 @@ from __future__ import annotations
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from damg7245_casestudy_03_ai_scoring_engine_spark.streaming.jobs import (
     EVENTS_SCHEMA,
+    click_error_pairs,
     event_time_col,
+    session_window_rollup,
     sessionize_batch,
     sessionize_stream,
     window_counts,
-    window_counts_stream,
 )
 
 from conftest import SF_SMOKE
@@ -42,21 +44,32 @@ def _run_stream(sdf, sink_table, output_mode, checkpoint):
     assert not q.isActive
 
 
-def test_window_counts_stream_equals_batch(spark, tmp_path):
+@pytest.mark.parametrize(
+    "job, output_mode",
+    [
+        pytest.param(window_counts, "complete", id="window_counts-complete"),
+        # complete mode so end-of-corpus sessions the watermark never
+        # finalizes are still emitted for comparison
+        pytest.param(
+            session_window_rollup, "complete", id="session_window_rollup-complete"
+        ),
+        # append: the watermarked interval join emits each pair once
+        pytest.param(click_error_pairs, "append", id="click_error_pairs-append"),
+    ],
+)
+def test_stream_drain_equals_batch(spark, tmp_path, job, output_mode):
+    """One function per job: drained over the events stream it must
+    emit exactly what it returns on the batch table."""
+    from damg7245_casestudy_03_ai_scoring_engine_spark.sources.catalog import load
     from damg7245_casestudy_03_ai_scoring_engine_spark.streaming.jobs import read_events_stream
 
     events = read_events_stream(spark, SF_SMOKE)
-    _run_stream(
-        window_counts_stream(events),
-        "wc_stream",
-        "complete",
-        str(tmp_path / "ckpt_wc"),
-    )
-    got = _rows(spark.table("wc_stream"))
-    from damg7245_casestudy_03_ai_scoring_engine_spark.sources.catalog import load
-
-    want = _rows(window_counts(load(spark, SF_SMOKE, "events")))
+    sink = f"drain_{job.__name__}"
+    _run_stream(job(events), sink, output_mode, str(tmp_path / f"ckpt_{sink}"))
+    got = _rows(spark.table(sink))
+    want = _rows(job(load(spark, SF_SMOKE, "events")))
     assert got == want
+    assert len(got) > 0
 
 
 def test_sessionize_stream_equals_batch_single_batch(spark, tmp_path):
@@ -156,7 +169,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
     def run():
         events = spark.readStream.schema(EVENTS_SCHEMA).parquet(str(data_dir))
         q = (
-            window_counts_stream(events, watermark="1 hour")
+            window_counts(events, watermark="1 hour")
             .writeStream.format("parquet")
             .option("path", sink_dir)
             .option("checkpointLocation", ckpt)
@@ -275,29 +288,6 @@ def test_session_window_agrees_with_lag_cumsum(spark):
         for r in sessionize_batch(events).collect()
     )
     assert got == want
-
-
-def test_click_error_join_stream_equals_batch(spark, tmp_path):
-    """The watermarked stream-stream interval join must emit exactly
-    the batch twin's pair set."""
-    from damg7245_casestudy_03_ai_scoring_engine_spark.sources.catalog import load
-    from damg7245_casestudy_03_ai_scoring_engine_spark.streaming.jobs import (
-        click_error_pairs,
-        click_error_pairs_stream,
-        read_events_stream,
-    )
-
-    events = read_events_stream(spark, SF_SMOKE)
-    _run_stream(
-        click_error_pairs_stream(events),
-        "ce_stream",
-        "append",
-        str(tmp_path / "ckpt_ce"),
-    )
-    got = _rows(spark.table("ce_stream"))
-    want = _rows(click_error_pairs(load(spark, SF_SMOKE, "events")))
-    assert got == want
-    assert len(got) > 0
 
 
 def test_incremental_gold_equals_full_recompute(spark, tmp_path):
@@ -503,42 +493,11 @@ def test_python_stream_reader_offsets_monotonic_across_restart():
     assert r2.latestOffset()["idx"] > 1500
 
 
-def test_session_window_stream_equals_batch(spark, tmp_path):
-    """Native session_window under streaming: the same gap-merge
-    aggregation drained in complete mode must equal the batch rollup
-    (complete mode so end-of-corpus sessions the watermark never
-    finalizes are still emitted for comparison)."""
-    from damg7245_casestudy_03_ai_scoring_engine_spark.sources.catalog import load
-    from damg7245_casestudy_03_ai_scoring_engine_spark.streaming.jobs import (
-        read_events_stream,
-        session_window_rollup,
-        session_window_rollup_stream,
-    )
-
-    events = read_events_stream(spark, SF_SMOKE)
-    _run_stream(
-        session_window_rollup_stream(events),
-        "sw_native_stream",
-        "complete",
-        str(tmp_path / "ckpt_sw_native"),
-    )
-    got = _rows(spark.table("sw_native_stream"))
-    want = _rows(session_window_rollup(load(spark, SF_SMOKE, "events")))
-    assert got == want
-
-
 def test_lifetime_stats_stream_accumulates_across_batches(spark, tmp_path):
     """Per-user lifetime stats accumulate in RocksDB-backed state
     across micro-batches; the last emission per user must equal the
     batch groupBy aggregate, and a user touched by two batches must be
-    emitted by both (state carried, not reset).
-
-    Drains `user_lifetime_stats_stream(backend='auto')`: on this
-    sandbox that is the applyInPandasWithState backend (the
-    transformWithStateInPandas state-server protocol needs
-    google.protobuf, absent here); on a protobuf-equipped cluster the
-    SAME test exercises the tws backend — the emission contract is
-    identical by construction, so the assertions don't branch."""
+    emitted by both (state carried, not reset)."""
     from damg7245_casestudy_03_ai_scoring_engine_spark.streaming.jobs import (
         user_lifetime_stats_stream,
     )
@@ -614,15 +573,13 @@ def test_click_error_outer_join_stream_semantics(spark, tmp_path):
     from damg7245_casestudy_03_ai_scoring_engine_spark.sources.catalog import load
     from damg7245_casestudy_03_ai_scoring_engine_spark.streaming.jobs import (
         TEN_MIN_NS,
-        click_error_pairs_outer,
-        click_error_pairs_outer_stream,
         read_events_stream,
     )
     from pyspark.sql import functions as F
 
     events = read_events_stream(spark, SF_SMOKE)
     _run_stream(
-        click_error_pairs_outer_stream(events),
+        click_error_pairs(events, how="left"),
         "ceo_stream",
         "append",
         str(tmp_path / "ckpt_ceo"),
@@ -630,7 +587,7 @@ def test_click_error_outer_join_stream_semantics(spark, tmp_path):
     got = {tuple(r) for r in spark.table("ceo_stream").collect()}
 
     batch_events = load(spark, SF_SMOKE, "events")
-    batch = click_error_pairs_outer(batch_events).collect()
+    batch = click_error_pairs(batch_events, how="left").collect()
     inner = {tuple(r) for r in batch if r.error_id is not None}
     outer = {tuple(r) for r in batch if r.error_id is None}
 
@@ -653,26 +610,6 @@ def test_click_error_outer_join_stream_semantics(spark, tmp_path):
     assert got <= inner | outer
     # outer semantics actually exercised
     assert any(t[2] is None for t in got)
-
-
-def test_lifetime_stats_backend_validation(spark):
-    """Unknown backend is rejected eagerly (before any stream starts);
-    'auto' resolves to the protobuf-gated tws path only when the
-    dependency is importable."""
-    import pytest
-
-    from damg7245_casestudy_03_ai_scoring_engine_spark.streaming.jobs import (
-        tws_available,
-        user_lifetime_stats_stream,
-    )
-
-    df = spark.createDataFrame([(1, 1.0)], "user_id long, value double")
-    with pytest.raises(ValueError, match="unknown backend"):
-        user_lifetime_stats_stream(df, backend="bogus")
-    # apiws always constructs (plan-time only; no stream started)
-    assert user_lifetime_stats_stream(df, backend="apiws") is not None
-    if tws_available():
-        assert user_lifetime_stats_stream(df, backend="tws") is not None
 
 
 def test_running_balance_stream_equals_batch_walk(spark, tmp_path):

@@ -1,9 +1,11 @@
-"""Static checks over the test files and the scripts beside them.
+"""Static checks over the package, the test files and the scripts
+beside them.
 
-A module-level `def` or `class` defined twice in one file silently
-shadows the first definition, so pytest never collects it and the
-test it held stops running without any failure.  No linter runs over
-this suite, so the check lives here.
+A module-level `def`, `class` or assigned name bound twice in one file
+silently shadows the first binding: pytest never collects a shadowed
+test, and a package constant spelled twice can drift apart while every
+caller reads whichever binding comes last.  No linter runs over this
+repository, so the check lives here.
 
 `bench.py` and `tools/*.py` run only when someone runs them, so a
 script that no longer compiles, or imports a package name that was
@@ -28,14 +30,20 @@ SCRIPTS = [os.path.join(REPO, "bench.py")] + sorted(
 )
 
 
+def _top_level_bindings(tree: ast.Module):
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            yield node.name
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for target in targets:
+                yield from (n.id for n in ast.walk(target) if isinstance(n, ast.Name))
+
+
 def _duplicate_top_level_names(path: str) -> list[str]:
     with open(path, encoding="utf-8") as fh:
         tree = ast.parse(fh.read(), filename=path)
-    names = Counter(
-        node.name
-        for node in tree.body
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-    )
+    names = Counter(_top_level_bindings(tree))
     return sorted(name for name, n in names.items() if n > 1)
 
 
@@ -47,6 +55,17 @@ def test_no_test_file_redefines_a_top_level_name():
         and (found := _duplicate_top_level_names(os.path.join(TESTS_DIR, name)))
     }
     assert not dupes, f"top-level names defined more than once: {dupes}"
+
+
+def test_no_package_module_binds_a_top_level_name_twice():
+    paths = glob.glob(os.path.join(REPO, PKG, "**", "*.py"), recursive=True)
+    assert len(paths) > 1
+    dupes = {
+        os.path.relpath(path, REPO): found
+        for path in sorted(paths)
+        if (found := _duplicate_top_level_names(path))
+    }
+    assert not dupes, f"top-level names bound more than once: {dupes}"
 
 
 def _missing_package_names(path: str) -> list[str]:
