@@ -80,10 +80,6 @@ DEMO_KEYWORD_PAIRS: tuple[tuple[str, str], ...] = tuple(
 )
 
 
-def demo_keywords_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(list(DEMO_KEYWORD_PAIRS), "dimension string, keyword string")
-
-
 # --- shared oracle CTE fragments ------------------------------------------
 
 _SRC_CASE = "CASE (CAST(substr(source, 4, 10) AS INT) % 9)\n" + "\n".join(

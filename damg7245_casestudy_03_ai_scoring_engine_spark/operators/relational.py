@@ -1943,7 +1943,7 @@ def _morton_sql(xcol: str, ycol: str) -> str:
 WITH q AS (
     SELECT o_orderkey,
            CAST(o_custkey % 256 AS BIGINT) AS xq,
-           CAST(epoch_ns(o_orderdate) // 86400000000000 % 256 AS BIGINT) AS yq
+           CAST(epoch_ns(o_orderdate) // {DAY_NS} % 256 AS BIGINT) AS yq
     FROM orders
 ),
 z AS (

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.core import clamp, round_stable
-from ..sources.catalog import load
+from ..sources.catalog import DAY_NS, load
 from .registry import register
 
 _TRAIN_SQL = """
@@ -522,13 +522,13 @@ _DRIFT_BUCKET_W = 50  # fixed-width value buckets (value range ~[0, 500))
     survey="M14-adjacent (extension: cross-period distribution-drift chi-square)",
     oracle=f"""
 WITH span AS (
-    SELECT min(epoch_ns(ts) // 86400000000000) AS dlo,
-           max(epoch_ns(ts) // 86400000000000) AS dhi
+    SELECT min(epoch_ns(ts) // {DAY_NS}) AS dlo,
+           max(epoch_ns(ts) // {DAY_NS}) AS dhi
     FROM events
 ),
 cells AS (
     SELECT event_type,
-           CASE WHEN epoch_ns(ts) // 86400000000000
+           CASE WHEN epoch_ns(ts) // {DAY_NS}
                      <= (SELECT (dlo + dhi) // 2 FROM span)
                 THEN 0 ELSE 1 END AS period,
            least(CAST(floor(value / {_DRIFT_BUCKET_W}) AS BIGINT), 9) AS bucket,
@@ -586,14 +586,14 @@ def drift_chi2_value_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load(spark, sf_dir, "events", fan_out=True)
     span = e.agg(
-        F.min(F.expr("ts div 86400000000000")).alias("dlo"),
-        F.max(F.expr("ts div 86400000000000")).alias("dhi"),
+        F.min(F.expr(f"ts div {DAY_NS}")).alias("dlo"),
+        F.max(F.expr(f"ts div {DAY_NS}")).alias("dhi"),
     ).select(F.expr("(dlo + dhi) div 2").alias("dmid"))
     cells = (
         e.crossJoin(F.broadcast(span))
         .groupBy(
             "event_type",
-            F.when(F.expr("ts div 86400000000000") <= F.col("dmid"), 0)
+            F.when(F.expr(f"ts div {DAY_NS}") <= F.col("dmid"), 0)
             .otherwise(1)
             .alias("period"),
             F.least(
@@ -876,20 +876,20 @@ def pr_curve_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "cuped_adjusted_lift",
     survey="M14-adjacent (extension: CUPED variance-reduced A/B means)",
-    oracle="""
+    oracle=f"""
 WITH span AS (
-    SELECT min(epoch_ns(ts) // 86400000000000) AS dlo,
-           max(epoch_ns(ts) // 86400000000000) AS dhi
+    SELECT min(epoch_ns(ts) // {DAY_NS}) AS dlo,
+           max(epoch_ns(ts) // {DAY_NS}) AS dhi
     FROM events
 ),
 per_user AS (
     SELECT user_id,
            CAST(user_id % 2 AS BIGINT) AS variant,
-           CAST(sum(CASE WHEN epoch_ns(ts) // 86400000000000
+           CAST(sum(CASE WHEN epoch_ns(ts) // {DAY_NS}
                               <= (SELECT (dlo + dhi) // 2 FROM span)
                          THEN CAST(floor(value * 100 + 0.5) AS BIGINT)
                          ELSE 0 END) AS BIGINT) AS x,
-           CAST(sum(CASE WHEN epoch_ns(ts) // 86400000000000
+           CAST(sum(CASE WHEN epoch_ns(ts) // {DAY_NS}
                               > (SELECT (dlo + dhi) // 2 FROM span)
                          THEN CAST(floor(value * 100 + 0.5) AS BIGINT)
                          ELSE 0 END) AS BIGINT) AS y
@@ -947,10 +947,9 @@ def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions.core import round_stable
 
-    DAY = 86_400_000_000_000
     e = load(spark, sf_dir, "events", fan_out=True)
     span = e.agg(
-        F.expr(f"(min(ts div {DAY}) + max(ts div {DAY})) div 2").alias("dmid")
+        F.expr(f"(min(ts div {DAY_NS}) + max(ts div {DAY_NS})) div 2").alias("dmid")
     )
     vq = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     per_user = (
@@ -958,12 +957,12 @@ def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(
             F.sum(
-                F.when(F.expr(f"ts div {DAY}") <= F.col("dmid"), vq).otherwise(
+                F.when(F.expr(f"ts div {DAY_NS}") <= F.col("dmid"), vq).otherwise(
                     0
                 )
             ).alias("x"),
             F.sum(
-                F.when(F.expr(f"ts div {DAY}") > F.col("dmid"), vq).otherwise(0)
+                F.when(F.expr(f"ts div {DAY_NS}") > F.col("dmid"), vq).otherwise(0)
             ).alias("y"),
         )
         .withColumn("variant", (F.col("user_id") % 2).cast("long"))
@@ -1107,15 +1106,15 @@ def ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ks_two_sample_drift",
     survey="M14-adjacent,W5 (extension: exact two-sample Kolmogorov-Smirnov)",
-    oracle="""
+    oracle=f"""
 WITH span AS (
-    SELECT min(epoch_ns(ts) // 86400000000000) AS dlo,
-           max(epoch_ns(ts) // 86400000000000) AS dhi
+    SELECT min(epoch_ns(ts) // {DAY_NS}) AS dlo,
+           max(epoch_ns(ts) // {DAY_NS}) AS dhi
     FROM events
 ),
 s AS (
     SELECT event_type, value,
-           CASE WHEN epoch_ns(ts) // 86400000000000
+           CASE WHEN epoch_ns(ts) // {DAY_NS}
                      <= (SELECT (dlo + dhi) // 2 FROM span)
                 THEN 0 ELSE 1 END AS half
     FROM events
@@ -1168,15 +1167,14 @@ def ks_two_sample_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.core import round_stable
 
-    DAY = 86_400_000_000_000
     e = load(spark, sf_dir, "events", fan_out=True)
     span = e.agg(
-        F.expr(f"(min(ts div {DAY}) + max(ts div {DAY})) div 2").alias("dmid")
+        F.expr(f"(min(ts div {DAY_NS}) + max(ts div {DAY_NS})) div 2").alias("dmid")
     )
     s = e.crossJoin(F.broadcast(span)).select(
         "event_type",
         "value",
-        (F.expr(f"ts div {DAY}") > F.col("dmid")).cast("long").alias("half"),
+        (F.expr(f"ts div {DAY_NS}") > F.col("dmid")).cast("long").alias("half"),
     )
     g = s.groupBy("event_type", "value").agg(
         F.sum((F.col("half") == 0).cast("long")).alias("c0"),

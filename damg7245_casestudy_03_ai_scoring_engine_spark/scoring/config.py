@@ -97,18 +97,6 @@ GOLDEN_RANGES: dict[str, tuple[float, float]] = {
     "DG": (34.0, 45.0),
 }
 
-# Keyword taxonomy per dimension (evidence_mapper.py:247-276 shape; the
-# exact keyword lists matter for parity of the featurizer tests).
-DIMENSION_KEYWORDS: dict[str, tuple[str, ...]] = {
-    "data_infrastructure": ("data platform", "data lake", "data warehouse", "pipeline", "etl", "data quality", "data governance"),
-    "ai_governance": ("ai governance", "responsible ai", "model risk", "ai policy", "compliance", "audit", "oversight"),
-    "technology_stack": ("cloud", "api", "machine learning", "ml platform", "gpu", "kubernetes", "infrastructure"),
-    "talent_skills": ("data scientist", "ml engineer", "ai talent", "upskilling", "training program", "hiring"),
-    "leadership_vision": ("strategy", "roadmap", "executive", "chief data", "vision", "transformation"),
-    "use_case_portfolio": ("use case", "production", "deployment", "pilot", "automation", "personalization"),
-    "culture_change": ("culture", "innovation", "experimentation", "collaboration", "change management", "adoption"),
-}
-
 # Source profiles: source -> (reliability, {dim: weight}) (mapping_config.py:28-116).
 SOURCE_PROFILES: dict[str, tuple[float, dict[str, float]]] = {
     "technology_hiring": (0.85, {"talent_skills": 0.6, "technology_stack": 0.4}),
@@ -121,61 +109,12 @@ SOURCE_PROFILES: dict[str, tuple[float, dict[str, float]]] = {
     "glassdoor_reviews": (0.75, {"culture_change": 0.6, "talent_skills": 0.4}),
     "board_composition": (0.90, {"ai_governance": 0.6, "leadership_vision": 0.4}),
 }
-SOURCE_ALIASES: dict[str, str] = {
-    "jobs": "technology_hiring",
-    "patents": "innovation_activity",
-    "tech": "digital_presence",
-    "news": "leadership_signals",
-    "10k": "sec_item_1",
-}
-
-
-def dim_weights_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [(d, w) for d, w in DEFAULT_DIM_WEIGHTS.items()], "dimension string, weight double"
-    )
-
-
-def sector_baselines_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [(s, hb) for s, hb in SECTOR_HR_BASE.items()], "sector string, hr_base double"
-    )
 
 
 def synergy_rules_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(
         list(SYNERGY_RULES),
         "dim_a string, dim_b string, synergy_type string, threshold double, magnitude double",
-    )
-
-
-def priors_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [(t, *v) for t, v in PORTFOLIO_PRIORS.items()],
-        "ticker string, vr_target double, pf_target double, tc_target double, mcap_pct double",
-    )
-
-
-def keywords_df(spark: SparkSession) -> DataFrame:
-    """(dimension, keyword) rows — broadcast side of the taxonomy join
-    (reference evidence_mapper.py:283-299)."""
-    rows = [(d, kw) for d, kws in DIMENSION_KEYWORDS.items() for kw in kws]
-    return spark.createDataFrame(rows, "dimension string, keyword string")
-
-
-def source_profiles_df(spark: SparkSession) -> DataFrame:
-    """(source, reliability, dimension, dim_weight) exploded profile
-    rows, aliases resolved (mapping_config.py:28-116)."""
-    rows = []
-    for src, (rel, weights) in SOURCE_PROFILES.items():
-        for dim, w in weights.items():
-            rows.append((src, rel, dim, w))
-    for alias, canon in SOURCE_ALIASES.items():
-        rel, weights = SOURCE_PROFILES[canon]
-        for dim, w in weights.items():
-            rows.append((alias, rel, dim, w))
-    return spark.createDataFrame(
-        rows, "source string, reliability double, dimension string, dim_weight double"
     )
 
 

@@ -2,13 +2,22 @@
 `score_portfolio`.
 
 The batch flagship aggregates ALL evidence per run.  This module
-maintains the two MERGEABLE partial tables those aggregates decompose
+maintains ONE mergeable partials table those aggregates decompose
 into, so a micro-batch of new evidence updates the portfolio scores
-without rescanning history:
+without rescanning history.  The table holds two grains, told apart
+by which key is NULL:
 
-- dim partials:  (company_id, dimension) → (sum_score, sum_conf, n)
-  — dimension score = sum_score/n, confidence = sum_conf/n.
-- supplier counts: (company_id, supp_key) → n — the HHI input.
+- dimension rows: (company_id, dimension) → (sum_score, sum_conf, n),
+  supp_key NULL — dimension score = sum_score/n, confidence =
+  sum_conf/n.
+- supplier rows: (company_id, supp_key) → n, dimension, sum_score
+  and sum_conf NULL — the HHI input.
+
+Both grains come from one grouping-sets aggregate of the evidence, so
+a micro-batch costs one evidence pass, one merge and one commit.
+`dimension` is a CASE with an ELSE, so it is never NULL on a
+dimension row, and `dimension IS NULL` selects exactly the supplier
+rows.
 
 Every downstream stage (VR, CV penalty, HHI penalty, HR, synergy,
 composite) is a pure function of those aggregates, so serving reads
@@ -25,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..streaming.jobs import _merge_parquet_gold
 from .demo_domain import EVIDENCE_COLUMNS, companies
@@ -32,45 +42,63 @@ from .pipeline import assemble_composite
 from .talent import hhi_from_counts
 from .vr import vr_scores
 
-DIM_PARTIALS = "dim_partials"
-SUPP_COUNTS = "supp_counts"
+PARTIALS = "partials"
+
+# The one layout of the partials frame and of the gold table it merges
+# into: reads declare it, so neither merging nor serving infers a schema.
+PARTIALS_SCHEMA = T.StructType(
+    [
+        T.StructField("company_id", T.LongType()),
+        T.StructField("dimension", T.StringType()),
+        T.StructField("supp_key", T.LongType()),
+        T.StructField("sum_score", T.DoubleType()),
+        T.StructField("sum_conf", T.DoubleType()),
+        T.StructField("n", T.LongType()),
+    ]
+)
 
 
-def evidence_partials(ev: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Decompose an evidence frame into the two mergeable partials."""
-    dims = ev.groupBy("company_id", "dimension").agg(
-        F.sum("score_raw").alias("sum_score"),
-        F.sum("conf_raw").alias("sum_conf"),
-        F.count(F.lit(1)).alias("n"),
+def evidence_partials(ev: DataFrame) -> DataFrame:
+    """Decompose an evidence frame into the mergeable partials: one
+    grouping-sets aggregate yields the dimension rows and the supplier
+    rows, the sums NULL on supplier rows."""
+    dim_only = "IF(grouping(supp_key) = 0, NULL, sum({}))"
+    return (
+        ev.groupingSets(
+            [["company_id", "dimension"], ["company_id", "supp_key"]],
+            "company_id",
+            "dimension",
+            "supp_key",
+        )
+        .agg(
+            F.expr(dim_only.format("score_raw")).alias("sum_score"),
+            F.expr(dim_only.format("conf_raw")).alias("sum_conf"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .to(PARTIALS_SCHEMA)
     )
-    supp = ev.groupBy("company_id", "supp_key").agg(F.count(F.lit(1)).alias("n"))
-    return dims, supp
 
 
 def merge_partials(gold_dir: str):
     """foreachBatch body: merge one micro-batch's evidence partials
-    into the two gold partial tables (same union+groupBy pattern as
-    the incremental window rollup; MERGE on Delta).
+    into the gold partials table (same union+groupBy pattern as the
+    incremental window rollup; MERGE on Delta).
 
-    Each table commits through the shared gold-merge protocol,
+    The table commits through the shared gold-merge protocol,
     `streaming.jobs._merge_parquet_gold`: replay-idempotent (a batch
     id at or below the table's committed `_last_batch_id` marker is
-    skipped, so after a mid-upsert crash the replay tops up only the
-    table that missed the batch) and crash-atomic (detach-promote-reap,
-    with a detached generation restored on the next upsert)."""
-    merge_dims = _merge_parquet_gold(
-        f"{gold_dir}/{DIM_PARTIALS}",
-        ["company_id", "dimension"],
+    skipped) and crash-atomic (detach-promote-reap, with a detached
+    generation restored on the next upsert).  Keys lead with
+    `supp_key` so each sorted generation stores the dimension rows
+    (supp_key NULL) and the supplier rows as two runs."""
+    merge = _merge_parquet_gold(
+        f"{gold_dir}/{PARTIALS}",
+        ["supp_key", "company_id", "dimension"],
         ["sum_score", "sum_conf", "n"],
-    )
-    merge_supp = _merge_parquet_gold(
-        f"{gold_dir}/{SUPP_COUNTS}", ["company_id", "supp_key"], ["n"]
     )
 
     def upsert(ev_batch: DataFrame, batch_id: int) -> None:
-        dims, supp = evidence_partials(ev_batch)
-        merge_dims(dims, batch_id)
-        merge_supp(supp, batch_id)
+        merge(evidence_partials(ev_batch), batch_id)
 
     return upsert
 
@@ -79,20 +107,21 @@ def score_from_partials(
     spark: SparkSession, sf_dir: str, gold_dir: str
 ) -> DataFrame:
     """Serving view: the full Org-AI-R composite derived from the gold
-    partial tables — identical math to `score_portfolio`, zero
+    partials table — identical math to `score_portfolio`, zero
     history rescans."""
-    dims = spark.read.parquet(f"{gold_dir}/{DIM_PARTIALS}")
-    supp = spark.read.parquet(f"{gold_dir}/{SUPP_COUNTS}")
-    ds = dims.select(
+    parts = spark.read.schema(PARTIALS_SCHEMA).parquet(f"{gold_dir}/{PARTIALS}")
+    ds = parts.where("dimension IS NOT NULL").selectExpr(
         "company_id",
         "dimension",
-        (F.col("sum_score") / F.col("n")).alias("score"),
-        F.lit(None).cast("double").alias("weight"),
-        (F.col("sum_conf") / F.col("n")).alias("confidence"),
-        F.col("n").alias("evidence_count"),
+        "sum_score / n AS score",
+        "CAST(NULL AS DOUBLE) AS weight",
+        "sum_conf / n AS confidence",
+        "n AS evidence_count",
     )
     vr = vr_scores(ds)
-    supplier_hhi = hhi_from_counts(supp, key="company_id", count_col="n")
+    supplier_hhi = hhi_from_counts(
+        parts.where("dimension IS NULL"), key="company_id", count_col="n"
+    )
     comp = companies(spark, sf_dir)
     return assemble_composite(vr, supplier_hhi, comp)
 
@@ -126,7 +155,7 @@ def run_incremental_scoring(
     spark: SparkSession, sf_dir: str, gold_dir: str, checkpoint: str
 ) -> None:
     """One availableNow pass: stream the evidence source and merge
-    partials into the gold tables; call `score_from_partials` to
+    partials into the gold table; call `score_from_partials` to
     serve.  Exactly-once across restarts comes from the checkpointed
     batch ids — a replayed batch is never re-merged."""
     q = (

@@ -431,9 +431,25 @@ def click_error_pairs(events: DataFrame, how: str = "inner") -> DataFrame:
 def _merge_parquet_gold(gold_dir: str, keys: list[str], sums: list[str]):
     """The shared replay-idempotent, crash-atomic gold-merge protocol
     — ONE implementation behind every foreachBatch gold table
-    (`merge_gold_window_counts`, `merge_inverted_file`, and the two
-    scoring partials of `scoring/incremental.py:merge_partials`), so a
-    protocol fix can never apply to one table and not the other.
+    (`merge_gold_window_counts`, `merge_inverted_file`,
+    `merge_cell_moments`, and the scoring partials of
+    `scoring/incremental.py:merge_partials`), so a protocol fix can
+    never apply to one table and not another.
+
+    Declared schema: the existing generation is read with the
+    partial's own schema, so a merge starts no parquet
+    schema-inference job.  Every batch's partial must therefore carry
+    the same schema, and each sum column must already be of a type
+    `sum` keeps (long, double): an `int` sum column would widen to
+    `long` in the first merged generation and no longer match the
+    declared read.
+
+    Sorted generations: each generation is written
+    `sortWithinPartitions(*keys)`, so rows sharing a key prefix sit
+    together in the files.  A table that mixes grains (NULL in
+    different key columns) should lead its keys with the column that
+    tells the grains apart; unsorted, the interleaved NULL definition
+    levels encode worse and the files grow.
 
     Replay idempotence: the max applied batch id rides INSIDE the
     committed directory as `_last_batch_id` (underscore-prefixed ⇒
@@ -477,7 +493,7 @@ def _merge_parquet_gold(gold_dir: str, keys: list[str], sums: list[str]):
         if os.path.isdir(gold_dir):
             if batch_id <= _last_applied():
                 return  # replayed batch already merged
-            gold = spark.read.parquet(gold_dir)
+            gold = spark.read.schema(partial.schema).parquet(gold_dir)
             merged = (
                 gold.unionByName(partial)
                 .groupBy(*keys)
@@ -486,7 +502,7 @@ def _merge_parquet_gold(gold_dir: str, keys: list[str], sums: list[str]):
         else:
             merged = partial
         tmp = gold_dir + f"._tmp_{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
+        merged.sortWithinPartitions(*keys).write.mode("overwrite").parquet(tmp)
         with open(os.path.join(tmp, "_last_batch_id"), "w") as fh:
             fh.write(str(batch_id))
         if os.path.isdir(old_dir):

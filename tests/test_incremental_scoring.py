@@ -94,44 +94,45 @@ def test_replayed_batch_never_double_merges(spark, tmp_path):
     assert sum(n_after.values()) == sum(v[5] for v in base.values()) + 100
 
 
-def test_partial_crash_tops_up_only_missing_table(spark, tmp_path):
-    """Mid-upsert crash: dim partials swapped, supplier counts not.
-    The replay must skip the already-applied table and apply only the
-    missing one — converging to the same state as a clean run."""
+def test_rolled_back_table_replays_to_clean_state(spark, tmp_path):
+    """Crash that loses batch 1's commit: the gold table is rolled
+    back to its pre-batch-1 generation (marker included).  The replay
+    of batch 1 must merge again and converge to the same state as a
+    clean run."""
     import os
     import shutil as sh
 
     from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.incremental import (
-        SUPP_COUNTS,
+        PARTIALS,
     )
 
     gold = str(tmp_path / "gold_crash")
     ev = evidence_rows(spark, SF_SMOKE).persist()
     upsert = merge_partials(gold)
     upsert(ev.filter("company_id % 2 = 0"), 0)
-    supp_before_batch1 = str(tmp_path / "supp_saved")
-    sh.copytree(os.path.join(gold, SUPP_COUNTS), supp_before_batch1)
+    before_batch1 = str(tmp_path / "partials_saved")
+    sh.copytree(os.path.join(gold, PARTIALS), before_batch1)
 
     upsert(ev.filter("company_id % 2 = 1"), 1)
     clean = _by_company(score_from_partials(spark, SF_SMOKE, gold).collect())
 
-    # simulate the crash: roll supp back to its pre-batch-1 state
-    sh.rmtree(os.path.join(gold, SUPP_COUNTS))
-    sh.copytree(supp_before_batch1, os.path.join(gold, SUPP_COUNTS))
+    # simulate the crash: roll the table back to its pre-batch-1 state
+    sh.rmtree(os.path.join(gold, PARTIALS))
+    sh.copytree(before_batch1, os.path.join(gold, PARTIALS))
 
     upsert(ev.filter("company_id % 2 = 1"), 1)  # replay
     assert _by_company(score_from_partials(spark, SF_SMOKE, gold).collect()) == clean
 
 
 def test_merge_partials_recovers_mid_commit_crash(spark, tmp_path):
-    """Crash inside a table's commit: batch 2 detached dim_partials
-    (renamed to `._old`) but died before promoting its merge.  The
-    replay of batch 2 must restore the detached generation and merge
-    into it, not rebuild dim_partials from batch 2 alone."""
+    """Crash inside the table's commit: batch 2 detached the partials
+    table (renamed to `._old`) but died before promoting its merge.
+    The replay of batch 2 must restore the detached generation and
+    merge into it, not rebuild the table from batch 2 alone."""
     import os
 
     from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.incremental import (
-        DIM_PARTIALS,
+        PARTIALS,
     )
 
     ev = evidence_rows(spark, SF_SMOKE).persist()
@@ -147,11 +148,48 @@ def test_merge_partials_recovers_mid_commit_crash(spark, tmp_path):
     gold = str(tmp_path / "gold_mid_commit")
     upsert = merge_partials(gold)
     upsert(half_a, 0)
-    dims = os.path.join(gold, DIM_PARTIALS)
-    os.replace(dims, dims + "._old")  # detached, never promoted
+    parts = os.path.join(gold, PARTIALS)
+    os.replace(parts, parts + "._old")  # detached, never promoted
 
     upsert(half_b, 1)  # replay
     assert _by_company(score_from_partials(spark, SF_SMOKE, gold).collect()) == clean
+
+
+def test_evidence_partials_schema_is_declared(spark):
+    """The partials frame has exactly the declared layout (names and
+    types, in order): the gold merge reads the table back with the
+    partial's schema, and serving reads it with PARTIALS_SCHEMA."""
+    from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.incremental import (
+        PARTIALS_SCHEMA,
+        evidence_partials,
+    )
+
+    got = evidence_partials(evidence_rows(spark, SF_SMOKE)).schema
+    assert [(f.name, f.dataType) for f in got] == [
+        (f.name, f.dataType) for f in PARTIALS_SCHEMA
+    ]
+
+
+def test_merge_partials_upsert_job_count(spark, tmp_path):
+    """One upsert into an existing gold table is one merge: the
+    partials aggregate, the gold merge shuffle and the write — no
+    second table, no schema-inference job.  The two-table layout
+    started 8 jobs here."""
+    ev = evidence_rows(spark, SF_SMOKE).persist()
+    gold = str(tmp_path / "gold_jobs")
+    upsert = merge_partials(gold)
+    upsert(ev.filter("company_id % 2 = 0"), 0)
+
+    sc = spark.sparkContext
+    group = "merge-partials-job-count"
+    sc.setJobGroup(group, "one merge_partials upsert")
+    try:
+        upsert(ev.filter("company_id % 2 = 1"), 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 3, sorted(jobs)
 
 
 def test_streaming_incremental_equals_batch(spark, tmp_path):

@@ -76,7 +76,12 @@ def main() -> int:
 
     import duckdb
 
-    spark = get_spark("exact-parity", cpus=32, shuffle_partitions=args.parts)
+    spark = get_spark(
+        "exact-parity",
+        cpus=32,
+        shuffle_partitions=args.parts,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     con = duckdb.connect()
     for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
         p = os.path.join(args.sf, f"{t}.parquet")
