@@ -368,7 +368,6 @@ def rss_item_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- S1/S2: EDGAR submissions scan (parallel arrays → rows) ----------------
 
-_FORMS = ("10-K", "10-Q", "8-K", "DEF 14A")
 _WANTED_FORMS = ("10-K", "8-K")
 _PER_FORM = 2
 

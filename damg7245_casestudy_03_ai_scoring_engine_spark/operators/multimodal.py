@@ -33,16 +33,6 @@ from pyspark.sql.types import (
 from ..sources.catalog import load
 from .registry import register
 
-# Typed metadata schema for a media asset column.
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("kind", StringType(), False),  # image | audio | video | text
-        StructField("content", BinaryType(), True),  # opaque bytes
-        StructField("mime", StringType(), True),
-    ]
-)
-
 FEATURE_SCHEMA = StructType(
     [
         StructField("asset_id", LongType(), False),
@@ -81,7 +71,8 @@ def fake_decode(content: bytes, kind: str) -> dict:
 
 
 def extract_media_features(assets: DataFrame, use_fake_decoder: bool = True) -> DataFrame:
-    """mapInPandas feature extraction over a MEDIA_SCHEMA DataFrame.
+    """mapInPandas feature extraction over media assets (asset_id,
+    kind = image | audio | video | text, content = opaque bytes).
 
     Arrow-batched: each partition streams pandas batches through the
     decoder — the 100 TB pattern for binary columns (decode cost

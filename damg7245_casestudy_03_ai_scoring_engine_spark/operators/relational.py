@@ -16,6 +16,8 @@ construct being reproduced.  Scale notes:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -2531,10 +2533,8 @@ WHERE c.c_custkey % 25 = 0
     )
 
 
-@register(
-    "pareto_frontier_orders",
-    survey="W5,O2 (extension: 2-D skyline / Pareto frontier)",
-    oracle=r"""
+# Strict-dominance NOT EXISTS: the one oracle of both frontier queries.
+_PARETO_ORACLE = r"""
 WITH o AS (
     SELECT r.r_name, o.o_orderkey, o.o_totalprice, o.o_orderdate
     FROM orders o
@@ -2551,7 +2551,13 @@ WHERE NOT EXISTS (
       AND b.o_totalprice > a.o_totalprice
       AND b.o_orderdate > a.o_orderdate
 )
-""",
+"""
+
+
+@register(
+    "pareto_frontier_orders",
+    survey="W5,O2 (extension: 2-D skyline / Pareto frontier)",
+    oracle=_PARETO_ORACLE,
 )
 def pareto_frontier_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-region Pareto frontier (2-D skyline) of orders maximizing
@@ -2578,11 +2584,22 @@ def pareto_frontier_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     TIMESTAMP_NTZ end to end (ordering is timezone-free); the output
     carries the calendar form.
     """
+    return _pareto_frontier(spark, sf_dir)
+
+
+def _pareto_frontier(
+    spark: SparkSession,
+    sf_dir: str,
+    prune: Callable[[DataFrame], DataFrame] = lambda df: df,
+) -> DataFrame:
+    """The per-region frontier plan of both registry queries; `prune`
+    runs on the joined (r_name, o_orderkey, o_totalprice, o_orderdate)
+    rows before the global grouped-window pass."""
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region")
-    base = (
+    base = prune(
         o.join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
@@ -2652,24 +2669,7 @@ def _local_skyline_prune(df: DataFrame) -> DataFrame:
 @register(
     "pareto_frontier_prepruned",
     survey="W5,O2 (extension: skyline with narrow local pre-prune — the 100 TB path)",
-    oracle=r"""
-WITH o AS (
-    SELECT r.r_name, o.o_orderkey, o.o_totalprice, o.o_orderdate
-    FROM orders o
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
-)
-SELECT a.r_name, a.o_orderkey, round(a.o_totalprice, 2) AS total_price,
-       strftime(a.o_orderdate, '%Y-%m-%d') AS order_date
-FROM o a
-WHERE NOT EXISTS (
-    SELECT 1 FROM o b
-    WHERE b.r_name = a.r_name
-      AND b.o_totalprice > a.o_totalprice
-      AND b.o_orderdate > a.o_orderdate
-)
-""",
+    oracle=_PARETO_ORACLE,
 )
 def pareto_frontier_prepruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`pareto_frontier_orders` with the scale path its docstring
@@ -2681,42 +2681,7 @@ def pareto_frontier_prepruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     between sorting every region's full order history and sorting a
     few thousand candidates.  Output pinned identical to the unpruned
     twin (same DuckDB NOT EXISTS oracle)."""
-    o = load(spark, sf_dir, "orders")
-    c = load(spark, sf_dir, "customer")
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region")
-    base = _local_skyline_prune(
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .select("r_name", "o_orderkey", "o_totalprice", "o_orderdate")
-    )
-    g = base.groupBy("r_name", "o_totalprice").agg(
-        F.max("o_orderdate").alias("gmax")
-    )
-    w = (
-        Window.partitionBy("r_name")
-        .orderBy(F.desc("o_totalprice"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    frontier_prices = (
-        g.withColumn("prev_max", F.max("gmax").over(w))
-        .filter(F.col("prev_max").isNull() | (F.col("prev_max") <= F.col("gmax")))
-        .select("r_name", "o_totalprice", "prev_max")
-    )
-    return (
-        base.join(frontier_prices, ["r_name", "o_totalprice"])
-        .filter(
-            F.col("prev_max").isNull()
-            | (F.col("prev_max") <= F.col("o_orderdate"))
-        )
-        .select(
-            "r_name",
-            "o_orderkey",
-            F.round("o_totalprice", 2).alias("total_price"),
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
-        )
-    )
+    return _pareto_frontier(spark, sf_dir, _local_skyline_prune)
 
 
 _ALLOC_BUDGET = 10_000  # units to apportion within each region

@@ -545,20 +545,11 @@ GROUP BY company_id
 def dimension_breakdown_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The nested per-company dimension_breakdown_json assembly
     (reference run_scoring_engine.py:468-530) as canonical string JSON
-    (entries sorted by dimension, 2dp rounding) so the bytes are
-    engine-agnostic; see scoring/runlog.py::dimension_breakdown.
-    The 2dp values derive from exact integer sums, not round(avg(..)),
-    to dodge .5-boundary double drift between engines."""
+    (entries sorted by dimension) so the bytes are engine-agnostic.
+    One rule with the audited run: `scoring/runlog.py::
+    dimension_breakdown_rows` (2dp values from exact integer sums)
+    feeds `dimension_breakdown`."""
     from ..scoring.demo_domain import evidence_rows
-    from ..scoring.runlog import dimension_breakdown
+    from ..scoring.runlog import dimension_breakdown, dimension_breakdown_rows
 
-    ev = evidence_rows(spark, sf_dir)
-    n = F.count(F.lit(1))
-    ds2 = ev.groupBy("company_id", "dimension").agg(
-        (F.round(F.sum("score_raw") * 100.0 / n) / 100.0).alias("score"),
-        (F.round(F.sum(F.round(F.col("conf_raw") * 10)) * 10.0 / n) / 100.0).alias(
-            "confidence"
-        ),
-        n.alias("evidence_count"),
-    )
-    return dimension_breakdown(ds2)
+    return dimension_breakdown(dimension_breakdown_rows(evidence_rows(spark, sf_dir)))

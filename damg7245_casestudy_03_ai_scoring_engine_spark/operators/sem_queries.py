@@ -56,15 +56,6 @@ train AS (
       AND r.company_id <> 1
 )"""
 
-_SECTOR_CASE = """CASE c_mktsegment
-             WHEN 'AUTOMOBILE' THEN 'Industrials'
-             WHEN 'BUILDING' THEN 'Financial'
-             WHEN 'FURNITURE' THEN 'Consumer'
-             WHEN 'HOUSEHOLD' THEN 'Services'
-             WHEN 'MACHINERY' THEN 'Healthcare'
-             ELSE 'Services'
-           END"""
-
 
 def training_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 (scores ⋈ runs on run id) + LIKE-prefix model-version filter

@@ -35,6 +35,12 @@ def score_portfolio(spark: SparkSession, sf_dir: str) -> DataFrame:
     (floats rounded 4dp; hhi 6dp).
     """
     comp = companies(spark, sf_dir)
+    return score_evidence(company_evidence(spark, sf_dir), comp)
+
+
+def company_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The run's one evidence frame: lineitem⋈orders evidence rows,
+    persisted partitioned by company_id."""
     # One evidence join feeds BOTH the dimension-score aggregate and
     # the supplier HHI — persist it instead of re-running the
     # lineitem⋈orders join per consumer (at scale: the silver
@@ -45,10 +51,15 @@ def score_portfolio(spark: SparkSession, sf_dir: str) -> DataFrame:
     # company_id groupBys/joins above them — so the whole post-evidence
     # DAG runs shuffle-free (one exchange here replaces four after the
     # persist; plan-pinned in tests/test_plans.py).
-    ev = tracked_persist(
+    return tracked_persist(
         evidence_rows(spark, sf_dir).repartition("company_id"),
         "org_air_flagship.evidence",
     )
+
+
+def score_evidence(ev: DataFrame, comp: DataFrame) -> DataFrame:
+    """The scoring DAG over a `company_evidence` frame and
+    `companies`: dimension scores → VR, supplier HHI → composite."""
     ds = dimension_scores_from(ev)
 
     vr = vr_scores(ds)  # company_id, vr_raw, cv, cv_penalty, vr_score(=raw·pen)

@@ -6,17 +6,24 @@ persists a nested `dimension_breakdown_json` per company (reference
 scripts/run_scoring_engine.py:133-154, 168-188, 468-530).
 
 Spark shape: the run row and audit entries are small DataFrames
-appended per stage (S16 append-only sink); the breakdown is assembled
-columnar — collect_list of per-dimension structs per company,
-serialized to a canonical JSON string.  Determinism rules from
-SURVEY §7: run ids are content hashes, not uuid4; a single run
-timestamp is stamped by the caller, never per-row wall clock.
+appended per stage (S16 append-only sink).  One evidence frame per
+run — the flagship's persisted `company_evidence` — feeds the
+`dimension_scoring` audit rows, the scoring DAG and the breakdown.
+One breakdown rule, `dimension_breakdown_rows` (2dp values from exact
+integer sums), is shared with the registry query
+`dimension_breakdown_json`, so the audit rows and the JSON do not
+depend on the degree of parallelism.  Determinism rules from SURVEY
+§7: run ids are content hashes, not uuid4; a single run timestamp is
+stamped by the caller, never per-row wall clock.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .demo_domain import companies
+from .pipeline import company_evidence, score_evidence
 
 
 def run_id_for(tickers: list[str], model_version: str, run_ts: str) -> str:
@@ -75,14 +82,33 @@ def append_audit(entries: DataFrame, path: str) -> None:
     entries.write.mode("append").parquet(path)
 
 
-def dimension_breakdown(ds: DataFrame) -> DataFrame:
+def dimension_breakdown_rows(ev: DataFrame) -> DataFrame:
+    """Per (company, dimension) over evidence rows: score, confidence
+    (2dp) and evidence_count — the `dimension_scoring` audit payload
+    and the breakdown's entries.  The 2dp values derive from EXACT
+    integer sums (score_raw is integral, conf_raw is tenths), not
+    round(avg(..)): an avg in doubles lands on .5 boundaries where the
+    last bit depends on summation order, which varies with the engine
+    and with the number of partitions."""
+    n = F.count(F.lit(1))
+    return ev.groupBy("company_id", "dimension").agg(
+        (F.round(F.sum("score_raw") * 100.0 / n) / 100.0).alias("score"),
+        (F.round(F.sum(F.round(F.col("conf_raw") * 10)) * 10.0 / n) / 100.0).alias(
+            "confidence"
+        ),
+        n.alias("evidence_count"),
+    )
+
+
+def dimension_breakdown(rows: DataFrame) -> DataFrame:
     """Per company: canonical JSON array of per-dimension entries —
     the `dimension_breakdown_json` shape (run_scoring_engine.py:
     468-530).  Assembled with explicit string concat (not to_json) so
     the byte output is engine-agnostic and oracle-checkable: entries
-    sorted by dimension, scores rounded to 2dp.
+    sorted by dimension.
 
-    Input: company_id, dimension, score, confidence, evidence_count.
+    Input: `dimension_breakdown_rows` (company_id, dimension, score,
+    confidence, evidence_count).
     """
     entry = F.concat(
         F.lit('{"dimension":"'),
@@ -95,7 +121,7 @@ def dimension_breakdown(ds: DataFrame) -> DataFrame:
         F.col("evidence_count").cast("string"),
         F.lit("}"),
     )
-    per_dim = ds.select("company_id", F.col("dimension"), entry.alias("entry"))
+    per_dim = rows.select("company_id", F.col("dimension"), entry.alias("entry"))
     return (
         per_dim.groupBy("company_id")
         .agg(F.array_sort(F.collect_list(F.struct("dimension", "entry"))).alias("es"))
@@ -120,29 +146,24 @@ def score_portfolio_with_audit(
     """Full run: scoring_runs row + per-stage audit appends + final
     scores with breakdown JSON.  Returns (run_id, scores_df); the
     audit table lands at `audit_path`."""
-    from .demo_domain import dimension_scores
-    from .pipeline import score_portfolio
-
     run_id = run_id_for(["PORTFOLIO"], model_version, run_ts)
     run_row = scoring_run_row(
         spark, run_id, ["PORTFOLIO"], model_version, run_ts
     )
     run_row.write.mode("append").parquet(f"{audit_path}/scoring_runs")
 
-    ds = dimension_scores(spark, sf_dir)
+    ev = company_evidence(spark, sf_dir)
+    dims = dimension_breakdown_rows(ev)
     append_audit(
-        audit_entries(ds, run_id, "dimension_scoring"), f"{audit_path}/audit_log"
+        audit_entries(dims, run_id, "dimension_scoring"), f"{audit_path}/audit_log"
     )
 
-    scores = score_portfolio(spark, sf_dir)
+    scores = score_evidence(ev, companies(spark, sf_dir))
     append_audit(
         audit_entries(scores, run_id, "final_write"), f"{audit_path}/audit_log"
     )
 
-    breakdown = dimension_breakdown(
-        ds.select("company_id", "dimension", "score", "confidence", "evidence_count")
-    )
-    final = scores.join(breakdown, "company_id", "left").withColumn(
+    final = scores.join(dimension_breakdown(dims), "company_id", "left").withColumn(
         "scoring_run_id", F.lit(run_id)
     )
     return run_id, final

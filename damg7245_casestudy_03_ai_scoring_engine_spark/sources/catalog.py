@@ -35,11 +35,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension-sized tables that should always end up on the build side of
-# a broadcast join at any scale factor (region/nation are fixed-size;
-# supplier/part grow slowly relative to the fact tables).
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part"})
-
 # Per-session catalog metadata lives in the session memo
 # (functions/cache.py `session_memo`):
 # - ("schema", path): `spark.read.parquet` runs a 1-task

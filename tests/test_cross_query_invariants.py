@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from damg7245_casestudy_03_ai_scoring_engine_spark.operators import REGISTRY
-from damg7245_casestudy_03_ai_scoring_engine_spark.sources.catalog import load
+from damg7245_casestudy_03_ai_scoring_engine_spark.sources.catalog import DAY_NS, load
 
 from conftest import SF_SMOKE
 
@@ -137,8 +137,6 @@ def test_daily_peak_concurrency_semantics(spark):
     from damg7245_casestudy_03_ai_scoring_engine_spark.operators.streaming_queries import (
         daily_peak_concurrency,
     )
-    from damg7245_casestudy_03_ai_scoring_engine_spark.sources.catalog import DAY_NS
-
     H = 3_600 * 1_000_000_000
     d0, d1, d2 = 100 * DAY_NS, 101 * DAY_NS, 102 * DAY_NS
     sess = spark.createDataFrame(
@@ -265,7 +263,7 @@ def test_gapfill_locf_spine_is_dense_and_conserves_observed(spark):
         by_user.setdefault(r["user_id"], []).append(r)
     raw = (
         load(spark, SF_SMOKE, "events")
-        .select("user_id", F.expr("ts div 86400000000000").alias("d"))
+        .select("user_id", F.expr(f"ts div {DAY_NS}").alias("d"))
         .distinct()
         .collect()
     )
@@ -842,7 +840,7 @@ def test_new_returning_conserves_dau_and_ltv_conserves_value(spark):
     dau = {
         r["day_idx"]: r["n"]
         for r in load(spark, SF_SMOKE, "events")
-        .select(F.expr("ts div 86400000000000").alias("d"), "user_id")
+        .select(F.expr(f"ts div {DAY_NS}").alias("d"), "user_id")
         .distinct()
         .groupBy(F.col("d").alias("day_idx"))
         .agg(F.count(F.lit(1)).alias("n"))
@@ -1644,7 +1642,7 @@ def test_cusum_matches_python_replay(spark):
         load(spark, SF_SMOKE, "events")
         .select(
             "event_type",
-            F.expr("ts div 86400000000000").alias("day_idx"),
+            F.expr(f"ts div {DAY_NS}").alias("day_idx"),
             F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
         )
         .groupBy("event_type", "day_idx")

@@ -1,10 +1,12 @@
 """Run orchestration + audit trail (scoring/runlog.py): deterministic
-run ids, per-stage audit appends, and breakdown JSON shape."""
+run ids, per-stage audit appends, breakdown JSON shape, and one
+breakdown rule shared with the registry query."""
 
 from __future__ import annotations
 
 import json
 
+from damg7245_casestudy_03_ai_scoring_engine_spark.operators import REGISTRY
 from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.runlog import (
     run_id_for,
     score_portfolio_with_audit,
@@ -54,3 +56,28 @@ def test_score_portfolio_with_audit(spark, tmp_path):
     )
     assert run_id2 != run_id
     assert spark.read.parquet(f"{audit}/scoring_runs").count() == 2
+
+
+def test_audited_breakdown_is_the_registry_breakdown(spark, tmp_path):
+    """The audited run's breakdown JSON is byte-equal to the
+    oracle-checked `dimension_breakdown_json` for every company, and
+    each `dimension_scoring` audit row carries its breakdown entry."""
+    audit = str(tmp_path / "audit")
+    run_id, final = score_portfolio_with_audit(spark, SF_SMOKE, audit)
+    audited = {r.company_id: r.dimension_breakdown_json for r in final.collect()}
+    registry = REGISTRY["dimension_breakdown_json"].fn(spark, SF_SMOKE)
+    assert audited == {r.company_id: r.dimension_breakdown_json for r in registry.collect()}
+
+    entries = {
+        (cid, e["dimension"]): e for cid, js in audited.items() for e in json.loads(js)
+    }
+    log = spark.read.parquet(f"{audit}/audit_log")
+    payloads = [
+        json.loads(r.output_json)
+        for r in log.filter(log.step_name == "dimension_scoring").collect()
+    ]
+    assert len(payloads) == len(entries)
+    for p in payloads:
+        e = entries[(p["company_id"], p["dimension"])]
+        got = (p["score"], p["confidence"], p["evidence_count"])
+        assert got == (e["score"], e["confidence"], e["evidence_count"]), p

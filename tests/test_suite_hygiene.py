@@ -10,6 +10,9 @@ repository, so the check lives here.
 `bench.py` and `tools/*.py` run only when someone runs them, so a
 script that no longer compiles, or imports a package name that was
 deleted, would otherwise go unnoticed until then.
+
+A top-level package definition that nothing reads is dead code that
+still looks like an API; stale copies of a formula hide there.
 """
 
 from __future__ import annotations
@@ -96,3 +99,43 @@ def test_scripts_compile_and_import_existing_names(tmp_path):
         if (found := _missing_package_names(path))
     }
     assert not missing, f"scripts import names that no longer exist: {missing}"
+
+
+def _is_registered_query(node: ast.stmt) -> bool:
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+        for d in getattr(node, "decorator_list", ())
+    )
+
+
+def _read_names(tree: ast.Module):
+    """Names a module reads: loaded names, attributes, imported names."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
+            yield node.id
+        elif isinstance(node, ast.Attribute):
+            yield node.attr
+        elif isinstance(node, ast.alias):
+            yield node.name.rsplit(".", 1)[-1]
+
+
+def test_every_top_level_package_name_is_referenced():
+    package = glob.glob(os.path.join(REPO, PKG, "**", "*.py"), recursive=True)
+    readers = set(package + SCRIPTS + [os.path.join(REPO, "__spark_entry__.py")])
+    for d in ("tests", "tools", "perfbench"):
+        readers.update(glob.glob(os.path.join(REPO, d, "**", "*.py"), recursive=True))
+    read = set()
+    for path in readers:
+        with open(path, encoding="utf-8") as fh:
+            read.update(_read_names(ast.parse(fh.read(), filename=path)))
+    unread = []
+    for path in sorted(package):
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), filename=path)
+        exempt = read | {n.name for n in tree.body if _is_registered_query(n)}
+        unread += [
+            f"{os.path.relpath(path, REPO)}: {name}"
+            for name in _top_level_bindings(tree)
+            if name not in exempt and not (name.startswith("__") and name.endswith("__"))
+        ]
+    assert not unread, f"top-level package names referenced nowhere: {unread}"

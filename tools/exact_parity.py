@@ -1,8 +1,10 @@
 """Ad-hoc EXACT (bit-level float) Spark↔DuckDB parity check for one or
-more registry queries at an arbitrary sf dir and shuffle-partition
-count — reproduces the driver's value-hash gate locally.
+more registry queries at an arbitrary sf dir — reproduces the
+driver's value-hash gate locally.  The session takes `get_spark`'s
+defaults: `SPARK_GRAFT_CPUS` cores (else all of them) and
+min(32, max(4, cores)) shuffle partitions.
 
-Usage: python tools/exact_parity.py [--sf DIR] [--parts N] q1 [q2 ...]
+Usage: python tools/exact_parity.py [--sf DIR] q1 [q2 ...]
        python tools/exact_parity.py --window   # driver's 50-query window
 
 Per-query SF guidance (r12, r11 verdict #7) — the DuckDB side
@@ -60,7 +62,6 @@ def canon(rows, cols):
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--parts", type=int, default=32)
     ap.add_argument("--window", action="store_true")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
@@ -77,10 +78,7 @@ def main() -> int:
     import duckdb
 
     spark = get_spark(
-        "exact-parity",
-        cpus=32,
-        shuffle_partitions=args.parts,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
+        "exact-parity", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
     con = duckdb.connect()
     for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
