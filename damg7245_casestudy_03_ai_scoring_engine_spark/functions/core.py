@@ -131,6 +131,22 @@ def round_stable(col: Column | str, scale: int) -> Column:
     return F.floor(c * F.lit(p) + F.lit(0.5)) / F.lit(p)
 
 
+def topk_ranked(df: DataFrame, over_sql: str, k: int) -> DataFrame:
+    """The rank-filter tail — the reference's top-5 keywords per
+    dimension (evidence_mapper.py:399-407) and latest score per company
+    (`ROW_NUMBER() … = 1`, routers/scoring.py:222-241): `df` plus an
+    INT `rk` = row_number() OVER (`over_sql`), keeping rk <= k.
+
+    `over_sql` is the OVER body (`PARTITION BY q ORDER BY s DESC, id`;
+    a bare `ORDER BY …` ranks globally), so ties break exactly as its
+    ORDER BY says.  The rank and its bound sit next to each other, so
+    Catalyst plans the Partial/Final `WindowGroupLimit` pair: each map
+    task keeps only every group's top k rows before the shuffle."""
+    return df.withColumn("rk", F.expr(f"row_number() OVER ({over_sql})")).filter(
+        f"rk <= {k}"
+    )
+
+
 def exact_pearson(
     pairs: DataFrame, key: str, x: str, y: str, n_out: str, r_out: str
 ) -> DataFrame:

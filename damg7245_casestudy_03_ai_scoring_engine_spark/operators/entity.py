@@ -24,9 +24,10 @@ recall without widening any single block.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.core import topk_ranked
 from ..sources.catalog import load
 from .registry import register
 
@@ -102,17 +103,12 @@ def fuzzy_entity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("dist", dist)
         .filter(F.col("dist") <= _MAX_DIST)
     )
-    w = Window.partitionBy("src_key").orderBy("dist", "cand_key")
-    return (
-        cand.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select(
-            "src_key",
-            "typo_name",
-            F.col("cand_key").alias("matched_key"),
-            F.col("dist").cast("int").alias("dist"),
-            F.when(F.col("cand_name") == F.col("orig_name"), 1)
-            .otherwise(0)
-            .alias("is_correct"),
-        )
+    return topk_ranked(cand, "PARTITION BY src_key ORDER BY dist, cand_key", 1).select(
+        "src_key",
+        "typo_name",
+        F.col("cand_key").alias("matched_key"),
+        F.col("dist").cast("int").alias("dist"),
+        F.when(F.col("cand_name") == F.col("orig_name"), 1)
+        .otherwise(0)
+        .alias("is_correct"),
     )

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.core import topk_ranked
 from ..scoring.config import SOURCE_PROFILES, dimension_case_sql
 from ..scoring.evidence import (
     RUBRIC_LEVELS,
@@ -164,17 +165,10 @@ def source_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8: keyword-frequency rollup per source bucket with top-3
     keywords (reference evidence_mapper.py:360-407 build_source_payloads
     + top-5 keyword maps)."""
-    from pyspark.sql import Window
-
     ev = demo_evidence(spark, sf_dir)
     m = keyword_matches(ev, DEMO_KEYWORD_PAIRS)
     freq = m.groupBy("source", "keyword").agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.partitionBy("source").orderBy(F.desc("cnt"), F.asc("keyword"))
-    return (
-        freq.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .withColumn("rk", F.col("rk").cast("int"))
-    )
+    return topk_ranked(freq, "PARTITION BY source ORDER BY cnt DESC, keyword ASC", 3)
 
 
 @register(
@@ -324,10 +318,7 @@ def top_keywords_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = demo_evidence(spark, sf_dir)
     m = keyword_matches(ev, DEMO_KEYWORD_PAIRS)
     counts = m.groupBy("dimension", "keyword").agg(F.count(F.lit(1)).alias("c"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("dimension").orderBy(F.desc("c"), F.asc("keyword"))
-    top = counts.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 5)
+    top = topk_ranked(counts, "PARTITION BY dimension ORDER BY c DESC, keyword ASC", 5)
     return top.groupBy("dimension").agg(
         F.array_join(
             F.transform(

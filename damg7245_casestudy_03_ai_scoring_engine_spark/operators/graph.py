@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.cache import tracked_persist
+from ..functions.core import topk_ranked
 from ..sources.catalog import load
 from .registry import register
 
@@ -168,7 +169,7 @@ def pagerank_top_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.orderBy(F.desc("pagerank"), F.asc("node"))
     return (
-        top.withColumn("rk", F.row_number().over(w).cast("int"))
+        top.withColumn("rk", F.row_number().over(w))
         .select("rk", "node", "kind", "pagerank")
     )
 
@@ -585,8 +586,6 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     The DuckDB twin unrolls the same 4 rounds; with labels, counts,
     and tie-breaks all integers, parity is exact with no float
     analysis anywhere (see _lpa_oracle)."""
-    from pyspark.sql import Window
-
     edges = transaction_edges(spark, sf_dir).localCheckpoint()
     labels = (
         edges.select(F.col("src").alias("node"))
@@ -594,7 +593,6 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("node", F.col("node").alias("lab"))
         .localCheckpoint()
     )
-    w = Window.partitionBy("node").orderBy(F.desc("cnt"), F.asc("lab"))
     for _ in range(_LPA_ITERS):
         cnt = (
             edges.join(labels, edges.src == labels.node)
@@ -603,8 +601,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
         labels = (
-            cnt.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
+            topk_ranked(cnt, "PARTITION BY node ORDER BY cnt DESC, lab ASC", 1)
             .select("node", "lab")
             .localCheckpoint()
         )

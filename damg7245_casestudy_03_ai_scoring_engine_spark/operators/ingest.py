@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.core import topk_ranked
 from ..sources.catalog import load
 from .registry import register
 
@@ -443,16 +444,11 @@ def submissions_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("form").isin(*_WANTED_FORMS))
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("source", "form").orderBy(
-        F.desc("filing_date"), F.desc("doc_id")
-    )
-    return (
-        rows.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= _PER_FORM)
-        .select("source", "form", "doc_id", "filing_date", "rk")
-    )
+    return topk_ranked(
+        rows,
+        "PARTITION BY source, form ORDER BY filing_date DESC, doc_id DESC",
+        _PER_FORM,
+    ).select("source", "form", "doc_id", "filing_date", "rk")
 
 
 # --- S11/S12/S13: job-board JSON normalization (tolerant mapping) ----------

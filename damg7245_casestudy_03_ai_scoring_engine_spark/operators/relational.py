@@ -21,7 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.core import clamp, conf_floor_sql, safe_div
+from ..functions.core import clamp, conf_floor_sql, safe_div, topk_ranked
 from ..sources.catalog import DAY_NS, load, ns
 from .registry import register
 
@@ -721,16 +721,13 @@ def latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     DESC) = 1` (app/routers/scoring.py:222-241).  One shuffle on the
     partition key; deterministic tie-break on the unique key."""
     o = load(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(F.desc("o_orderdate"), F.desc("o_orderkey"))
-    return (
-        o.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
-            F.round("o_totalprice", 2).alias("total_price"),
-        )
+    return topk_ranked(
+        o, "PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC", 1
+    ).select(
+        "o_custkey",
+        "o_orderkey",
+        F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
+        F.round("o_totalprice", 2).alias("total_price"),
     )
 
 
@@ -822,16 +819,13 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("s_nationkey", "l_suppkey")
         .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
     )
-    w = Window.partitionBy("s_nationkey").orderBy(F.desc("revenue"), F.asc("l_suppkey"))
-    return (
-        supp_rev.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select(
-            F.col("s_nationkey").alias("nation_key"),
-            F.col("l_suppkey").alias("supp_key"),
-            F.round("revenue", 2).alias("revenue"),
-            F.col("rk").cast("int").alias("rk"),
-        )
+    return topk_ranked(
+        supp_rev, "PARTITION BY s_nationkey ORDER BY revenue DESC, l_suppkey ASC", 3
+    ).select(
+        F.col("s_nationkey").alias("nation_key"),
+        F.col("l_suppkey").alias("supp_key"),
+        F.round("revenue", 2).alias("revenue"),
+        "rk",
     )
 
 
@@ -874,14 +868,8 @@ def pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIMIT/OFFSET pagination via a row_number window (reference
     app/routers/companies.py:113-170).  Portable across Spark
     deployments (OFFSET needs 3.4+/Connect)."""
-    c = load(spark, sf_dir, "customer")
-    w = Window.orderBy("c_custkey")
-    return (
-        c.select("c_custkey", "c_name")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn").between(101, 150))
-        .drop("rn")
-    )
+    c = load(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    return topk_ranked(c, "ORDER BY c_custkey", 150).filter("rk >= 101").drop("rk")
 
 
 @register(
@@ -4374,22 +4362,15 @@ def popularity_recsys_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     min over the broadcast 10-row popularity list joined to the
     deduped customer-supplier truth grain.
     """
-    from pyspark.sql import Window
-
     from ..functions.core import round_stable
 
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pop = (
-        li.groupBy("l_suppkey")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn(
-            "rnk",
-            F.row_number().over(Window.orderBy(F.desc("cnt"), F.asc("l_suppkey"))),
-        )
-        .filter(F.col("rnk") <= 10)
-        .select("l_suppkey", "rnk")
-    )
+    pop = topk_ranked(
+        li.groupBy("l_suppkey").agg(F.count(F.lit(1)).alias("cnt")),
+        "ORDER BY cnt DESC, l_suppkey ASC",
+        10,
+    ).select("l_suppkey", "rk")
     truth = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select("o_custkey", "l_suppkey")
@@ -4398,7 +4379,7 @@ def popularity_recsys_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits = (
         truth.join(F.broadcast(pop), "l_suppkey")
         .groupBy("o_custkey")
-        .agg(F.min("rnk").cast("long").alias("first_hit"))
+        .agg(F.min("rk").cast("long").alias("first_hit"))
     )
     users = truth.agg(
         F.countDistinct("o_custkey").cast("long").alias("n_users")
@@ -4538,17 +4519,9 @@ def item_cooccurrence_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             " div (CAST(c_i AS DECIMAL(38,0)) * c_p) AS BIGINT) AS lift_ppm",
         )
     )
-    # single-parse rank tail (r13, guide §5/§7.3): same window, same
-    # filter, same INT rk as the former withColumn/filter/cast chain
-    return (
-        scored.selectExpr(
-            "*",
-            "CAST(row_number() OVER (PARTITION BY item ORDER BY "
-            "lift_ppm DESC, c_ab DESC, partner ASC) AS INT) AS rk",
-        )
-        .filter("rk <= 3")
-        .select("item", "partner", "c_ab", "lift_ppm", "rk")
-    )
+    return topk_ranked(
+        scored, "PARTITION BY item ORDER BY lift_ppm DESC, c_ab DESC, partner ASC", 3
+    ).select("item", "partner", "c_ab", "lift_ppm", "rk")
 
 
 @register(

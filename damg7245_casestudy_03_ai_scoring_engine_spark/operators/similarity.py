@@ -26,6 +26,7 @@ from ..functions.cache import (
     session_persist,
     tracked_persist,
 )
+from ..functions.core import topk_ranked
 from ..functions.vectors import cosine_similarity_sql, dot_sql, l2_norm_sql
 from ..sources.catalog import load, read_parquet_memo
 from ..sources.scratch import scratch_dir
@@ -33,6 +34,8 @@ from .registry import register
 
 _N_QUERIES = 10
 _TOP_K = 5
+# The family's ranking: per query, best cosine first, cand_id breaks ties.
+_BY_COSINE = "PARTITION BY query_id ORDER BY cosine DESC, cand_id ASC"
 
 # Margin-adaptive IVF probing (r8).  A fixed probe count is the wrong
 # knob once the corpus loses cluster structure: on the decorrelated
@@ -122,7 +125,7 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
         )
     )
-    return _topk_ranked(scored, "query_id", "cosine DESC, cand_id ASC", _TOP_K)
+    return topk_ranked(scored, _BY_COSINE, _TOP_K)
 
 
 # Shared by ann_ivf_topk (logical bucketing) and
@@ -256,20 +259,6 @@ def _ivf_cell_scores(vectors: DataFrame, cent_flat: DataFrame) -> DataFrame:
     )
 
 
-def _topk_ranked(df: DataFrame, part: str, order_sql: str, k: int) -> DataFrame:
-    """The family's rank-filter tail — row_number window, keep rows
-    with rk <= k, rk typed INT — as two single-parse ops (r13, guide
-    §5/§7.3: the former withColumn/filter/withColumn chain cost ~12
-    py4j round trips per use and the ANN family builds it four times
-    per query).  Identical semantics: same window, same filter, same
-    output columns (input columns + rk)."""
-    return df.selectExpr(
-        "*",
-        f"CAST(row_number() OVER (PARTITION BY {part} "
-        f"ORDER BY {order_sql}) AS INT) AS rk",
-    ).filter(f"rk <= {k}")
-
-
 def _ivf_quantizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The coarse quantizer (label, i, cx) — per-label dim means —
     memoized + persisted per (session, sf) like the filing itself: at
@@ -301,12 +290,9 @@ def _ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         scores = _ivf_cell_scores(
             emb.select("vec_id", "embedding"), _ivf_quantizer(spark, sf_dir)
         )
-        w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("label"))
-        return (
-            scores.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .select("vec_id", F.col("label").alias("cell"))
-        )
+        return topk_ranked(
+            scores, "PARTITION BY vec_id ORDER BY cosine DESC, label ASC", 1
+        ).select("vec_id", F.col("label").alias("cell"))
 
     return session_persist(spark, f"ivf.cells.{tag}", build)
 
@@ -392,7 +378,7 @@ def _ivf_search(
             F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
         )
     )
-    return _topk_ranked(scored, "query_id", "cosine DESC, cand_id ASC", _TOP_K)
+    return topk_ranked(scored, _BY_COSINE, _TOP_K)
 
 
 @register(
@@ -978,8 +964,8 @@ def lsh_pairs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_b").alias("item"), F.col("vec_a").alias("partner"), "cosine"
         )
     )
-    return _topk_ranked(
-        directed, "item", "cosine DESC, partner ASC", _TOPK_PAIRS_K
+    return topk_ranked(
+        directed, "PARTITION BY item ORDER BY cosine DESC, partner ASC", _TOPK_PAIRS_K
     ).select("item", "partner", "cosine", "rk")
 
 
@@ -1084,7 +1070,7 @@ def ann_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     local = emb.select("vec_id", "label", "embedding").mapInPandas(
         kernel, schema=schema
     )
-    return _topk_ranked(local, "query_id", "cosine DESC, cand_id ASC", _TOP_K)
+    return topk_ranked(local, _BY_COSINE, _TOP_K)
 
 
 @register(
@@ -1206,12 +1192,7 @@ def semantic_doc_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    topk = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .withColumn("rk", F.col("rk").cast("int"))
-    )
+    topk = topk_ranked(scored, _BY_COSINE, 3)
     docs = load(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("cand_id"),
         F.col("lang").alias("cand_lang"),
@@ -1267,7 +1248,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
         )
     )
-    return _topk_ranked(scored, "query_id", "cosine DESC, cand_id ASC", _TOP_K)
+    return topk_ranked(scored, _BY_COSINE, _TOP_K)
 
 
 @register(
@@ -1313,10 +1294,8 @@ def semantic_cluster_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cluster", "token")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    w_top = Window.partitionBy("cluster").orderBy(F.desc("n"), F.asc("token"))
     topics = (
-        tok_counts.withColumn("rk", F.row_number().over(w_top))
-        .filter(F.col("rk") <= 5)
+        topk_ranked(tok_counts, "PARTITION BY cluster ORDER BY n DESC, token ASC", 5)
         .groupBy("cluster")
         .agg(F.concat_ws(",", F.collect_list("token")).alias("top_tokens"))
     )
@@ -1555,37 +1534,33 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    w = Window.partitionBy("query_id").orderBy("adc", F.asc("cand_id"))
-    shortlist = (
+    shortlist = topk_ranked(
         encoded.crossJoin(F.broadcast(lut_df))
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             F.col("vec_id").alias("cand_id"),
             F.round(adc, 6).alias("adc"),
-        )
-        .withColumn("srk", F.row_number().over(w))
-        .filter(F.col("srk") <= shortlist_k)
-        .drop("srk")
-    )
+        ),
+        "PARTITION BY query_id ORDER BY adc, cand_id ASC",
+        shortlist_k,
+    ).drop("rk")
 
     # --- exact re-rank of the shortlist
     q = nv.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("nv").alias("qv")
     )
     cand = nv.select(F.col("vec_id").alias("cand_id"), F.col("nv").alias("cv"))
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
+    return topk_ranked(
         shortlist.join(q, "query_id")
         .join(cand, "cand_id")
         .select(
             "query_id",
             "cand_id",
             F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
-        )
-        .withColumn("rk", F.row_number().over(w2))
-        .filter(F.col("rk") <= _TOP_K)
-        .withColumn("rk", F.col("rk").cast("int"))
+        ),
+        _BY_COSINE,
+        _TOP_K,
     )
 
 
@@ -1630,8 +1605,6 @@ def negative_sample_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (h, neg_id), so the composition is EXACTLY the global top-k (the
     per-bucket top-k is a superset of each bucket's contribution to
     the global one) — the oracle replays the single-level form."""
-    from pyspark.sql import Window
-
     emb = load(spark, sf_dir, "embeddings", fan_out=True)
     q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("label").alias("q_label")
@@ -1662,18 +1635,10 @@ def negative_sample_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.pmod(F.xxhash64("vec_id"), F.lit(32))).alias("salt"),
         )
     )
-    w_partial = Window.partitionBy("query_id", "salt").orderBy("h", "neg_id")
-    survivors = (
-        scored.withColumn("prk", F.row_number().over(w_partial))
-        .filter(F.col("prk") <= 5)
-        .drop("prk", "salt")
-    )
-    w_final = Window.partitionBy("query_id").orderBy("h", "neg_id")
-    return (
-        survivors.withColumn("rk", F.row_number().over(w_final))
-        .filter(F.col("rk") <= 5)
-        .withColumn("rk", F.col("rk").cast("int"))
-    )
+    survivors = topk_ranked(
+        scored, "PARTITION BY query_id, salt ORDER BY h, neg_id", 5
+    ).drop("rk", "salt")
+    return topk_ranked(survivors, "PARTITION BY query_id ORDER BY h, neg_id", 5)
 
 
 def _cell_partitioned_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1753,13 +1718,7 @@ def ann_ivf_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _TOP_K)
-        .withColumn("rk", F.col("rk").cast("int"))
-    )
-
+    return topk_ranked(scored, _BY_COSINE, _TOP_K)
 
 
 # --- deterministic Lloyd k-means (oracle-checked clustering) ----------------
@@ -1930,11 +1889,8 @@ def kmeans_lloyd_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     final = assign(cent)
     lab = final.groupBy("cid", "label").agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.partitionBy("cid").orderBy(F.desc("cnt"), F.asc("label"))
-    maj = (
-        lab.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("cid", F.col("label").alias("majority_label"), F.col("cnt").alias("majority_cnt"))
+    maj = topk_ranked(lab, "PARTITION BY cid ORDER BY cnt DESC, label ASC", 1).select(
+        "cid", F.col("label").alias("majority_label"), F.col("cnt").alias("majority_cnt")
     )
     sz = final.groupBy("cid").agg(F.count(F.lit(1)).alias("n_members"))
     return sz.join(maj, "cid").select(
@@ -2013,16 +1969,15 @@ def mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.expr(cosine_similarity_sql("av", "bv")), 6).alias("cosine"),
         )
     )
-    w = Window.partitionBy("k").orderBy(F.desc("cosine"), F.asc("nb"))
     # Persisted (r13, guide §2.4): the mutuality check self-joins this
     # frame, and without materialization BOTH join branches re-run the
     # per-block quadratic cosine pass + argmax window — the expensive
     # candidate stage executed twice per invocation.  nn is one row
     # per vector (tiny).
     nn = tracked_persist(
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("k", "nb", "cosine"),
+        topk_ranked(cand, "PARTITION BY k ORDER BY cosine DESC, nb ASC", 1).select(
+            "k", "nb", "cosine"
+        ),
         "mutual_nn_pairs.nn",
     )
     other = nn.select(F.col("k").alias("yk"), F.col("nb").alias("ynb"))
@@ -2111,12 +2066,7 @@ def rag_context_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id", "cand_id", F.expr(cosine_similarity_sql("qv", "cv")).alias("cosine")
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    topk = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "cand_id", F.col("rk").cast("int").alias("rk"))
-    )
+    topk = topk_ranked(scored, _BY_COSINE, 5).select("query_id", "cand_id", "rk")
     docs = load(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("cand_id"), F.col("n_chars").cast("bigint").alias("cand_chars")
     )
@@ -2479,11 +2429,8 @@ def hard_negative_mining_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("cosine") < F.lit(_HARD_NEG_MAX_COS))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neg_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _TOP_K)
-        .withColumn("rk", F.col("rk").cast("int"))
+    return topk_ranked(
+        scored, "PARTITION BY query_id ORDER BY cosine DESC, neg_id ASC", _TOP_K
     )
 
 
@@ -2818,19 +2765,13 @@ def _refile_oversized_impl(
         .groupBy("vec_id", "cell", "half")
         .agg(_cosine_agg("x", "cx").alias("cosine"))
     )
-    refiled = (
-        resc.selectExpr(
-            "*",
-            "row_number() OVER "
-            "(PARTITION BY vec_id ORDER BY cosine DESC, half ASC) AS rk",
-        )
-        .filter("rk = 1")
-        .selectExpr(
-            "vec_id",
-            "CAST(cell * 10 + 1 + half AS BIGINT) AS new_cell",
-            "CAST(cell AS BIGINT) AS parent_cell",
-            "TRUE AS was_split",
-        )
+    refiled = topk_ranked(
+        resc, "PARTITION BY vec_id ORDER BY cosine DESC, half ASC", 1
+    ).selectExpr(
+        "vec_id",
+        "CAST(cell * 10 + 1 + half AS BIGINT) AS new_cell",
+        "CAST(cell AS BIGINT) AS parent_cell",
+        "TRUE AS was_split",
     )
     kept = cells.join(F.broadcast(refile), "cell", "left_anti").selectExpr(
         "vec_id",
@@ -2905,16 +2846,14 @@ def _ivf_file_by_frozen(
     quantizer — the exact `_ivf_cells` arithmetic (argmax cosine, 6dp,
     label-asc ties), shared by the standing filing, the delta filing,
     and the pytest incremental==rebuild law."""
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("label"))
-    return (
+    return topk_ranked(
         _ivf_cell_scores(
             vectors.select("vec_id", "embedding"),
             _ivf_frozen_quantizer(spark, sf_dir),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", F.col("label").alias("cell"))
-    )
+        ),
+        "PARTITION BY vec_id ORDER BY cosine DESC, label ASC",
+        1,
+    ).select("vec_id", F.col("label").alias("cell"))
 
 
 def _ivf_standing_filing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3514,14 +3453,9 @@ def ivf_codebook_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id", "cand_cell")
         .agg(_cosine_agg("x", "cx").alias("cosine"))
     )
-    wbest = Window.partitionBy("vec_id").orderBy(
-        F.desc("cosine"), F.asc("cand_cell")
-    )
-    refiled = (
-        resc.withColumn("rk", F.row_number().over(wbest))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", F.col("cand_cell").alias("cell"))
-    )
+    refiled = topk_ranked(
+        resc, "PARTITION BY vec_id ORDER BY cosine DESC, cand_cell ASC", 1
+    ).select("vec_id", F.col("cand_cell").alias("cell"))
     after_means = (
         refiled.join(mem_flat.select("vec_id", "i", "x"), "vec_id")
         .groupBy("cell", "i")
@@ -4283,15 +4217,9 @@ def ann_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("adc")
         )
     )
-    short = (
-        adc.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY query_id "
-            "ORDER BY adc ASC, cand_id ASC) AS srk",
-        )
-        .filter(f"srk <= {shortlist_k}")
-        .select("query_id", "cand_id")
-    )
+    short = topk_ranked(
+        adc, "PARTITION BY query_id ORDER BY adc ASC, cand_id ASC", shortlist_k
+    ).select("query_id", "cand_id")
     q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
@@ -4305,7 +4233,7 @@ def ann_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
         )
     )
-    return _topk_ranked(rer, "query_id", "cosine DESC, cand_id ASC", _TOP_K)
+    return topk_ranked(rer, _BY_COSINE, _TOP_K)
 
 
 # --- the maintenance decision EXECUTED ----------------------------------------

@@ -28,15 +28,19 @@ narrow (no shuffle before the cell join).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.core import topk_ranked
 from ..sources.catalog import load
 from .registry import register
 
 _GRID = 1_000_000  # coordinate space is [0, _GRID)²
 _RADIUS = 5_000  # join radius; cell size == radius
 _R2 = _RADIUS * _RADIUS
+# Nearest neighbour per point: a (dist2, key) total order, so ties are
+# deterministic on both engines.
+_NEAREST = "PARTITION BY ka ORDER BY dist2, kb"
 
 # Deterministic point derivation — spelled identically in the oracle.
 _X_EXPR = f"(c_custkey * 48271 + 11) % {_GRID}"
@@ -155,16 +159,10 @@ def spatial_nearest_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
     (both directions kept); the argmin is a per-key window with a
     (dist2, key) total order, so ties are deterministic on both
     engines.  Oracle: brute-force candidates + identical ranking."""
-    w = Window.partitionBy("ka").orderBy("dist2", "kb")
-    return (
-        _blocked_pairs(spark, sf_dir)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("ka").alias("custkey"),
-            F.col("kb").alias("nearest_custkey"),
-            "dist2",
-        )
+    return topk_ranked(_blocked_pairs(spark, sf_dir), _NEAREST, 1).select(
+        F.col("ka").alias("custkey"),
+        F.col("kb").alias("nearest_custkey"),
+        "dist2",
     )
 
 
@@ -215,11 +213,8 @@ def _ring_candidates(pts: DataFrame, pending: DataFrame, cell: int) -> DataFrame
         .withColumn("dist2", d2.cast("long"))
         .filter(F.col("dist2") <= F.lit(cell) * F.lit(cell))
     )
-    w = Window.partitionBy("ka").orderBy("dist2", "kb")
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(F.col("ka").alias("k"), F.col("kb").alias("nn"), "dist2")
+    return topk_ranked(cand, _NEAREST, 1).select(
+        F.col("ka").alias("k"), F.col("kb").alias("nn"), "dist2"
     )
 
 
@@ -282,15 +277,13 @@ def spatial_nn_expanding_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     d2 = (F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb")) + (
         F.col("ya") - F.col("yb")
     ) * (F.col("ya") - F.col("yb"))
-    w = Window.partitionBy("ka").orderBy("dist2", "kb")
-    strag = (
+    strag = topk_ranked(
         F.broadcast(a)
         .join(b, F.col("ka") != F.col("kb"))
-        .withColumn("dist2", d2.cast("long"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(F.col("ka").alias("k"), F.col("kb").alias("nn"), "dist2")
-    )
+        .withColumn("dist2", d2.cast("long")),
+        _NEAREST,
+        1,
+    ).select(F.col("ka").alias("k"), F.col("kb").alias("nn"), "dist2")
     return resolved.unionAll(strag).select(
         F.col("k").alias("custkey"),
         F.col("nn").alias("nearest_custkey"),

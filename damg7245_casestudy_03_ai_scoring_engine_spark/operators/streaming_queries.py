@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.core import topk_ranked
 from ..sources.catalog import DAY_NS, HOUR_NS, WEEK_NS, load
 from ..streaming.jobs import SESSION_GAP_NS, sessionize_batch, window_counts
 from .registry import register
@@ -451,8 +452,6 @@ def stream_dedup_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one window over the dedup-key partition — the same
     single hash shuffle the streaming state store partitions by."""
     ev = load(spark, sf_dir, "events")
-    from pyspark.sql import Window
-
     keyed = ev.select(
         "user_id",
         "event_type",
@@ -461,20 +460,15 @@ def stream_dedup_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"ts div {HOUR_NS}").alias("hour_idx"),
         F.col("ts").alias("ts_ns"),
     )
-    w = Window.partitionBy("user_id", "event_type", "hour_idx").orderBy(
-        "ts_ns", "event_id"
-    )
-    return (
-        keyed.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select(
-            "user_id",
-            "event_type",
-            F.col("hour_idx").cast("bigint").alias("hour_idx"),
-            F.col("event_id").alias("first_event_id"),
-            F.col("ts_ns").alias("first_ts_ns"),
-            F.round("value", 4).alias("first_value"),
-        )
+    return topk_ranked(
+        keyed, "PARTITION BY user_id, event_type, hour_idx ORDER BY ts_ns, event_id", 1
+    ).select(
+        "user_id",
+        "event_type",
+        F.col("hour_idx").cast("bigint").alias("hour_idx"),
+        F.col("event_id").alias("first_event_id"),
+        F.col("ts_ns").alias("first_ts_ns"),
+        F.round("value", 4).alias("first_value"),
     )
 
 
@@ -1958,25 +1952,8 @@ def cogroup_click_purchase_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KM_CENSOR_DAYS = 7  # active within the last N days => censored (not churned)
 
-
-@register(
-    "kaplan_meier_churn",
-    survey="M14-adjacent,W5 (extension: Kaplan-Meier survival with censoring)",
-    oracle=f"""
-WITH span AS (
-    SELECT user_id,
-           min(epoch_ns(ts) // {DAY_NS}) AS d0,
-           max(epoch_ns(ts) // {DAY_NS}) AS d1
-    FROM events GROUP BY user_id
-),
-mx AS (SELECT max(d1) AS dmax FROM span),
-u AS (
-    SELECT user_id, d1 - d0 AS dur,
-           CASE WHEN d1 >= (SELECT dmax FROM mx) - {_KM_CENSOR_DAYS}
-                THEN 1 ELSE 0 END AS censored
-    FROM span
-),
-g AS (
+# DuckDB twin of `_km_curve`, read from a user-grain CTE `u (dur, censored)`.
+_KM_TAIL_SQL = """g AS (
     SELECT dur,
            CAST(sum(1 - censored) AS BIGINT) AS d,
            CAST(sum(censored) AS BIGINT) AS c
@@ -1998,20 +1975,19 @@ surv AS (
     SELECT dur, d, c, n_at_risk,
            list(factor) OVER (ORDER BY dur ROWS UNBOUNDED PRECEDING) AS fs
     FROM fct
+),
+km AS (
+    SELECT dur, d, c, n_at_risk,
+           floor(list_reduce(fs, (a, b) -> a * b) * 1000000 + 0.5) / 1000000
+               AS survival
+    FROM surv
 )
-SELECT dur AS duration_days, d AS n_churned, c AS n_censored, n_at_risk,
-       floor(list_reduce(fs, (a, b) -> a * b) * 1000000 + 0.5) / 1000000
-           AS survival
-FROM surv
-""",
-)
-def kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kaplan-Meier survival curve of user lifetime (days between
-    first and last activity), right-censoring users still active in
-    the final week — survival analysis, the retention family's
-    statistically honest form: censored users leave the at-risk pool
-    without counting as churn, which a naive retention ratio gets
-    wrong.
+"""
+
+
+def _km_curve(u: DataFrame) -> DataFrame:
+    """Kaplan-Meier curve of a user grain (dur, censored): per duration
+    `d` events, `c` censorings, `n_at_risk` and `survival` S(t).
 
     Numerics: at-risk counts are EXACT int64 reverse-cumulative sums
     over the duration grain; each step factor (n−d)/n is one IEEE
@@ -2020,29 +1996,10 @@ def kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     (windowed collect + multiply-reduce — bit-identical doubles
     before round_stable(6), the EWMA/Holt fold contract).
 
-    Scale shape: one user-grain aggregate over the fact (the work),
-    a broadcast scalar max, then everything rides the DURATION grain
-    — bounded by the observation span in days (the month-lag
-    precedent class), where two windows and the fold are O(span²)
-    worst-case on a few hundred rows.
-    """
-    from pyspark.sql import Window
-
-    span = (
-        load(spark, sf_dir, "events", fan_out=True)
-        .groupBy("user_id")
-        .agg(
-            F.min(F.expr(f"ts div {DAY_NS}")).alias("d0"),
-            F.max(F.expr(f"ts div {DAY_NS}")).alias("d1"),
-        )
-    )
-    mx = span.agg(F.max("d1").alias("dmax"))
-    u = span.crossJoin(F.broadcast(mx)).select(
-        (F.col("d1") - F.col("d0")).alias("dur"),
-        (F.col("d1") >= F.col("dmax") - _KM_CENSOR_DAYS)
-        .cast("long")
-        .alias("censored"),
-    )
+    Scale shape: everything rides the DURATION grain — bounded by the
+    observation span in days (the month-lag precedent class), where
+    two windows and the fold are O(span²) worst-case on a few hundred
+    rows."""
     g = u.groupBy("dur").agg(
         F.sum(F.lit(1) - F.col("censored")).alias("d"),
         F.sum("censored").alias("c"),
@@ -2068,13 +2025,68 @@ def kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda a, b: a * b,
     )
     return surv.select(
+        "dur",
+        "d",
+        "c",
+        "n_at_risk",
+        (F.floor(prod * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias("survival"),
+    )
+
+
+@register(
+    "kaplan_meier_churn",
+    survey="M14-adjacent,W5 (extension: Kaplan-Meier survival with censoring)",
+    oracle=f"""
+WITH span AS (
+    SELECT user_id,
+           min(epoch_ns(ts) // {DAY_NS}) AS d0,
+           max(epoch_ns(ts) // {DAY_NS}) AS d1
+    FROM events GROUP BY user_id
+),
+mx AS (SELECT max(d1) AS dmax FROM span),
+u AS (
+    SELECT user_id, d1 - d0 AS dur,
+           CASE WHEN d1 >= (SELECT dmax FROM mx) - {_KM_CENSOR_DAYS}
+                THEN 1 ELSE 0 END AS censored
+    FROM span
+),
+{_KM_TAIL_SQL}SELECT dur AS duration_days, d AS n_churned, c AS n_censored, n_at_risk,
+       survival
+FROM km
+""",
+)
+def kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Kaplan-Meier survival curve of user lifetime (days between
+    first and last activity), right-censoring users still active in
+    the final week — survival analysis, the retention family's
+    statistically honest form: censored users leave the at-risk pool
+    without counting as churn, which a naive retention ratio gets
+    wrong.
+
+    Scale shape: one user-grain aggregate over the fact (the work),
+    a broadcast scalar max, then `_km_curve` on the duration grain.
+    """
+    span = (
+        load(spark, sf_dir, "events", fan_out=True)
+        .groupBy("user_id")
+        .agg(
+            F.min(F.expr(f"ts div {DAY_NS}")).alias("d0"),
+            F.max(F.expr(f"ts div {DAY_NS}")).alias("d1"),
+        )
+    )
+    mx = span.agg(F.max("d1").alias("dmax"))
+    u = span.crossJoin(F.broadcast(mx)).select(
+        (F.col("d1") - F.col("d0")).alias("dur"),
+        (F.col("d1") >= F.col("dmax") - _KM_CENSOR_DAYS)
+        .cast("long")
+        .alias("censored"),
+    )
+    return _km_curve(u).select(
         F.col("dur").alias("duration_days"),
         F.col("d").alias("n_churned"),
         F.col("c").alias("n_censored"),
         "n_at_risk",
-        (F.floor(prod * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "survival"
-        ),
+        "survival",
     )
 
 
@@ -2769,20 +2781,13 @@ def trending_users_decayed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.lit(0))
         ).alias("score_scaled")
     )
-    from pyspark.sql import Window
-
-    rk = sc.withColumn(
-        "rn",
-        F.row_number().over(
-            Window.orderBy(F.desc("score_scaled"), F.asc("user_id"))
-        ),
-    ).filter(F.col("rn") <= 20)
+    rk = topk_ranked(sc, "ORDER BY score_scaled DESC, user_id ASC", 20)
     from ..functions.core import round_stable
 
     return rk.select(
         "user_id",
         "score_scaled",
-        F.col("rn").cast("long").alias("trend_rank"),
+        F.col("rk").cast("long").alias("trend_rank"),
         round_stable(
             F.col("score_scaled").cast("double") / F.lit(float(2**_DECAY_MAX_WEEKS)),
             6,
@@ -3421,33 +3426,9 @@ u AS (
            CASE WHEN conv_day IS NULL THEN 1 ELSE 0 END AS censored
     FROM fp
 ),
-g AS (
-    SELECT dur,
-           CAST(sum(1 - censored) AS BIGINT) AS d,
-           CAST(sum(censored) AS BIGINT) AS c
-    FROM u GROUP BY dur
-),
-rk AS (
-    SELECT dur, d, c,
-           CAST(sum(d + c) OVER (ORDER BY dur DESC ROWS UNBOUNDED PRECEDING)
-                AS BIGINT) AS n_at_risk
-    FROM g
-),
-fct AS (
-    SELECT dur, d, c, n_at_risk,
-           (CAST(n_at_risk AS DOUBLE) - CAST(d AS DOUBLE))
-               / CAST(n_at_risk AS DOUBLE) AS factor
-    FROM rk
-),
-surv AS (
-    SELECT dur, d, c, n_at_risk,
-           list(factor) OVER (ORDER BY dur ROWS UNBOUNDED PRECEDING) AS fs
-    FROM fct
-)
-SELECT dur AS days_to_convert, d AS n_converted, c AS n_censored, n_at_risk,
-       floor(list_reduce(fs, (a, b) -> a * b) * 1000000 + 0.5) / 1000000
-           AS not_yet_converted
-FROM surv
+{_KM_TAIL_SQL}SELECT dur AS days_to_convert, d AS n_converted, c AS n_censored, n_at_risk,
+       survival AS not_yet_converted
+FROM km
 """,
 )
 def kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3459,13 +3440,9 @@ def kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     churn framing; conversion actually happens).  1 − S(t) is the
     cumulative-conversion curve growth teams plot.
 
-    Same numeric contract as the churn curve: exact int64 at-risk
-    reverse cumsums on the bounded duration grain, the survival
-    prefix product as the bit-identical windowed-collect fold,
-    round_stable(6) display.
+    Same `_km_curve` as the churn curve; only the user-grain
+    (duration, censored) derivation differs.
     """
-    from pyspark.sql import Window
-
     fp = (
         load(spark, sf_dir, "events", fan_out=True)
         .groupBy("user_id")
@@ -3488,38 +3465,12 @@ def kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("dur"),
         F.col("conv_day").isNull().cast("long").alias("censored"),
     )
-    g = u.groupBy("dur").agg(
-        F.sum(F.lit(1) - F.col("censored")).alias("d"),
-        F.sum("censored").alias("c"),
-    )
-    rev = (
-        Window.orderBy(F.desc("dur"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    fwd = (
-        Window.orderBy(F.asc("dur"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    rk = g.withColumn("n_at_risk", F.sum(F.col("d") + F.col("c")).over(rev))
-    fct = rk.withColumn(
-        "factor",
-        (F.col("n_at_risk").cast("double") - F.col("d").cast("double"))
-        / F.col("n_at_risk").cast("double"),
-    )
-    surv = fct.withColumn("fs", F.collect_list("factor").over(fwd))
-    prod = F.aggregate(
-        F.slice(F.col("fs"), 2, F.size("fs") - 1),
-        F.element_at(F.col("fs"), 1),
-        lambda a, b: a * b,
-    )
-    return surv.select(
+    return _km_curve(u).select(
         F.col("dur").alias("days_to_convert"),
         F.col("d").alias("n_converted"),
         F.col("c").alias("n_censored"),
         "n_at_risk",
-        (F.floor(prod * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "not_yet_converted"
-        ),
+        F.col("survival").alias("not_yet_converted"),
     )
 
 

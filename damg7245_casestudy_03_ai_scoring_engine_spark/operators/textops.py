@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.cache import dataset_tag, session_persist, tracked_persist
-from ..functions.core import clamp, flit, round_stable, round_stable_sql
+from ..functions.core import clamp, flit, round_stable, round_stable_sql, topk_ranked
 from ..functions.text import STOPWORDS_EN, stopword_ratio, token_count, word_tokens
 from ..sources.catalog import load
 from .registry import register
@@ -408,14 +408,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
             "round(tf * (n_docs / df), 6) AS score",
         )
     )
-    return (
-        scored.selectExpr(
-            "*",
-            "CAST(row_number() OVER (PARTITION BY lang ORDER BY "
-            "score DESC, term ASC) AS INT) AS rk",
-        )
-        .filter("rk <= 5")
-    )
+    return topk_ranked(scored, "PARTITION BY lang ORDER BY score DESC, term ASC", 5)
 
 
 _PACK_BUDGET = 2048  # whitespace tokens per packed training sequence
@@ -602,18 +595,13 @@ def heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         r"explode(split(lower(trim(text)), '\\s+')) AS token"
     )
 
-    cands = (
+    cands = topk_ranked(
         toks.selectExpr("spark_partition_id() AS pid", "token")
         .groupBy("pid", "token")
-        .agg(F.expr("count(1)").alias("c"))
-        .selectExpr(
-            "token",
-            "row_number() OVER (PARTITION BY pid ORDER BY "
-            "c DESC, token ASC) AS rk",
-        )
-        .filter(f"rk <= {_MG_CAPACITY}")
-        .select("token")
-    )
+        .agg(F.expr("count(1)").alias("c")),
+        "PARTITION BY pid ORDER BY c DESC, token ASC",
+        _MG_CAPACITY,
+    ).select("token")
     # left-semi against the (possibly duplicated) candidate stream:
     # the broadcast hash set dedups implicitly, so no .distinct()
     # shuffle barrier is needed and candidate duplicates cannot
@@ -623,10 +611,7 @@ def heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("token")
         .agg(F.expr("CAST(count(1) AS BIGINT)").alias("n"))
     )
-    return exact.selectExpr(
-        "*",
-        "CAST(row_number() OVER (ORDER BY n DESC, token ASC) AS INT) AS rk",
-    ).filter(f"rk <= {_HH_TOP}")
+    return topk_ranked(exact, "ORDER BY n DESC, token ASC", _HH_TOP)
 
 
 _PROF_TOP = 20
@@ -716,17 +701,11 @@ def lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", is_train.alias("is_train"), F.explode(grams).alias("g")
     )
 
-    from pyspark.sql import Window
-
-    w_prof = Window.partitionBy("lang").orderBy(F.desc("cnt"), F.asc("g"))
-    prof = (
-        tri.filter("is_train")
-        .groupBy("lang", "g")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("rk", F.row_number().over(w_prof))
-        .filter(F.col("rk") <= _PROF_TOP)
-        .select(F.col("lang").alias("cand_lang"), "g")
-    )
+    prof = topk_ranked(
+        tri.filter("is_train").groupBy("lang", "g").agg(F.count(F.lit(1)).alias("cnt")),
+        "PARTITION BY lang ORDER BY cnt DESC, g ASC",
+        _PROF_TOP,
+    ).select(F.col("lang").alias("cand_lang"), "g")
     eval_tri = (
         tri.filter(~F.col("is_train"))
         .select("doc_id", F.col("lang").alias("actual_lang"), "g")
@@ -737,12 +716,9 @@ def lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "actual_lang", "cand_lang")
         .agg(F.count(F.lit(1)).cast("bigint").alias("overlap"))
     )
-    w_pred = Window.partitionBy("doc_id").orderBy(F.desc("overlap"), F.asc("cand_lang"))
-    pred = (
-        scores.withColumn("rk", F.row_number().over(w_pred))
-        .filter(F.col("rk") == 1)
-        .select("actual_lang", F.col("cand_lang").alias("predicted"))
-    )
+    pred = topk_ranked(
+        scores, "PARTITION BY doc_id ORDER BY overlap DESC, cand_lang ASC", 1
+    ).select("actual_lang", F.col("cand_lang").alias("predicted"))
     return pred.groupBy("actual_lang", "predicted").agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -915,14 +891,12 @@ def bigram_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("lift"),
         )
     )
-    from pyspark.sql import Window
-
     # Distributed top-10: orderBy+limit is a TakeOrdered (per-partition
     # top-k, O(k) merge) — the global row_number window only ever sees
     # the 10 surviving rows, never the full bigram table.
     top = scored.orderBy(F.desc("lift"), F.asc("bigram")).limit(10)
     w = Window.orderBy(F.desc("lift"), F.asc("bigram"))
-    return top.withColumn("rk", F.row_number().over(w).cast("int"))
+    return top.withColumn("rk", F.row_number().over(w))
 
 
 # --- benchmark decontamination (train/eval n-gram overlap) ------------------
@@ -1422,15 +1396,13 @@ def bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = sum(
         (F.col(f"s{i}") for i in range(1, len(_BM25_TERMS))), start=F.col("s0")
     )
-    from pyspark.sql import Window
-
     topk = (
         pivot.withColumn("bm25", F.round(total, 6))
         .orderBy(F.desc("bm25"), F.asc("doc_id"))
         .limit(_BM25_TOPK)
     )
     w = Window.orderBy(F.desc("bm25"), F.asc("doc_id"))
-    return topk.withColumn("rk", F.row_number().over(w).cast("int")).select(
+    return topk.withColumn("rk", F.row_number().over(w)).select(
         "doc_id", "n_terms", "bm25", "rk"
     )
 
@@ -2199,8 +2171,6 @@ def weighted_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     each domain samples independently; for a global sample swap the
     window for the salted two-level top-k used by
     `negative_sample_pairs`."""
-    from pyspark.sql import Window
-
     d = load(spark, sf_dir, "documents", fan_out=True).filter(F.col("n_chars") > 0)
     u = (
         F.conv(
@@ -2216,13 +2186,9 @@ def weighted_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     es_key = F.round(F.pow(u, F.lit(1.0) / F.col("n_chars")), 9)
     keyed = d.select("source", "doc_id", "n_chars", es_key.alias("es_key"))
-    w = Window.partitionBy("source").orderBy(F.desc("es_key"), F.asc("doc_id"))
-    return (
-        keyed.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .withColumn("rk", F.col("rk").cast("int"))
-        .drop("es_key")
-    )
+    return topk_ranked(
+        keyed, "PARTITION BY source ORDER BY es_key DESC, doc_id ASC", 5
+    ).drop("es_key")
 
 
 def _hybrid_rrf_oracle() -> str:
@@ -2292,14 +2258,7 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("rrf"),
     )
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("rrf"), F.asc("doc_id"))
-    return (
-        fused.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 10)
-        .withColumn("rk", F.col("rk").cast("int"))
-    )
+    return topk_ranked(fused, "ORDER BY rrf DESC, doc_id ASC", 10)
 
 
 @register(

@@ -78,8 +78,12 @@ def audit_entries(
 
 
 def append_audit(entries: DataFrame, path: str) -> None:
-    """S16 append-only sink for the audit table."""
-    entries.write.mode("append").parquet(path)
+    """S16 append-only sink for the audit table: one parquet file per
+    append, whatever the partition count of the stage output.  The
+    single-partition exchange sits after the stage's own aggregate, so
+    that aggregate keeps all its tasks (`coalesce(1)` would pull it
+    into the one writing task)."""
+    entries.repartition(1).write.mode("append").parquet(path)
 
 
 def dimension_breakdown_rows(ev: DataFrame) -> DataFrame:
@@ -108,15 +112,15 @@ def dimension_breakdown(rows: DataFrame) -> DataFrame:
     sorted by dimension.
 
     Input: `dimension_breakdown_rows` (company_id, dimension, score,
-    confidence, evidence_count).
+    confidence, evidence_count); score and confidence are already 2dp.
     """
     entry = F.concat(
         F.lit('{"dimension":"'),
         F.col("dimension"),
         F.lit('","score":'),
-        F.round(F.col("score"), 2).cast("string"),
+        F.col("score").cast("string"),
         F.lit(',"confidence":'),
-        F.round(F.col("confidence"), 2).cast("string"),
+        F.col("confidence").cast("string"),
         F.lit(',"evidence_count":'),
         F.col("evidence_count").cast("string"),
         F.lit("}"),

@@ -14,9 +14,10 @@ run's training basis is reproducible via time travel.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.core import topk_ranked
 from ..sources.versioned import VersionedTable
 from .pipeline import score_portfolio
 
@@ -41,9 +42,6 @@ def sem_from_history(history: DataFrame, scores: DataFrame) -> DataFrame:
     broadcast) against the scored companies and re-ranks per company:
     shuffle volume is |companies|·(CAP+own rows), not |history|².
     """
-    recent_global = history.withColumn(
-        "_rk_g", F.row_number().over(Window.orderBy(F.desc("scored_at"), F.desc("company_id")))
-    )
     # every row that could be in ANY company's top-50-excluding-self
     # is within the global top (CAP + max rows of one company); rather
     # than bound that, keep CAP + the largest per-company count — for
@@ -52,24 +50,21 @@ def sem_from_history(history: DataFrame, scores: DataFrame) -> DataFrame:
         history.groupBy("company_id").count().agg(F.max("count")).collect()[0][0] or 0
     )
     block = F.broadcast(
-        recent_global.filter(F.col("_rk_g") <= SEM_TRAINING_CAP + max_per_company).select(
+        topk_ranked(
+            history,
+            "ORDER BY scored_at DESC, company_id DESC",
+            SEM_TRAINING_CAP + max_per_company,
+        ).select(
             F.col("company_id").alias("h_company_id"),
             F.col("composite_score").alias("h_composite"),
             "scored_at",
         )
     )
-    per_company = (
+    per_company = topk_ranked(
         scores.select("company_id").distinct()
-        .join(block, F.col("company_id") != F.col("h_company_id"))
-        .withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy("company_id").orderBy(
-                    F.desc("scored_at"), F.desc("h_company_id")
-                )
-            ),
-        )
-        .filter(F.col("_rk") <= SEM_TRAINING_CAP)
+        .join(block, F.col("company_id") != F.col("h_company_id")),
+        "PARTITION BY company_id ORDER BY scored_at DESC, h_company_id DESC",
+        SEM_TRAINING_CAP,
     )
     return per_company.groupBy("company_id").agg(
         F.count(F.lit(1)).alias("n_training"),

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..functions.core import topk_ranked
 from ..sources.catalog import HOUR_NS, normalize_events_ts
 
 EVENTS_SCHEMA = T.StructType(
@@ -956,12 +957,8 @@ def streamed_maintenance_execute(
         .groupBy("vec_id", "cand_cell")
         .agg(_cosine_agg("x", "cx").alias("cosine"))
     )
-    wbest = Window.partitionBy("vec_id").orderBy(
-        F.desc("cosine"), F.asc("cand_cell")
-    )
     rt = (
-        resc.withColumn("rk", F.row_number().over(wbest))
-        .filter(F.col("rk") == 1)
+        topk_ranked(resc, "PARTITION BY vec_id ORDER BY cosine DESC, cand_cell ASC", 1)
         .groupBy(F.col("cand_cell").alias("cell"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_retrained"))
         .join(flagged, "cell", "right")

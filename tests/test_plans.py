@@ -913,3 +913,48 @@ def test_ivf_retrain_touches_only_flagged_scope(spark):
     assert "windowspecdefinition(vec_id" in s
     assert "InMemoryTableScan" in s
     assert live_parquet_scan_count(df) <= 1
+
+
+def test_topk_ranked_plans_the_window_group_limit_pair(spark):
+    from damg7245_casestudy_03_ai_scoring_engine_spark.functions.core import topk_ranked
+    from damg7245_casestudy_03_ai_scoring_engine_spark.sources.catalog import load
+
+    o = load(spark, SF_SMOKE, "orders")
+    df = topk_ranked(o, "PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey", 2)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    # Partial limits each map task's rows before the shuffle, Final
+    # after it; the filter that follows keeps the exact rank bound.
+    limits = re.findall(r"WindowGroupLimit .*, row_number\(\), 2, (\w+)", final)
+    assert limits == ["Final", "Partial"], final
+    assert final.index(", 2, Final") < final.index("Exchange") < final.index(", 2, Partial")
+
+
+def test_topk_ranked_matches_a_python_sort_on_ties(spark):
+    from pyspark.sql.types import IntegerType
+
+    from damg7245_casestudy_03_ai_scoring_engine_spark.functions.core import topk_ranked
+
+    rows = [(g, s, i) for i, (g, s) in enumerate(
+        [(0, 5), (0, 5), (0, 3), (0, 5), (1, 1), (1, 1), (1, 2), (2, 7)]
+    )]
+    df = spark.createDataFrame(rows, "g int, score int, id int").repartition(3)
+
+    def python_topk(key, k, group=lambda r: r[0]):
+        out = []
+        for grp in sorted({group(r) for r in rows}):
+            ranked = sorted((r for r in rows if group(r) == grp), key=key)[:k]
+            out += [(*r, rk) for rk, r in enumerate(ranked, 1)]
+        return sorted(out)
+
+    top = topk_ranked(df, "PARTITION BY g ORDER BY score DESC, id", 2)
+    assert top.schema["rk"].dataType == IntegerType()
+    assert sorted(map(tuple, top.collect())) == python_topk(lambda r: (-r[1], r[2]), 2)
+    # a bare ORDER BY ranks the whole frame
+    top = topk_ranked(df, "ORDER BY score, id DESC", 3)
+    assert top.schema["rk"].dataType == IntegerType()
+    assert sorted(map(tuple, top.collect())) == python_topk(
+        lambda r: (r[1], -r[2]), 3, group=lambda r: 0
+    )

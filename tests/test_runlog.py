@@ -4,6 +4,7 @@ breakdown rule shared with the registry query."""
 
 from __future__ import annotations
 
+import glob
 import json
 
 from damg7245_casestudy_03_ai_scoring_engine_spark.operators import REGISTRY
@@ -46,6 +47,8 @@ def test_score_portfolio_with_audit(spark, tmp_path):
     log = spark.read.parquet(f"{audit}/audit_log")
     steps = {r.step_name for r in log.select("step_name").distinct().collect()}
     assert steps == {"dimension_scoring", "final_write"}
+    # one parquet file per append, not one per partition of the stage
+    assert len(glob.glob(f"{audit}/audit_log/*.parquet")) == 2
     one = log.filter(log.step_name == "final_write").limit(1).collect()[0]
     payload = json.loads(one.output_json)
     assert "composite_score" in payload and "score_band" in payload
@@ -56,6 +59,7 @@ def test_score_portfolio_with_audit(spark, tmp_path):
     )
     assert run_id2 != run_id
     assert spark.read.parquet(f"{audit}/scoring_runs").count() == 2
+    assert len(glob.glob(f"{audit}/audit_log/*.parquet")) == 4
 
 
 def test_audited_breakdown_is_the_registry_breakdown(spark, tmp_path):

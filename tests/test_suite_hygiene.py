@@ -13,6 +13,10 @@ deleted, would otherwise go unnoticed until then.
 
 A top-level package definition that nothing reads is dead code that
 still looks like an API; stale copies of a formula hide there.
+
+A per-group top-k (rank, then keep rk <= k) has one spelling,
+`functions/core.py::topk_ranked`; a hand-written rank-filter tail
+elsewhere is a second spelling of the same operator.
 """
 
 from __future__ import annotations
@@ -23,6 +27,7 @@ import importlib
 import importlib.util
 import os
 import py_compile
+import re
 from collections import Counter
 
 TESTS_DIR = os.path.dirname(os.path.abspath(__file__))
@@ -139,3 +144,72 @@ def test_every_top_level_package_name_is_referenced():
             if name not in exempt and not (name.startswith("__") and name.endswith("__"))
         ]
     assert not unread, f"top-level package names referenced nowhere: {unread}"
+
+
+def _call_named(node: ast.AST, name: str) -> bool:
+    """`node` is a call of a function or method called `name`."""
+    return isinstance(node, ast.Call) and name in (
+        getattr(node.func, "attr", None),
+        getattr(node.func, "id", None),
+    )
+
+
+def _sql_text(node: ast.AST) -> str | None:
+    """The text of a string literal or f-string (`{…}` read as `0`)."""
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return node.value
+    if isinstance(node, ast.JoinedStr):
+        return "".join(
+            v.value if isinstance(v, ast.Constant) else "0" for v in node.values
+        )
+    return None
+
+
+def _is_row_number(value: ast.AST) -> bool:
+    """`F.row_number().over(w)` (or the helper's own `F.expr("row_number()
+    OVER (…)")`), with any `.cast(…)` around it."""
+    while _call_named(value, "cast"):
+        value = value.func.value
+    if _call_named(value, "over"):
+        return _call_named(value.func.value, "row_number")
+    return _call_named(value, "expr") and bool(
+        re.match(r"\s*row_number\(\) OVER", _sql_text(value.args[0]) or "", re.I)
+    )
+
+
+def _bounds_only(pred: ast.AST, rank: str) -> bool:
+    """The filter reads no column but `rank`: a constant bound, not a
+    quantile pick such as `rk == (n + 1) div 2`."""
+    bound = re.compile(rf"\s*{re.escape(rank)}\s*(<=|<|==|=)\s*\w+\s*")
+    texts = [t for n in ast.walk(pred) if (t := _sql_text(n)) is not None]
+    return all(t == rank or bound.fullmatch(t) for t in texts)
+
+
+def _rank_filter_tails(tree: ast.Module):
+    """Line numbers of hand-written rank-filter tails: a `.filter` called
+    directly on `.withColumn(name, row_number().over(…))` that bounds
+    only that rank, or directly on a `selectExpr` whose SQL ranks with
+    `row_number() OVER`."""
+    for node in ast.walk(tree):
+        if not (_call_named(node, "filter") and isinstance(node.func, ast.Attribute)):
+            continue
+        inner = node.func.value
+        if _call_named(inner, "withColumn") and len(inner.args) == 2:
+            name = _sql_text(inner.args[0])
+            if name and _is_row_number(inner.args[1]) and _bounds_only(node.args[0], name):
+                yield node.lineno
+        elif _call_named(inner, "selectExpr") and any(
+            "row_number() over" in (_sql_text(a) or "").lower() for a in inner.args
+        ):
+            yield node.lineno
+
+
+def test_every_rank_filter_tail_goes_through_topk_ranked():
+    core = os.path.join(REPO, PKG, "functions", "core.py")
+    package = glob.glob(os.path.join(REPO, PKG, "**", "*.py"), recursive=True)
+    tails = []
+    for path in sorted(set(package) - {core}):
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), filename=path)
+        tails += [f"{os.path.relpath(path, REPO)}:{n}" for n in _rank_filter_tails(tree)]
+    assert not tails, f"rank-filter tails outside topk_ranked: {tails}"
