@@ -123,6 +123,71 @@ _K = 9  # minhashes
 _BANDS = 3  # bands of 3 rows each
 _P = 4294967311  # smallest prime > 2^32 — modulus for the hash permutations
 
+# The MinHash signature, replayed by the oracles' hashed/mh CTEs: one
+# md5 per shingle mapped to a base hash mod _P, then _K cheap integer
+# permutations (2s+1)·h + (17s+7) mod _P of it, min per permutation.
+# Single-parse SQL (r13, guide §5/§7.3): no per-build py4j lambda setup.
+_BASE_HASH_SQL = (
+    "transform(shingles, x -> "
+    f"CAST(conv(substring(md5(x), 1, 15), 16, 10) AS BIGINT) % {_P})"
+)
+_SIGNATURE_SQL = (
+    f"transform(sequence(0, {_K - 1}), s -> "
+    f"array_min(transform(hs, h -> ((2 * s + 1) * h + (17 * s + 7)) % {_P})))"
+)
+
+
+def _minhash_bands(hashed: DataFrame) -> DataFrame:
+    """(doc_id, …, b, band_hash) from a (doc_id, shingles, hs, …)
+    frame: one row per (doc, band), the band's signature values joined
+    by '|'.  Any other column rides along (incremental_lsh_probe's
+    is_delta)."""
+    keep = [c for c in hashed.columns if c not in ("shingles", "hs")]
+    rows = _K // _BANDS
+    b = F.explode(F.sequence(F.lit(0), F.lit(_BANDS - 1))).alias("b")
+    band_hash = F.concat_ws(
+        "|",
+        *(
+            F.element_at("sig", F.col("b") * rows + i).cast("string")
+            for i in range(1, rows + 1)
+        ),
+    )
+    return (
+        hashed.select(*keep, F.expr(_SIGNATURE_SQL).alias("sig"))
+        .select(*keep, b, "sig")
+        .select(*keep, "b", band_hash.alias("band_hash"))
+    )
+
+
+def _jaccard_verified(cand: DataFrame, hashed: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard, …): (doc_a, doc_b) candidates verified
+    on their exact shingle-set jaccard (6 dp, kept at ≥ 0.5).  Any
+    other column of `hashed` comes along once per side, suffixed
+    _a / _b (incremental_lsh_probe's is_delta)."""
+    extra = [c for c in hashed.columns if c not in ("doc_id", "shingles", "hs")]
+
+    def side(s: str) -> DataFrame:
+        return hashed.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("shingles").alias(f"sh_{s}"),
+            *(F.col(c).alias(f"{c}_{s}") for c in extra),
+        )
+
+    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+    union = F.size("sh_a") + F.size("sh_b") - F.size(F.array_intersect("sh_a", "sh_b"))
+    jaccard = F.when(union > 0, inter / union.cast("double")).otherwise(F.lit(0.0))
+    return (
+        cand.join(side("a"), "doc_a")
+        .join(side("b"), "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.round(jaccard, 6).alias("jaccard"),
+            *(f"{c}_{s}" for c in extra for s in "ab"),
+        )
+        .filter(F.col("jaccard") >= 0.5)
+    )
+
 
 @register(
     "dedup_minhash_lsh",
@@ -180,41 +245,20 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     n² — this is the operator you run at 100 TB, with the band join
     shuffling only (band_idx, band_hash, doc_id)."""
     sh = _shingled_docs(spark, sf_dir)
-    # single-parse F.expr (r13, guide §5/§7.3): identical arithmetic to
-    # the former python-lambda HOF, minus the per-build py4j lambda setup
-    base = F.expr(
-        "transform(shingles, x -> "
-        f"CAST(conv(substring(md5(x), 1, 15), 16, 10) AS BIGINT) % {_P})"
-    )
     # Persisted: feeds three consumers (band generation + both sides of
     # the jaccard verify); without materialization Catalyst re-derives
     # the whole tokenize->shingle->md5 lineage for each.  At scale the
     # same role is played by checkpointing the signature table.
-    hashed = tracked_persist(sh.select("doc_id", "shingles", base.alias("hs")), "dedup_minhash_lsh.hashed")
-    sig = F.expr(
-        f"transform(sequence(0, {_K - 1}), s -> "
-        f"array_min(transform(hs, h -> ((2 * s + 1) * h + (17 * s + 7)) % {_P})))"
+    hashed = tracked_persist(
+        sh.select("doc_id", "shingles", F.expr(_BASE_HASH_SQL).alias("hs")),
+        "dedup_minhash_lsh.hashed",
     )
-    mh = hashed.select("doc_id", sig.alias("sig"))
-    b = F.explode(F.sequence(F.lit(0), F.lit(_BANDS - 1))).alias("b")
     # Persisted (r13, guide §2.4): both sides of the band-bucket
     # self-join consume this frame, and without materialization each
     # side re-derives the k=9 minhash permutations over every shingle
     # list from the cached `hashed` silver — the signature pass ran
     # twice per invocation.
-    bands = tracked_persist(
-        mh.select("doc_id", b, "sig").select(
-            "doc_id",
-            "b",
-            F.concat_ws(
-                "|",
-                F.element_at("sig", F.col("b") * 3 + 1).cast("string"),
-                F.element_at("sig", F.col("b") * 3 + 2).cast("string"),
-                F.element_at("sig", F.col("b") * 3 + 3).cast("string"),
-            ).alias("band_hash"),
-        ),
-        "dedup_minhash_lsh.bands",
-    )
+    bands = tracked_persist(_minhash_bands(hashed), "dedup_minhash_lsh.bands")
     left = bands.select(F.col("doc_id").alias("doc_a"), "b", "band_hash")
     right = bands.select(F.col("doc_id").alias("doc_b"), "b", "band_hash")
     cand = (
@@ -223,25 +267,14 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .distinct()
     )
-    sa = hashed.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sb = hashed.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size("sh_a") + F.size("sh_b") - F.size(F.array_intersect("sh_a", "sh_b"))
-    verified = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.when(union > 0, inter / union.cast("double")).otherwise(F.lit(0.0)), 6
-            ).alias("jaccard"),
-        )
-    )
-    return verified.filter(F.col("jaccard") >= 0.5)
+    return _jaccard_verified(cand, hashed)
 
 
 # --- 3. n-gram jaccard brute force (blocked) -------------------------------
+
+# Word-set jaccard at which two same-language docs are near duplicates
+# (dedup_ngram_jaccard, dedup_clusters; their oracles spell 0.95).
+_NEAR_DUP_T = 0.95
 
 
 @register(
@@ -275,8 +308,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact jaccard verify and a `t·|B| ≤ |A|` length filter.  Unlike
     MinHash banding this loses NOTHING: recall is provably 1.0, so the
     brute-force oracle matches bit-for-bit."""
-    t = 0.95
-    return _jaccard_pairs_prefix(spark, sf_dir, t=0.95)
+    return _jaccard_pairs_prefix(spark, sf_dir, t=_NEAR_DUP_T)
 
 
 def _jaccard_pairs_prefix(spark: SparkSession, sf_dir: str, t: float) -> DataFrame:
@@ -456,7 +488,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ ~3 in practice), so 100 TB runs converge in a handful of
     shuffles, each a (node, comp) join — no driver-side graph.  The
     DuckDB oracle replays it as a recursive reachability CTE."""
-    pairs = _jaccard_pairs_prefix(spark, sf_dir, t=0.95).select("doc_a", "doc_b")
+    pairs = _jaccard_pairs_prefix(spark, sf_dir, t=_NEAR_DUP_T).select("doc_a", "doc_b")
     # localCheckpoint (not persist): each round's plan must TRUNCATE,
     # or the logical plan nests one level deeper per iteration and
     # driver-side analysis comes to dominate the loop (measured 24 s →
@@ -1006,12 +1038,6 @@ def incremental_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     for colliding candidates.  Per-batch cost scales with the batch
     and its collision set — independent of corpus size."""
     sh = _shingled_docs(spark, sf_dir)
-    # single-parse F.expr (r13, guide §5/§7.3): identical arithmetic to
-    # the former python-lambda HOF, minus the per-build py4j lambda setup
-    base = F.expr(
-        "transform(shingles, x -> "
-        f"CAST(conv(substring(md5(x), 1, 15), 16, 10) AS BIGINT) % {_P})"
-    )
     is_delta = (
         F.conv(
             F.substring(
@@ -1026,26 +1052,15 @@ def incremental_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         >= 90
     )
     hashed = tracked_persist(
-        sh.select("doc_id", "shingles", base.alias("hs"), is_delta.alias("is_delta")),
+        sh.select(
+            "doc_id",
+            "shingles",
+            F.expr(_BASE_HASH_SQL).alias("hs"),
+            is_delta.alias("is_delta"),
+        ),
         "incremental_lsh_probe.hashed",
     )
-    sig = F.expr(
-        f"transform(sequence(0, {_K - 1}), s -> "
-        f"array_min(transform(hs, h -> ((2 * s + 1) * h + (17 * s + 7)) % {_P})))"
-    )
-    mh = hashed.select("doc_id", "is_delta", sig.alias("sig"))
-    b = F.explode(F.sequence(F.lit(0), F.lit(_BANDS - 1))).alias("b")
-    bands = mh.select("doc_id", "is_delta", b, "sig").select(
-        "doc_id",
-        "is_delta",
-        "b",
-        F.concat_ws(
-            "|",
-            F.element_at("sig", F.col("b") * 3 + 1).cast("string"),
-            F.element_at("sig", F.col("b") * 3 + 2).cast("string"),
-            F.element_at("sig", F.col("b") * 3 + 3).cast("string"),
-        ).alias("band_hash"),
-    )
+    bands = _minhash_bands(hashed)
     probe = bands.filter(F.col("is_delta")).select(
         F.col("doc_id").alias("doc_p"), "b", "band_hash"
     )
@@ -1059,33 +1074,14 @@ def incremental_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sa = hashed.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shingles").alias("sh_a"),
-        F.col("is_delta").alias("delta_a"),
+    return _jaccard_verified(cand, hashed).select(
+        "doc_a",
+        "doc_b",
+        "jaccard",
+        F.when(F.col("is_delta_a") & F.col("is_delta_b"), F.lit("delta-delta"))
+        .otherwise(F.lit("delta-base"))
+        .alias("pair_type"),
     )
-    sb = hashed.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("sh_b"),
-        F.col("is_delta").alias("delta_b"),
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size("sh_a") + F.size("sh_b") - F.size(F.array_intersect("sh_a", "sh_b"))
-    verified = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.when(union > 0, inter / union.cast("double")).otherwise(F.lit(0.0)), 6
-            ).alias("jaccard"),
-            F.when(F.col("delta_a") & F.col("delta_b"), F.lit("delta-delta"))
-            .otherwise(F.lit("delta-base"))
-            .alias("pair_type"),
-        )
-    )
-    return verified.filter(F.col("jaccard") >= 0.5)
 
 
 # --- corpus-level source-overlap audit ---------------------------------------

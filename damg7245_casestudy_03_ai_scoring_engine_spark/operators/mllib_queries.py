@@ -174,7 +174,6 @@ def grouped_ols_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     solvers).  Arrow moves each group as columnar batches; at scale
     groups are the shuffle unit, so skewed group sizes salt like any
     hot key."""
-    import numpy as np
     import pandas as pd
 
     li = load(spark, sf_dir, "lineitem", fan_out=True).select(

@@ -673,8 +673,6 @@ def calibration_reliability_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     display columns.  ONE map-side-combinable groupBy over the fact —
     no join, no window: the cheapest possible monitoring scan.
     """
-    from ..functions.core import round_stable
-
     scored = load(spark, sf_dir, "events", fan_out=True).select(
         F.least(
             F.floor(F.col("value") / F.lit(50.0)).cast("long"), F.lit(9)
@@ -752,8 +750,6 @@ def auc_value_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank the engine already does for top-k reports) + one tie-count
     window sharing the sort, then a scalar aggregate.
     """
-    from ..functions.core import round_stable
-
     s = load(spark, sf_dir, "events", fan_out=True).select(
         F.col("value").alias("score"),
         F.col("event_type").isin("purchase", "signup").cast("long").alias("y"),
@@ -825,8 +821,6 @@ def pr_curve_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarded round_stable divisions.  Scale shape: one map-side
     groupBy to the bucket grain, then two windows over ≤10 rows.
     """
-    from ..functions.core import round_stable
-
     s = load(spark, sf_dir, "events", fan_out=True).select(
         F.least(
             F.floor(F.col("value") / F.lit(50.0)).cast("long"), F.lit(9)
@@ -936,8 +930,6 @@ def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast scalar split day), then 2-row variant totals × a
     1-row pooled frame.
     """
-    from ..functions.core import round_stable
-
     e = load(spark, sf_dir, "events", fan_out=True)
     span = e.agg(
         F.expr(f"(min(ts div {DAY_NS}) + max(ts div {DAY_NS})) div 2").alias("dmid")
@@ -1052,8 +1044,6 @@ def ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     round_stable(6), reported back in value units.  One map-side
     conditional aggregate, no join.
     """
-    from ..functions.core import round_stable
-
     q = load(spark, sf_dir, "events", fan_out=True).select(
         "event_type",
         (F.col("user_id") % 2).cast("long").alias("variant"),
@@ -1154,10 +1144,6 @@ def ks_two_sample_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort serving both cumulative sums and both totals, then a max
     rollup on the window's own partitioning.
     """
-    from pyspark.sql import Window
-
-    from ..functions.core import round_stable
-
     e = load(spark, sf_dir, "events", fan_out=True)
     span = e.agg(
         F.expr(f"(min(ts div {DAY_NS}) + max(ts div {DAY_NS})) div 2").alias("dmid")
@@ -1256,10 +1242,6 @@ def qini_curve_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-order double.  One map-side groupBy to the bucket grain,
     one window over ≤10 rows.
     """
-    from pyspark.sql import Window
-
-    from ..functions.core import round_stable
-
     s = load(spark, sf_dir, "events", fan_out=True).select(
         F.least(
             F.floor(F.col("value") / F.lit(50.0)).cast("long"), F.lit(9)

@@ -56,6 +56,30 @@ _IVF_MULTI_MIN = 2  # ann_ivf_multiprobe: guaranteed probe depth…
 _IVF_MULTI_CAP = 6  # …and its escalation cap
 
 
+def _query_panel(vectors: DataFrame, n: int = _N_QUERIES) -> DataFrame:
+    """The query panel: the first `n` rows of a (vec_id, embedding, …)
+    frame, renamed to (query_id, qv, …).  Any other column rides
+    along (ann_ivf_kmeans's cluster)."""
+    return vectors.filter(F.col("vec_id") < n).withColumnsRenamed(
+        {"vec_id": "query_id", "embedding": "qv"}
+    )
+
+
+def _exact_cosine(pairs: DataFrame) -> DataFrame:
+    """The family's exact score over (query_id, qv) ⋈ (cand_id, cv)
+    pairs from any candidate join: self pairs drop, and the two vectors
+    become the 6-dp rounded `cosine` every ranking and threshold here
+    compares (the oracles round the same fold).  Any other column of
+    `pairs` rides through after (query_id, cand_id)."""
+    rest = [c for c in pairs.columns if c not in ("query_id", "cand_id", "qv", "cv")]
+    return pairs.filter(F.col("query_id") != F.col("cand_id")).select(
+        "query_id",
+        "cand_id",
+        *rest,
+        F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
+    )
+
+
 # Shared by ann_topk_bruteforce (JVM fold) and — since r13 —
 # ann_topk_vectorized (Arrow/numpy kernel): both compute the same
 # 6dp-rounded cosine top-k under the same (cosine DESC, cand_id ASC)
@@ -107,30 +131,16 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ranking uses the rounded similarity + id tie-break so the result
     set is engine-deterministic."""
     emb = load(spark, sf_dir, "embeddings", fan_out=True)
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
     c = emb.select(
         F.col("vec_id").alias("cand_id"),
         F.col("label").alias("cand_label"),
         F.col("embedding").alias("cv"),
     )
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            "cand_label",
-            F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
-        )
-    )
-    return topk_ranked(scored, _BY_COSINE, _TOP_K)
+    pairs = _query_panel(emb.drop("label")).crossJoin(c)
+    return topk_ranked(_exact_cosine(pairs), _BY_COSINE, _TOP_K)
 
 
-# Shared by ann_ivf_topk (logical bucketing) and
-# ann_ivf_partition_pruned (the same search over a cell-partitioned
-# PHYSICAL layout) — identical semantics, different storage path.
+# The IVF family's cell filing, replayed in DuckDB.
 #
 # r7 FIX, caught by the sf1 recall probe (SCALE.md): candidates used
 # to be binned by their STORED label while queries probed by nearest
@@ -342,43 +352,50 @@ def _ivf_probe_assign(
     return session_persist(spark, f"ivf.probes.{tag}.{min_probes}.{cap}", build)
 
 
+def _ivf_probe_side(
+    spark: SparkSession, sf_dir: str, emb: DataFrame, min_probes: int, cap: int
+) -> DataFrame:
+    """(query_id, probe_label, qv): each panel query once per cell of
+    its margin-adaptive probe set (the r8 recall fix — see the
+    _IVF_DELTA constant block)."""
+    return _ivf_probe_assign(spark, sf_dir, min_probes, cap).join(
+        _query_panel(emb.drop("label")), "query_id"
+    )
+
+
+def _filed_candidates(filing: DataFrame) -> DataFrame:
+    """(cand_id, probe_label, cv) from a (vec_id, cell, embedding, …)
+    filing: every vector under the cell the QUANTIZER filed it in, not
+    its stored label (the r7 recall fix; see _ivf_oracle)."""
+    return filing.select(
+        F.col("vec_id").alias("cand_id"),
+        F.col("cell").alias("probe_label"),
+        F.col("embedding").alias("cv"),
+    )
+
+
+def _ivf_pairs(
+    spark: SparkSession, sf_dir: str, min_probes: int, cap: int
+) -> DataFrame:
+    """(query_id, qv, cand_id, cv): the probe side ⋈ the persisted
+    (vec_id, cell) filing on the probed cell.  (query_id, cand_id) is
+    unique by construction — the filing holds exactly one cell per
+    vector and the probe set one row per (query, cell) — so no
+    distinct: a dedup here would shuffle the whole scored candidate
+    set for nothing (r13, guide §2.4; verified join-rows ==
+    distinct-rows at the widest probe params)."""
+    emb = load(spark, sf_dir, "embeddings", fan_out=True)
+    probes = _ivf_probe_side(spark, sf_dir, emb, min_probes, cap)
+    filed = _filed_candidates(emb.join(_ivf_cells(spark, sf_dir), "vec_id"))
+    return probes.join(filed, "probe_label").drop("probe_label")
+
+
 def _ivf_search(
     spark: SparkSession, sf_dir: str, min_probes: int, cap: int
 ) -> DataFrame:
-    """Shared IVF search: probe assignment ⋈ cell-filed candidates ⋈
-    exact re-rank.  Candidates come from the persisted (vec_id, cell)
-    filing — by the QUANTIZER, not the stored label (the r7 recall
-    fix; see _ivf_oracle); probing is margin-adaptive (the r8 recall
-    fix — see the _IVF_DELTA constant block)."""
-    emb = load(spark, sf_dir, "embeddings", fan_out=True)
-    assign = _ivf_probe_assign(spark, sf_dir, min_probes, cap)
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    cand = (
-        emb.join(_ivf_cells(spark, sf_dir), "vec_id")
-        .select(
-            F.col("vec_id").alias("cand_id"),
-            F.col("cell").alias("probe_label"),
-            F.col("embedding").alias("cv"),
-        )
-    )
-    # (query_id, cand_id) is unique by construction — the filing holds
-    # exactly one cell per vector and the probe set one row per
-    # (query, cell) — so no distinct: a dedup here would shuffle the
-    # whole scored candidate set for nothing (r13, guide §2.4; verified
-    # join-rows == distinct-rows at the widest probe params).
-    scored = (
-        assign.join(q, "query_id")
-        .join(cand, "probe_label")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
-        )
-    )
-    return topk_ranked(scored, _BY_COSINE, _TOP_K)
+    """IVF search: probed cells' candidates, exact re-rank, top-k."""
+    pairs = _ivf_pairs(spark, sf_dir, min_probes, cap)
+    return topk_ranked(_exact_cosine(pairs), _BY_COSINE, _TOP_K)
 
 
 @register(
@@ -817,26 +834,29 @@ def _topk_band_bits(n: int) -> int:
 def _emb_count(spark: SparkSession, sf_dir: str) -> int:
     """Exact embeddings row count from parquet footers (driver-side,
     no Spark job — the `_bloom_bits_for` sizing pattern, layout.py),
-    memoized per (session, dataset).  Falls back to a Spark count if
-    pyarrow can't read the layout."""
+    memoized per (session, dataset).  Falls back to a Spark count when
+    the footers can't be read: no local file (a non-local path) is an
+    OSError, a file without a parquet footer is pyarrow's ArrowInvalid.
+    Any other error propagates."""
 
     def build() -> int:
         import glob as _glob
         import os as _os
 
-        path = _os.path.join(sf_dir, "embeddings.parquet")
-        try:
-            import pyarrow.parquet as pq
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-            files = (
-                [path]
-                if _os.path.isfile(path)
-                else sorted(_glob.glob(_os.path.join(path, "*.parquet")))
-            )
+        path = _os.path.join(sf_dir, "embeddings.parquet")
+        files = (
+            [path]
+            if _os.path.isfile(path)
+            else sorted(_glob.glob(_os.path.join(path, "*.parquet")))
+        )
+        try:
             if not files:
                 raise FileNotFoundError(path)
             n = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-        except Exception:  # pragma: no cover - non-parquet layouts
+        except (OSError, pa.ArrowInvalid):
             n = load(spark, sf_dir, "embeddings").count()
         return int(n)
 
@@ -1179,20 +1199,9 @@ def semantic_doc_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     never vectors, and the doc side is joined AFTER top-k so at 100 TB
     it touches k·|Q| rows, not the corpus."""
     emb = load(spark, sf_dir, "embeddings", fan_out=True)
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
     c = emb.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv"))
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
-        )
-    )
-    topk = topk_ranked(scored, _BY_COSINE, 3)
+    pairs = _query_panel(emb.drop("label"), 5).crossJoin(c)
+    topk = topk_ranked(_exact_cosine(pairs), _BY_COSINE, 3)
     docs = load(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("cand_id"),
         F.col("lang").alias("cand_lang"),
@@ -1233,22 +1242,11 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed = model.transform(emb).select(
         "vec_id", "embedding", F.col("prediction").alias("cluster")
     )
-    q = indexed.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"),
-        "cluster",
-    )
     cand = indexed.select(
         F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv"), "cluster"
     )
-    scored = (
-        q.join(cand, "cluster")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id", "cand_id",
-            F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
-        )
-    )
-    return topk_ranked(scored, _BY_COSINE, _TOP_K)
+    pairs = _query_panel(indexed).join(cand, "cluster").drop("cluster")
+    return topk_ranked(_exact_cosine(pairs), _BY_COSINE, _TOP_K)
 
 
 @register(
@@ -1544,24 +1542,13 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "PARTITION BY query_id ORDER BY adc, cand_id ASC",
         shortlist_k,
-    ).drop("rk")
+    ).select("query_id", "cand_id")
 
     # --- exact re-rank of the shortlist
-    q = nv.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("nv").alias("qv")
-    )
+    q = _query_panel(nv.withColumnRenamed("nv", "embedding"))
     cand = nv.select(F.col("vec_id").alias("cand_id"), F.col("nv").alias("cv"))
-    return topk_ranked(
-        shortlist.join(q, "query_id")
-        .join(cand, "cand_id")
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
-        ),
-        _BY_COSINE,
-        _TOP_K,
-    )
+    pairs = shortlist.join(q, "query_id").join(cand, "cand_id")
+    return topk_ranked(_exact_cosine(pairs), _BY_COSINE, _TOP_K)
 
 
 @register(
@@ -1696,29 +1683,10 @@ def ann_ivf_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     r7: the layout is partitioned by the QUANTIZER cell, not the
     stored label — see _ivf_oracle for the recall-probe finding."""
     emb = load(spark, sf_dir, "embeddings", fan_out=True)
-
-    assign = _ivf_probe_assign(spark, sf_dir, min_probes=1, cap=_IVF_CAP)
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    probes = assign.join(q, "query_id")
-
-    ivf = _cell_partitioned_embeddings(spark, sf_dir)
-    cand = ivf.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("cell").alias("probe_label"),
-        F.col("embedding").alias("cv"),
-    )
-    scored = (
-        cand.join(F.broadcast(probes), "probe_label")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
-        )
-    )
-    return topk_ranked(scored, _BY_COSINE, _TOP_K)
+    probes = _ivf_probe_side(spark, sf_dir, emb, min_probes=1, cap=_IVF_CAP)
+    filed = _filed_candidates(_cell_partitioned_embeddings(spark, sf_dir))
+    pairs = filed.join(F.broadcast(probes), "probe_label").drop("probe_label")
+    return topk_ranked(_exact_cosine(pairs), _BY_COSINE, _TOP_K)
 
 
 # --- deterministic Lloyd k-means (oracle-checked clustering) ----------------
@@ -2055,12 +2023,10 @@ def rag_context_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 
     emb = load(spark, sf_dir, "embeddings", fan_out=True)
-    q = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
     c = emb.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv"))
     scored = (
-        q.crossJoin(c)
+        _query_panel(emb.drop("label"), 3)
+        .crossJoin(c)
         .filter(F.col("query_id") != F.col("cand_id"))
         .select(
             "query_id", "cand_id", F.expr(cosine_similarity_sql("qv", "cv")).alias("cosine")
@@ -2408,29 +2374,10 @@ def hard_negative_mining_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query_id, cell) list against the cell-filed corpus, so mining
     cost per query is one cell, not the corpus.  The threshold
     compares the same 6dp-rounded cosine both engines rank by."""
-    emb = load(spark, sf_dir, "embeddings", fan_out=True)
-    assign = _ivf_probe_assign(spark, sf_dir, min_probes=1, cap=1)
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    cand = emb.join(_ivf_cells(spark, sf_dir), "vec_id").select(
-        F.col("vec_id").alias("neg_id"),
-        F.col("cell").alias("probe_label"),
-        F.col("embedding").alias("cv"),
-    )
-    scored = (
-        assign.join(q, "query_id")
-        .join(cand, "probe_label")
-        .filter(F.col("neg_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neg_id",
-            F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
-        )
-        .filter(F.col("cosine") < F.lit(_HARD_NEG_MAX_COS))
-    )
-    return topk_ranked(
-        scored, "PARTITION BY query_id ORDER BY cosine DESC, neg_id ASC", _TOP_K
+    scored = _exact_cosine(_ivf_pairs(spark, sf_dir, min_probes=1, cap=1))
+    below = scored.filter(F.col("cosine") < F.lit(_HARD_NEG_MAX_COS))
+    return topk_ranked(below, _BY_COSINE, _TOP_K).withColumnRenamed(
+        "cand_id", "neg_id"
     )
 
 
@@ -4220,20 +4167,9 @@ def ann_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     short = topk_ranked(
         adc, "PARTITION BY query_id ORDER BY adc ASC, cand_id ASC", shortlist_k
     ).select("query_id", "cand_id")
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
     cv = emb.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv"))
-    rer = (
-        short.join(q, "query_id")
-        .join(cv, "cand_id")
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(F.expr(cosine_similarity_sql("qv", "cv")), 6).alias("cosine"),
-        )
-    )
-    return topk_ranked(rer, _BY_COSINE, _TOP_K)
+    pairs = short.join(_query_panel(emb.drop("label")), "query_id").join(cv, "cand_id")
+    return topk_ranked(_exact_cosine(pairs), _BY_COSINE, _TOP_K)
 
 
 # --- the maintenance decision EXECUTED ----------------------------------------

@@ -268,7 +268,6 @@ def session_conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     three-valued logic identically in both engines."""
     ev = load(spark, sf_dir, "events")
     ev = ev.withColumn("ts", F.col("ts") - F.col("ts") % F.lit(1_000))
-    from pyspark.sql import Window
 
     by_user = Window.partitionBy("user_id").orderBy("ts")
     run = by_user.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -350,7 +349,6 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    from pyspark.sql import Window
 
     counts = activity.groupBy("cohort_week", "week_offset").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_active")
@@ -401,7 +399,6 @@ def activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     days = ev.select(
         "user_id", F.expr(f"ts div {DAY_NS}").alias("day_idx")
     ).distinct()
-    from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy("day_idx")
     grouped = days.withColumn(
@@ -575,8 +572,6 @@ def cusum_drift_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one hash shuffle on user_id; both windows share the
     same sort — Catalyst plans a single WindowExec pass."""
-    from pyspark.sql import Window
-
     ev = load(spark, sf_dir, "events")
     o = ev.select(
         "user_id",
@@ -662,8 +657,6 @@ def watermark_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark really advances (per ingest partition, with the global
     watermark as their min), and it keeps the window
     partition-parallel instead of a global sequential scan."""
-    from pyspark.sql import Window
-
     ev = load(spark, sf_dir, "events")
     ev = ev.withColumn("arr_key", F.md5(F.col("event_id").cast("string")))
     shard = (
@@ -738,8 +731,6 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one user-partitioned window for the lead, one
     partial-agg groupBy on the (cur, nxt) pair — both partition on
     their natural keys."""
-    from pyspark.sql import Window
-
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
@@ -822,8 +813,6 @@ def daily_peak_concurrency(sess: DataFrame) -> DataFrame:
     partitions.  A session spanning days contributes to the
     in-between days through its carry.  Output days are those with at
     least one interval boundary."""
-    from pyspark.sql import Window
-
     deltas = sess.select(
         F.col("session_start_ns").alias("t"), F.lit(1).alias("d")
     ).unionAll(sess.select(F.col("session_end_ns").alias("t"), F.lit(-1).alias("d")))
@@ -1026,8 +1015,6 @@ def interval_islands_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     likewise, so both aggregate shuffle-free.  All-integer ns output —
     no float-hygiene exposure.
     """
-    from pyspark.sql import Window
-
     iv = (
         load(spark, sf_dir, "events")
         .select(
@@ -1110,8 +1097,6 @@ def timeseries_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB; a pathological single hot user is an AQE-skew case,
     not a plan change).
     """
-    from pyspark.sql import Window
-
     e = load(spark, sf_dir, "events").select(
         "user_id",
         F.expr(f"ts div {DAY_NS}").alias("day_idx"),
@@ -1188,7 +1173,6 @@ def dow_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     over that tiny aggregate grain.
     """
     from ..functions.core import round_stable
-    from pyspark.sql import Window
 
     q = load(spark, sf_dir, "events", fan_out=True).select(
         "event_type",
@@ -1812,8 +1796,6 @@ def daily_burst_zscores(spark: SparkSession, sf_dir: str) -> DataFrame:
     type-partitioned window with three aggregates sharing the same
     frame — a single WindowExec.
     """
-    from pyspark.sql import Window
-
     from ..functions.core import round_stable
 
     daily = (
@@ -2185,8 +2167,6 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     user-keyed classify join carry the weight; everything after
     rides the tiny cohort×offset grain.
     """
-    from pyspark.sql import Window
-
     e = load(spark, sf_dir, "events", fan_out=True).select(
         "user_id",
         F.expr(f"ts div {WEEK_NS}").alias("week_idx"),
@@ -2340,8 +2320,6 @@ def position_attribution_credits(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract — watermarkable on a stream), one conversion-partitioned
     rank window, pure integer credit arithmetic.
     """
-    from pyspark.sql import Window
-
     ev = load(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("p_user"),
@@ -2569,8 +2547,6 @@ def markov_absorption_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the transition estimate is the work (user window +
     pair groupBy); the 5 iteration rounds ride the tiny state grain.
     """
-    from pyspark.sql import Window
-
     ev = load(spark, sf_dir, "events")
     o = ev.select(
         "event_type",
@@ -2673,8 +2649,6 @@ def rolling_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form slope (wΣxy − ΣxΣy)/(wΣxx − (Σx)²) as ONE guarded
     fixed-order double.  A single WindowExec serves all five frames.
     """
-    from pyspark.sql import Window
-
     from ..functions.core import round_stable
 
     daily = (
@@ -3107,8 +3081,6 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution are the data-touching work; 25 iteration rounds
     ride the tiny state grain.
     """
-    from pyspark.sql import Window
-
     from ..functions.core import round_stable
 
     ev = load(spark, sf_dir, "events")
@@ -3311,8 +3283,6 @@ def logrank_conversion_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final week — so the operator measures the conversion clock,
     where real variation exists.)
     """
-    from pyspark.sql import Window
-
     from ..functions.core import round_stable
 
     fp = (
@@ -3543,8 +3513,6 @@ def cusum_drift_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combine (metadata-sized output — 10 types × days), a
     broadcast-joined per-type target, and windows over that same tiny
     grain; at 100 TB the scan dominates and the chart math is free."""
-    from pyspark.sql import Window
-
     d = load(spark, sf_dir, "events").select(
         "event_type",
         F.expr(f"ts div {DAY_NS}").alias("day_idx"),

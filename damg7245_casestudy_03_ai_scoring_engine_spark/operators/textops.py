@@ -517,7 +517,6 @@ def quantile_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline checks before/after filtering; `median_metric` covers
     the approx_percentile scale path."""
     d = load(spark, sf_dir, "documents")
-    from pyspark.sql import Window
 
     w = Window.partitionBy("lang").orderBy("n_chars", "doc_id")
     ranked = d.select(
@@ -1034,8 +1033,6 @@ def ngram_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise comparison anywhere; shuffle volume is corpus gram
     occurrences, the same as every other inverted-index operator
     here."""
-    from pyspark.sql import Window
-
     d = load(spark, sf_dir, "documents", fan_out=True)
     ws = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     n = F.size("ws")
@@ -1514,7 +1511,6 @@ def unigram_ll_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("nll"),
         )
     )
-    from pyspark.sql import Window
 
     # Distributed exact ntile(4): a bare `ntile().over(orderBy(...))`
     # window funnels EVERY row through one partition.  Instead:
@@ -1918,8 +1914,6 @@ def deterministic_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     globally sorted through one task).  `order_checksum` folds the
     per-shard sequence into an exact integer so the oracle verifies
     the ORDER, not just membership."""
-    from pyspark.sql import Window
-
     d = load(spark, sf_dir, "documents", fan_out=True)
     h = F.conv(
         F.substring(
@@ -2087,8 +2081,6 @@ def curation_decision_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle family at 100 TB); every compared value is already
     cross-engine exact (rounded/integer/boolean), so the CASE ladder
     is deterministic."""
-    from pyspark.sql import Window
-
     from .registry import REGISTRY
 
     tq = REGISTRY["text_quality_scores"].fn(spark, sf_dir).select("doc_id", "quality")
@@ -2923,8 +2915,6 @@ def heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     curve has one row PER DOC, not per token, so the window input is
     metadata-sized); the regression itself is a 5-integer fold with
     map-side combine."""
-    from pyspark.sql import Window
-
     d = load(spark, sf_dir, "documents", fan_out=True)
     ws = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     base = d.select("doc_id", "source", ws.alias("ws"))
@@ -3124,8 +3114,6 @@ def zipf_rank_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one (source, token) aggregate, a rank window
     partitioned by source over VOCABULARY-sized input (not corpus-
     sized), and a 5-integer fold."""
-    from pyspark.sql import Window
-
     d = load(spark, sf_dir, "documents", fan_out=True)
     tok = d.select(
         "source",
@@ -3224,8 +3212,6 @@ def near_dup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash shuffles, no new iteration, no driver state.  At 100 TB the
     quality scan is embarrassingly parallel and the comp_id window
     partitions are near-dup-cluster-sized (tiny)."""
-    from pyspark.sql import Window
-
     from .dedup import dedup_clusters
 
     clusters = dedup_clusters(spark, sf_dir).select("doc_id", "comp_id", "n_members")

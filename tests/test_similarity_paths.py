@@ -932,3 +932,42 @@ def test_ivf_maintenance_cycle_convergence(spark):
         assert r.n_vecs * ncells_before * 10 <= 11 * total, r
         # ...and due only at the grown ncells
         assert r.n_vecs * len(audit) * 10 > 11 * total, r
+
+
+def _embeddings_as_two_parts(sf: str) -> int:
+    """Rewrite SF_SMOKE's embeddings under `sf` as a directory of two
+    part files, the first holding two row groups; returns the rows."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(os.path.join(SF_SMOKE, "embeddings.parquet"))
+    out = os.path.join(sf, "embeddings.parquet")
+    os.makedirs(out)
+    half = table.num_rows // 2
+    first = os.path.join(out, "part-0.parquet")
+    pq.write_table(table.slice(0, half), first, row_group_size=half // 2 + 1)
+    pq.write_table(table.slice(half), os.path.join(out, "part-1.parquet"))
+    assert pq.ParquetFile(first).metadata.num_row_groups == 2
+    return table.num_rows
+
+
+def test_emb_count_reads_every_footer_of_a_multi_file_layout(spark, tmp_path, monkeypatch):
+    from damg7245_casestudy_03_ai_scoring_engine_spark.operators import similarity
+    from damg7245_casestudy_03_ai_scoring_engine_spark.sources.catalog import load
+
+    def no_fallback(*_args):
+        raise AssertionError("footer count fell back to a Spark count")
+
+    n = _embeddings_as_two_parts(str(tmp_path))
+    monkeypatch.setattr(similarity, "load", no_fallback)
+    sf = str(tmp_path)
+    assert similarity._emb_count(spark, sf) == load(spark, sf, "embeddings").count() == n
+
+
+def test_emb_count_falls_back_to_spark_on_a_non_parquet_file(spark, tmp_path, monkeypatch):
+    from damg7245_casestudy_03_ai_scoring_engine_spark.operators import similarity
+
+    (tmp_path / "embeddings.parquet").write_text("not a parquet file\n")
+    monkeypatch.setattr(similarity, "load", lambda spark, sf_dir, name: spark.range(7))
+    assert similarity._emb_count(spark, str(tmp_path)) == 7

@@ -11,12 +11,18 @@ repository, so the check lives here.
 script that no longer compiles, or imports a package name that was
 deleted, would otherwise go unnoticed until then.
 
+A function-local import of a name the module already imports at top
+level, or one the function never reads, is the same kind of silent
+second binding.
+
 A top-level package definition that nothing reads is dead code that
 still looks like an API; stale copies of a formula hide there.
 
 A per-group top-k (rank, then keep rk <= k) has one spelling,
 `functions/core.py::topk_ranked`; a hand-written rank-filter tail
-elsewhere is a second spelling of the same operator.
+elsewhere is a second spelling of the same operator.  Likewise the
+similarity family's exact query/candidate cosine has one spelling,
+`operators/similarity.py::_exact_cosine`.
 """
 
 from __future__ import annotations
@@ -55,6 +61,51 @@ def _duplicate_top_level_names(path: str) -> list[str]:
     return sorted(name for name, n in names.items() if n > 1)
 
 
+def _own_nodes(fn: ast.AST):
+    """Nodes of `fn`'s body, not descending into nested defs or classes."""
+    todo = list(fn.body)
+    while todo:
+        node = todo.pop()
+        yield node
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            todo.extend(ast.iter_child_nodes(node))
+
+
+def _bound(alias: ast.alias) -> str:
+    """The name an import binds: `import a.b` binds `a`."""
+    return (alias.asname or alias.name).split(".")[0]
+
+
+def _redundant_local_imports(path: str) -> list[str]:
+    """Function-local imports that rebind a top-level import of the
+    module, or bind a name the function never reads."""
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), filename=path)
+    top = {
+        _bound(a)
+        for node in tree.body
+        if isinstance(node, (ast.Import, ast.ImportFrom))
+        for a in node.names
+    }
+    found = []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        read = {
+            n.id
+            for n in ast.walk(fn)
+            if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store)
+        }
+        for node in _own_nodes(fn):
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                found += [
+                    f"{fn.name}:{node.lineno}:{_bound(a)}"
+                    for a in node.names
+                    if _bound(a) in top or _bound(a) not in read
+                ]
+    return sorted(found)
+
+
 def test_no_test_file_redefines_a_top_level_name():
     dupes = {
         name: found
@@ -74,6 +125,12 @@ def test_no_package_module_binds_a_top_level_name_twice():
         if (found := _duplicate_top_level_names(path))
     }
     assert not dupes, f"top-level names bound more than once: {dupes}"
+    local = {
+        os.path.relpath(path, REPO): found
+        for path in sorted(paths)
+        if (found := _redundant_local_imports(path))
+    }
+    assert not local, f"function-local imports rebinding or unread: {local}"
 
 
 def _missing_package_names(path: str) -> list[str]:
@@ -213,3 +270,26 @@ def test_every_rank_filter_tail_goes_through_topk_ranked():
             tree = ast.parse(fh.read(), filename=path)
         tails += [f"{os.path.relpath(path, REPO)}:{n}" for n in _rank_filter_tails(tree)]
     assert not tails, f"rank-filter tails outside topk_ranked: {tails}"
+
+
+def test_query_candidate_cosine_goes_through_exact_cosine():
+    """`cosine_similarity_sql("qv", "cv")` is spelled once, inside the
+    scorer; rag_context_assembly keeps its raw, unrounded cosine as its
+    oracle's order key."""
+    similarity = os.path.join(PKG, "operators", "similarity.py")
+    allowed = {(similarity, "_exact_cosine"), (similarity, "rag_context_assembly")}
+    sites = []
+    for path in glob.glob(os.path.join(REPO, PKG, "**", "*.py"), recursive=True):
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), filename=path)
+        rel = os.path.relpath(path, REPO)
+        for top in tree.body:
+            where = (rel, getattr(top, "name", "<module>"))
+            sites += [
+                f"{rel}:{node.lineno} ({where[1]})"
+                for node in ast.walk(top)
+                if _call_named(node, "cosine_similarity_sql")
+                and [_sql_text(a) for a in node.args] == ["qv", "cv"]
+                and where not in allowed
+            ]
+    assert not sites, f"query/candidate cosine outside _exact_cosine: {sites}"
