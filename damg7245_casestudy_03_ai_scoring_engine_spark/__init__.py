@@ -4,8 +4,8 @@ capabilities of the reference `DAMG7245-CaseStudy-03-AI_Scoring_Engine`
 
 Layout
 ------
-- ``functions``  : reusable column-expression helpers (clamp, safe_div,
-  text metrics, vector math) — the Spark analog of the reference's
+- ``functions``  : reusable formula fragments and column helpers (clamp,
+  fixed-point rounding, text metrics, vector math) — the Spark analog of the reference's
   scalar helper functions (reference: app/scoring/utils.py,
   app/scoring_engine/*.py clamp/safe_div definitions).
 - ``operators``  : the generic relational operator inventory

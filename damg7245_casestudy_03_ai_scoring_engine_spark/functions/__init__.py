@@ -1,4 +1,4 @@
-from .core import blend, clamp, conf_floor_sql, safe_div, score_band_sql  # noqa: F401
+from .core import conf_floor_sql, score_band_sql  # noqa: F401
 from .text import (  # noqa: F401
     stopword_ratio,
     token_count,

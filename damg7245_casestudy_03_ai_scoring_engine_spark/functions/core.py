@@ -1,30 +1,21 @@
-"""Core scalar column helpers (SURVEY.md §2.8 F9–F13).
+"""Core scalar formula fragments (SURVEY.md §2.8 F9–F13).
 
 The reference defines ``clamp`` five separate times
 (app/scoring_engine/vr_model.py:23-24, composite.py:13-14,
 synergy.py:42-43, app/scoring/utils.py:4-5,
 scripts/run_scoring_engine.py:33-34) and ``safe_div`` once
-(app/scoring/utils.py:7-9).  Here each is a single column-expression
-helper: pure JVM-side `Column` math, whole-stage-codegen friendly, no
-Python UDFs.
+(app/scoring/utils.py:7-9).  Here each formula is a single SQL
+fragment: pure JVM-side expression math, whole-stage-codegen
+friendly, no Python UDFs.
 
-All helpers are ANSI-safe: guarded denominators, no implicit casts
+All fragments are ANSI-safe: guarded denominators, no implicit casts
 that can raise under `spark.sql.ansi.enabled=true`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _col(x: Column | str) -> Column:
-    return F.col(x) if isinstance(x, str) else x
-
-
-def clamp(col: Column | str, lo: float, hi: float) -> Column:
-    """clamp(x, lo, hi) — reference app/scoring/utils.py:4-5."""
-    return F.least(F.greatest(_col(col), F.lit(float(lo))), F.lit(float(hi)))
 
 
 # --- SQL fragments: the one spelling of each formula ----------------------
@@ -39,10 +30,10 @@ def clamp(col: Column | str, lo: float, hi: float) -> Column:
 # (bit-exact reparse); the D suffix keeps literals DOUBLE (bare
 # decimals parse as DECIMAL and would change the expression types).
 #
-# `clamp` and `round_stable` alone keep a Column form next to their
-# fragment: about eighty operator call sites pass them Column
-# expressions built from other Column helpers, so a fragment-only
-# form would mean rewriting each of those expressions as text.
+# No formula here has a Column twin: a caller whose operand is a
+# Column expression spells that operand as SQL text too, or projects
+# it first under a name (Catalyst collapses the two projections, so
+# the plan is the same either way).
 
 
 def flit(v: float) -> str:
@@ -61,6 +52,7 @@ def flit(v: float) -> str:
 
 
 def clamp_sql(x: str, lo: float, hi: float) -> str:
+    """clamp(x, lo, hi) — reference app/scoring/utils.py:4-5."""
     return f"least(greatest({x}, {flit(lo)}), {flit(hi)})"
 
 
@@ -71,43 +63,9 @@ def conf_floor_sql(x: str, floor: float = 0.20) -> str:
 
 
 def round_stable_sql(x: str, scale: int) -> str:
-    p = flit(float(10**scale))
-    return f"floor({x} * {p} + 0.5D) / {p}"
-
-
-def score_band_sql(x: str) -> str:
-    """Maturity band ladder at <=20/40/60/80 →
-    Nascent/Developing/Progressing/Advanced/Leading — reference
-    app/scoring_engine/composite.py:17-34."""
-    return (
-        f"CASE WHEN {x} <= 20 THEN 'Nascent' "
-        f"WHEN {x} <= 40 THEN 'Developing' "
-        f"WHEN {x} <= 60 THEN 'Progressing' "
-        f"WHEN {x} <= 80 THEN 'Advanced' "
-        "ELSE 'Leading' END"
-    )
-
-
-def safe_div(num: Column | str, den: Column | str, default: float = 0.0) -> Column:
-    """num/den with a default when den is 0 or NULL — reference
-    app/scoring/utils.py:7-9.  Guarded so ANSI mode never raises."""
-    den = _col(den)
-    return F.when(den.isNotNull() & (den != 0), _col(num) / den).otherwise(
-        F.lit(float(default))
-    )
-
-
-def blend(col: Column | str, target: Column | str | float, weight: Column | float) -> Column:
-    """Prior blending `(1-w)*x + w*target` — reference
-    scripts/run_scoring_engine.py:47-49."""
-    t = F.lit(float(target)) if isinstance(target, (int, float)) else _col(target)
-    w = F.lit(float(weight)) if isinstance(weight, (int, float)) else weight
-    return (F.lit(1.0) - w) * _col(col) + w * t
-
-
-def round_stable(col: Column | str, scale: int) -> Column:
     """Cross-engine-stable fixed-point rounding for SIGNED doubles:
-    floor(x·10^s + 0.5)/10^s.
+    floor(x·10^s + 0.5)/10^s.  `x` is spliced in before `* 10^s`, so a
+    sum or difference must come in parentheses.
 
     On negatives this is round-half-UP toward +inf (-0.5 → 0, not
     -1), i.e. NOT half-away-from-zero — that asymmetry is fine and
@@ -126,9 +84,33 @@ def round_stable(col: Column | str, scale: int) -> Column:
     Using this identical IEEE multiply+add+floor on BOTH sides (the
     oracle SQL spells out the same formula) makes the rounded value
     bit-identical in every engine."""
-    c = F.col(col) if isinstance(col, str) else col
-    p = float(10**scale)
-    return F.floor(c * F.lit(p) + F.lit(0.5)) / F.lit(p)
+    p = flit(float(10**scale))
+    return f"floor({x} * {p} + 0.5D) / {p}"
+
+
+def split_bucket_sql(key: str) -> str:
+    """The salted train/eval bucket in [0, 100) of a STRING key:
+    md5(key ‖ '|split-seed-1'), first 8 hex digits as BIGINT, % 100.
+    Buckets < 90 are the training side.  No rand(): a row's side never
+    changes when data is re-partitioned or re-ingested, and the oracle
+    SQL replays the same hash."""
+    return (
+        f"CAST(conv(substring(md5(concat({key}, '|split-seed-1')), 1, 8), 16, 10)"
+        " AS BIGINT) % 100"
+    )
+
+
+def score_band_sql(x: str) -> str:
+    """Maturity band ladder at <=20/40/60/80 →
+    Nascent/Developing/Progressing/Advanced/Leading — reference
+    app/scoring_engine/composite.py:17-34."""
+    return (
+        f"CASE WHEN {x} <= 20 THEN 'Nascent' "
+        f"WHEN {x} <= 40 THEN 'Developing' "
+        f"WHEN {x} <= 60 THEN 'Progressing' "
+        f"WHEN {x} <= 80 THEN 'Advanced' "
+        "ELSE 'Leading' END"
+    )
 
 
 def topk_ranked(df: DataFrame, over_sql: str, k: int) -> DataFrame:
@@ -156,8 +138,8 @@ def exact_pearson(
     The five moments (Σx, Σy, Σx², Σy², Σxy) are exact int64 sums, so
     n·Σxy − Σx·Σy and both variance terms are exact too; r is ONE
     fixed-order double expression over them (sqrt is IEEE-correctly
-    rounded, hence engine-identical) through round_stable(6), and 0.0
-    when either variance is zero.  The oracle SQL spells the same
+    rounded, hence engine-identical) through round_stable_sql(6), and
+    0.0 when either variance is zero.  The oracle SQL spells the same
     formula."""
     s = pairs.groupBy(key).agg(
         F.count(F.lit(1)).alias("n"),
@@ -167,17 +149,15 @@ def exact_pearson(
         F.sum(F.col(y) * F.col(y)).alias("syy"),
         F.sum(F.col(x) * F.col(y)).alias("sxy"),
     )
-    n, sx, sy, sxx, syy, sxy = (
-        F.col(k) for k in ("n", "sx", "sy", "sxx", "syy", "sxy")
+    num = "CAST(n * sxy - sx * sy AS BIGINT)"
+    d1 = "CAST(n * sxx - sx * sx AS BIGINT)"
+    d2 = "CAST(n * syy - sy * sy AS BIGINT)"
+    r = round_stable_sql(
+        f"CAST({num} AS DOUBLE) / sqrt(CAST({d1} AS DOUBLE) * CAST({d2} AS DOUBLE))", 6
     )
-    num = (n * sxy - sx * sy).cast("long")
-    d1 = (n * sxx - sx * sx).cast("long")
-    d2 = (n * syy - sy * sy).cast("long")
-    r = F.when(
-        (d1 > 0) & (d2 > 0),
-        round_stable(
-            num.cast("double") / F.sqrt(d1.cast("double") * d2.cast("double")),
-            6,
-        ),
-    ).otherwise(F.lit(0.0))
-    return s.select(key, n.alias(n_out), num.alias("r_num"), r.alias(r_out))
+    return s.selectExpr(
+        key,
+        f"n AS {n_out}",
+        f"{num} AS r_num",
+        f"CASE WHEN {d1} > 0 AND {d2} > 0 THEN {r} ELSE 0.0D END AS {r_out}",
+    )

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.core import clamp
+from ..functions.core import clamp_sql
 from ..scoring.talent import talent_concentration_sql, talent_risk_adjustment_sql
 from ..sources.catalog import load, ns
 from .registry import register
@@ -373,23 +373,15 @@ def signal_summaries(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.percentile("age_days", F.lit(0.5)).alias("median_age_days"),
     )
-    recency = clamp(1.0 - F.col("median_age_days") / 180.0, 0.0, 1.0)
-    return agg.select(
+    recency = clamp_sql("1.0D - median_age_days / 180.0D", 0.0, 1.0)
+    return agg.selectExpr(
         "signal_type",
         "n_items",
-        F.round("ai_ratio", 6).alias("ai_ratio"),
-        F.round("senior_ratio", 6).alias("senior_ratio"),
-        F.round("diversity", 6).alias("diversity"),
-        F.round("median_age_days", 6).alias("median_age_days"),
-        F.round(recency, 6).alias("recency_factor"),
-        F.round(
-            100.0
-            * (
-                0.55 * F.col("ai_ratio")
-                + 0.20 * F.col("senior_ratio")
-                + 0.15 * F.col("diversity")
-                + 0.10 * recency
-            ),
-            4,
-        ).alias("signal_score"),
+        "round(ai_ratio, 6) AS ai_ratio",
+        "round(senior_ratio, 6) AS senior_ratio",
+        "round(diversity, 6) AS diversity",
+        "round(median_age_days, 6) AS median_age_days",
+        f"round({recency}, 6) AS recency_factor",
+        "round((ai_ratio * 0.55D + senior_ratio * 0.2D + diversity * 0.15D"
+        f" + {recency} * 0.1D) * 100.0D, 4) AS signal_score",
     )

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.cache import tracked_persist
+from ..functions.core import round_stable_sql, split_bucket_sql
 from ..sources.catalog import load
 from .registry import register
 
@@ -159,6 +160,17 @@ def _minhash_bands(hashed: DataFrame) -> DataFrame:
     )
 
 
+def _set_jaccard_sql(a: str, b: str) -> str:
+    """|a ∩ b| / |a ∪ b| of two distinct-element arrays at 6 dp (Spark
+    `round`), 0.0 when both are empty."""
+    inter = f"size(array_intersect({a}, {b}))"
+    union = f"size({a}) + size({b}) - {inter}"
+    return (
+        f"round(CASE WHEN {union} > 0 THEN CAST({inter} AS DOUBLE) / CAST({union} AS DOUBLE)"
+        " ELSE 0.0D END, 6)"
+    )
+
+
 def _jaccard_verified(cand: DataFrame, hashed: DataFrame) -> DataFrame:
     """(doc_a, doc_b, jaccard, …): (doc_a, doc_b) candidates verified
     on their exact shingle-set jaccard (6 dp, kept at ≥ 0.5).  Any
@@ -173,16 +185,13 @@ def _jaccard_verified(cand: DataFrame, hashed: DataFrame) -> DataFrame:
             *(F.col(c).alias(f"{c}_{s}") for c in extra),
         )
 
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size("sh_a") + F.size("sh_b") - F.size(F.array_intersect("sh_a", "sh_b"))
-    jaccard = F.when(union > 0, inter / union.cast("double")).otherwise(F.lit(0.0))
     return (
         cand.join(side("a"), "doc_a")
         .join(side("b"), "doc_b")
         .select(
             "doc_a",
             "doc_b",
-            F.round(jaccard, 6).alias("jaccard"),
+            F.expr(_set_jaccard_sql("sh_a", "sh_b")).alias("jaccard"),
             *(f"{c}_{s}" for c in extra for s in "ab"),
         )
         .filter(F.col("jaccard") >= 0.5)
@@ -340,15 +349,10 @@ def _jaccard_pairs_prefix(spark: SparkSession, sf_dir: str, t: float) -> DataFra
     )
     a = d.select(F.col("doc_id").alias("doc_a"), F.col("ws").alias("ws_a"))
     b = d.select(F.col("doc_id").alias("doc_b"), F.col("ws").alias("ws_b"))
-    inter = F.size(F.array_intersect("ws_a", "ws_b")).cast("double")
-    union = (F.size("ws_a") + F.size("ws_b") - F.size(F.array_intersect("ws_a", "ws_b"))).cast(
-        "double"
-    )
-    jac = F.round(F.when(union > 0, inter / union).otherwise(F.lit(0.0)), 6)
     return (
         cand.join(a, "doc_a")
         .join(b, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        .select("doc_a", "doc_b", F.expr(_set_jaccard_sql("ws_a", "ws_b")).alias("jaccard"))
         .filter(F.col("jaccard") >= t)
     )
 
@@ -1038,19 +1042,7 @@ def incremental_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     for colliding candidates.  Per-batch cost scales with the batch
     and its collision set — independent of corpus size."""
     sh = _shingled_docs(spark, sf_dir)
-    is_delta = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("|split-seed-1"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-        >= 90
-    )
+    is_delta = F.expr(f"{split_bucket_sql('CAST(doc_id AS STRING)')} >= 90")
     hashed = tracked_persist(
         sh.select(
             "doc_id",
@@ -1223,8 +1215,8 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sa.n").alias("n_shingles_a"),
         F.col("sb.n").alias("n_shingles_b"),
     )
-    n_common = F.coalesce(F.col("c"), F.lit(0)).cast("bigint")
-    union_n = F.col("n_shingles_a") + F.col("n_shingles_b") - n_common
+    n_common = "CAST(coalesce(c, 0) AS BIGINT)"
+    union_n = f"n_shingles_a + n_shingles_b - {n_common}"
     return (
         pairs.join(F.broadcast(inter), ["source_a", "source_b"], "left")
         .join(F.broadcast(agree), ["source_a", "source_b"], "left")
@@ -1233,13 +1225,9 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source_b",
             "n_shingles_a",
             "n_shingles_b",
-            n_common.alias("n_common"),
-            (
-                F.floor(
-                    n_common.cast("double") / union_n.cast("double") * F.lit(1e6)
-                    + F.lit(0.5)
-                )
-                / F.lit(1e6)
+            F.expr(n_common).alias("n_common"),
+            F.expr(
+                round_stable_sql(f"CAST({n_common} AS DOUBLE) / CAST({union_n} AS DOUBLE)", 6)
             ).alias("jaccard"),
             (
                 F.coalesce(F.col("n_agree"), F.lit(0)).cast("double")

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.core import topk_ranked
+from ..functions.core import round_stable_sql, topk_ranked
 from ..scoring.config import SOURCE_PROFILES, dimension_case_sql
 from ..scoring.evidence import (
     RUBRIC_LEVELS,
@@ -206,16 +206,15 @@ def evidence_dimension_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     per output — bit-identical between Spark and DuckDB at every sf,
     unlike double-sum aggregates whose low bits depend on summation
     order (the round-3 driver flake)."""
-    from ..functions.core import round_stable
     from ..scoring.evidence import weighted_dimension_features
 
     ev = demo_evidence(spark, sf_dir)
     out = weighted_dimension_features(ev, DEMO_KEYWORD_PAIRS, fixed_point=(10, 100))
-    return out.select(
+    return out.selectExpr(
         "company_id",
         "dimension",
-        round_stable("weighted_score", 4).alias("weighted_score"),
-        round_stable("confidence", 6).alias("confidence"),
+        f"{round_stable_sql('weighted_score', 4)} AS weighted_score",
+        f"{round_stable_sql('confidence', 6)} AS confidence",
         "evidence_count",
     )
 

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.cache import tracked_persist
-from ..functions.core import topk_ranked
+from ..functions.core import flit, round_stable_sql, topk_ranked
 from ..sources.catalog import load
 from .registry import register
 
@@ -139,15 +139,13 @@ WHERE rk <= 20
 def pagerank_top_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 transaction-graph nodes by PageRank, tagged customer /
     supplier.  The listed value is the n-SCALED rank (1.0 = the
-    uniform-average node), floor-rounded 6dp via round_stable, and the
+    uniform-average node), floor-rounded 6dp via round_stable_sql, and the
     top-20 is selected by the ROUNDED value with node-id tie-break —
     both choices so the fixed-8-iteration DuckDB oracle (the same
     power method unrolled as chained aggregate CTEs, see
     _pagerank_oracle) selects and prints the identical listing.  The
     exact numpy power-iteration pin stays in tests/test_graph.py."""
     from pyspark.sql import Window
-
-    from ..functions.core import round_stable
 
     ranks = pagerank(transaction_edges(spark, sf_dir))
     # one driver-side scalar (node count) to scale ranks to O(1);
@@ -162,7 +160,7 @@ def pagerank_top_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranks.select(
             "node",
             kind.alias("kind"),
-            round_stable(F.col("rank") * F.lit(float(n)), 6).alias("pagerank"),
+            F.expr(round_stable_sql(f"rank * {flit(n)}", 6)).alias("pagerank"),
         )
         .orderBy(F.desc("pagerank"), F.asc("node"))
         .limit(20)

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.core import topk_ranked
+from ..functions.core import round_stable_sql, topk_ranked
 from ..sources.catalog import load
 from .registry import register
 
@@ -947,16 +947,11 @@ def python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     data."""
     from ..sources.pydatasource import SyntheticSignalsDataSource
 
-    try:
-        spark.dataSource.register(SyntheticSignalsDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(SyntheticSignalsDataSource)
     df = spark.read.format("synthetic_signals").load()
     return df.groupBy("key").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        (F.floor(F.sum("val") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "val_sum"
-        ),
+        F.expr(round_stable_sql("sum(val)", 6)).alias("val_sum"),
     )
 
 

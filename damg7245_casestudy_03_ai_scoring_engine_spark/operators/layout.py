@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.cache import dataset_tag, session_memo, tracked_persist
+from ..functions.core import round_stable_sql
 from ..sources.catalog import load, read_parquet_memo
 from ..sources.scratch import scratch_dir
 from .registry import register
@@ -47,7 +48,7 @@ N_BUCKETS = 8
 # tests/test_oracle_parity.py lint): l_extendedprice has 2 decimals
 # and l_discount has 2 decimals, so revenue·10^4 is an exact integer.
 # Summing LONGS is order-independent across any partitioning; ONE
-# final IEEE division + round_stable is bit-identical in every engine.
+# final IEEE division + round_stable_sql is bit-identical in every engine.
 _REV_ORACLE = (
     "floor((CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)"
     " * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS DOUBLE)"
@@ -56,10 +57,13 @@ _REV_ORACLE = (
 
 
 def _rev_exact() -> F.Column:
-    price_i = F.round(F.col("l_extendedprice") * 100).cast("long")
-    keep_i = F.lit(100) - F.round(F.col("l_discount") * 100).cast("long")
-    total = F.sum(price_i * keep_i).cast("double") / F.lit(10000.0)
-    return F.floor(total * F.lit(100.0) + F.lit(0.5)) / F.lit(100.0)
+    return F.expr(
+        round_stable_sql(
+            "CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)"
+            " * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS DOUBLE) / 10000.0D",
+            2,
+        )
+    )
 
 
 # --- bucketed co-located join ----------------------------------------------

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.core import flit, round_stable_sql
 from ..scoring import config as C
 from ..scoring.demo_domain import dimension_scores
 from ..sources.catalog import load
@@ -403,8 +404,6 @@ def fpgrowth_brand_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         "confidence",
         "support",
     )
-    conf = F.col("confidence")
-    lift = conf / (F.col("supp_cons") / F.lit(float(n_orders)))
     return (
         rules.join(
             F.broadcast(singles), rules.consequent == singles.cons_item
@@ -415,8 +414,10 @@ def fpgrowth_brand_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("support") * F.lit(float(n_orders))).cast("bigint").alias(
                 "support_count"
             ),
-            (F.floor(conf * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias("confidence"),
-            (F.floor(lift * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias("lift"),
+            F.expr(round_stable_sql("confidence", 6)).alias("confidence"),
+            F.expr(
+                round_stable_sql(f"confidence / (supp_cons / {flit(n_orders)})", 6)
+            ).alias("lift"),
         )
     )
 
@@ -463,7 +464,7 @@ def isotonic_calibration_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, label = bucket positive rate), so the driver-side model
     is O(100) regardless of corpus size — the standard
     calibrate-on-aggregates pattern.  Output: per score point, the
-    fitted monotone probability (6dp round_stable), pinned against a pure-python PAV replay (<=1e-6, the
+    fitted monotone probability (6dp round_stable_sql), pinned against a pure-python PAV replay (<=1e-6, the
     fit's own rounding grain).
     """
     e = load(spark, sf_dir, "events", fan_out=True)
@@ -500,7 +501,5 @@ def isotonic_calibration_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fitted.select(
         F.col("feature").cast("long").alias("score_pt"),
         F.col("weight").cast("long").alias("n"),
-        (F.floor(F.col("prediction") * 1e6 + F.lit(0.5)) / F.lit(1e6)).alias(
-            "calibrated_p"
-        ),
+        F.expr(round_stable_sql("prediction", 6)).alias("calibrated_p"),
     )

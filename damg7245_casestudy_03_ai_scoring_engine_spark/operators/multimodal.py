@@ -30,6 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.core import round_stable_sql
 from ..sources.catalog import load
 from .registry import register
 
@@ -191,14 +192,12 @@ def multimodal_decode_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     swaps in without touching the plumbing under test).  Averages are
     exact integer sums / count (order-independent) with floor-stable
     rounding on both sides."""
-    from ..functions.core import round_stable
-
     feats = extract_media_features(documents_as_assets(spark, sf_dir))
     return feats.groupBy("kind").agg(
         F.count(F.lit(1)).alias("n_assets"),
-        round_stable(F.avg("byte_len"), 4).alias("avg_byte_len"),
-        round_stable(F.avg("width"), 4).alias("avg_width"),
-        round_stable(F.avg("n_frames"), 4).alias("avg_frames"),
+        F.expr(round_stable_sql("avg(byte_len)", 4)).alias("avg_byte_len"),
+        F.expr(round_stable_sql("avg(width)", 4)).alias("avg_width"),
+        F.expr(round_stable_sql("avg(n_frames)", 4)).alias("avg_frames"),
     )
 
 
@@ -366,15 +365,13 @@ def multimodal_resize_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncation ≙ trunc(); frames per video = ceil(n_frames/4)) and the
     binary one-to-one AND one-to-many transform plumbing is
     value-hash-checked end to end."""
-    from ..functions.core import round_stable
-
     assets = documents_as_assets(spark, sf_dir)
     resized = resize_images(assets)
     frames = sample_frames(assets)
     r = resized.groupBy("kind").agg(
         F.count(F.lit(1)).alias("n_assets"),
         F.sum(F.octet_length("content")).cast("bigint").alias("total_bytes"),
-        round_stable(F.avg("width"), 2).alias("avg_width"),
+        F.expr(round_stable_sql("avg(width)", 2)).alias("avg_width"),
     )
     f = frames.agg(
         F.count(F.lit(1)).alias("n_frames_sampled"),

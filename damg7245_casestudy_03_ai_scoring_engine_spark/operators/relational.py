@@ -21,7 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.core import clamp, conf_floor_sql, safe_div, topk_ranked
+from ..functions.core import clamp_sql, conf_floor_sql, flit, round_stable_sql, topk_ranked
 from ..sources.catalog import DAY_NS, load, ns
 from .registry import register
 
@@ -524,12 +524,10 @@ def weighted_mean_vr(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_quantity") / 50.0).alias("w"),
         F.expr(conf_floor_sql("CAST(l_orderkey % 10 AS DOUBLE) / 10.0D")).alias("conf_eff"),
     )
-    wc = F.sum(F.col("w") * F.col("conf_eff"))
-    num = F.sum(F.col("score") * F.col("w") * F.col("conf_eff"))
+    wc = "sum(w * conf_eff)"
+    vr = f"CASE WHEN {wc} != 0 THEN sum(score * w * conf_eff) / {wc} ELSE 0.0D END"
     return scored.groupBy(F.col("l_returnflag").alias("group_key")).agg(
-        F.round(clamp(F.when(wc != 0, num / wc).otherwise(F.lit(0.0)), 0.0, 100.0), 6).alias(
-            "vr_score"
-        ),
+        F.expr(f"round({clamp_sql(vr, 0.0, 100.0)}, 6)").alias("vr_score"),
         F.count(F.lit(1)).alias("n_items"),
     )
 
@@ -598,13 +596,13 @@ def cv_penalty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Coefficient of variation → penalty clamp(1−0.25·cv, 0, 1) —
     reference scripts/run_scoring_engine.py:37-44 + app/scoring/utils.py:16-28."""
     li = load(spark, sf_dir, "lineitem")
-    cv_expr = F.when(
-        F.abs(F.avg("l_quantity")) > 0,
-        F.stddev_pop("l_quantity") / F.abs(F.avg("l_quantity")),
-    ).otherwise(F.lit(0.0))
+    cv = (
+        "CASE WHEN abs(avg(l_quantity)) > 0"
+        " THEN stddev_pop(l_quantity) / abs(avg(l_quantity)) ELSE 0.0D END"
+    )
     return li.groupBy(F.col("l_returnflag").alias("group_key")).agg(
-        F.round(cv_expr, 6).alias("cv"),
-        F.round(clamp(F.lit(1) - 0.25 * cv_expr, 0.0, 1.0), 6).alias("cv_penalty"),
+        F.expr(f"round({cv}, 6)").alias("cv"),
+        F.expr(f"round({clamp_sql(f'1 - {cv} * 0.25D', 0.0, 1.0)}, 6)").alias("cv_penalty"),
     )
 
 
@@ -1004,11 +1002,12 @@ def scalar_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sha2(F.col("n_name"), 256).alias("name_sha256"),
         F.length("n_name").alias("name_len"),
         F.substring("n_name", 1, 3).alias("name_prefix"),
-        F.round(clamp(F.col("n_nationkey").cast("double") * 7.5, 10.0, 100.0), 2).alias(
+        F.expr(f"round({clamp_sql('CAST(n_nationkey AS DOUBLE) * 7.5D', 10.0, 100.0)}, 2)").alias(
             "clamped"
         ),
-        F.round(
-            safe_div(F.col("n_nationkey").cast("double"), F.col("n_regionkey"), -1.0), 4
+        F.expr(
+            "round(CASE WHEN n_regionkey IS NOT NULL AND n_regionkey != 0"
+            " THEN CAST(n_nationkey AS DOUBLE) / n_regionkey ELSE -1.0D END, 4)"
         ).alias("safe_ratio"),
         F.when(F.col("n_nationkey") % 2 == 0, F.lit("even")).otherwise(F.lit("odd")).alias(
             "parity"
@@ -2903,7 +2902,7 @@ def gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     over ascending-sorted revenue: every term is int64 on exact-cents
     revenue with a (w, custkey) total-order rank, so numerator and
     denominator are bit-exact cross-engine; the display double is ONE
-    final IEEE division through round_stable(6).  (At extreme
+    final IEEE division through round_stable_sql(6).  (At extreme
     populations Σi·x grows ~n²·x̄ — the int64 carrier holds to ~1e6
     customers per region at these magnitudes; beyond that the same
     query runs with a decimal(38,0) carrier, per the
@@ -2913,8 +2912,6 @@ def gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     region-partitioned window sort for the ranks, and a final
     region rollup on the window's own partitioning.
     """
-    from ..functions.core import round_stable
-
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation")
@@ -2939,14 +2936,13 @@ def gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("w").alias("s0"),
         F.sum(F.col("i") * F.col("w")).alias("s1"),
     )
-    num = F.lit(2) * F.col("s1") - (F.col("n") + 1) * F.col("s0")
-    den = F.col("n") * F.col("s0")
-    return agg.select(
+    num = "2 * s1 - (n + 1) * s0"
+    return agg.selectExpr(
         "r_name",
-        F.col("n").alias("n_customers"),
-        num.cast("long").alias("gini_num"),
-        den.cast("long").alias("gini_den"),
-        round_stable(num.cast("double") / den.cast("double"), 6).alias("gini"),
+        "n AS n_customers",
+        f"CAST({num} AS BIGINT) AS gini_num",
+        "CAST(n * s0 AS BIGINT) AS gini_den",
+        round_stable_sql(f"CAST({num} AS DOUBLE) / CAST(n * s0 AS DOUBLE)", 6) + " AS gini",
     )
 
 
@@ -3164,15 +3160,13 @@ def mom_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically; Spark DECIMAL(26,6) vs DuckDB's decimal/int DOUBLE
     promotion hash-diverged in the r7 driver even though every value
     was bit-identical after normalization) with the growth ratio vs
-    the previous month as one guarded round_stable division over
+    the previous month as one guarded round_stable_sql division over
     exact int64 cents.
 
     Scale shape: the fact aggregate is the work; the lag runs on the
     O(#months) month grain — the bounded single-partition window this
     repo's day-carry precedent documents (~1200 rows per century).
     """
-    from ..functions.core import round_stable
-
     o = load(spark, sf_dir, "orders")
     m = o.groupBy(
         F.trunc(F.col("o_orderdate").cast("date"), "month").alias("month")
@@ -3183,10 +3177,11 @@ def mom_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     growth = F.when(
         F.col("prev_cents").isNull() | (F.col("prev_cents") == 0), F.lit(0.0)
     ).otherwise(
-        round_stable(
-            (F.col("cents").cast("double") - F.col("prev_cents").cast("double"))
-            / F.col("prev_cents").cast("double"),
-            6,
+        F.expr(
+            round_stable_sql(
+                "(CAST(cents AS DOUBLE) - CAST(prev_cents AS DOUBLE)) / CAST(prev_cents AS DOUBLE)",
+                6,
+            )
         )
     )
     return lg.select(
@@ -3232,14 +3227,12 @@ def hierarchy_share_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     separate subtotal ROWS) don't give you.
 
     Exact int64 cents at every grain; the two shares are guarded
-    round_stable divisions.  Scale shape: one fact aggregate to the
+    round_stable_sql divisions.  Scale shape: one fact aggregate to the
     (region, nation) grain — at most a few hundred rows — then two
     window sums over that dimension-sized grain (the empty-frame
     total window is bounded by the grain, same class as the
     month-lag precedent).
     """
-    from ..functions.core import round_stable
-
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation")
@@ -3268,14 +3261,11 @@ def hierarchy_share_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_name",
         F.col("cents").alias("nation_cents"),
         "region_cents",
-        round_stable(
-            F.col("cents").cast("double") / F.col("region_cents").cast("double"),
-            6,
+        F.expr(
+            round_stable_sql("CAST(cents AS DOUBLE) / CAST(region_cents AS DOUBLE)", 6)
         ).alias("share_of_region"),
-        round_stable(
-            F.col("region_cents").cast("double")
-            / F.col("total_cents").cast("double"),
-            6,
+        F.expr(
+            round_stable_sql("CAST(region_cents AS DOUBLE) / CAST(total_cents AS DOUBLE)", 6)
         ).alias("region_share_of_total"),
     )
 
@@ -3434,26 +3424,19 @@ def supplier_return_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
     sqrt/div are correctly rounded, so the doubles match bit-for-bit
     before the fixed-point floor).  One map-side groupBy + the
     global ranking sort."""
-    from ..functions.core import round_stable
-
     li = load(spark, sf_dir, "lineitem")
     s = li.groupBy("l_suppkey").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum((F.col("l_returnflag") == "R").cast("long")).alias("k"),
     )
-    nd = F.col("n").cast("double")
-    p = F.col("k").cast("double") / nd
-    lb = round_stable(
-        (
-            p
-            + F.lit(1.9208) / nd
-            - F.lit(1.96)
-            * F.sqrt((p * (F.lit(1.0) - p) + F.lit(0.9604) / nd) / nd)
-        )
-        / (F.lit(1.0) + F.lit(3.8416) / nd),
+    nd = "CAST(n AS DOUBLE)"
+    p = f"(CAST(k AS DOUBLE) / {nd})"
+    lb = round_stable_sql(
+        f"(({p} + 1.9208D / {nd} - 1.96D * sqrt(({p} * (1.0D - {p}) + 0.9604D / {nd}) / {nd}))"
+        f" / (1.0D + 3.8416D / {nd}))",
         6,
     )
-    w = s.withColumn("wilson_lb", lb)
+    w = s.withColumn("wilson_lb", F.expr(lb))
     return w.select(
         F.col("l_suppkey").alias("suppkey"),
         "n",
@@ -3579,10 +3562,8 @@ def target_encoding_smoothed(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction — enc = (Σ_s·N + m·Σ_all)/(N·(n_s + m)) after clearing
     the prior's denominator — so num/den are exact int64 (holds to
     ~3e9 total cents·rows; decimal(38,0) beyond) and the display
-    value is a single round_stable division.  One fact groupBy + a
+    value is a single round_stable_sql division.  One fact groupBy + a
     broadcast 1-row total."""
-    from ..functions.core import round_stable
-
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
     base = o.join(c, o.o_custkey == c.c_custkey).select(
@@ -3594,17 +3575,16 @@ def target_encoding_smoothed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = g.agg(F.sum("n").alias("na"), F.sum("s").alias("sa"))
     j = g.crossJoin(F.broadcast(tot))
-    num = (F.col("s") * F.col("na") + _TE_SMOOTH_M * F.col("sa")).cast("long")
-    den = (F.col("na") * (F.col("n") + _TE_SMOOTH_M)).cast("long")
-    return j.select(
+    num = f"CAST(s * na + sa * {_TE_SMOOTH_M} AS BIGINT)"
+    den = f"CAST(na * (n + {_TE_SMOOTH_M}) AS BIGINT)"
+    return j.selectExpr(
         "segment",
         "n",
-        F.col("s").alias("sum_cents"),
-        num.alias("enc_num"),
-        den.alias("enc_den"),
-        round_stable(num.cast("double") / den.cast("double"), 2).alias(
-            "encoded_value"
-        ),
+        "s AS sum_cents",
+        f"{num} AS enc_num",
+        f"{den} AS enc_den",
+        round_stable_sql(f"CAST({num} AS DOUBLE) / CAST({den} AS DOUBLE)", 2)
+        + " AS encoded_value",
     )
 
 
@@ -3809,10 +3789,8 @@ def price_index_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one (part, month) aggregate, a broadcast base-month
     join keyed on part, and a month rollup — exact int64 price sums
-    with ONE guarded round_stable division per month.
+    with ONE guarded round_stable_sql division per month.
     """
-    from ..functions.core import round_stable
-
     li = load(spark, sf_dir, "lineitem")
     m = li.groupBy(
         "l_partkey",
@@ -3843,9 +3821,8 @@ def price_index_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "basket_parts",
         "cur_sum",
         "base_sum",
-        round_stable(
-            F.col("cur_sum").cast("double") / F.col("base_sum").cast("double"),
-            6,
+        F.expr(
+            round_stable_sql("CAST(cur_sum AS DOUBLE) / CAST(base_sum AS DOUBLE)", 6)
         ).alias("price_index"),
     )
 
@@ -3909,13 +3886,11 @@ def eb_shrunk_return_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     Numerics: per-supplier rates are single exact-int divisions; the
     prior moments Σr and Σr² fold in supplier-key order on BOTH
     engines (sorted-collect + add-reduce over the bounded
-    supplier-dimension grain); α and β pass through round_stable(6)
+    supplier-dimension grain); α and β pass through round_stable_sql(6)
     BEFORE use (the CUPED θ contract) so every shrunk rate is one
     bit-identical fixed-order double.  Degenerate prior (zero
     variance) falls back to Beta(1,1).
     """
-    from ..functions.core import round_stable
-
     li = load(spark, sf_dir, "lineitem")
     s = li.groupBy("l_suppkey").agg(
         F.count(F.lit(1)).alias("n"),
@@ -3939,32 +3914,20 @@ def eb_shrunk_return_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     mom = folded.select(
         "m", fold_sum(rates).alias("sr"), fold_sum(sq).alias("srr")
     )
-    mu = F.col("sr") / F.col("m")
-    v = F.col("srr") / F.col("m") - mu * mu
-    common = mu * (F.lit(1.0) - mu) / v - F.lit(1.0)
-    ok = (v > 0) & (common > 0)
-    ab = mom.select(
-        F.when(ok, round_stable(mu * common, 6)).otherwise(F.lit(1.0)).alias(
-            "alpha"
-        ),
-        F.when(ok, round_stable((F.lit(1.0) - mu) * common, 6))
-        .otherwise(F.lit(1.0))
-        .alias("beta"),
+    mu = "(sr / m)"
+    v = f"(srr / m - {mu} * {mu})"
+    common = f"({mu} * (1.0D - {mu}) / {v} - 1.0D)"
+    ok = f"{v} > 0 AND {common} > 0"
+    ab = mom.selectExpr(
+        f"CASE WHEN {ok} THEN {round_stable_sql(f'{mu} * {common}', 6)} ELSE 1.0D END AS alpha",
+        f"CASE WHEN {ok} THEN {round_stable_sql(f'(1.0D - {mu}) * {common}', 6)}"
+        " ELSE 1.0D END AS beta",
     )
     j = r.crossJoin(F.broadcast(ab))
-    shrunk = round_stable(
-        (F.col("k").cast("double") + F.col("alpha"))
-        / (F.col("n").cast("double") + F.col("alpha") + F.col("beta")),
-        6,
+    shrunk = round_stable_sql(
+        "(CAST(k AS DOUBLE) + alpha) / (CAST(n AS DOUBLE) + alpha + beta)", 6
     )
-    return j.select(
-        F.col("l_suppkey").alias("suppkey"),
-        "n",
-        "k",
-        "alpha",
-        "beta",
-        shrunk.alias("shrunk_rate"),
-    )
+    return j.selectExpr("l_suppkey AS suppkey", "n", "k", "alpha", "beta", f"{shrunk} AS shrunk_rate")
 
 
 _HIER_BUDGET = 100_000  # units apportioned at the top level
@@ -4291,10 +4254,10 @@ def sql_udf_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sql_udf_docs"
     )
     spark.sql(
-        """
+        f"""
         CREATE OR REPLACE TEMPORARY FUNCTION clamp_score(x DOUBLE)
         RETURNS DOUBLE
-        RETURN least(greatest(x, 0.0), 100.0)
+        RETURN {clamp_sql("x", 0.0, 100.0)}
         """
     )
     return spark.sql(
@@ -4362,8 +4325,6 @@ def popularity_recsys_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     min over the broadcast 10-row popularity list joined to the
     deduped customer-supplier truth grain.
     """
-    from ..functions.core import round_stable
-
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     pop = topk_ranked(
@@ -4392,13 +4353,13 @@ def popularity_recsys_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_users",
         F.col("n_hit").cast("long").alias("n_hit"),
         F.col("mrr_scaled").cast("long").alias("mrr_scaled"),
-        round_stable(
-            F.col("n_hit").cast("double") / F.col("n_users").cast("double"), 6
-        ).alias("hit_rate_at_10"),
-        round_stable(
-            F.col("mrr_scaled").cast("double")
-            / (F.lit(float(_MRR_LCM)) * F.col("n_users").cast("double")),
-            6,
+        F.expr(round_stable_sql("CAST(n_hit AS DOUBLE) / CAST(n_users AS DOUBLE)", 6)).alias(
+            "hit_rate_at_10"
+        ),
+        F.expr(
+            round_stable_sql(
+                f"CAST(mrr_scaled AS DOUBLE) / ({flit(_MRR_LCM)} * CAST(n_users AS DOUBLE))", 6
+            )
         ).alias("mrr_at_10"),
     )
 

@@ -16,6 +16,7 @@ from itertools import combinations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.core import clamp_sql
 from ..scoring import config as C
 from ..scoring.demo_domain import dimension_scores
 from ..scoring.pipeline import score_portfolio
@@ -337,15 +338,15 @@ def sem_spearman_brown(spark: SparkSession, sf_dir: str) -> DataFrame:
         (corr_sum / len(_DIM_PAIRS)).alias("r_avg"),
         F.greatest(F.stddev_pop(mean_score), F.lit(1.0)).alias("sigma"),
     )
-    r_clamped = F.least(F.greatest(F.col("r_avg"), F.lit(0.0)), F.lit(0.99))
-    rho = (7.0 * r_clamped) / (1.0 + 6.0 * r_clamped)
-    return stats.select(
+    r = clamp_sql("r_avg", 0.0, 0.99)
+    rho = f"({r} * 7.0D / ({r} * 6.0D + 1.0D))"
+    return stats.selectExpr(
         "sector",
         "n_companies",
-        F.round("r_avg", 6).alias("r_avg"),
-        F.round("sigma", 6).alias("sigma"),
-        F.round(rho, 6).alias("rho"),
-        F.round(F.greatest(F.col("sigma") * F.sqrt(1.0 - rho), F.lit(0.5)), 6).alias("sem"),
+        "round(r_avg, 6) AS r_avg",
+        "round(sigma, 6) AS sigma",
+        f"round({rho}, 6) AS rho",
+        f"round(greatest(sigma * sqrt(1.0D - {rho}), 0.5D), 6) AS sem",
     )
 
 
@@ -413,7 +414,6 @@ def hr_position_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     factor (app/scoring/position_factor.py:7-29) against the computed
     sector-average VR, and M11 prior blending
     (run_scoring_engine.py:47-49) toward the sector mean."""
-    from ..functions.core import blend, clamp as _clamp
     from ..scoring.config import DEFAULT_HR_BASE, SECTOR_HR_BASE, dimension_case_sql
     from ..scoring.demo_domain import companies as companies_df
     from ..scoring.demo_domain import dimension_scores as ds_df
@@ -443,19 +443,20 @@ def hr_position_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("mcap_pct", (F.col("position_factor") + 1.0) / 2.0)
     )
-    baseline_norm = _clamp(F.col("hr_base") / 75.0, 0.7, 1.3)
-    intensity = F.col("n_orders").cast("double") / F.col("avg_orders")
-    hr_factor = F.when(
-        (F.col("n_orders") < 3) | (F.col("avg_orders") == 0), F.lit(1.0)
-    ).otherwise(_clamp(F.lit(1.0) + 0.5 * (intensity - 1.0) / baseline_norm, 0.0, 2.0))
-    pf = F.expr(position_factor_sql("vr_score", "sector_avg_vr", "mcap_pct"))
-    return m.select(
+    baseline_norm = clamp_sql("hr_base / 75.0D", 0.7, 1.3)
+    intensity = clamp_sql(
+        f"1.0D + (CAST(n_orders AS DOUBLE) / avg_orders - 1.0D) * 0.5D / {baseline_norm}", 0.0, 2.0
+    )
+    hr_factor = f"CASE WHEN n_orders < 3 OR avg_orders = 0 THEN 1.0D ELSE {intensity} END"
+    pf = position_factor_sql("vr_score", "sector_avg_vr", "mcap_pct")
+    return m.selectExpr(
         "company_id",
         "sector",
         "n_orders",
-        F.round(hr_factor, 6).alias("hr_factor"),
-        F.round(pf, 6).alias("position_factor_model"),
-        F.round(blend("vr_score", F.col("sector_avg_vr"), 0.2), 6).alias("vr_blended"),
+        f"round({hr_factor}, 6) AS hr_factor",
+        f"round({pf}, 6) AS position_factor_model",
+        # prior blending (1-w)·x + w·target, w = 0.2
+        "round((1.0D - 0.2D) * vr_score + 0.2D * sector_avg_vr, 6) AS vr_blended",
     )
 
 

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.core import clamp, round_stable
+from ..functions.core import clamp_sql, flit, round_stable_sql
 from ..sources.catalog import DAY_NS, load
 from .registry import register
 
@@ -181,7 +181,7 @@ def sem_ols_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sigma = F.when(F.col("n") > 2, F.sqrt(sse / (F.col("n") - 2))).otherwise(F.lit(0.0))
     s = s.withColumn("sigma", sigma)
-    se = F.col("sigma") / F.sqrt(F.col("n"))
+    se = "sigma / sqrt(n) * 1.96D"
     return s.select(
         "sector",
         "n",
@@ -189,8 +189,8 @@ def sem_ols_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("y_bar") - F.col("slope") * F.col("x_bar"), 6).alias("intercept"),
         F.round(r2, 6).alias("r2"),
         F.round("sigma", 6).alias("sigma"),
-        F.round(clamp(F.col("y_bar") - 1.96 * se, 0.0, 100.0), 6).alias("ci_lower"),
-        F.round(clamp(F.col("y_bar") + 1.96 * se, 0.0, 100.0), 6).alias("ci_upper"),
+        F.expr(f"round({clamp_sql(f'y_bar - {se}', 0.0, 100.0)}, 6)").alias("ci_lower"),
+        F.expr(f"round({clamp_sql(f'y_bar + {se}', 0.0, 100.0)}, 6)").alias("ci_upper"),
     )
 
 
@@ -294,7 +294,7 @@ def pca_one_factor_eta(spark: SparkSession, sf_dir: str) -> DataFrame:
     7×7 (49 numbers — the only driver-side step), |loadings|
     normalized to Σ=1, then η = Σ l_d·z_d as pure column math
     (reference sem_confidence.py:35-65,113-120), floor-rounded 4dp
-    (round_stable) so the recursive-CTE power-method oracle — the
+    (round_stable_sql) so the recursive-CTE power-method oracle — the
     same 200 fixed iterations replayed in DuckDB — lands bit-identical
     (see _pca_eta_oracle; exact numpy parity stays pinned in
     tests/test_mllib_parity.py).  At 100 TB the scan
@@ -341,14 +341,12 @@ def pca_one_factor_eta(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = sum(loadings) or 1.0
     loadings = [x / total for x in loadings]
 
-    eta = None
-    for d, l in zip(dims, loadings):
-        sd = stats[f"sd_{d}"] or 1.0
-        z = (F.col(d) - F.lit(stats[f"mu_{d}"])) / F.lit(sd)
-        term = F.lit(l) * z
-        eta = term if eta is None else eta + term
-    return pivoted.select(
-        "company_id", round_stable(eta, 4).alias("eta")
+    eta = " + ".join(
+        f"{flit(l)} * (({d} - {flit(stats[f'mu_{d}'])}) / {flit(stats[f'sd_{d}'] or 1.0)})"
+        for d, l in zip(dims, loadings)
+    )
+    return pivoted.selectExpr(
+        "company_id", f"{round_stable_sql(f'({eta})', 4)} AS eta"
     ).orderBy("company_id")
 
 
@@ -461,7 +459,7 @@ def ab_test_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Numerics: the 2x2 statistic has the closed form
     N·(ad−bc)² / ((a+b)(c+d)(a+c)(b+d)); all cells and the (ad−bc)
     determinant are exact int64, the final value is ONE fixed-order
-    double expression through round_stable(6) with a zero-margin
+    double expression through round_stable_sql(6) with a zero-margin
     guard (identically spelled in the oracle).  Cell products hold in
     int64 to ~3e9 events per segment; past that the determinant must
     move to a wider EXACT integer carrier matched on both engines
@@ -485,15 +483,15 @@ def ab_test_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((~is_ctrl & ~is_succ).cast("long")).alias("d"),
     )
     a, b, c, d = (F.col(x) for x in "abcd")
-    det = (a * d - b * c).cast("double")
-    n = (a + b + c + d).cast("double")
+    det = "CAST(a * d - b * c AS DOUBLE)"
     den = (
-        ((a + b).cast("double") * (c + d).cast("double"))
-        * (a + c).cast("double")
-    ) * (b + d).cast("double")
+        "(CAST(a + b AS DOUBLE) * CAST(c + d AS DOUBLE)"
+        " * CAST(a + c AS DOUBLE) * CAST(b + d AS DOUBLE))"
+    )
     margin_ok = ((a + b) > 0) & ((c + d) > 0) & ((a + c) > 0) & ((b + d) > 0)
     chi2 = F.when(
-        margin_ok, round_stable(((n * det) * det) / den, 6)
+        margin_ok,
+        F.expr(round_stable_sql(f"(CAST(a + b + c + d AS DOUBLE) * {det} * {det} / {den})", 6)),
     ).otherwise(F.lit(0.0))
     return cells.select(
         "event_type",
@@ -633,10 +631,8 @@ def drift_chi2_value_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.col("n").alias("n_events"),
         F.col("n_cells").cast("long").alias("n_cells"),
-        (F.floor(chi2 * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "drift_chi2"
-        ),
-    )
+        chi2.alias("drift_chi2"),
+    ).withColumn("drift_chi2", F.expr(round_stable_sql("drift_chi2", 6)))
 
 
 @register(
@@ -669,7 +665,7 @@ def calibration_reliability_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     the gap per bin is the ECE integrand).
 
     Exact int64 carriers throughout (count, positives, quantized
-    confidence sum) with two guarded round_stable divisions for the
+    confidence sum) with two guarded round_stable_sql divisions for the
     display columns.  ONE map-side-combinable groupBy over the fact —
     no join, no window: the cheapest possible monitoring scan.
     """
@@ -690,20 +686,14 @@ def calibration_reliability_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("y").alias("n_positive"),
         F.sum("conf_q4").alias("conf_sum_q4"),
     )
-    return g.select(
+    return g.selectExpr(
         "bin",
         "n",
         "n_positive",
         "conf_sum_q4",
-        round_stable(
-            F.col("conf_sum_q4").cast("double")
-            / F.col("n").cast("double")
-            / F.lit(10000),
-            6,
-        ).alias("mean_confidence"),
-        round_stable(
-            F.col("n_positive").cast("double") / F.col("n").cast("double"), 6
-        ).alias("actual_rate"),
+        round_stable_sql("CAST(conf_sum_q4 AS DOUBLE) / CAST(n AS DOUBLE) / 10000", 6)
+        + " AS mean_confidence",
+        round_stable_sql("CAST(n_positive AS DOUBLE) / CAST(n AS DOUBLE)", 6) + " AS actual_rate",
     )
 
 
@@ -742,7 +732,7 @@ def auc_value_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistic: AUC = (Σ_pos midrank − m(m+1)/2) / (m·n).  Ties get
     midranks, kept INTEGER by carrying 2·midrank = 2·min_rank +
     tie_count − 1, so the numerator and denominator are exact int64
-    and the display value is one round_stable division — no
+    and the display value is one round_stable_sql division — no
     trapezoid sweep, no float ranks, bit-stable cross-engine.
 
     Scale shape: one global rank sort (the same RangePartitioning
@@ -769,14 +759,14 @@ def auc_value_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.count(F.lit(1)) - F.sum("y")).alias("neg"),
         F.sum(F.when(F.col("y") == 1, F.col("mid2")).otherwise(0)).alias("s2"),
     )
-    num = (F.col("s2") - F.col("m") * (F.col("m") + 1)).cast("long")
-    den = (F.lit(2) * F.col("m") * F.col("neg")).cast("long")
-    return agg.select(
-        F.col("m").alias("n_positive"),
-        F.col("neg").alias("n_negative"),
-        num.alias("auc_num"),
-        den.alias("auc_den"),
-        round_stable(num.cast("double") / den.cast("double"), 6).alias("auc"),
+    num = "CAST(s2 - m * (m + 1) AS BIGINT)"
+    den = "CAST(2 * m * neg AS BIGINT)"
+    return agg.selectExpr(
+        "m AS n_positive",
+        "neg AS n_negative",
+        f"{num} AS auc_num",
+        f"{den} AS auc_den",
+        round_stable_sql(f"CAST({num} AS DOUBLE) / CAST({den} AS DOUBLE)", 6) + " AS auc",
     )
 
 
@@ -818,7 +808,7 @@ def pr_curve_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
     that accompanies the AUC scalar and the calibration bins.
 
     Exact int64 counts at every threshold; precision/recall are
-    guarded round_stable divisions.  Scale shape: one map-side
+    guarded round_stable_sql divisions.  Scale shape: one map-side
     groupBy to the bucket grain, then two windows over ≤10 rows.
     """
     s = load(spark, sf_dir, "events", fan_out=True).select(
@@ -849,12 +839,12 @@ def pr_curve_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pred_pos",
         "tp",
         "all_pos",
-        round_stable(
-            F.col("tp").cast("double") / F.col("pred_pos").cast("double"), 6
-        ).alias("precision_at"),
-        round_stable(
-            F.col("tp").cast("double") / F.col("all_pos").cast("double"), 6
-        ).alias("recall_at"),
+        F.expr(round_stable_sql("CAST(tp AS DOUBLE) / CAST(pred_pos AS DOUBLE)", 6)).alias(
+            "precision_at"
+        ),
+        F.expr(round_stable_sql("CAST(tp AS DOUBLE) / CAST(all_pos AS DOUBLE)", 6)).alias(
+            "recall_at"
+        ),
     )
 
 
@@ -922,7 +912,7 @@ def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     double expression over exact integer carriers — the modern
     experimentation readout that shrinks metric variance using
     pre-period behaviour without biasing the lift.  θ is rounded
-    through the same round_stable(6) formula BEFORE use on both
+    through the same round_stable_sql(6) formula BEFORE use on both
     engines, so the adjusted means are bit-identical by
     construction.
 
@@ -963,37 +953,24 @@ def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("y").alias("vy"),
     )
     j = v.crossJoin(F.broadcast(pooled))
-    varx = (F.col("nn") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("long")
-    theta = F.when(
-        varx > 0,
-        round_stable(
-            (
-                F.col("nn").cast("double") * F.col("sxy").cast("double")
-                - F.col("sx").cast("double") * F.col("sy").cast("double")
-            )
-            / (
-                F.col("nn").cast("double") * F.col("sxx").cast("double")
-                - F.col("sx").cast("double") * F.col("sx").cast("double")
-            ),
-            6,
-        ),
-    ).otherwise(F.lit(0.0))
-    adj = round_stable(
-        F.col("vy").cast("double") / F.col("n").cast("double")
-        - theta
-        * (
-            F.col("vx").cast("double") / F.col("n").cast("double")
-            - F.col("sx").cast("double") / F.col("nn").cast("double")
-        ),
+    theta_r = round_stable_sql(
+        "((CAST(nn AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
+        " / (CAST(nn AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))",
         6,
     )
-    return j.select(
+    theta = f"CASE WHEN CAST(nn * sxx - sx * sx AS BIGINT) > 0 THEN {theta_r} ELSE 0.0D END"
+    adj = round_stable_sql(
+        f"(CAST(vy AS DOUBLE) / CAST(n AS DOUBLE) - ({theta}) * (CAST(vx AS DOUBLE)"
+        " / CAST(n AS DOUBLE) - CAST(sx AS DOUBLE) / CAST(nn AS DOUBLE)))",
+        6,
+    )
+    return j.selectExpr(
         "variant",
         "n",
-        F.col("vx").alias("x_sum_q2"),
-        F.col("vy").alias("y_sum_q2"),
-        theta.alias("theta"),
-        adj.alias("adjusted_mean_q2"),
+        "vx AS x_sum_q2",
+        "vy AS y_sum_q2",
+        f"{theta} AS theta",
+        f"{adj} AS adjusted_mean_q2",
     )
 
 
@@ -1041,7 +1018,7 @@ def ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction (n·Σv² − (Σv)², n(n−1)) over cents-quantized values
     (the squared-moment int64 budget rule), and the MDE is one
     fixed-order double expression (sqrt correctly rounded) through
-    round_stable(6), reported back in value units.  One map-side
+    round_stable_sql(6), reported back in value units.  One map-side
     conditional aggregate, no join.
     """
     q = load(spark, sf_dir, "events", fan_out=True).select(
@@ -1061,17 +1038,13 @@ def ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     var_den = (n * (n - 1)).cast("long")
     mde = F.when(
         (n >= 2) & (n0 > 0) & (n1 > 0) & (var_num > 0),
-        round_stable(
-            F.lit(2.8016)
-            * F.sqrt(
-                (var_num.cast("double") / var_den.cast("double"))
-                * (
-                    F.lit(1.0) / n0.cast("double")
-                    + F.lit(1.0) / n1.cast("double")
-                )
+        F.expr(
+            round_stable_sql(
+                "2.8016D * sqrt(CAST(CAST(n * s2 - s1 * s1 AS BIGINT) AS DOUBLE)"
+                " / CAST(CAST(n * (n - 1) AS BIGINT) AS DOUBLE)"
+                " * (1.0D / CAST(n0 AS DOUBLE) + 1.0D / CAST(n1 AS DOUBLE))) / 100.0D",
+                6,
             )
-            / F.lit(100.0),
-            6,
         ),
     )
     return s.select(
@@ -1138,7 +1111,7 @@ def ks_two_sample_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the integer numerator |f0·n1 − f1·n0| (bounded by n0·n1 ≈ 4e8 at
     sf0.1, int64-budget-safe to ~3e9-row halves), max'd as an
     integer, and divided once for the display value — no ECDF floats
-    anywhere until the final round_stable.
+    anywhere until the final round_stable_sql.
 
     Scale shape: value-grain aggregate, ONE type-partitioned window
     sort serving both cumulative sums and both totals, then a max
@@ -1180,10 +1153,8 @@ def ks_two_sample_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n0").alias("n_first"),
         F.col("n1").alias("n_second"),
         F.col("d_num").cast("long").alias("d_num"),
-        round_stable(
-            F.col("d_num").cast("double")
-            / (F.col("n0").cast("double") * F.col("n1").cast("double")),
-            6,
+        F.expr(
+            round_stable_sql("CAST(d_num AS DOUBLE) / (CAST(n0 AS DOUBLE) * CAST(n1 AS DOUBLE))", 6)
         ).alias("ks_stat"),
     )
 
@@ -1271,12 +1242,12 @@ def qini_curve_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     qinc = F.when(
         F.col("cc_n") > 0,
-        round_stable(
-            F.col("ct_pos").cast("double")
-            - F.col("cc_pos").cast("double")
-            * F.col("ct_n").cast("double")
-            / F.col("cc_n").cast("double"),
-            6,
+        F.expr(
+            round_stable_sql(
+                "(CAST(ct_pos AS DOUBLE)"
+                " - CAST(cc_pos AS DOUBLE) * CAST(ct_n AS DOUBLE) / CAST(cc_n AS DOUBLE))",
+                6,
+            )
         ),
     ).otherwise(F.lit(0.0))
     return cum.select(

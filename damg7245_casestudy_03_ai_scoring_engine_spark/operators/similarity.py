@@ -26,7 +26,7 @@ from ..functions.cache import (
     session_persist,
     tracked_persist,
 )
-from ..functions.core import topk_ranked
+from ..functions.core import flit, round_stable_sql, topk_ranked
 from ..functions.vectors import cosine_similarity_sql, dot_sql, l2_norm_sql
 from ..sources.catalog import load, read_parquet_memo
 from ..sources.scratch import scratch_dir
@@ -1016,7 +1016,7 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="similarity (extension: Arrow/numpy fast path)",
     bench=True,
     # oracle-backed since r13 (r12 verdict #6; was rows-only): the
-    # kernel rounds scores to 6dp with the round_stable formula BEFORE
+    # kernel rounds scores to 6dp with the round_stable_sql formula BEFORE
     # its local per-batch selection, so local top-k under
     # (rounded DESC, cand_id ASC) composes exactly with the global
     # window and the JVM brute-force truth oracle applies verbatim.
@@ -1066,7 +1066,7 @@ def ann_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
             S = qn @ Cn.T  # |Q| × batch
-            # round_stable at 6dp BEFORE selection: the local cut must
+            # round_stable_sql at 6dp BEFORE selection: the local cut must
             # use the SAME total order (rounded DESC, cand_id ASC) as
             # the global window, or a rounded tie straddling the cut
             # could drop the smaller cand_id the ranking would keep
@@ -1362,15 +1362,12 @@ def embedding_dim_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(F.col("embedding")).alias("dim_idx", "x")
     ).select("dim_idx", F.col("x").cast("double").alias("x"))
 
-    def fr(c):
-        return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
     return flat.groupBy(F.col("dim_idx").cast("int").alias("dim_idx")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        fr(F.avg("x")).alias("mean"),
-        fr(F.stddev_pop("x")).alias("std"),
-        fr(F.min("x")).alias("min_x"),
-        fr(F.max("x")).alias("max_x"),
+        *(
+            F.expr(round_stable_sql(f"{fn}(x)", 6)).alias(name)
+            for fn, name in (("avg", "mean"), ("stddev_pop", "std"), ("min", "min_x"), ("max", "max_x"))
+        ),
     )
 
 
@@ -1802,8 +1799,6 @@ def kmeans_lloyd_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lineage per round exactly like the PageRank/connected-
     components loops.  The DuckDB oracle replays the identical finite
     iteration (see _lloyd_oracle)."""
-    from ..functions.core import round_stable
-
     pts = load(spark, sf_dir, "embeddings", fan_out=True).select(
         "vec_id",
         "label",
@@ -1865,8 +1860,8 @@ def kmeans_lloyd_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cid").alias("cluster_id"),
         F.col("n_members").cast("bigint").alias("n_members"),
         F.col("majority_label").cast("bigint").alias("majority_label"),
-        round_stable(
-            F.col("majority_cnt").cast("double") / F.col("n_members").cast("double"), 6
+        F.expr(
+            round_stable_sql("CAST(majority_cnt AS DOUBLE) / CAST(n_members AS DOUBLE)", 6)
         ).alias("purity"),
     )
 
@@ -2126,8 +2121,6 @@ def embedding_drift_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("q").cast("decimal(38,0)") * F.col("q").cast("decimal(38,0)")
         ).alias("ssq"),
     )
-    from ..functions.core import round_stable
-
     dim = tracked_persist(dim, "embedding_drift_by_label.dim")
     gdim = dim.groupBy("i").agg(F.sum("s").alias("g"))
     n = e.groupBy("label").agg(F.count(F.lit(1)).alias("n_vectors"))
@@ -2142,23 +2135,25 @@ def embedding_drift_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     gn = gdim.agg(F.sum(dec("g") * dec("g")).alias("gg"))
-    nv = F.col("n_vectors").cast("double")
-    denom = F.sqrt(F.col("ss").cast("double")) * F.sqrt(F.col("gg").cast("double"))
+    nv = "CAST(n_vectors AS DOUBLE)"
+    denom = "sqrt(CAST(ss AS DOUBLE)) * sqrt(CAST(gg AS DOUBLE))"
+    q = flit(_DRIFT_Q)
     return (
         n.join(mo, "label")
         .crossJoin(F.broadcast(gn))  # 1-row global-norm attach
         .select(
             "label",
             F.col("n_vectors").cast("bigint").alias("n_vectors"),
-            round_stable(
-                F.when(denom != 0.0, F.col("sg").cast("double") / denom), 6
+            F.expr(
+                round_stable_sql(
+                    f"CASE WHEN {denom} != 0.0D THEN CAST(sg AS DOUBLE) / ({denom}) END", 6
+                )
             ).alias("cos_to_global"),
-            round_stable(
-                (nv * F.col("ssq").cast("double") - F.col("ss").cast("double"))
-                / (nv * nv)
-                / float(_DRIFT_Q)
-                / float(_DRIFT_Q),
-                6,
+            F.expr(
+                round_stable_sql(
+                    f"({nv} * CAST(ssq AS DOUBLE) - CAST(ss AS DOUBLE)) / ({nv} * {nv}) / {q} / {q}",
+                    6,
+                )
             ).alias("dispersion"),
         )
     )
@@ -2248,17 +2243,17 @@ def retrieval_eval_rank_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum",
     )
     k = f"{float(_TOP_K)!r}D"
-    flr = lambda s: f"floor(({s}) * 1000000.0D + 0.5D) / 1000000.0D"  # noqa: E731
     return c.groupBy("query_id").agg(
         F.expr("CAST(sum(hit) AS BIGINT)").alias("hits_at_k"),
-        F.expr(flr(f"sum(hit) / {k}")).alias("recall_at_k"),
+        F.expr(round_stable_sql(f"(sum(hit) / {k})", 6)).alias("recall_at_k"),
         F.expr(
-            flr("max(CASE WHEN hit = 1 THEN 1.0D / rk ELSE 0.0D END)")
+            round_stable_sql("(max(CASE WHEN hit = 1 THEN 1.0D / rk ELSE 0.0D END))", 6)
         ).alias("mrr"),
         F.expr(
-            flr(
-                "sum(CASE WHEN hit = 1 THEN CAST(cum AS DOUBLE) / rk "
-                f"ELSE 0.0D END) / {k}"
+            round_stable_sql(
+                "(sum(CASE WHEN hit = 1 THEN CAST(cum AS DOUBLE) / rk "
+                f"ELSE 0.0D END) / {k})",
+                6,
             )
         ).alias("ap_at_k"),
     )
@@ -2302,8 +2297,7 @@ def ivf_cell_balance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.selectExpr(
         "cell",
         "n_vecs",
-        "floor(CAST(n_vecs AS DOUBLE) / sum(n_vecs) OVER () * 1000000.0D + 0.5D)"
-        " / 1000000.0D AS share",
+        round_stable_sql("CAST(n_vecs AS DOUBLE) / sum(n_vecs) OVER ()", 6) + " AS share",
         "(n_vecs * count(1) OVER ()) > (2 * sum(n_vecs) OVER ()) AS oversized",
     )
 
@@ -2442,7 +2436,6 @@ def ivf_probe_cost_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
     tot = cells.agg(F.count(F.lit(1)).cast("bigint").alias("n_total"))
-    flr = lambda col: F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return (
         assign.join(sizes, assign.probe_label == sizes.cell)
         .crossJoin(F.broadcast(tot))
@@ -2450,9 +2443,9 @@ def ivf_probe_cost_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_probes"),
             F.sum("n").cast("bigint").alias("candidates_scanned"),
-            flr(
-                F.sum("n").cast("double") / F.max("n_total")
-            ).alias("scan_fraction"),
+            F.expr(round_stable_sql("CAST(sum(n) AS DOUBLE) / max(n_total)", 6)).alias(
+                "scan_fraction"
+            ),
         )
     )
 
@@ -2736,8 +2729,7 @@ def _refile_oversized_impl(
         "parent_cell",
         "was_split",
         "n_vecs",
-        "floor(CAST(n_vecs AS DOUBLE) / sum(n_vecs) OVER () * 1000000.0D + 0.5D)"
-        " / 1000000.0D AS share",
+        round_stable_sql("CAST(n_vecs AS DOUBLE) / sum(n_vecs) OVER ()", 6) + " AS share",
         "(n_vecs * count(1) OVER ()) > (2 * sum(n_vecs) OVER ()) AS oversized",
     )
 
@@ -3077,21 +3069,13 @@ def ivf_file_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("n_after", (F.col("n_before") + F.col("n_added")).cast("bigint"))
     )
-    wall = Window.partitionBy()
-    total = F.sum("n_after").over(wall)
-    ncells = F.count(F.lit(1)).over(wall)
-    return j.select(
+    return j.selectExpr(
         "cell",
         "n_before",
         "n_added",
         "n_after",
-        (
-            F.floor(
-                F.col("n_after").cast("double") / total * F.lit(1e6) + F.lit(0.5)
-            )
-            / F.lit(1e6)
-        ).alias("share_after"),
-        ((F.col("n_after") * ncells) > (F.lit(2) * total)).alias("oversized_after"),
+        round_stable_sql("CAST(n_after AS DOUBLE) / sum(n_after) OVER ()", 6) + " AS share_after",
+        "n_after * count(1) OVER () > 2 * sum(n_after) OVER () AS oversized_after",
     )
 
 
@@ -3694,7 +3678,7 @@ def ivf_maintenance_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
 # keyed by subspace id, so M never multiplies the SQL) while the
 # probe's pre-cut + shortlist + exact re-rank carry the recall.
 # Every distance in the loop is floor-rounded at 6dp on BOTH sides
-# before any argmin / rank (round_stable's formula), so the training
+# before any argmin / rank (round_stable_sql's formula), so the training
 # trajectory, the encoding, and the ADC ordering are
 # engine-deterministic.  First fixture calibration (M=4, K=8,
 # shortlist min 50) read recall@5 = 0.50 vs `ann_ivf_topk`'s 0.68
@@ -3718,7 +3702,7 @@ _IVFPQ_SHORTLIST_MIN = 100
 _IVFPQ_SHORTLIST_DIV = 50
 
 # DuckDB-side rounded squared L2 between a data subvector s.sv and a
-# centroid c.cv — the engine twin is round_stable(Σ(a-b)², 6).
+# centroid c.cv — the engine twin is round_stable_sql(Σ(a-b)², 6).
 _IVFPQ_DIST_SQL = (
     "floor(list_sum(list_transform(range(1, {d} + 1), "
     "i -> (s.sv[i] - c.cv[i]) * (s.sv[i] - c.cv[i]))) * 1e6 + 0.5) / 1e6"
@@ -3979,13 +3963,14 @@ def _ivfpq_subvecs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivfpq_dist() -> "F.Column":
-    """round_stable(Σ(sv-cv)², 6) — the engine twin of
+    """round_stable_sql(Σ(sv-cv)², 6) — the engine twin of
     _IVFPQ_DIST_SQL; rounding BEFORE every argmin keeps the Lloyd
     trajectory and the encoding engine-deterministic.  Single parse
     (r13, guide §5): identical fold/seed/floor-round arithmetic."""
     return F.expr(
-        "floor(aggregate(zip_with(sv, cv, (a, b) -> (a - b) * (a - b)), "
-        "0.0D, (acc, x) -> acc + x) * 1000000.0D + 0.5D) / 1000000.0D"
+        round_stable_sql(
+            "aggregate(zip_with(sv, cv, (a, b) -> (a - b) * (a - b)), 0.0D, (acc, x) -> acc + x)", 6
+        )
     )
 
 
@@ -4159,9 +4144,7 @@ def ann_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(lut), ["query_id", "probe_label", "m", "c"])
         .groupBy("query_id", "cand_id")
         .agg(
-            F.expr(
-                "floor(sum(d2) * 1000000.0D + 0.5D) / 1000000.0D"
-            ).alias("adc")
+            F.expr(round_stable_sql("sum(d2)", 6)).alias("adc")
         )
     )
     short = topk_ranked(

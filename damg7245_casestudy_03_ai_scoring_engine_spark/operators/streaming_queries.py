@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.core import topk_ranked
+from ..functions.core import flit, round_stable_sql, topk_ranked
 from ..sources.catalog import DAY_NS, HOUR_NS, WEEK_NS, load
 from ..streaming.jobs import SESSION_GAP_NS, sessionize_batch, window_counts
 from .registry import register
@@ -520,8 +520,8 @@ def ewma_user_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.size("items").cast("bigint").alias("n_events"),
         F.element_at(F.col("items"), -1)["ts"].alias("last_ts_ns"),
-        (F.floor(fold * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias("ewma"),
-    )
+        fold.alias("ewma"),
+    ).withColumn("ewma", F.expr(round_stable_sql("ewma", 6)))
 
 
 _CUSUM_K = 60.0  # target + slack: drift means sustained values above this
@@ -604,9 +604,7 @@ def cusum_drift_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     cusum = F.col("s_run") - F.col("s_low")
     return s.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        (F.floor(F.max(cusum) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "max_cusum"
-        ),
+        F.expr(round_stable_sql("max(s_run - s_low)", 6)).alias("max_cusum"),
         (F.max(cusum) > F.lit(_CUSUM_H)).cast("int").alias("drift_flag"),
     )
 
@@ -684,14 +682,10 @@ def watermark_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("late_ns") > F.col("delay_ns")).cast("int"))
             .cast("bigint")
             .alias("n_dropped"),
-            (
-                F.floor(
-                    F.sum((F.col("late_ns") > F.col("delay_ns")).cast("int"))
-                    / F.count(F.lit(1)).cast("double")
-                    * F.lit(1e6)
-                    + F.lit(0.5)
+            F.expr(
+                round_stable_sql(
+                    "sum(CAST(late_ns > delay_ns AS INT)) / CAST(count(1) AS DOUBLE)", 6
                 )
-                / F.lit(1e6)
             ).alias("drop_frac"),
             F.max("late_ns").cast("bigint").alias("max_late_ns"),
         )
@@ -741,15 +735,11 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("nxt").isNotNull())
     )
     c = pairs.groupBy("cur", "nxt").agg(F.count(F.lit(1)).alias("n"))
-    n_cur = F.sum("n").over(Window.partitionBy("cur"))
-    return c.select(
+    return c.selectExpr(
         "cur",
         "nxt",
-        F.col("n").cast("bigint").alias("n"),
-        (
-            F.floor(F.col("n") / n_cur.cast("double") * F.lit(1e6) + F.lit(0.5))
-            / F.lit(1e6)
-        ).alias("p"),
+        "CAST(n AS BIGINT) AS n",
+        round_stable_sql("n / CAST(sum(n) OVER (PARTITION BY cur) AS DOUBLE)", 6) + " AS p",
     )
 
 
@@ -1168,12 +1158,10 @@ def dow_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Per-row 1e-4 quantization makes sums exact int64; the mean and
     the share-of-weekly-total are single IEEE divisions through the
-    round_stable formula.  Scale shape: one map-side-combinable
+    round_stable_sql formula.  Scale shape: one map-side-combinable
     groupBy on (type, dow) — 7×#types output rows — plus one window
     over that tiny aggregate grain.
     """
-    from ..functions.core import round_stable
-
     q = load(spark, sf_dir, "events", fan_out=True).select(
         "event_type",
         ((F.expr(f"ts div {DAY_NS}") + 3) % 7).alias("dow"),
@@ -1192,13 +1180,12 @@ def dow_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dow",
         "n_events",
         "sum_q4",
-        round_stable(
-            F.col("sum_q4").cast("double") / F.col("n_events").cast("double"), 6
-        ).alias("mean_q4"),
-        round_stable(
-            F.col("sum_q4").cast("double") / F.col("type_total").cast("double"),
-            6,
-        ).alias("weekly_share"),
+        F.expr(round_stable_sql("CAST(sum_q4 AS DOUBLE) / CAST(n_events AS DOUBLE)", 6)).alias(
+            "mean_q4"
+        ),
+        F.expr(round_stable_sql("CAST(sum_q4 AS DOUBLE) / CAST(type_total AS DOUBLE)", 6)).alias(
+            "weekly_share"
+        ),
     )
 
 
@@ -1344,7 +1331,7 @@ def autocorr_daily_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Σx, Σy, Σx², Σy², Σxy) is an exact int64 sum of quantized cents,
     and Pearson's r is ONE fixed-order double expression over those
     exact moments (sqrt is IEEE-correctly-rounded, hence
-    engine-identical) through round_stable(6) with variance-zero
+    engine-identical) through round_stable_sql(6) with variance-zero
     guards.  Exact r_num is emitted alongside the display value.
 
     Scale shape: map-side-combinable daily aggregate, a self
@@ -1616,7 +1603,7 @@ def xcorr_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same exactness contract as autocorr: every moment is an exact
     int64 sum of quantized cents over calendar-aligned pairs (an
     equi-join on day+k per exploded lag), and Pearson's r is one
-    fixed-order guarded double through round_stable(6), with the
+    fixed-order guarded double through round_stable_sql(6), with the
     exact integer numerator emitted alongside.
 
     Scale shape: the fact aggregate is the work; the 7-lag explode
@@ -1739,14 +1726,13 @@ def holt_trend_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold = F.aggregate(
         F.slice(sts, 2, F.size(sts) - 1), F.element_at(sts, 1), step
     )
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return g.select(
         "user_id",
         F.size("items").cast("bigint").alias("n_events"),
-        r6(fold["l"]).alias("level"),
-        r6(fold["b"]).alias("trend"),
-        r6(fold["l"] + fold["b"]).alias("forecast_1"),
-    )
+        fold["l"].alias("level"),
+        fold["b"].alias("trend"),
+        (fold["l"] + fold["b"]).alias("forecast_1"),
+    ).withColumns({c: F.expr(round_stable_sql(c, 6)) for c in ("level", "trend", "forecast_1")})
 
 
 @register(
@@ -1796,8 +1782,6 @@ def daily_burst_zscores(spark: SparkSession, sf_dir: str) -> DataFrame:
     type-partitioned window with three aggregates sharing the same
     frame — a single WindowExec.
     """
-    from ..functions.core import round_stable
-
     daily = (
         load(spark, sf_dir, "events", fan_out=True)
         .groupBy(
@@ -1815,22 +1799,18 @@ def daily_burst_zscores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("w_s1", F.sum("n").over(tw))
         .withColumn("w_s2", F.sum(F.col("n") * F.col("n")).over(tw))
     )
-    wn, s1, s2, n = (F.col(k) for k in ("w_n", "w_s1", "w_s2", "n"))
-    varn = (wn * s2 - s1 * s1).cast("long")
-    z = F.when(
-        (wn >= 3) & (varn > 0),
-        round_stable(
-            (wn.cast("double") * n.cast("double") - s1.cast("double"))
-            / F.sqrt(wn.cast("double") * varn.cast("double")),
-            6,
-        ),
-    ).otherwise(F.lit(0.0))
-    return w.select(
+    varn = "CAST(w_n * w_s2 - w_s1 * w_s1 AS BIGINT)"
+    z = round_stable_sql(
+        "(CAST(w_n AS DOUBLE) * CAST(n AS DOUBLE) - CAST(w_s1 AS DOUBLE))"
+        f" / sqrt(CAST(w_n AS DOUBLE) * CAST({varn} AS DOUBLE))",
+        6,
+    )
+    return w.selectExpr(
         "event_type",
         "day_idx",
         "n",
-        F.col("w_n").cast("long").alias("w_n"),
-        z.alias("burst_z"),
+        "CAST(w_n AS BIGINT) AS w_n",
+        f"CASE WHEN w_n >= 3 AND {varn} > 0 THEN {z} ELSE 0.0D END AS burst_z",
     )
 
 
@@ -1976,7 +1956,7 @@ def _km_curve(u: DataFrame) -> DataFrame:
     division, and S(t) is the prefix product computed as the same
     left fold over the same ordered factor list on both engines
     (windowed collect + multiply-reduce — bit-identical doubles
-    before round_stable(6), the EWMA/Holt fold contract).
+    before round_stable_sql(6), the EWMA/Holt fold contract).
 
     Scale shape: everything rides the DURATION grain — bounded by the
     observation span in days (the month-lag precedent class), where
@@ -2006,12 +1986,8 @@ def _km_curve(u: DataFrame) -> DataFrame:
         F.element_at(F.col("fs"), 1),
         lambda a, b: a * b,
     )
-    return surv.select(
-        "dur",
-        "d",
-        "c",
-        "n_at_risk",
-        (F.floor(prod * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias("survival"),
+    return surv.select("dur", "d", "c", "n_at_risk", prod.alias("survival")).withColumn(
+        "survival", F.expr(round_stable_sql("survival", 6))
     )
 
 
@@ -2225,7 +2201,7 @@ def stickiness_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     (day, user) activity is exploded to the 28 window-end days it
     reaches (expansion on the deduped grain, never raw events),
     suppressed to observed days, counted distinct; DAU is the plain
-    day grain; the ratio is one guarded round_stable division over
+    day grain; the ratio is one guarded round_stable_sql division over
     exact counts.
     """
     from ..functions.cache import tracked_persist
@@ -2252,17 +2228,15 @@ def stickiness_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("window_day")
         .agg(F.countDistinct("user_id").alias("mau"))
     )
-    from ..functions.core import round_stable
-
     return (
         dau.join(mau, dau.day_idx == mau.window_day)
         .select(
             "day_idx",
             "dau",
             F.col("mau").cast("long").alias("mau"),
-            round_stable(
-                F.col("dau").cast("double") / F.col("mau").cast("double"), 6
-            ).alias("stickiness"),
+            F.expr(round_stable_sql("CAST(dau AS DOUBLE) / CAST(mau AS DOUBLE)", 6)).alias(
+                "stickiness"
+            ),
         )
     )
 
@@ -2407,11 +2381,9 @@ def forecast_backtest_mae(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Absolute errors are exact int64 on quantized cents (days joined
     by day−1 / day−7 equi-keys, no spine); MAEs are single
-    round_stable divisions.  Fact aggregate + two self equi-joins on
+    round_stable_sql divisions.  Fact aggregate + two self equi-joins on
     the tiny (type, day) grain.
     """
-    from ..functions.core import round_stable
-
     daily = (
         load(spark, sf_dir, "events", fan_out=True)
         .groupBy(
@@ -2458,14 +2430,11 @@ def forecast_backtest_mae(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_days",
         "naive_ae_sum",
         "seasonal_ae_sum",
-        round_stable(
-            F.col("naive_ae_sum").cast("double") / F.col("n_days").cast("double"),
-            6,
-        ).alias("naive_mae"),
-        round_stable(
-            F.col("seasonal_ae_sum").cast("double")
-            / F.col("n_days").cast("double"),
-            6,
+        F.expr(round_stable_sql("CAST(naive_ae_sum AS DOUBLE) / CAST(n_days AS DOUBLE)", 6)).alias(
+            "naive_mae"
+        ),
+        F.expr(
+            round_stable_sql("CAST(seasonal_ae_sum AS DOUBLE) / CAST(n_days AS DOUBLE)", 6)
         ).alias("seasonal_mae"),
     )
 
@@ -2541,7 +2510,7 @@ def markov_absorption_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes p_{{k+1}}(s) = Σ_t P(s,t)·p_k(t) with the sum folded in
     next-state order on BOTH engines (sorted-collect + add-reduce),
     so the five float iterates are bit-identical before the final
-    round_stable — the finite-iteration-replay contract at state-
+    round_stable_sql — the finite-iteration-replay contract at state-
     grain size (≤ #event types rows per round).
 
     Scale shape: the transition estimate is the work (user window +
@@ -2602,9 +2571,7 @@ def markov_absorption_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return p_cur.join(tot, "s").select(
         F.col("s").alias("start_state"),
         "n_out",
-        (F.floor(F.col("pv") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "p_convert_5"
-        ),
+        F.expr(round_stable_sql("pv", 6)).alias("p_convert_5"),
     )
 
 
@@ -2649,8 +2616,6 @@ def rolling_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form slope (wΣxy − ΣxΣy)/(wΣxx − (Σx)²) as ONE guarded
     fixed-order double.  A single WindowExec serves all five frames.
     """
-    from ..functions.core import round_stable
-
     daily = (
         load(spark, sf_dir, "events", fan_out=True)
         .groupBy(
@@ -2674,20 +2639,14 @@ def rolling_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("sxx", F.sum(F.col("day_idx") * F.col("day_idx")).over(tw))
         .withColumn("sxy", F.sum(F.col("day_idx") * F.col("dq")).over(tw))
     )
-    wn, sx, sy, sxx, sxy = (F.col(k) for k in ("wn", "sx", "sy", "sxx", "sxy"))
-    den = (wn * sxx - sx * sx).cast("long")
-    slope = F.when(
-        (wn >= 3) & (den > 0),
-        round_stable(
-            (wn * sxy - sx * sy).cast("double") / den.cast("double"), 6
-        ),
-    ).otherwise(F.lit(0.0))
-    return w.select(
+    den = "CAST(wn * sxx - sx * sx AS BIGINT)"
+    slope = round_stable_sql(f"CAST(wn * sxy - sx * sy AS DOUBLE) / CAST({den} AS DOUBLE)", 6)
+    return w.selectExpr(
         "event_type",
         "day_idx",
         "dq",
-        wn.cast("long").alias("wn"),
-        slope.alias("slope_q2_per_day"),
+        "CAST(wn AS BIGINT) AS wn",
+        f"CASE WHEN wn >= 3 AND {den} > 0 THEN {slope} ELSE 0.0D END AS slope_q2_per_day",
     )
 
 
@@ -2756,15 +2715,12 @@ def trending_users_decayed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("score_scaled")
     )
     rk = topk_ranked(sc, "ORDER BY score_scaled DESC, user_id ASC", 20)
-    from ..functions.core import round_stable
-
     return rk.select(
         "user_id",
         "score_scaled",
         F.col("rk").cast("long").alias("trend_rank"),
-        round_stable(
-            F.col("score_scaled").cast("double") / F.lit(float(2**_DECAY_MAX_WEEKS)),
-            6,
+        F.expr(
+            round_stable_sql(f"CAST(score_scaled AS DOUBLE) / {flit(2**_DECAY_MAX_WEEKS)}", 6)
         ).alias("decayed_score"),
     )
 
@@ -2861,11 +2817,9 @@ def audience_overlap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     curves.  The intersection is a user equi-join on the deduped
     (day, user) grain shifted by one day; union size is the
     inclusion-exclusion identity on exact counts, so both ratios are
-    single guarded round_stable divisions over int64.
+    single guarded round_stable_sql divisions over int64.
     """
     from ..functions.cache import tracked_persist
-    from ..functions.core import round_stable
-
     du = tracked_persist(
         load(spark, sf_dir, "events", fan_out=True)
         .select(F.expr(f"ts div {DAY_NS}").alias("day_idx"), "user_id")
@@ -2900,21 +2854,17 @@ def audience_overlap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    union_n = (
-        F.col("n_today") + F.col("n_tomorrow") - F.col("n_common")
-    ).cast("double")
-    return j.select(
+    return j.selectExpr(
         "day_idx",
         "n_today",
         "n_tomorrow",
         "n_common",
-        round_stable(F.col("n_common").cast("double") / union_n, 6).alias(
-            "jaccard"
-        ),
-        round_stable(
-            F.col("n_common").cast("double") / F.col("n_today").cast("double"),
-            6,
-        ).alias("next_day_retention"),
+        round_stable_sql(
+            "CAST(n_common AS DOUBLE) / CAST(n_today + n_tomorrow - n_common AS DOUBLE)", 6
+        )
+        + " AS jaccard",
+        round_stable_sql("CAST(n_common AS DOUBLE) / CAST(n_today AS DOUBLE)", 6)
+        + " AS next_day_retention",
     )
 
 
@@ -3075,14 +3025,12 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every per-channel run replays the same fixed-order-fold
     iteration as `markov_absorption_conversion` (bit-identical
     doubles), the start weights are exact-count ratios, and the
-    final effect is one guarded division through round_stable(6).
+    final effect is one guarded division through round_stable_sql(6).
     The oracle unrolls all five chains (base + 4 removals) as CTE
     families.  Scale shape: the transition estimate and start
     distribution are the data-touching work; 25 iteration rounds
     ride the tiny state grain.
     """
-    from ..functions.core import round_stable
-
     ev = load(spark, sf_dir, "events")
     w_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
     o = ev.select(
@@ -3187,9 +3135,9 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .crossJoin(F.broadcast(base))
             .select(
                 F.lit(ch).alias("channel"),
-                round_stable(
-                    F.lit(1.0) - F.col("p_conv") / F.col("p_base"), 6
-                ).alias("removal_effect"),
+                F.expr(round_stable_sql("(1.0D - p_conv / p_base)", 6)).alias(
+                    "removal_effect"
+                ),
             )
         )
         out = eff if out is None else out.unionAll(eff)
@@ -3278,13 +3226,11 @@ def logrank_conversion_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumsums on the duration grain; the E and V accumulations are
     rationals folded in duration order on BOTH engines (the bounded-
     grain sorted-fold contract), and the statistic is one guarded
-    fixed-order double through round_stable(6).  (The lifetime-churn
+    fixed-order double through round_stable_sql(6).  (The lifetime-churn
     framing is degenerate on this fixture — every user is active in
     the final week — so the operator measures the conversion clock,
     where real variation exists.)
     """
-    from ..functions.core import round_stable
-
     fp = (
         load(spark, sf_dir, "events", fan_out=True)
         .groupBy("user_id")
@@ -3351,30 +3297,17 @@ def logrank_conversion_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("va"),
     )
 
-    def fold_sum(col):
-        arr = F.transform(col, lambda x: x["val"])
-        return F.aggregate(
-            F.slice(arr, 2, F.size(arr) - 1),
-            F.element_at(arr, 1),
-            lambda a, b: a + b,
-        )
+    def fold_sum(col: str) -> str:
+        arr = f"transform({col}, x -> x.val)"
+        return f"aggregate(slice({arr}, 2, size({arr}) - 1), element_at({arr}, 1), (x, y) -> x + y)"
 
-    e1, v = fold_sum(F.col("ea")), fold_sum(F.col("va"))
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
-    chi2 = F.when(
-        v > 0,
-        round_stable(
-            (F.col("o1").cast("double") - e1)
-            * (F.col("o1").cast("double") - e1)
-            / v,
-            6,
-        ),
-    ).otherwise(F.lit(0.0))
-    return folded.select(
-        F.col("o1").cast("long").alias("o1"),
-        r6(e1).alias("e1"),
-        r6(v).alias("variance"),
-        chi2.alias("logrank_chi2"),
+    e1, v = fold_sum("ea"), fold_sum("va")
+    chi2 = round_stable_sql(f"(CAST(o1 AS DOUBLE) - {e1}) * (CAST(o1 AS DOUBLE) - {e1}) / {v}", 6)
+    return folded.selectExpr(
+        "CAST(o1 AS BIGINT) AS o1",
+        f"{round_stable_sql(e1, 6)} AS e1",
+        f"{round_stable_sql(v, 6)} AS variance",
+        f"CASE WHEN {v} > 0 THEN {chi2} ELSE 0.0D END AS logrank_chi2",
     )
 
 

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.cache import dataset_tag, session_persist, tracked_persist
-from ..functions.core import clamp, flit, round_stable, round_stable_sql, topk_ranked
+from ..functions.core import clamp_sql, flit, round_stable_sql, split_bucket_sql, topk_ranked
 from ..functions.text import STOPWORDS_EN, stopword_ratio, token_count, word_tokens
 from ..sources.catalog import load
 from .registry import register
@@ -73,13 +73,11 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct_ratio = F.when(n > 0, n_distinct.cast("double") / n.cast("double")).otherwise(
         F.lit(0.0)
     )
-    quality = clamp(
+    quality = (
         0.25 * F.least(n / F.lit(100.0), F.lit(1.0))
         + 0.25 * (F.lit(1.0) - stop)
         + 0.25 * distinct_ratio
-        + 0.25 * F.least(avg_len / 6.0, F.lit(1.0)),
-        0.0,
-        1.0,
+        + 0.25 * F.least(avg_len / 6.0, F.lit(1.0))
     )
     return d.select(
         "doc_id",
@@ -89,8 +87,8 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(distinct_ratio, 6).alias("distinct_ratio"),
         F.round(stop, 6).alias("stop_ratio"),
         F.round(avg_len, 6).alias("avg_token_len"),
-        F.round(quality, 6).alias("quality"),
-    )
+        quality.alias("quality"),
+    ).withColumn("quality", F.expr(f"round({clamp_sql('quality', 0.0, 1.0)}, 6)"))
 
 
 @register(
@@ -210,18 +208,7 @@ def train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     when data is re-partitioned or re-ingested).  Hash = md5 of
     doc_id + salt, mod 100, engine-agnostic so the oracle replays it."""
     d = load(spark, sf_dir, "documents", fan_out=True)
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("|split-seed-1"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-    )
+    bucket = F.expr(split_bucket_sql("CAST(doc_id AS STRING)"))
     split = F.when(bucket < 90, "train").otherwise("eval")
     return (
         d.select(split.alias("split"), "n_chars", "lang")
@@ -676,19 +663,7 @@ def lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines."""
     d = load(spark, sf_dir, "documents", fan_out=True)
     t = F.lower(F.trim(F.col("text")))
-    is_train = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("|split-seed-1"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-        < 90
-    )
+    is_train = F.expr(split_bucket_sql("CAST(doc_id AS STRING)")) < 90
     grams = F.when(
         F.length(t) >= 3,
         F.transform(
@@ -960,9 +935,7 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ELSE array(concat_ws(' ', ws)) END"
     )
     split = F.expr(
-        "CASE WHEN CAST(conv(substring(md5(concat("
-        "CAST(doc_id AS STRING), '|split-seed-1')), 1, 8), 16, 10) AS BIGINT)"
-        " % 100 < 90 THEN 'train' ELSE 'eval' END"
+        f"CASE WHEN {split_bucket_sql('CAST(doc_id AS STRING)')} < 90 THEN 'train' ELSE 'eval' END"
     )
     grams = (
         d.select("doc_id", split.alias("split"), ws.alias("ws"))
@@ -1066,8 +1039,8 @@ def ngram_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "n_grams",
             "n_novel",
-            round_stable(
-                F.col("n_novel").cast("double") / F.col("n_grams").cast("double"), 6
+            F.expr(
+                round_stable_sql("CAST(n_novel AS DOUBLE) / CAST(n_grams AS DOUBLE)", 6)
             ).alias("novelty_frac"),
         )
     )
@@ -1256,9 +1229,7 @@ def mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rates.join(F.broadcast(kept), "source", "left").select(
         "source",
         F.col("n_docs").cast("bigint").alias("n_docs"),
-        (F.floor(F.col("rate") * 1_000_000.0 + F.lit(0.5)) / F.lit(1_000_000.0)).alias(
-            "keep_rate"
-        ),
+        F.expr(round_stable_sql("rate", 6)).alias("keep_rate"),
         F.coalesce("n_kept", F.lit(0)).cast("bigint").alias("n_kept"),
     )
 
@@ -1525,7 +1496,7 @@ def unigram_ll_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = scored.select(
         "doc_id",
         F.col("n_tokens").cast("int").alias("n_tokens"),
-        round_stable(F.col("nll"), 6).alias("nll"),
+        F.expr(round_stable_sql("nll", 6)).alias("nll"),
     )
     vals = base.groupBy("nll").agg(F.count(F.lit(1)).alias("c"))
     w_vals = Window.orderBy("nll").rowsBetween(Window.unboundedPreceding, -1)
@@ -2322,14 +2293,13 @@ def leakage_safe_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def is_train(key_col):
-        h = F.conv(F.substring(F.md5(F.concat(key_col, F.lit("|split-seed-1"))), 1, 8), 16, 10)
-        return h.cast("bigint") % 100 < 90
+    def is_train(key: str):
+        return F.expr(f"{split_bucket_sql(key)} < 90")
 
     a = d.select(
         grp.alias("grp"),
-        is_train(F.col("doc_id").cast("string")).alias("doc_train"),
-    ).withColumn("grp_train", is_train(F.col("grp")))
+        is_train("CAST(doc_id AS STRING)").alias("doc_train"),
+    ).withColumn("grp_train", is_train("grp"))
     per_grp = a.groupBy("grp").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.when(F.col("doc_train"), 1).otherwise(0)).alias("n_doc_train"),
@@ -2475,19 +2445,18 @@ def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
             " ",
         ).alias("clean_text"),
     )
-    kt = F.coalesce(F.col("kept_tokens"), F.lit(0)).cast("bigint")
+    kt = "CAST(coalesce(kept_tokens, 0) AS BIGINT)"
     return (
         base.select("doc_id", "n_tokens")
         .join(clean, "doc_id", "left")
-        .select(
+        .selectExpr(
             "doc_id",
-            F.col("n_tokens").cast("int").alias("n_tokens"),
-            kt.alias("kept_tokens"),
-            (F.col("n_tokens").cast("bigint") - kt).alias("removed_tokens"),
-            round_stable(
-                kt.cast("double") / F.col("n_tokens").cast("double"), 6
-            ).alias("kept_frac"),
-            F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"),
+            "CAST(n_tokens AS INT) AS n_tokens",
+            f"{kt} AS kept_tokens",
+            f"CAST(n_tokens AS BIGINT) - {kt} AS removed_tokens",
+            round_stable_sql(f"CAST({kt} AS DOUBLE) / CAST(n_tokens AS DOUBLE)", 6)
+            + " AS kept_frac",
+            "coalesce(clean_text, '') AS clean_text",
         )
     )
 
@@ -2825,17 +2794,34 @@ def quality_filter_logistic_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
 
-    sig = F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("dot")))
+    sig = "1.0D / (1.0D + exp(-dot))"
     return (
         forward(w)
         .join(y, "doc_id")
-        .select(
+        .selectExpr(
             "doc_id",
-            F.col("y").cast("int").alias("y"),
-            round_stable(sig, 6).alias("score"),
-            (sig > 0.5).cast("int").alias("predicted"),
+            "CAST(y AS INT) AS y",
+            f"{round_stable_sql(sig, 6)} AS score",
+            f"CAST({sig} > 0.5D AS INT) AS predicted",
         )
     )
+
+
+def _det128(a: str, b: str, c: str, d: str) -> str:
+    """a·b − c·d over 128-bit decimal carriers, as a double."""
+    a, b, c, d = (f"CAST({x} AS DECIMAL(38,0))" for x in (a, b, c, d))
+    return f"CAST({a} * {b} - {c} * {d} AS DOUBLE)"
+
+
+# The exact-integer log-log OLS slope of heaps_vocab_growth and
+# zipf_rank_slope over their (m, sx, sy, sxy, sxx) moment sums, NULL on
+# a zero denominator.
+_LOGLOG_DEN = _det128("m", "sxx", "sx", "sx")
+_LOGLOG_SLOPE_SQL = round_stable_sql(
+    f"CASE WHEN {_LOGLOG_DEN} != 0.0D"
+    f" THEN {_det128('m', 'sxy', 'sx', 'sy')} / {_LOGLOG_DEN} END",
+    6,
+)
 
 
 @register(
@@ -2971,16 +2957,12 @@ def heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_toks").cast("bigint").alias("total_tokens"),
         F.sum("n_new").cast("bigint").alias("vocab_size"),
     )
-    dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    num = (dec("m") * dec("sxy") - dec("sx") * dec("sy")).cast("double")
-    den = (dec("m") * dec("sxx") - dec("sx") * dec("sx")).cast("double")
-    beta = F.when(den != 0.0, num / den)
     return agg.select(
         "source",
         F.col("m").cast("bigint").alias("n_docs"),
         "total_tokens",
         "vocab_size",
-        round_stable(beta, 6).alias("heaps_beta"),
+        F.expr(_LOGLOG_SLOPE_SQL).alias("heaps_beta"),
     )
 
 
@@ -3054,9 +3036,9 @@ def temperature_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.col("n_docs").cast("bigint").alias("n_docs"),
         "n_tokens",
-        round_stable(
-            F.col("qw").cast("double") / F.col("tq").cast("double"), 6
-        ).alias("mix_weight"),
+        F.expr(round_stable_sql("CAST(qw AS DOUBLE) / CAST(tq AS DOUBLE)", 6)).alias(
+            "mix_weight"
+        ),
         F.expr(
             f"CAST((CAST(qw AS DECIMAL(38,0)) * {_MIX_BUDGET}) div tq AS BIGINT)"
         ).alias("tokens_per_epoch"),
@@ -3143,14 +3125,10 @@ def zipf_rank_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("qx").cast("decimal(38,0)") * F.col("qx").cast("decimal(38,0)")
         ).alias("sxx"),
     )
-    dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    num = (dec("m") * dec("sxy") - dec("sx") * dec("sy")).cast("double")
-    den = (dec("m") * dec("sxx") - dec("sx") * dec("sx")).cast("double")
-    slope = F.when(den != 0.0, num / den)
     return agg.select(
         "source",
         F.col("m").cast("bigint").alias("vocab_size"),
-        round_stable(slope, 6).alias("zipf_slope"),
+        F.expr(_LOGLOG_SLOPE_SQL).alias("zipf_slope"),
     )
 
 
@@ -3465,9 +3443,9 @@ def post_dedup_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.col("kept_docs").cast("bigint").alias("kept_docs"),
         "kept_tokens",
-        round_stable(
-            F.col("qw").cast("double") / F.col("tq").cast("double"), 6
-        ).alias("mix_weight"),
+        F.expr(round_stable_sql("CAST(qw AS DOUBLE) / CAST(tq AS DOUBLE)", 6)).alias(
+            "mix_weight"
+        ),
         F.expr(
             f"CAST((CAST(qw AS DECIMAL(38,0)) * {_MIX_BUDGET}) div tq AS BIGINT)"
         ).alias("tokens_per_epoch"),
@@ -3639,13 +3617,9 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         "merges_applied",
         F.when(
             F.col("n_char_symbols") > 0,
-            F.floor(
-                F.col("n_bpe_tokens").cast("double")
-                / F.col("n_char_symbols").cast("double")
-                * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            / F.lit(1e6),
+            F.expr(
+                round_stable_sql("CAST(n_bpe_tokens AS DOUBLE) / CAST(n_char_symbols AS DOUBLE)", 6)
+            ),
         )
         .otherwise(F.lit(0.0))
         .alias("bpe_ratio"),

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.core import clamp_sql
 from ..sources.catalog import load
 from .config import DIMENSIONS
 
@@ -71,7 +72,7 @@ def companies(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.selectExpr(
         "c_custkey AS company_id",
         f"{_sector_sql('c_mktsegment')} AS sector",
-        "least(greatest(c_acctbal / 10000.0D, -1.0D), 1.0D) AS position_factor",
+        f"{clamp_sql('c_acctbal / 10000.0D', -1.0, 1.0)} AS position_factor",
     )
 
 

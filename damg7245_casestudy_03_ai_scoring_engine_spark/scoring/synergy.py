@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.core import clamp, clamp_sql, flit
+from ..functions.core import clamp_sql, flit
 from .config import RULE_SYNERGY_CAP
 
 
@@ -68,7 +68,7 @@ def rule_synergy(dimension_scores: DataFrame, rules: DataFrame) -> DataFrame:
         joined.withColumn("contribution", fired)
         .groupBy("company_id")
         .agg(
-            clamp(F.sum("contribution"), -RULE_SYNERGY_CAP, RULE_SYNERGY_CAP).alias(
+            F.expr(clamp_sql("sum(contribution)", -RULE_SYNERGY_CAP, RULE_SYNERGY_CAP)).alias(
                 "rule_synergy"
             ),
             F.sum((fired != 0).cast("long")).alias("n_rules_fired"),

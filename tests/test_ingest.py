@@ -11,6 +11,7 @@ from damg7245_casestudy_03_ai_scoring_engine_spark.operators.ingest import (
     _PARA_TOKENS,
     greedy_pack_paragraphs,
     paragraph_chunk_df,
+    python_datasource_scan,
 )
 
 from conftest import SF_SMOKE
@@ -114,3 +115,13 @@ def test_udtf_sections_match_native_split(spark):
     want_counts = {r.lang: (r.n_sections, r.total_chars) for r in native.collect()}
     assert {k: v[:2] for k, v in got.items()} == want_counts
     assert all(v[2] >= 1 for v in got.values())
+
+
+def test_python_datasource_scan_twice_in_one_session(spark):
+    """The query registers its Python DataSource on every call.  A
+    second registration in the same session replaces the first without
+    raising, so the query needs no error handling around it."""
+    first = sorted(python_datasource_scan(spark, SF_SMOKE).collect())
+    second = sorted(python_datasource_scan(spark, SF_SMOKE).collect())
+    assert first == second
+    assert sum(r.n for r in first) == 8000

@@ -53,7 +53,7 @@ WEAK_QUERIES = sorted(n for n, s in REGISTRY.items() if not s.oracle)
 # construction — either a verbatim parquet passthrough (both engines
 # read identical bits) or a single exact-integer-ratio division (one
 # IEEE op on order-independent operands).  Everything else must go
-# through functions/core.round_stable on BOTH sides: an unrounded
+# through functions/core.round_stable_sql on BOTH sides: an unrounded
 # float AGGREGATE is summation-order-dependent and WILL eventually
 # flip the driver's value-hash (round-3 red row).
 FLOAT_LINT_OK: set[tuple[str, str]] = {
@@ -67,8 +67,8 @@ FLOAT_LINT_OK: set[tuple[str, str]] = {
 
 def _lint_double_outputs(name, sdf, srows):
     """Every finite double output must be idempotent under the
-    round_stable transform at 7dp (true for any value produced by
-    round_stable(·, ≤6)) unless explicitly allowlisted."""
+    round_stable_sql transform at 7dp (true for any value produced by
+    round_stable_sql(·, ≤6)) unless explicitly allowlisted."""
     import math as _m
 
     dbl_idx = [
@@ -90,7 +90,7 @@ def _lint_double_outputs(name, sdf, srows):
             assert rounded == v, (
                 f"{name}.{sdf.schema.fields[i].name}: value {v!r} is not "
                 f"fixed-point at <=7dp — unrounded double output; wrap it in "
-                f"round_stable on both sides or allowlist it in FLOAT_LINT_OK "
+                f"round_stable_sql on both sides or allowlist it in FLOAT_LINT_OK "
                 f"with a stability justification"
             )
 

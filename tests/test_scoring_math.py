@@ -17,13 +17,10 @@ columns carry the named inputs.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from damg7245_casestudy_03_ai_scoring_engine_spark.functions.core import (
-    blend,
-    clamp,
     clamp_sql,
-    safe_div,
+    round_stable_sql,
     score_band_sql,
 )
 from damg7245_casestudy_03_ai_scoring_engine_spark.scoring import config as C
@@ -230,16 +227,13 @@ def test_talent_and_rubric_closed_forms(spark):
 def test_scalar_helpers(spark):
     row = (
         spark.range(1)
-        .select(
-            clamp(F.lit(150.0), 0, 100).alias("c1"),
-            clamp(F.lit(-5.0), 0, 100).alias("c2"),
-            safe_div(F.lit(10.0), F.lit(0.0), -1.0).alias("d"),
-            blend(F.lit(100.0), 50.0, 0.2).alias("b"),
+        .selectExpr(
+            f"{clamp_sql('150.0D', 0, 100)} AS c1",
+            f"{clamp_sql('-5.0D', 0, 100)} AS c2",
         )
         .collect()[0]
     )
-    assert (row.c1, row.c2, row.d) == (100.0, 0.0, -1.0)
-    assert row.b == pytest.approx(90.0)
+    assert (row.c1, row.c2) == (100.0, 0.0)
 
 
 def test_golden_portfolio_ranges(spark):
@@ -327,20 +321,18 @@ def test_golden_portfolio_full_flagship_dag(spark):
 
 
 def test_round_stable_signed_values_match_oracle_formula(spark, duck):
-    """round_stable on NEGATIVE inputs: floor(x·10^s + 0.5)/10^s is
+    """round_stable_sql on NEGATIVE inputs: floor(x·10^s + 0.5)/10^s is
     round-half-toward-+inf (-0.5 → 0), NOT half-away-from-zero — and
     that is fine for parity because the oracle SQL spells the
     IDENTICAL formula (mom_revenue_growth growth ratios and the CUSUM
     family feed negatives through it).  Pin the signed behavior on
     both engines so nobody "fixes" one side into asymmetry."""
-    from damg7245_casestudy_03_ai_scoring_engine_spark.functions.core import round_stable
-
     vals = [-2.5e-7, -1.5e-7, -0.1234565, -0.9999995, -3.25, 0.0,
             2.5e-7, 0.1234565, 3.25, -123.4567894]
     df = spark.createDataFrame([(v,) for v in vals], "x double")
     got = [
         r.y
-        for r in df.select(round_stable(F.col("x"), 6).alias("y"))
+        for r in df.selectExpr(f"{round_stable_sql('x', 6)} AS y")
         .orderBy("x")
         .collect()
     ]
@@ -354,7 +346,7 @@ def test_round_stable_signed_values_match_oracle_formula(spark, duck):
     ]
     assert got == want
     # the documented asymmetry, explicitly: exact -0.5 ticks round UP
-    one = spark.createDataFrame([(-2.5e-7,)], "x double").select(
-        round_stable(F.col("x"), 6).alias("y")
+    one = spark.createDataFrame([(-2.5e-7,)], "x double").selectExpr(
+        f"{round_stable_sql('x', 6)} AS y"
     ).collect()[0].y
     assert one == 0.0

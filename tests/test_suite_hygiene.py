@@ -22,7 +22,9 @@ A per-group top-k (rank, then keep rk <= k) has one spelling,
 `functions/core.py::topk_ranked`; a hand-written rank-filter tail
 elsewhere is a second spelling of the same operator.  Likewise the
 similarity family's exact query/candidate cosine has one spelling,
-`operators/similarity.py::_exact_cosine`.
+`operators/similarity.py::_exact_cosine`, and the fixed-point round
+and the clamp have one each, the `functions/core.py` fragments
+`round_stable_sql` and `clamp_sql`.
 """
 
 from __future__ import annotations
@@ -293,3 +295,53 @@ def test_query_candidate_cosine_goes_through_exact_cosine():
                 and where not in allowed
             ]
     assert not sites, f"query/candidate cosine outside _exact_cosine: {sites}"
+
+
+def _f_call(node: ast.AST, name: str) -> bool:
+    """`node` is `F.<name>(…)`, a Spark Column function (not `np.<name>`)."""
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == name
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "F"
+    )
+
+
+def _is_half(node: ast.AST) -> bool:
+    """`0.5` or `F.lit(0.5)`."""
+    if _f_call(node, "lit") and len(node.args) == 1:
+        node = node.args[0]
+    return isinstance(node, ast.Constant) and node.value == 0.5
+
+
+def _column_formula_copies(tree: ast.Module):
+    """Line numbers of Column-built copies of the two formulas: the
+    fixed-point round `F.floor(x + 0.5) / p` and the clamp
+    `F.least(F.greatest(…), …)`.  An integer quantizer
+    `F.floor(x + 0.5).cast(…)` divides nothing and is not one."""
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.BinOp)
+            and isinstance(node.op, ast.Div)
+            and _f_call(node.left, "floor")
+            and len(node.left.args) == 1
+            and isinstance(node.left.args[0], ast.BinOp)
+            and isinstance(node.left.args[0].op, ast.Add)
+            and _is_half(node.left.args[0].right)
+        ):
+            yield node.lineno
+        elif _f_call(node, "least") and any(_f_call(a, "greatest") for a in node.args):
+            yield node.lineno
+
+
+def test_fixed_point_round_and_clamp_go_through_the_core_fragments():
+    package = glob.glob(os.path.join(REPO, PKG, "**", "*.py"), recursive=True)
+    copies = []
+    for path in sorted(package):
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), filename=path)
+        copies += [f"{os.path.relpath(path, REPO)}:{n}" for n in _column_formula_copies(tree)]
+    assert not copies, (
+        f"Column copies of round_stable_sql / clamp_sql outside functions/core.py: {copies}"
+    )

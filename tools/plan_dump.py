@@ -10,10 +10,10 @@ With no names, dumps every bench-flagged query.  Plans are captured
 at sf0.001 (the checked-in `perfbench/data/sf0.001` copy unless
 `--sf` names another directory) in COLD state (tracked persists
 released between queries).  Expression IDs (`#123`) become `#_`,
-exchange plan IDs `plan_id=_`, the data directory `<sf>` and scratch
-layouts `<scratch>`, so `diff` of a before and an after dump is empty
-exactly when the plans match — even when the two dumps were taken
-from different checkouts.
+exchange plan IDs `plan_id=_`, Python lambda variables their bare
+name, the data directory `<sf>` and scratch layouts `<scratch>`, so
+`diff` of a before and an after dump is empty exactly when the plans
+match — even when the two dumps were taken from different checkouts.
 
 To capture the "before" side, copy this script into a checkout of the
 parent commit and run it there with the same `<round>`.
@@ -34,10 +34,13 @@ from damg7245_casestudy_03_ai_scoring_engine_spark.operators import REGISTRY  # 
 from damg7245_casestudy_03_ai_scoring_engine_spark.plans.inspect import explain_str  # noqa: E402
 from damg7245_casestudy_03_ai_scoring_engine_spark.session import get_spark  # noqa: E402
 
-# Run-specific tokens: expression IDs, exchange plan IDs and the
-# mkdtemp-named scratch layouts some queries write and then scan.
+# Run-specific tokens: expression IDs, exchange plan IDs, the
+# process-wide counter pyspark appends to a Python lambda's variable
+# names (`lambda x_272`), and the mkdtemp-named scratch layouts some
+# queries write and then scan.
 _RUN_TOKENS = (
     (re.compile(r"#\d+"), "#_"),
+    (re.compile(r"(lambda [A-Za-z]+)_\d+#_"), r"\1#_"),
     (re.compile(r"plan_id=\d+"), "plan_id=_"),
     (re.compile(r"file:\S*/spark_graft_scratch_[^\]\s,]*"), "<scratch>"),
 )
